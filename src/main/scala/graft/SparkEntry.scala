@@ -25,7 +25,7 @@ object SparkEntry {
 
   /** View registration rides the Fixtures parquet-plan memo: the 10
     * `spark.read.parquet` metadata reads here cost ~0.8 s per call
-    * (tools.OverheadProbe) and were paid by EVERY SQL-backed query.
+    * (BENCH.md round 8) and were paid by EVERY SQL-backed query.
     * The memo reuses the lazy plan (file list + schema) per (session,
     * path, content stamp) — no rows cached, regeneration re-listed.
     */
@@ -380,45 +380,6 @@ object SparkEntry {
 
   // ---- engine-native helpers ----------------------------------------------
 
-  // The dimension pipeline (polygons + covers) and the countries topology
-  // are identical across queries in one session — memoize + cache so each
-  // Verify/Bench query pays the assembly once (the reference's geometry /
-  // topology LRUs, env.go:103-111, at session granularity).
-  // sfDir-keying audit (TwoSfDirSpec pins this): dims/topo/rawTopo/
-  // rawTopoQ/dpTopo/clipTopo memoize pure functions of COMPILED-IN
-  // fixture constants (Fixtures.nodesDf/waterDf/splitOctagons/…), so
-  // their values cannot vary by sfDir — a session-only key is correct,
-  // and an sfDir key would be dead state. Every cache whose value DOES
-  // read sfDir data (jacPairs, clusters) carries the sfDir in its value
-  // and unpersists on change. A new memo over sfDir inputs MUST follow
-  // the jacPairs pattern, never this one.
-  // NOTE on WeakHashMap: a DataFrame value strongly references its
-  // SparkSession (the key), so weak-key eviction alone can never fire —
-  // evictOthers() below caps growth by dropping every OTHER session's
-  // entry when a new session appears (losing only memoization; the
-  // normal one-session-per-JVM deployment never evicts).
-  private val dimsCache = new java.util.WeakHashMap[SparkSession, (DataFrame, DataFrame)]()
-  private val clustersCache = new java.util.WeakHashMap[SparkSession, (String, DataFrame)]()
-  private val pairsCache = new java.util.WeakHashMap[SparkSession, (String, DataFrame)]()
-  private val topoCache = new java.util.WeakHashMap[SparkSession, Export.LayerResult]()
-  private val rawTopoCache = new java.util.WeakHashMap[SparkSession, operators.TopoPipeline.Topology]()
-
-  private def evictOthers[V](m: java.util.WeakHashMap[SparkSession, V],
-                             current: SparkSession)(release: V => Unit): Unit =
-    if (m.size > 3) {
-      val it = m.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey ne current) {
-          // unpersist before dropping the entry — an evicted entry's
-          // cached blocks would otherwise be unreachable yet still pinned
-          // in its (possibly live) session's storage
-          try release(e.getValue) catch { case _: Exception => () }
-          it.remove()
-        }
-      }
-    }
-
   /** Bench (same JVM/session) reuses this memo instead of building its own
     * copy of the identical Ingest plan: Spark's CacheManager matches cache
     * entries by logical plan, so a second cache+unpersist of the same plan
@@ -426,35 +387,25 @@ object SparkEntry {
     */
   private[graft] def sharedDims(spark: SparkSession): (DataFrame, DataFrame) = dims(spark)
 
-  private def dims(spark: SparkSession): (DataFrame, DataFrame) = dimsCache.synchronized {
-    var v = dimsCache.get(spark)
-    if (v == null) {
+  private def dims(spark: SparkSession): (DataFrame, DataFrame) =
+    SessionMemo.get(spark, "dims", ()) {
       val polys = Ingest.polygons(spark, Fixtures.nodesDf(spark), Fixtures.waysDf(spark),
         Fixtures.relationsDf(spark), Fixtures.blacklist).cache()
       val covers = Ingest.cellCovers(polys).cache()
-      v = (polys, covers)
-      evictOthers(dimsCache, spark) { case (a, b) => a.unpersist(); b.unpersist() }
-      dimsCache.put(spark, v)
-    }
-    v
-  }
+      (polys, covers)
+    } { case (a, b) => a.unpersist(); b.unpersist() }
 
-  private def topoCountries(spark: SparkSession): Export.LayerResult = topoCache.synchronized {
-    var v = topoCache.get(spark)
-    if (v == null) {
+  private def topoCountries(spark: SparkSession): Export.LayerResult =
+    SessionMemo.get(spark, "topoCountries", ()) {
       val (polys, _) = dims(spark)
       val water = Ingest.waterPolygons(spark, Fixtures.waterDf(spark))
       // layer() returns localCheckpoint-ed (materialized, lineage-free)
       // arcs/arcsQ/uses/objects — no re-cache needed here; checkpointed
       // blocks are reclaimed by the ContextCleaner when the entry is GC'd
-      v = Export.layer(polys, water, "countries", Seq(100L, 101L, 102L, 103L, 104L),
+      Export.layer(polys, water, "countries", Seq(100L, 101L, 102L, 103L, 104L),
         simplifyDigits = 3, quantize = 1e6, pointLimit = 20,
         relations = Some(Fixtures.relationsDf(spark)), languages = Seq("nl", "en"))
-      evictOthers(topoCache, spark)(_.release())
-      topoCache.put(spark, v)
-    }
-    v
-  }
+    }(_.release())
 
   /** Raw topology over the split-octagon fixture (no clip, no simplify,
     * no quantize): every arc vertex is an INPUT coordinate, which is what
@@ -463,62 +414,43 @@ object SparkEntry {
     * its goldens — JTS overlay coordinates are not SQL-replicable).
     */
   private def rawTopo(spark: SparkSession): operators.TopoPipeline.Topology =
-    rawTopoCache.synchronized {
-      var v = rawTopoCache.get(spark)
-      if (v == null) {
-        val t0 = operators.TopoPipeline.topology(
-          Fixtures.splitOctagonsDf(spark), simplifyDigits = 0, quantize = 0)
-        // lineage-free memo tables (same rationale as Export.layer): every
-        // q_topo_arcs_raw action re-planned the whole build otherwise
-        v = t0.copy(arcs = t0.arcs.localCheckpoint(), uses = t0.uses.localCheckpoint(),
-          caches = Nil)
-        t0.release()
-        evictOthers(rawTopoCache, spark)(_.release())
-        rawTopoCache.put(spark, v)
-      }
+    SessionMemo.get(spark, "rawTopo", ()) {
+      val t0 = operators.TopoPipeline.topology(
+        Fixtures.splitOctagonsDf(spark), simplifyDigits = 0, quantize = 0)
+      // lineage-free memo tables (same rationale as Export.layer): every
+      // q_topo_arcs_raw action re-planned the whole build otherwise
+      val v = t0.copy(arcs = t0.arcs.localCheckpoint(), uses = t0.uses.localCheckpoint(),
+        caches = Nil)
+      t0.release()
       v
-    }
+    }(_.release())
 
   /** Raw split-octagon topology WITH quantization (1e4 grid positions),
     * still no clip/simplify: feeds q_topo_arcs_raw_q, whose DuckDB oracle
     * (rawTopoQOracle) replays the P9 quantize/dup-drop/delta stage in
     * full. Memoized like rawTopo (its arcsQ is the only consumer).
     */
-  private val rawTopoQCache = new java.util.WeakHashMap[SparkSession, operators.TopoPipeline.Topology]()
-
   private def rawTopoQ(spark: SparkSession): operators.TopoPipeline.Topology =
-    rawTopoQCache.synchronized {
-      var v = rawTopoQCache.get(spark)
-      if (v == null) {
-        val t0 = operators.TopoPipeline.topology(
-          Fixtures.splitOctagonsDf(spark), simplifyDigits = 0, quantize = 1e4)
-        v = t0.copy(arcsQ = t0.arcsQ.map(_.localCheckpoint()), caches = Nil)
-        t0.release()
-        evictOthers(rawTopoQCache, spark)(_.release())
-        rawTopoQCache.put(spark, v)
-      }
+    SessionMemo.get(spark, "rawTopoQ", ()) {
+      val t0 = operators.TopoPipeline.topology(
+        Fixtures.splitOctagonsDf(spark), simplifyDigits = 0, quantize = 1e4)
+      val v = t0.copy(arcsQ = t0.arcsQ.map(_.localCheckpoint()), caches = Nil)
+      t0.release()
       v
-    }
+    }(_.release())
 
   /** Session-memoized DP-stage topology: the split-rectangle fixture at
     * simplifyDigits=2 (tolerance 10⁻²), no quantize — the subject of
     * q_topo_arcs_dp's recursive-CTE Douglas-Peucker replay.
     */
-  private val dpTopoCache = new java.util.WeakHashMap[SparkSession, operators.TopoPipeline.Topology]()
-
   private def dpTopo(spark: SparkSession): operators.TopoPipeline.Topology =
-    dpTopoCache.synchronized {
-      var v = dpTopoCache.get(spark)
-      if (v == null) {
-        val t0 = operators.TopoPipeline.topology(
-          Fixtures.dpRectsDf(spark), simplifyDigits = 2, quantize = 0)
-        v = t0.copy(arcs = t0.arcs.localCheckpoint(), caches = Nil)
-        t0.release()
-        evictOthers(dpTopoCache, spark)(_.release())
-        dpTopoCache.put(spark, v)
-      }
+    SessionMemo.get(spark, "dpTopo", ()) {
+      val t0 = operators.TopoPipeline.topology(
+        Fixtures.dpRectsDf(spark), simplifyDigits = 2, quantize = 0)
+      val v = t0.copy(arcs = t0.arcs.localCheckpoint(), caches = Nil)
+      t0.release()
       v
-    }
+    }(_.release())
 
   /** Session-memoized clip-stage topology: the rectilinear clip fixture
     * through the REAL overlay path (clipWater → topology, both at
@@ -526,24 +458,17 @@ object SparkEntry {
     * product) — the subject of q_topo_clip_rect's interval-subtraction
     * replay. With this oracled, no topology stage is golden-only.
     */
-  private val clipTopoCache = new java.util.WeakHashMap[SparkSession, operators.TopoPipeline.Topology]()
-
   private def clipTopo(spark: SparkSession): operators.TopoPipeline.Topology =
-    clipTopoCache.synchronized {
-      var v = clipTopoCache.get(spark)
-      if (v == null) {
-        val clipped = operators.TopoPipeline.clipWater(
-          Fixtures.clipRectFeaturesDf(spark), Fixtures.clipRectWaterDf(spark),
-          simplifyDigits = 0)
-        val t0 = operators.TopoPipeline.topology(clipped, simplifyDigits = 0, quantize = 0)
-        v = t0.copy(arcs = t0.arcs.localCheckpoint(), uses = t0.uses.localCheckpoint(),
-          caches = Nil)
-        t0.release()
-        evictOthers(clipTopoCache, spark)(_.release())
-        clipTopoCache.put(spark, v)
-      }
+    SessionMemo.get(spark, "clipTopo", ()) {
+      val clipped = operators.TopoPipeline.clipWater(
+        Fixtures.clipRectFeaturesDf(spark), Fixtures.clipRectWaterDf(spark),
+        simplifyDigits = 0)
+      val t0 = operators.TopoPipeline.topology(clipped, simplifyDigits = 0, quantize = 0)
+      val v = t0.copy(arcs = t0.arcs.localCheckpoint(), uses = t0.uses.localCheckpoint(),
+        caches = Nil)
+      t0.release()
       v
-    }
+    }(_.release())
 
   /** Session-memoized clip-stage topology on the CURVED fixture: the real
     * countries polygons (octagons, one with a hole) clipped by the real
@@ -554,27 +479,20 @@ object SparkEntry {
     * DuckDB cannot replay JTS difference COORDINATES on curved input, but
     * it can verify MEMBERSHIP, which is what a clip means).
     */
-  private val clipMemberCache = new java.util.WeakHashMap[SparkSession, operators.TopoPipeline.Topology]()
-
   private def clipMemberTopo(spark: SparkSession): operators.TopoPipeline.Topology =
-    clipMemberCache.synchronized {
-      var v = clipMemberCache.get(spark)
-      if (v == null) {
-        val (polys, _) = dims(spark)
-        val feats = polys
-          .filter(col("layer") === "countries" && col("relId").isin(100L, 101L, 102L, 103L, 104L))
-          .select(col("relId").as("objId"), col("wkb"), col("bbox"))
-        val water = Ingest.waterPolygons(spark, Fixtures.waterDf(spark))
-        val clipped = operators.TopoPipeline.clipWater(feats, water, simplifyDigits = 0)
-        val t0 = operators.TopoPipeline.topology(clipped, simplifyDigits = 0, quantize = 0)
-        v = t0.copy(arcs = t0.arcs.localCheckpoint(), uses = t0.uses.localCheckpoint(),
-          caches = Nil)
-        t0.release()
-        evictOthers(clipMemberCache, spark)(_.release())
-        clipMemberCache.put(spark, v)
-      }
+    SessionMemo.get(spark, "clipMemberTopo", ()) {
+      val (polys, _) = dims(spark)
+      val feats = polys
+        .filter(col("layer") === "countries" && col("relId").isin(100L, 101L, 102L, 103L, 104L))
+        .select(col("relId").as("objId"), col("wkb"), col("bbox"))
+      val water = Ingest.waterPolygons(spark, Fixtures.waterDf(spark))
+      val clipped = operators.TopoPipeline.clipWater(feats, water, simplifyDigits = 0)
+      val t0 = operators.TopoPipeline.topology(clipped, simplifyDigits = 0, quantize = 0)
+      val v = t0.copy(arcs = t0.arcs.localCheckpoint(), uses = t0.uses.localCheckpoint(),
+        caches = Nil)
+      t0.release()
       v
-    }
+    }(_.release())
 
   /** Probe sets are fixture constants shared VERBATIM by the Spark
     * membership queries and their DuckDB oracles (no cross-engine probe
@@ -642,37 +560,19 @@ object SparkEntry {
       .toDF("arcId", "n_pts", "delta_sum")
   }
 
-  /** Jaccard pairs + near-dup clustering memoized per (session, sfDir) —
-    * q_jaccard_pairs, q_dedup_clusters and q_dedup_canonical share one
-    * pair computation and one clustering run (session-granularity reuse,
-    * same pattern as `dims`).
+  /** Jaccard pairs + near-dup clustering memoized per session with sfDir
+    * as the [[SessionMemo]] version — q_jaccard_pairs, q_dedup_clusters
+    * and q_dedup_canonical share one pair computation and one clustering
+    * run, and a second sfDir rebuilds instead of cross-serving.
     */
   private def jacPairs(spark: SparkSession, sfDir: String): DataFrame =
-    pairsCache.synchronized {
-      val hit = pairsCache.get(spark)
-      if (hit != null && hit._1 == sfDir) hit._2
-      else {
-        if (hit != null) hit._2.unpersist() // don't strand blocks on sfDir change
-        val p = Clusters.jaccardPairs(Fixtures.documents(spark, sfDir), 0.3).cache()
-        evictOthers(pairsCache, spark) { case (_, df) => df.unpersist() }
-        pairsCache.put(spark, (sfDir, p))
-        p
-      }
-    }
+    SessionMemo.get(spark, "jacPairs", sfDir)(
+      Clusters.jaccardPairs(Fixtures.documents(spark, sfDir), 0.3).cache())(_.unpersist())
 
   private def clusters(spark: SparkSession, sfDir: String): DataFrame =
-    clustersCache.synchronized {
-      val hit = clustersCache.get(spark)
-      if (hit != null && hit._1 == sfDir) hit._2
-      else {
-        if (hit != null) hit._2.unpersist() // don't strand blocks on sfDir change
-        val c = Clusters.labelClusters(
-          Fixtures.documents(spark, sfDir), jacPairs(spark, sfDir)).cache()
-        evictOthers(clustersCache, spark) { case (_, df) => df.unpersist() }
-        clustersCache.put(spark, (sfDir, c))
-        c
-      }
-    }
+    SessionMemo.get(spark, "clusters", sfDir)(
+      Clusters.labelClusters(
+        Fixtures.documents(spark, sfDir), jacPairs(spark, sfDir)).cache())(_.unpersist())
 
   private def pipMatches(spark: SparkSession, sfDir: String): DataFrame = {
     val (polys, covers) = dims(spark)
@@ -2821,27 +2721,12 @@ object SparkEntry {
       operators.Knn.Query(s"q$i", cx, cy)
     }
 
-  /** Content fingerprint of the fixture set under `sfDir`: FNV-1a over the
-    * sorted (relative name, size) pairs of the documents table's files. A
-    * REGENERATED fixture at the same path changes the fingerprint, so
-    * fingerprint-keyed scratch dirs can never serve stale derived data —
-    * the failure mode of the old sfDir-string keying, where a rewritten
-    * fixture silently reused the previous run's index/stream source.
+  /** [[graft.sources.ContentStamp]] of the documents table under `sfDir`:
+    * a regenerated fixture at the same path gets a new fingerprint, so
+    * fingerprint-keyed scratch dirs never serve stale derived data.
     */
-  private[graft] def fixtureFingerprint(sfDir: String): String = {
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Paths.get(sfDir, "documents.parquet")
-    var h = 0xcbf29ce484222325L
-    def mix(s: String): Unit =
-      s.getBytes("UTF-8").foreach { b => h ^= (b & 0xffL); h *= 0x100000001b3L }
-    if (java.nio.file.Files.isDirectory(dir)) {
-      val st = java.nio.file.Files.list(dir)
-      try st.iterator().asScala.toSeq.sortBy(_.getFileName.toString)
-        .foreach(p => mix(s"${p.getFileName}:${java.nio.file.Files.size(p)}"))
-      finally st.close()
-    } else if (java.nio.file.Files.exists(dir)) mix(s"f:${java.nio.file.Files.size(dir)}")
-    f"$h%016x"
-  }
+  private[graft] def fixtureFingerprint(sfDir: String): String =
+    graft.sources.ContentStamp(SparkSession.active, s"$sfDir/documents.parquet")
 
   /** Deterministic scratch root for derived-from-fixture tables, keyed by
     * the fixture CONTENT fingerprint (not just the path string).

@@ -247,6 +247,7 @@ object TextOps {
         for {
           i <- sorted.indices.iterator
           j <- ((i + 1) until sorted.length).iterator
+          if sorted(i) != sorted(j) // a duplicated doc_id is not a pair
         } yield (sorted(i), sorted(j))
       }
       .toDF("doc_a", "doc_b")
@@ -306,6 +307,7 @@ object TextOps {
         for {
           i <- sorted.indices.iterator
           j <- ((i + 1) until sorted.length).iterator
+          if sorted(i)._1 != sorted(j)._1 // a duplicated doc_id is not a pair
         } yield (sorted(i)._1, sorted(j)._1, sorted(i)._2, sorted(j)._2)
       }
       .toDF("doc_a", "doc_b", "sim_a", "sim_b")

@@ -25,58 +25,15 @@ object Fixtures {
 
   // ---- parquet table-plan memo -------------------------------------------
 
-  /** Lazy parquet-read memo — METADATA reuse only (optimization guide §6's
-    * file-listing cost): every `spark.read.parquet` pays a driver-side
-    * directory listing + footer schema read (~80 ms per table measured
-    * here, tools.OverheadProbe; far worse on object stores), and the
-    * query surface pays it 10× per SQL-backed query via registerViews and
-    * once per fixture-table consumer. The memo returns the SAME lazy
-    * DataFrame (a logical plan) per (session, path, content stamp): no
-    * rows are ever cached — every action still scans parquet from disk —
-    * only the file list + schema are reused. The key carries a content
-    * stamp (entry names + sizes of the path), so a REGENERATED table at
-    * the same path gets a fresh listing instead of a stale one (the same
-    * content-keying discipline as SparkEntry's scratch roots); staleness
-    * is re-checked on every call. Sessions beyond 3 are evicted like the
-    * dims memo — losing only memoization, never data.
+  /** Lazy parquet read through [[graft.SessionMemo]], versioned by the
+    * path's [[ContentStamp]]: the same lazy DataFrame (file list + schema,
+    * never rows) per session until the table is rewritten. It saves the
+    * driver-side listing + footer read that registerViews paid for 10
+    * tables per SQL-backed query (0.86–2.2 s a call, BENCH.md round 8).
     */
-  private val tableCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.HashMap[String, DataFrame]]()
-
-  private def pathStamp(path: String): String = {
-    import scala.jdk.CollectionConverters._
-    val p = java.nio.file.Paths.get(path)
-    var h = 0xcbf29ce484222325L
-    def mix(s: String): Unit =
-      s.getBytes("UTF-8").foreach { b => h ^= (b & 0xffL); h *= 0x100000001b3L }
-    if (java.nio.file.Files.isDirectory(p)) {
-      val st = java.nio.file.Files.list(p)
-      try st.iterator().asScala.toSeq.sortBy(_.getFileName.toString)
-        .foreach(f => mix(s"${f.getFileName}:${java.nio.file.Files.size(f)}"))
-      finally st.close()
-    } else if (java.nio.file.Files.exists(p)) mix(s"f:${java.nio.file.Files.size(p)}")
-    f"$h%016x"
-  }
-
-  def readParquet(spark: SparkSession, path: String): DataFrame = tableCache.synchronized {
-    if (tableCache.size > 3) {
-      val it = tableCache.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey ne spark) it.remove()
-    }
-    var m = tableCache.get(spark)
-    if (m == null) {
-      m = scala.collection.mutable.HashMap.empty[String, DataFrame]
-      tableCache.put(spark, m)
-    }
-    val key = s"$path@${pathStamp(path)}"
-    m.getOrElse(key, {
-      // drop any stale stamp of the same path before inserting the new one
-      m.keysIterator.filter(_.startsWith(path + "@")).toList.foreach(m.remove)
-      val df = spark.read.parquet(path)
-      m.put(key, df)
-      df
-    })
-  }
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    graft.SessionMemo.get(spark, s"parquet:$path", ContentStamp(spark, path))(
+      spark.read.parquet(path))(_ => ())
 
   // ---- pages ------------------------------------------------------------
 

@@ -31,7 +31,7 @@ class GoldenSpec extends SparkTestBase {
     // frozen round 4 (the one query that had no row-level evidence): Lloyd
     // means now sum in DECIMAL (exact + associative → bit-identical under
     // any partial-aggregate merge order); hash verified identical at
-    // local[4]/local[13]/local[32] before freezing (tools/DriveGolden)
+    // local[4]/local[13]/local[32] before freezing (canonical() below)
     "q_ann_ivf" -> "e456087bc611b889")
 
   def canonical(df: org.apache.spark.sql.DataFrame): String = {

@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * differ (B: 300 docs, rewritten text) and runs A → B → A through the
   * sfDir-keyed cluster cache (jacPairs → q_dedup_clusters) and the
   * per-sfDir page join (q_pip_spatial). The A snapshots must agree
-  * row-for-row and differ from B. The fixture-constant caches
+  * row-for-row and differ from B. The fixture-constant memos
   * (dims/topo/rawTopo/…) are sfDir-independent by construction — see
-  * the keying audit note at SparkEntry's cache block.
+  * the version rule in SessionMemo's scaladoc.
   */
 class TwoSfDirSpec extends SparkTestBase {
 

@@ -45,6 +45,17 @@ class TextOpsSpec extends SparkTestBase {
     }
   }
 
+  test("a duplicated doc_id never pairs with itself (minhash and simhash)") {
+    val text = "the quick brown fox jumps over the lazy dog near the river bank today"
+    val dup = Seq((1L, text), (1L, text), (2L, text)).toDF("doc_id", "text")
+    val minhash = TextOps.minhashDedup(dup, 0.5).select("doc_a", "doc_b").as[(Long, Long)].collect()
+    val simhash = TextOps.simhashDedup(dup, 3).select("doc_a", "doc_b").as[(Long, Long)].collect()
+    for ((name, pairs) <- Seq("minhash" -> minhash, "simhash" -> simhash)) {
+      assert(pairs.forall { case (a, b) => a != b }, s"$name self-pair: ${pairs.toSeq}")
+      assert(pairs.toSet == Set((1L, 2L)), s"$name lost the real pair: ${pairs.toSeq}")
+    }
+  }
+
   test("language id picks the profile language on crafted samples") {
     val samples = Seq(
       (1L, "the cat and the dog sat on a mat in the house"),

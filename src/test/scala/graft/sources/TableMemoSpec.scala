@@ -3,7 +3,7 @@ package graft.sources
 import graft.SparkTestBase
 
 /** The parquet-plan memo (Fixtures.readParquet) reuses METADATA only:
-  * same lazy plan per (session, path, content stamp), fresh listing when
+  * same lazy plan per (session, path, ContentStamp), fresh listing when
   * the table is rewritten — never stale rows, never cached rows.
   */
 class TableMemoSpec extends SparkTestBase {
@@ -27,6 +27,21 @@ class TableMemoSpec extends SparkTestBase {
     val second = Fixtures.readParquet(spark, path)
     assert(second ne first, "changed content must produce a fresh plan")
     assert(second.count() == 4, "the fresh plan must see the new rows")
+  }
+
+  test("rewriting a hive-partitioned table invalidates the memo (recursive stamp)") {
+    import spark.implicits._
+    // Knn.writeIndexed layout: only pcell=N/ directories at the top level,
+    // so a rewrite into the same partitions changes nothing one level deep
+    val path = java.nio.file.Files.createTempDirectory("graft_memo_hive").toString + "/idx"
+    def pages(n: Int) = (0 until n).map(i => (s"u$i", 4.35 + i * 1e-4, 50.85)).toDF("url", "lon", "lat")
+    graft.operators.Knn.writeIndexed(pages(3), path)
+    val first = Fixtures.readParquet(spark, path)
+    assert(first.count() == 3)
+    graft.operators.Knn.writeIndexed(pages(5), path)
+    val second = Fixtures.readParquet(spark, path)
+    assert(second ne first, "a rewritten partitioned table must produce a fresh plan")
+    assert(second.count() == 5, "the fresh plan must see the new rows")
   }
 
   test("registerViews serves current rows through the memo") {
