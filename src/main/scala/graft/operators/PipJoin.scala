@@ -83,11 +83,14 @@ object PipJoin {
       .select((Seq("url", "layer", "relId") ++ extraPageCols).map(col): _*)
   }
 
-  /** Broadcast-index strategy: the hot path for fact-side scans. The whole
-    * stab+refine runs inside one probe expression over a broadcast
-    * PipIndex, emitting only true matches — ~2-3 output rows per matched
-    * page instead of ~11 ancestor join rows, which removes the dominant
-    * memory traffic at scale. Identical rows to `matches` (tested).
+  /** Broadcast-index strategy: the hot path for fact-side scans. Covers
+    * and polygons are collected into a broadcast [[PipIndex]], and one
+    * `st_pip_match` generator runs the stab+refine per page and emits a
+    * `(relId, layer)` row per true match — ~2-3 rows per matched page
+    * instead of ~11 ancestor join rows, with no join and no shuffle. The
+    * generator is codegen'd, so it runs in the scan's whole-stage stage.
+    * Identical rows to `matches` (tested). `polygons` must hold one row
+    * per relId.
     */
   def matchesIndexed(pages: DataFrame, covers: DataFrame, polygons: DataFrame,
                      extraPageCols: Seq[String] = Nil): DataFrame = {
@@ -95,23 +98,23 @@ object PipJoin {
     import spark.implicits._
     val coverArr = covers.select("relId", "layer", "cellId")
       .as[(Long, String, Long)].collect()
-    val polyMap = polygons.select("relId", "wkb").as[(Long, Array[Byte])].collect().toMap
+    val polyArr = polygons.select("relId", "wkb").as[(Long, Array[Byte])].collect()
+    val polyMap = polyArr.toMap
+    // `matches` refines every polygon row; a map keyed by relId would keep
+    // only the last geometry of a repeated relId and silently disagree
+    require(polyMap.size == polyArr.length, "matchesIndexed needs one polygon row per relId; " +
+      s"relId ${polyArr.map(_._1).diff(polyMap.keys.toSeq).head} repeats")
     // a cover row whose relation is absent from `polygons` (caller passed
     // a filtered polygon slice) must drop like the join strategies drop
     // it, not NoSuchElementException on the driver
     val index = PipIndex.build(coverArr.filter(c => polyMap.contains(c._1)), polyMap)
-    val bc = spark.sparkContext.broadcast(index)
-    val ordinals = index.polys.zipWithIndex
-      .map { case (p, i) => (i, p.relId, p.layer) }.toSeq
-      .toDF("ordinal", "relId", "layer")
-
-    val probe = org.apache.spark.sql.graft.Bridge.column(PipProbe(
+    val matchGen = org.apache.spark.sql.graft.Bridge.column(PipMatch(
       org.apache.spark.sql.graft.Bridge.expression(col("lon")),
-      org.apache.spark.sql.graft.Bridge.expression(col("lat")), bc))
+      org.apache.spark.sql.graft.Bridge.expression(col("lat")),
+      spark.sparkContext.broadcast(index)))
 
     pages
-      .withColumn("ordinal", explode(probe))
-      .join(broadcast(ordinals), Seq("ordinal"))
+      .select(col("*"), matchGen.as(Seq("relId", "layer")))
       .select((Seq("url", "layer", "relId") ++ extraPageCols).map(col): _*)
   }
 

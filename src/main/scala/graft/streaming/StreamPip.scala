@@ -5,15 +5,16 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{PipJoin, Tiling}
 
-/** Streaming spatial enrichment: a stream of geocoded pages is joined
-  * against the (batch) polygon dimension with the SAME broadcast-index
-  * probe expression as the batch hot path (`PipJoin.matchesIndexed`).
-  * The probe is stateless — a stream-static broadcast join, no state
-  * store, no shuffle of the stream — so it composes with any downstream
-  * stateful streaming operator; here: event-time windowed per-tile
-  * counts with a watermark (the streaming analogue of the headline
-  * batch pipeline, and the engine's answer to the reference's wall-clock
-  * micro-batch update loop, env.go:181-207).
+/** Streaming spatial enrichment: each page of a stream of geocoded pages
+  * is matched against the (batch) polygon dimension by the SAME
+  * `st_pip_match` generator as the batch hot path
+  * (`PipJoin.matchesIndexed`), over a broadcast index built once from the
+  * dimension. The generator is stateless — no join, no state store, no
+  * shuffle of the stream — so it composes with any downstream stateful
+  * streaming operator; here: event-time windowed per-tile counts with a
+  * watermark (the streaming analogue of the headline batch pipeline, and
+  * the engine's answer to the reference's wall-clock micro-batch update
+  * loop, env.go:181-207).
   */
 object StreamPip {
 

@@ -68,18 +68,47 @@ class EdgeCaseSpec extends SparkTestBase {
     assert(Cell.level(Cell.leaf(Double.NaN, Double.NaN)) == Cell.MaxLevel)
   }
 
+  private lazy val fixturePolys = Ingest.polygons(spark, graft.sources.Fixtures.nodesDf(spark),
+    graft.sources.Fixtures.waysDf(spark), graft.sources.Fixtures.relationsDf(spark),
+    graft.sources.Fixtures.blacklist).cache()
+
   test("PIP join tolerates pages at the domain boundary") {
-    val polys = Ingest.polygons(spark, graft.sources.Fixtures.nodesDf(spark),
-      graft.sources.Fixtures.waysDf(spark), graft.sources.Fixtures.relationsDf(spark),
-      graft.sources.Fixtures.blacklist).cache()
+    val polys = fixturePolys
     val covers = Ingest.cellCovers(polys)
-    val edgePages = Seq(
-      ("p1", -180.0, -90.0), ("p2", 180.0, 90.0), ("p3", 0.0, 0.0),
-      ("p4", 4.35, 50.85) // inside country 100
+    val edgePages = Seq[(String, Option[Double], Option[Double])](
+      ("p1", Some(-180.0), Some(-90.0)), ("p2", Some(180.0), Some(90.0)), ("p3", Some(0.0), Some(0.0)),
+      ("p4", Some(4.35), Some(50.85)), // inside country 100
+      ("nullLon", None, Some(50.85)), ("nullLat", Some(4.35), None),
+      ("nanLon", Some(Double.NaN), Some(50.85)), ("nanLat", Some(4.35), Some(Double.NaN))
     ).toDF("url", "lon", "lat")
-    val m = PipJoin.matches(edgePages, covers, polys).collect()
-    assert(m.exists(_.getString(0) == "p4"), "interior point must match")
-    assert(!m.exists(r => r.getString(0) == "p1" || r.getString(0) == "p2"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("url", "layer", "relId").as[(String, String, Long)].collect().toSeq.sorted
+    val m = rows(PipJoin.matches(edgePages, covers, polys))
+    assert(m.exists(_._1 == "p4"), "interior point must match")
+    assert(!m.exists(r => r._1 == "p1" || r._1 == "p2"))
+    // a null coordinate emits no rows on every strategy, like explode(null)
+    assert(!m.exists(_._1.startsWith("null")))
+    assert(rows(PipJoin.matchesIndexed(edgePages, covers, polys)) == m)
+    assert(rows(PipJoin.matchesPartitioned(edgePages, covers, polys)) == m)
+  }
+
+  test("matchesIndexed rejects a polygon table that repeats a relId") {
+    val covers = Ingest.cellCovers(fixturePolys)
+    // relId 100 a second time, with its geometry shifted 1° east: a
+    // relId-keyed map would keep one of the two geometries and disagree
+    // with `matches`, which refines both rows
+    val row = fixturePolys.filter(col("relId") === 100L).head()
+    val shifted = org.locationtech.jts.geom.util.AffineTransformation.translationInstance(1.0, 0.0)
+      .transform(graft.geom.Jts.fromWkb(row.getAs[Array[Byte]]("wkb")))
+    val dupRow = org.apache.spark.sql.Row.fromSeq(fixturePolys.columns.toSeq.map {
+      case "wkb" => graft.geom.Jts.toWkb(shifted)
+      case c => row.getAs[Any](c)
+    })
+    val dup = spark.createDataFrame(java.util.List.of(dupRow), fixturePolys.schema)
+    val pages = Seq(("p", 4.35, 50.85)).toDF("url", "lon", "lat")
+    val e = intercept[IllegalArgumentException](
+      PipJoin.matchesIndexed(pages, covers, fixturePolys.unionByName(dup)))
+    assert(e.getMessage.contains("relId 100 "), e.getMessage)
   }
 
   test("tile assignment clamps out-of-range geocodes to edge tiles (no negative indices)") {
