@@ -71,6 +71,20 @@ case class PipIndex(polys: Array[PipIndex.Poly],
 object PipIndex {
   case class Poly(relId: Long, layer: String, wkb: Array[Byte]) extends Serializable
 
+  /** Build from the two driver collects every caller makes: covers
+    * (relId, layer, cellId) and polygons (relId, wkb). The collect
+    * contract: one polygon row per relId (a relId-keyed map would keep
+    * only the last geometry of a repeated relId, while `PipJoin.matches`
+    * refines every row), and a cover whose polygon is absent is dropped,
+    * as the join strategies drop it.
+    */
+  def of(covers: Array[(Long, String, Long)], polygons: Array[(Long, Array[Byte])]): PipIndex = {
+    val polyMap = polygons.toMap
+    require(polyMap.size == polygons.length, "PipIndex needs one polygon row per relId; " +
+      s"relId ${polygons.map(_._1).diff(polyMap.keys.toSeq).head} repeats")
+    build(covers.filter(c => polyMap.contains(c._1)), polyMap)
+  }
+
   /** Build from collected covers (relId, layer, cellId) + polygons
     * (relId, wkb). Driver-side; the dimension side is small by design.
     */

@@ -96,18 +96,9 @@ object PipJoin {
                      extraPageCols: Seq[String] = Nil): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val coverArr = covers.select("relId", "layer", "cellId")
-      .as[(Long, String, Long)].collect()
-    val polyArr = polygons.select("relId", "wkb").as[(Long, Array[Byte])].collect()
-    val polyMap = polyArr.toMap
-    // `matches` refines every polygon row; a map keyed by relId would keep
-    // only the last geometry of a repeated relId and silently disagree
-    require(polyMap.size == polyArr.length, "matchesIndexed needs one polygon row per relId; " +
-      s"relId ${polyArr.map(_._1).diff(polyMap.keys.toSeq).head} repeats")
-    // a cover row whose relation is absent from `polygons` (caller passed
-    // a filtered polygon slice) must drop like the join strategies drop
-    // it, not NoSuchElementException on the driver
-    val index = PipIndex.build(coverArr.filter(c => polyMap.contains(c._1)), polyMap)
+    val index = PipIndex.of(
+      covers.select("relId", "layer", "cellId").as[(Long, String, Long)].collect(),
+      polygons.select("relId", "wkb").as[(Long, Array[Byte])].collect())
     val matchGen = org.apache.spark.sql.graft.Bridge.column(PipMatch(
       org.apache.spark.sql.graft.Bridge.expression(col("lon")),
       org.apache.spark.sql.graft.Bridge.expression(col("lat")),
@@ -364,7 +355,20 @@ object PipJoin {
     * server-side).
     */
   case class MatchRule(matchLayer: String, matchRelId: Long,
-                       restrictLayer: String, restrictAdminLevels: Seq[Int])
+                       restrictLayer: String, restrictAdminLevels: Seq[Int]) {
+
+    /** The filter of [[suggestions]] for one point, as a pure function:
+      * `matched` holds the point's (layer, relId) matches; a suggestion in
+      * `layer` at `adminLevel` is kept unless the rule fires and restricts
+      * it. `r_url IS NULL OR layer != restrictLayer OR adminLevel IN
+      * restrict` under SQL's three-valued logic, so a null layer is
+      * restricted like the restrict layer.
+      */
+    def keeps(matched: Set[(String, Long)], layer: String, adminLevel: Int): Boolean =
+      !matched((matchLayer, matchRelId)) ||
+        (layer != null && layer != restrictLayer) ||
+        restrictAdminLevels.contains(adminLevel)
+  }
 
   def suggestions(missingPages: DataFrame, covers: DataFrame, polygons: DataFrame,
                   matches: DataFrame, rules: Seq[MatchRule]): DataFrame = {
@@ -374,6 +378,8 @@ object PipJoin {
       val ruled = matches
         .filter(col("layer") === rule.matchLayer && col("relId") === rule.matchRelId)
         .select(col("url").as("r_url")).distinct()
+      // `MatchRule.keeps` is this filter for one point (TopoServerSpec
+      // checks the server's suggestions against this join)
       acc.join(ruled, acc("url") === col("r_url"), "left")
         .filter(col("r_url").isNull || col("layer") =!= rule.restrictLayer ||
           col("adminLevel").isin(rule.restrictAdminLevels: _*))

@@ -2,7 +2,7 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.concurrent.Executors
 
 import scala.jdk.CollectionConverters._
@@ -14,18 +14,29 @@ import org.apache.spark.sql.functions._
 
 import graft.JsonUtil
 import graft.geom.Jts
-import graft.operators.{Export, ExportArchive, Ingest, PipJoin}
+import graft.operators.{Export, ExportArchive, Ingest, PipIndex, PipJoin}
 
 /** The reference's interactive curation/serving surface
   * (`osmtopo/env.go:140-179` route table, `bin/osmtopo/cmd/cmd_server.go:
-  * 30-55`), re-expressed over the Spark engine: every handler is a thin
-  * adapter that phrases the request as the SAME DataFrame queries the
-  * batch pipeline runs (PipJoin matches/missing/suggestions, Export.layer,
-  * Ingest.cellCovers, ExportArchive.tarGz) — the server owns only curation
-  * STATE (the per-layer curated relation sets and the missing-coordinate
-  * worklist, JSON files under `dataDir`, standing in for the reference's
-  * topologies file + LevelDB missing store) and an LRU of rendered
-  * TopoJSON documents (`env.go:408-440` topoCache).
+  * 30-55`), over the Spark engine. The server owns curation STATE (the
+  * per-layer curated relation sets and the missing-coordinate worklist,
+  * JSON files under `dataDir`, standing in for the reference's topologies
+  * file + LevelDB missing store), an LRU of rendered TopoJSON documents
+  * (`env.go:408-440` topoCache), and a driver-resident snapshot of the
+  * polygon dimension.
+  *
+  * The point, geometry and coverage reads are answered the way the
+  * reference answers them (`lookup.go:156-174`, `env.go:657-715`): from
+  * an in-memory index, with no Spark job per request. The snapshot is
+  * collected once per server, on first use: the polygons and their
+  * [[Ingest.cellCovers]], a full [[PipIndex]] over them, and per-relId
+  * maps of polygon and cover cells. A second [[PipIndex]] over the curated
+  * relations is rebuilt from the snapshot's covers whenever the curated
+  * sets change. Lookups run [[PipIndex.hits]], the kernel `PipMatchSpec`
+  * pins equal to the Catalyst PIP join; match rules apply through
+  * [[PipJoin.MatchRule.keeps]], the suggestion join's filter as a function.
+  * Cold TopoJSON renders, the export and `/api/relation` still run engine
+  * queries ([[Export.layer]], [[ExportArchive.tarGz]]).
   *
   * Routes (reference handler in parens):
   *  - `GET  /api/status`            (env.go:442-445)
@@ -39,12 +50,8 @@ import graft.operators.{Export, ExportArchive, Ingest, PipJoin}
   *  - `POST /api/delete`            (env.go:545-…)
   *  - `POST /api/export`            (env.go:566-573, async)
   *  - `GET  /api/topologies`        (env.go:575-…, tar.gz stream)
-  *
-  * Single-point lookups run through [[PipJoin.matches]] on a tiny probe
-  * DataFrame — the broadcast stab+refine path, which is exactly the
-  * physical plan you want at 1-100 probe rows; batch imports
-  * (`/api/missing`) phrase the whole body as ONE probe table so N
-  * coordinates cost one job, not N.
+  *  - `GET  /api/metrics`           (no reference analogue: per-route
+  *    request counts and latency, LRU hits, snapshot and index sizes)
   *
   * `port = 0` binds an ephemeral port (tests); [[boundPort]] reports it.
   */
@@ -62,7 +69,6 @@ final class TopoServer(
 
   private val mapper = new ObjectMapper()
   private val lock = new Object
-  private val covers = Ingest.cellCovers(polygons).cache()
 
   // ---- curation state (dataDir/topologies.json: {"layer":[ids…]}) ----
   private var curated: Map[String, Vector[Long]] = {
@@ -89,11 +95,11 @@ final class TopoServer(
     val topoJson = curated.toSeq.sortBy(_._1).map { case (l, ids) =>
       s"${JsonUtil.quote(l)}:${ids.mkString("[", ",", "]")}"
     }.mkString("{", ",", "}")
-    Files.write(dataDir.resolve("topologies.json"), topoJson.getBytes(UTF_8))
+    writeAtomically(dataDir.resolve("topologies.json"), topoJson)
     val missJson = missing.map(c =>
       s"""{"lat":${c.lat.toString},"lon":${c.lon.toString}}""")
       .mkString("[", ",", "]")
-    Files.write(dataDir.resolve("missing.json"), missJson.getBytes(UTF_8))
+    writeAtomically(dataDir.resolve("missing.json"), missJson)
   }
 
   // ---- rendered-topology LRU (env.go topoCache) ----
@@ -101,76 +107,77 @@ final class TopoServer(
     override def removeEldestEntry(e: java.util.Map.Entry[String, String]): Boolean =
       size() > 128
   }
+  private var lruHits = 0L
+  private var lruMisses = 0L
 
   @volatile private var exportRunning = false
   @volatile private var exportError: String = ""
 
   // ------------------------------------------------------------------
-  // lookups, phrased as engine queries
+  // lookups, from the driver-resident dimension
   // ------------------------------------------------------------------
 
-  private def probeDf(coords: Seq[MissingCoord]): DataFrame = {
-    import spark.implicits._
-    coords.map(c => (c.key, c.lon, c.lat)).toDF("url", "lon", "lat")
+  // All guarded by `lock`; readers take the immutable values under it.
+  // The first read collects the dimension while holding `lock`, so
+  // concurrent requests wait for it once. /api/add bumps
+  // `curatedVersion`, and the next curated read rebuilds the curated
+  // index from the snapshot (no Spark job, no cover recompute).
+  private var dim: Dimension = _
+  private var dimBuilds = 0
+  private var curatedIndex: PipIndex = _
+  private var curatedIndexCells = 0
+  private var curatedIndexVersion = -1
+  private var curatedBuilds = 0
+  private var curatedVersion = 0
+
+  private def dimension(): Dimension = lock.synchronized {
+    if (dim == null) {
+      // a dimension that breaks the index contract is the server's fault,
+      // not the request's: 500, not 400
+      dim = try Dimension.collect(polygons) catch {
+        case e: IllegalArgumentException => throw new IllegalStateException(e.getMessage, e)
+      }
+      dimBuilds += 1
+    }
+    dim
   }
 
-  // Curated dim + covers, cached per curated-set version (the
-  // reference's rebuilt `e.topologies` lookup, env.go loadTopologies):
-  // /api/coordinate and /api/missing hit these on every request, and
-  // recomputing the cover expansion per request would dominate their
-  // latency. /api/add bumps the version; the stale pair unpersists.
-  private var curatedCacheVersion = -1
-  private var curatedCache: Option[(DataFrame, DataFrame)] = None
-  @volatile private var curatedVersion = 0
-
-  private def curatedLookup(): Option[(DataFrame, DataFrame)] = lock.synchronized {
-    val cur = curated
-    val pairs = cur.toSeq.flatMap { case (l, ids) => ids.map(id => (l, id)) }
-    if (pairs.isEmpty) return None
-    if (curatedCacheVersion != curatedVersion) {
-      curatedCache.foreach { case (d, c) => d.unpersist(); c.unpersist() }
-      import spark.implicits._
-      val curDim = polygons.join(
-        broadcast(pairs.toDF("c_layer", "c_relId")),
-        col("layer") === col("c_layer") && col("relId") === col("c_relId"), "leftsemi")
-        .cache()
-      curatedCache = Some((curDim, Ingest.cellCovers(curDim).cache()))
-      curatedCacheVersion = curatedVersion
+  private def curatedLookup(): (Dimension, PipIndex) = lock.synchronized {
+    val d = dimension()
+    if (curatedIndexVersion != curatedVersion) {
+      val pairs = curated.toSeq.flatMap { case (l, ids) => ids.map(id => (l, id)) }.toSet
+      val covers = d.covers.filter(c => pairs((c._2, c._1)))
+      curatedIndex = d.index(covers)
+      curatedIndexCells = covers.length
+      curatedIndexVersion = curatedVersion
+      curatedBuilds += 1
     }
-    curatedCache
+    (d, curatedIndex)
   }
 
-  /** Per-layer matches of probe coordinates against the CURATED polygon
-    * subset (the reference's `e.topologies` lookup) — one Spark job for
-    * the whole probe batch. Returns url -> layer -> (relId, name). */
-  private def curatedMatches(coords: Seq[MissingCoord]): Map[String, Map[String, (Long, String)]] = {
-    if (coords.isEmpty) return Map.empty
-    val (curDim, curCovers) = curatedLookup() match {
-      case None => return Map.empty
-      case Some(p) => p
+  /** Per-layer match of one coordinate against the CURATED relations
+    * (the reference's `e.topologies` lookup): layer -> (relId, name),
+    * the smallest containing relId of each layer, as `PipJoin.perLayer`.
+    */
+  private def curatedMatch(d: Dimension, curatedIdx: PipIndex, c: MissingCoord): Map[String, (Long, String)] =
+    curatedIdx.hits(c.lon, c.lat).map(curatedIdx.polys(_)).groupBy(_.layer).map { case (l, ps) =>
+      val id = ps.map(_.relId).min
+      l -> (id, d.polys(id).name)
     }
-    val withName = PipJoin.matches(probeDf(coords), curCovers, curDim)
-      .join(broadcast(polygons.select(col("relId"), col("layer").as("p_layer"), col("name"))),
-        Seq("relId"))
-      .filter(col("layer") === col("p_layer"))
-      .select("url", "layer", "relId", "name")
-    withName.collect().groupBy(_.getString(0)).map { case (u, rows) =>
-      u -> rows.map(r => r.getString(1) -> (r.getLong(2), r.getString(3))).toMap
-    }
-  }
 
   /** Suggestions for one coordinate from the FULL (uncurated) dimension —
     * the reference's `e.lookup` query in missing.go:87-110 — with the
-    * layer match-rules applied. */
-  private def suggestFor(c: MissingCoord): Map[String, Seq[(Long, String, Int)]] = {
-    val m = PipJoin.matches(probeDf(Seq(c)), covers, polygons)
-    val sugg = PipJoin.suggestions(probeDf(Seq(c)), covers, polygons, m, rules)
-      .select("layer", "relId", "name", "adminLevel")
-      .collect()
-    sugg.groupBy(_.getString(0)).map { case (l, rows) =>
-      l -> rows.map(r => (r.getLong(1), r.getString(2), r.getInt(3))).toSeq
-        .sortBy(_._1)
-    }
+    * layer match-rules applied as the batch suggestion join applies them.
+    * Returns layer -> (relId, name, adminLevel), by relId.
+    */
+  private def suggestFor(d: Dimension, c: MissingCoord): Map[String, Seq[(Long, String, Int)]] = {
+    val hits = d.full.hits(c.lon, c.lat).toSeq.map(d.full.polys(_))
+    val matched = hits.map(p => (p.layer, p.relId)).toSet
+    hits.map(p => (p.layer, p.relId, d.polys(p.relId)))
+      .filter { case (l, _, row) => rules.forall(_.keeps(matched, l, row.adminLevel)) }
+      .groupBy(_._1).map { case (l, rows) =>
+        l -> rows.map { case (_, id, row) => (id, row.name, row.adminLevel) }.sortBy(_._1)
+      }
   }
 
   /** Render one object's TopoJSON exactly as the batch export does
@@ -180,12 +187,14 @@ final class TopoServer(
     val cfg = layers.find(_.id == layerId)
       .getOrElse(throw new IllegalArgumentException(s"Unknown layer: $layerId"))
     val key = s"$layerId-$id"
-    lock.synchronized(Option(topoLru.get(key))) match {
+    lock.synchronized {
+      val doc = Option(topoLru.get(key))
+      if (doc.isDefined) lruHits += 1 else lruMisses += 1
+      doc
+    } match {
       case Some(doc) => Some(doc)
       case None =>
-        val exists = polygons
-          .filter(col("layer") === layerId && col("relId") === id).limit(1).count() > 0
-        if (!exists) None
+        if (!dimension().polys.get(id).exists(_.layer == layerId)) None
         else {
           val result = Export.layer(polygons, water, layerId, Seq(id),
             simplifyDigits = cfg.simplifyDigits, quantize = 1e6,
@@ -208,14 +217,11 @@ final class TopoServer(
   }
 
   /** Import missing coordinates: keep only those NOT matched by every
-    * configured layer's curated set (missing.go:25-61) — one batch job. */
+    * configured layer's curated set (missing.go:25-61). */
   private def importMissing(coords: Seq[MissingCoord]): Int = {
-    val matched = curatedMatches(coords)
+    val (d, curatedIdx) = curatedLookup()
     val layerIds = layers.map(_.id).toSet
-    val incomplete = coords.filter { c =>
-      val m = matched.getOrElse(c.key, Map.empty)
-      !layerIds.forall(m.contains)
-    }
+    val incomplete = coords.filterNot(c => layerIds.subsetOf(curatedMatch(d, curatedIdx, c).keySet))
     lock.synchronized {
       val known = missing.map(_.key).toSet
       val add = incomplete.filterNot(c => known(c.key))
@@ -234,13 +240,14 @@ final class TopoServer(
       head match {
         case None => return "null"
         case Some(c) =>
-          val matched = curatedMatches(Seq(c)).getOrElse(c.key, Map.empty)
+          val (d, curatedIdx) = curatedLookup()
+          val matched = curatedMatch(d, curatedIdx, c)
           val unmatchedLayers = layers.map(_.id).filterNot(matched.contains)
           if (unmatchedLayers.isEmpty) {
             lock.synchronized { missing = missing.filterNot(_.key == c.key); persistState() }
             // loop: next head
           } else {
-            val sugg = suggestFor(c)
+            val sugg = suggestFor(d, c)
             val suggJson = unmatchedLayers.map { l =>
               val entries = sugg.getOrElse(l, Nil).map { case (id, name, al) =>
                 s"""{"id":$id,"name":${JsonUtil.quote(Option(name).getOrElse(""))},"admin_level":$al}"""
@@ -289,10 +296,34 @@ final class TopoServer(
     } finally exportRunning = false
   }
 
+  /** The /api/metrics document: the server's counters are read under
+    * `lock`, each route's under its own. */
+  private def metricsJson(): String = {
+    val routeJson = routes.map { case (path, st) => s"${JsonUtil.quote(path)}:${st.json}" }
+      .mkString("{", ",", "}")
+    def sizes(builds: Int, polys: Seq[Array[Byte]], cells: Int): String =
+      s"""{"builds":$builds,"polygons":${polys.size},"cells":$cells,""" +
+        s""""wkb_bytes":${polys.map(_.length.toLong).sum}}"""
+    lock.synchronized {
+      val snap = Option(dim)
+      val cur = Option(curatedIndex)
+      s"""{"routes":$routeJson,"topo_lru":{"hits":$lruHits,"misses":$lruMisses},""" +
+        s""""snapshot":${sizes(dimBuilds, snap.toSeq.flatMap(_.polys.values.map(_.wkb)),
+          snap.fold(0)(_.covers.length))},""" +
+        s""""curated_index":${sizes(curatedBuilds, cur.toSeq.flatMap(_.polys.map(_.wkb)),
+          curatedIndexCells)}}"""
+    }
+  }
+
   // ------------------------------------------------------------------
   // HTTP plumbing
   // ------------------------------------------------------------------
 
+  // The JDK server writes a response's headers and its body as two TCP
+  // segments; with Nagle's algorithm on, the body waits for the client's
+  // delayed ACK, about 40 ms on most keep-alive requests. The JDK reads
+  // this property once, when its first server in the JVM is created.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server: HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
   // non-daemon pool: must be shut down in stop() or it pins the JVM
   // (DestroyJavaVM waits on live non-daemon threads after main returns)
@@ -311,13 +342,22 @@ final class TopoServer(
   private def respond(ex: HttpExchange, code: Int, body: String): Unit =
     respond(ex, code, body.getBytes(UTF_8))
 
-  private def handle(path: String)(f: HttpExchange => Unit): Unit =
-    server.createContext(path, (ex: HttpExchange) =>
+  // one entry per route, in registration order; filled by the
+  // constructor, then only read
+  private val routes = scala.collection.mutable.LinkedHashMap.empty[String, RouteStats]
+
+  private def handle(path: String)(f: HttpExchange => Unit): Unit = {
+    val stats = new RouteStats
+    routes(path) = stats
+    server.createContext(path, (ex: HttpExchange) => {
+      val t0 = System.nanoTime()
       try f(ex)
       catch {
         case e: IllegalArgumentException => respond(ex, 400, Option(e.getMessage).getOrElse(""))
         case e: Exception => respond(ex, 500, Option(e.getMessage).getOrElse(e.toString))
-      })
+      } finally stats.record((System.nanoTime() - t0) / 1e6)
+    })
+  }
 
   private def idFromPath(ex: HttpExchange, depth: Int): Long = {
     val parts = ex.getRequestURI.getPath.split("/")
@@ -358,10 +398,10 @@ final class TopoServer(
     val id = idFromPath(ex, 4)
     ex.getRequestMethod match {
       case "GET" =>
-        val cells = covers.filter(col("relId") === id)
-          .select("cellId").collect().map(_.getLong(0)).sorted
-        if (cells.isEmpty) respond(ex, 404, "Not Found")
-        else respond(ex, 200, cells.mkString("[", ",", "]"))
+        dimension().cells.get(id) match {
+          case None => respond(ex, 404, "Not Found")
+          case Some(cells) => respond(ex, 200, cells.mkString("[", ",", "]"))
+        }
       case "DELETE" =>
         // covers are DERIVED here (recomputed from geometry on ingest);
         // deleting a persisted cover to force recompute, as the
@@ -377,9 +417,10 @@ final class TopoServer(
 
   handle("/api/geometry/") { ex =>
     val id = idFromPath(ex, 4)
-    val rows = polygons.filter(col("relId") === id).select("wkb").limit(1).collect()
-    if (rows.isEmpty) respond(ex, 404, "Not Found")
-    else respond(ex, 200, geoJson(Jts.fromWkb(rows.head.getAs[Array[Byte]](0))))
+    dimension().polys.get(id) match {
+      case None => respond(ex, 404, "Not Found")
+      case Some(p) => respond(ex, 200, geoJson(Jts.fromWkb(p.wkb)))
+    }
   }
 
   handle("/api/relation/") { ex =>
@@ -404,7 +445,7 @@ final class TopoServer(
             val id = node.asLong()
             if (!curated.getOrElse(cfg.id, Vector.empty).contains(id)) {
               curated = curated.updated(cfg.id, curated.getOrElse(cfg.id, Vector.empty) :+ id)
-              curatedVersion += 1 // invalidates the cached curated lookup
+              curatedVersion += 1 // invalidates the curated index
             }
           }
         }
@@ -445,16 +486,13 @@ final class TopoServer(
     }
   }
 
+  handle("/api/metrics") { ex => respond(ex, 200, metricsJson()) }
+
   def start(): TopoServer = { server.start(); this }
 
   def stop(): Unit = {
     server.stop(0)
     executor.shutdown()
-    covers.unpersist()
-    lock.synchronized {
-      curatedCache.foreach { case (d, c) => d.unpersist(); c.unpersist() }
-      curatedCache = None
-    }
   }
 }
 
@@ -466,6 +504,68 @@ object TopoServer {
 
   case class MissingCoord(lat: Double, lon: Double) {
     def key: String = s"$lat,$lon"
+  }
+
+  /** One polygon row of the dimension snapshot. */
+  private case class Polygon(layer: String, name: String, adminLevel: Int, wkb: Array[Byte])
+
+  /** The polygon dimension, resident on the driver: every polygon by relId,
+    * its cover cells (relId, layer, cellId), the full [[PipIndex]] and the
+    * sorted cover cells by relId. Immutable once built.
+    */
+  private final class Dimension(rows: Array[(Long, String, String, Int, Array[Byte])],
+                                val covers: Array[(Long, String, Long)]) {
+    private val wkbs = rows.map(r => (r._1, r._5))
+    /** Fails, naming the relId, when `rows` repeats one. */
+    val full: PipIndex = index(covers)
+    val polys: Map[Long, Polygon] = rows.map(r => r._1 -> Polygon(r._2, r._3, r._4, r._5)).toMap
+    val cells: Map[Long, Array[Long]] =
+      covers.groupBy(_._1).map { case (id, cs) => id -> cs.map(_._3).sorted }
+
+    /** A [[PipIndex]] over a subset of `covers`. */
+    def index(subset: Array[(Long, String, Long)]): PipIndex = PipIndex.of(subset, wkbs)
+  }
+
+  private object Dimension {
+    /** Two collects: the polygon rows and their cell covers. */
+    def collect(polygons: DataFrame): Dimension = {
+      import polygons.sparkSession.implicits._
+      new Dimension(
+        polygons.select("relId", "layer", "name", "adminLevel", "wkb")
+          .as[(Long, String, String, Int, Array[Byte])].collect(),
+        Ingest.cellCovers(polygons).select("relId", "layer", "cellId")
+          .as[(Long, String, Long)].collect())
+    }
+  }
+
+  /** Latencies kept per route for /api/metrics' percentiles. */
+  private val LatencyWindow = 1024
+
+  /** Request count and the latest [[LatencyWindow]] latencies of a route. */
+  private final class RouteStats {
+    private val window = new Array[Double](LatencyWindow)
+    private var count = 0L
+
+    def record(ms: Double): Unit = synchronized {
+      window((count % LatencyWindow).toInt) = ms
+      count += 1
+    }
+
+    /** Count and nearest-rank p50/p99 over the window; null before any request. */
+    def json: String = synchronized {
+      val xs = window.take(math.min(count, LatencyWindow.toLong).toInt).sorted
+      def pct(p: Double): String =
+        if (xs.isEmpty) "null" else xs(math.max(0, math.ceil(p * xs.length).toInt - 1)).toString
+      s"""{"count":$count,"p50_ms":${pct(0.5)},"p99_ms":${pct(0.99)}}"""
+    }
+  }
+
+  /** Replaces `target` with `json` through a sibling temp file and an
+    * atomic rename, so a crash mid-write never leaves a truncated file. */
+  private def writeAtomically(target: Path, json: String): Unit = {
+    val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
+    Files.write(tmp, json.getBytes(UTF_8))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Relation row → entity JSON (id + tags map, the reference's raw

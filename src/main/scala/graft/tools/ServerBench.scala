@@ -63,7 +63,7 @@ object ServerBench {
       println(f"topo render cold   ${coldMs}%8.1f ms  ($bytes B)")
       println(f"topo render cached ${warmMs}%8.1f ms / ${warm2Ms}%8.1f ms")
 
-      // batched missing import: N coordinates = ONE probe-table job
+      // batched missing import: N coordinates against the in-memory curated index
       def coords(n: Int): String =
         (0 until n).map(i => s"""{"lat":${35.0 + i * 1e-4},"lon":${139.7 + i * 1e-4}}""")
           .mkString("[", ",", "]")

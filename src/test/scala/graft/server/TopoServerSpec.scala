@@ -4,11 +4,19 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, min}
+import org.locationtech.jts.geom.Coordinate
 
 import graft.SparkTestBase
-import graft.operators.{Export, Ingest}
+import graft.geom.Jts
+import graft.operators.{Export, Ingest, PipJoin}
 import graft.sources.Fixtures
 
 /** End-to-end drive of the HTTP serving surface against the fixture
@@ -20,8 +28,17 @@ import graft.sources.Fixtures
   * Geometry facts used: countries 100..104 are radius-5 octagons around
   * brussels/paris/nyc/tokyo/sydney; tokyo (139.7, 35.7) lies in country
   * 103 ONLY, so a probe there is incomplete until 103 is curated.
+  *
+  * Also: the repeated-relId contract, match rules against
+  * `PipJoin.suggestions`, the smallest-relId curated match, the
+  * /api/metrics counters, and the reads served from the driver-resident
+  * dimension: once warm they launch no Spark job, and on a dense set of
+  * probe points they answer what `PipJoin.matches`, `PipJoin.missing` and
+  * `PipJoin.suggestions` answer on the same fixture world.
   */
 class TopoServerSpec extends SparkTestBase {
+  import spark.implicits._
+  import TopoServer.MissingCoord
 
   private val mapper = new ObjectMapper()
   private lazy val http = HttpClient.newHttpClient()
@@ -36,6 +53,9 @@ class TopoServerSpec extends SparkTestBase {
     http.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
       .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
+
+  private def coordsJson(cs: Seq[MissingCoord]): String =
+    cs.map(c => s"""{"lat":${c.lat},"lon":${c.lon}}""").mkString("[", ",", "]")
 
   private def fixtureWorld() = {
     val polys = Ingest.polygons(spark, Fixtures.nodesDf(spark), Fixtures.waysDf(spark),
@@ -162,6 +182,282 @@ class TopoServerSpec extends SparkTestBase {
         .get("id").asLong() == 104L)
       assert(post(port2, "/api/add", """{"countries":104}""").statusCode() == 200)
       assert(get(port2, "/api/coordinate").body() == "null")
+      // state files are replaced through a temp file and a rename; none
+      // is left behind
+      val left = Files.list(dataDir).iterator().asScala.map(_.getFileName.toString).toSeq
+      assert(!left.exists(_.endsWith(".tmp")), left)
     } finally server2.stop()
+  }
+
+  /** A copy of fixture polygon `like` under another relId, name and
+    * geometry. */
+  private def extraPolygon(polys: DataFrame, like: Long, relId: Long, name: String,
+                           wkb: Array[Byte]): DataFrame = {
+    val row = polys.filter(col("relId") === like).head()
+    val extra = Row.fromSeq(polys.columns.toSeq.map {
+      case "relId" => relId
+      case "name" => name
+      case "wkb" => wkb
+      case c => row.getAs[Any](c)
+    })
+    polys.unionByName(spark.createDataFrame(java.util.List.of(extra), polys.schema))
+  }
+
+  private def octagonWkb(cx: Double, cy: Double, r: Double): Array[Byte] = {
+    val ring = Fixtures.octagon(cx, cy, r)
+    graft.geom.Jts.toWkb(graft.geom.Jts.factory.createPolygon(
+      (ring :+ ring.head).map { case (x, y) => new Coordinate(x, y) }.toArray))
+  }
+
+  test("a polygon table that repeats a relId fails the read routes with the index's message") {
+    val (polys, water) = fixtureWorld()
+    val row = polys.filter(col("relId") === 100L).head()
+    val shifted = graft.geom.Jts.toWkb(org.locationtech.jts.geom.util.AffineTransformation
+      .translationInstance(1.0, 0.0).transform(graft.geom.Jts.fromWkb(row.getAs[Array[Byte]]("wkb"))))
+    val dup = extraPolygon(polys, like = 100L, relId = 100L, name = "country_brussels", wkb = shifted)
+    val server = new TopoServer(spark, dup, water, Seq(TopoServer.LayerConfig("countries", 3)),
+      Files.createTempDirectory("topo_server_dup")).start()
+    try {
+      val port = server.boundPort
+      // the same message as matchesIndexed's (EdgeCaseSpec), never one of
+      // the two geometries
+      Seq(get(port, "/api/geometry/100"),
+        post(port, "/api/missing", """[{"lat":50.85,"lon":4.35}]""")).foreach { r =>
+        assert(r.statusCode() == 500, r.body())
+        assert(r.body().contains("needs one polygon row per relId; relId 100 repeats"), r.body())
+      }
+    } finally server.stop()
+  }
+
+  test("match rules: /api/coordinate suggestions equal PipJoin.suggestions") {
+    val (polys, water) = fixtureWorld()
+    val covers = Ingest.cellCovers(polys)
+    val brussels = MissingCoord(50.85, 4.35)
+    val tokyo = MissingCoord(35.7, 139.7)
+    val pages = Seq(brussels, tokyo).map(c => (c.key, c.lon, c.lat)).toDF("url", "lon", "lat")
+    // city 300 (Brussels) has admin level 6, city 303 (Tokyo) level 8; no
+    // city has level 7. Both rules fire in Brussels (country 100) only.
+    Seq(Seq(6) -> Seq(300L), Seq(7) -> Nil).foreach { case (levels, brusselsCities) =>
+      val rules = Seq(PipJoin.MatchRule("countries", 100L, "cities", levels))
+      val expected = PipJoin.suggestions(pages, covers, polys, PipJoin.matches(pages, covers, polys), rules)
+        .filter(col("layer") === "cities")
+        .select("url", "relId", "name", "adminLevel").as[(String, Long, String, Int)].collect()
+        .groupBy(_._1).map { case (u, rs) => u -> rs.map(r => (r._2, r._3, r._4)).sortBy(_._1).toSeq }
+        .withDefaultValue(Nil)
+      assert(expected(brussels.key).map(_._1) == brusselsCities)
+      assert(expected(tokyo.key).map(_._1) == Seq(303L))
+
+      val server = new TopoServer(spark, polys, water,
+        Seq("countries", "cities").map(TopoServer.LayerConfig(_, 3)),
+        Files.createTempDirectory("topo_server_rules"), rules = rules).start()
+      try {
+        val port = server.boundPort
+        assert(post(port, "/api/missing", coordsJson(Seq(brussels, tokyo))).statusCode() == 200)
+        Seq(brussels, tokyo).foreach { c =>
+          val n = mapper.readTree(get(port, "/api/coordinate").body())
+          assert(n.get("coordinate").get("lat").asDouble() == c.lat)
+          val got = n.get("suggestions").get("cities").elements().asScala
+            .map(e => (e.get("id").asLong(), e.get("name").asText(), e.get("admin_level").asInt())).toSeq
+          assert(got == expected(c.key), s"${c.key} rules $levels")
+          assert(post(port, "/api/delete", s"""{"lat":${c.lat},"lon":${c.lon}}""").statusCode() == 200)
+        }
+      } finally server.stop()
+    }
+  }
+
+  test("a point in two curated polygons of one layer reports the smallest relId") {
+    val (polys0, water) = fixtureWorld()
+    // relId 150 overlaps country 100 around Brussels; appended last, so a
+    // last-row-wins map would report it
+    val polys = extraPolygon(polys0, like = 100L, relId = 150L, name = "country_overlap",
+      wkb = octagonWkb(4.35, 50.85, 1.0))
+    val server = new TopoServer(spark, polys, water,
+      Seq("countries", "cities").map(TopoServer.LayerConfig(_, 3)),
+      Files.createTempDirectory("topo_server_overlap")).start()
+    try {
+      val port = server.boundPort
+      assert(post(port, "/api/add", """{"countries":150}""").statusCode() == 200)
+      assert(post(port, "/api/add", """{"countries":100}""").statusCode() == 200)
+      assert(post(port, "/api/missing", """[{"lat":50.85,"lon":4.35}]""").statusCode() == 200)
+      val n = mapper.readTree(get(port, "/api/coordinate").body())
+      assert(n.get("matchids").get("countries").asLong() == 100L, n)
+      assert(n.get("matchnames").get("countries").asText() == "country_brussels", n)
+      // and the J7 pivot agrees
+      val pages = Seq(("p", 4.35, 50.85)).toDF("url", "lon", "lat")
+      val curated = polys.filter(col("relId").isin(100L, 150L))
+      assert(PipJoin.perLayer(PipJoin.matches(pages, Ingest.cellCovers(curated), curated), Seq("countries"))
+        .select("countries").head().getLong(0) == 100L)
+    } finally server.stop()
+  }
+
+  test("/api/metrics counts requests, LRU hits and the index sizes") {
+    val (polys, water) = fixtureWorld()
+    val server = new TopoServer(spark, polys, water, Seq(TopoServer.LayerConfig("countries", 3)),
+      Files.createTempDirectory("topo_server_metrics")).start()
+    try {
+      val port = server.boundPort
+      assert(get(port, "/api/status").statusCode() == 200)
+      assert(get(port, "/api/status").statusCode() == 200)
+      assert(post(port, "/api/add", """{"countries":103}""").statusCode() == 200)
+      assert(post(port, "/api/missing", """[{"lat":50.85,"lon":4.35},{"lat":35.7,"lon":139.7}]""")
+        .statusCode() == 200)
+      assert(get(port, "/api/coordinate").statusCode() == 200)
+      assert(get(port, "/api/topo/countries/303").statusCode() == 404) // a city, not a country
+      assert(get(port, "/api/topo/countries/103").statusCode() == 200)
+      assert(get(port, "/api/topo/countries/103").statusCode() == 200)
+
+      val m = mapper.readTree(get(port, "/api/metrics").body())
+      val counts = m.get("routes").properties().asScala.map(e => e.getKey -> e.getValue.get("count").asLong()).toMap
+      assert(counts.filter(_._2 > 0) == Map("/api/status" -> 2L, "/api/add" -> 1L, "/api/missing" -> 1L,
+        "/api/coordinate" -> 1L, "/api/topo/" -> 3L), counts)
+      assert(m.get("routes").get("/api/geometry/").get("p50_ms").isNull)
+      val topo = m.get("routes").get("/api/topo/")
+      assert(topo.get("p50_ms").asDouble() > 0 && topo.get("p50_ms").asDouble() <= topo.get("p99_ms").asDouble())
+      // 303 and the first 103 miss, the second 103 hits
+      assert(m.get("topo_lru").get("hits").asLong() == 1L && m.get("topo_lru").get("misses").asLong() == 2L, m)
+
+      val rows = polys.select("relId", "wkb").as[(Long, Array[Byte])].collect()
+      val covers = Ingest.cellCovers(polys).select("relId").as[Long].collect()
+      val snap = m.get("snapshot")
+      assert(snap.get("builds").asInt() == 1)
+      assert(snap.get("polygons").asInt() == rows.length)
+      assert(snap.get("cells").asInt() == covers.length)
+      assert(snap.get("wkb_bytes").asLong() == rows.map(_._2.length.toLong).sum)
+      val cur = m.get("curated_index")
+      assert(cur.get("builds").asInt() == 1) // /api/coordinate reuses /api/missing's build
+      assert(cur.get("polygons").asInt() == 1)
+      assert(cur.get("cells").asInt() == covers.count(_ == 103L))
+      assert(cur.get("wkb_bytes").asLong() == rows.find(_._1 == 103L).get._2.length)
+    } finally server.stop()
+  }
+
+  private val threeLayers = Seq("countries", "regions", "cities").map(TopoServer.LayerConfig(_, simplifyDigits = 3))
+
+  /** 60% within ±0.5° of a fixture city, the rest within ±6° (across the
+    * country boundaries), plus every polygon vertex and edge midpoint. */
+  private def probePoints(polys: DataFrame, n: Int, seed: Long): Seq[MissingCoord] = {
+    val rnd = new scala.util.Random(seed)
+    def round6(d: Double) = math.rint(d * 1e6) / 1e6
+    val seeded = Seq.fill(n) {
+      val (_, cx, cy) = Fixtures.cities(rnd.nextInt(Fixtures.cities.size))
+      val r = if (rnd.nextInt(10) < 6) 0.5 else 6.0
+      MissingCoord(round6(cy + (rnd.nextDouble() - 0.5) * 2 * r), round6(cx + (rnd.nextDouble() - 0.5) * 2 * r))
+    }
+    val onRings = polys.select("wkb").as[Array[Byte]].collect().toSeq.flatMap { wkb =>
+      val g = Jts.fromWkb(wkb)
+      (0 until g.getNumGeometries).flatMap { i =>
+        val p = g.getGeometryN(i).asInstanceOf[org.locationtech.jts.geom.Polygon]
+        (p.getExteriorRing +: (0 until p.getNumInteriorRing).map(p.getInteriorRingN)).flatMap { ring =>
+          val cs = ring.getCoordinates.toSeq
+          cs.map(c => MissingCoord(c.y, c.x)) ++
+            cs.zip(cs.tail).map { case (a, b) => MissingCoord((a.y + b.y) / 2, (a.x + b.x) / 2) }
+        }
+      }
+    }
+    (seeded ++ onRings).distinctBy(_.key)
+  }
+
+  test("warm read routes launch no Spark job") {
+    val (polys, water) = fixtureWorld()
+    val server = new TopoServer(spark, polys, water, threeLayers,
+      Files.createTempDirectory("topo_server_jobs")).start()
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    try {
+      val port = server.boundPort
+      val hundred = probePoints(polys, 100, seed = 7).take(100)
+      def reads(): Seq[HttpResponse[String]] = Seq(
+        post(port, "/api/missing", coordsJson(Seq(MissingCoord(35.8, 139.8)))),
+        post(port, "/api/missing", coordsJson(hundred)),
+        get(port, "/api/coordinate"),
+        get(port, "/api/geometry/203"),
+        get(port, "/api/coverage/302"),
+        get(port, "/api/topo/countries/103"))
+      assert(post(port, "/api/add", """{"countries":103}""").statusCode() == 200)
+      // warm-up: one request of each route builds the snapshot, the
+      // curated index and the cached render
+      reads().foreach(r => assert(r.statusCode() == 200, r.body()))
+
+      val sc = spark.sparkContext
+      org.apache.spark.graft.TestBridge.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      try {
+        reads().foreach(r => assert(r.statusCode() == 200, r.body()))
+        org.apache.spark.graft.TestBridge.drainListenerBus(sc)
+      } finally sc.removeSparkListener(listener)
+      assert(jobs.get() == 0)
+    } finally server.stop()
+  }
+
+  test("missing and suggestions equal the DataFrame path on 2000 seeded points and every ring point") {
+    val (polys0, water) = fixtureWorld()
+    val polys = polys0.cache()
+    val curatedIds = Map("countries" -> Seq(100L, 101L, 102L, 103L, 104L),
+      "regions" -> Seq(200L, 201L), "cities" -> Seq(300L))
+    // the first fires in Brussels and keeps its level-6 city; the second
+    // fires in New York and drops every region suggestion there
+    val rules = Seq(PipJoin.MatchRule("countries", 100L, "cities", Seq(6)),
+      PipJoin.MatchRule("countries", 102L, "regions", Seq(5)))
+    val coords = probePoints(polys, 2000, seed = 42)
+    val pages = coords.map(c => (c.key, c.lon, c.lat)).toDF("url", "lon", "lat").cache()
+
+    // the DataFrame path
+    val curated = polys.filter(curatedIds.toSeq.flatMap { case (l, ids) =>
+      ids.map(id => col("layer") === l && col("relId") === id) }.reduce(_ || _))
+    val curMatches = PipJoin.matches(pages, Ingest.cellCovers(curated), curated).cache()
+    val expectedMissing = PipJoin.missing(pages, curMatches, threeLayers.map(_.id))
+      .select("url").as[String].collect().toSet
+    val expectedIds = curMatches.groupBy("url", "layer").agg(min("relId"))
+      .as[(String, String, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
+    val covers = Ingest.cellCovers(polys)
+    def suggestions(rules: Seq[PipJoin.MatchRule]) =
+      PipJoin.suggestions(pages, covers, polys, PipJoin.matches(pages, covers, polys), rules)
+        .select("url", "layer", "relId", "name", "adminLevel").as[(String, String, Long, String, Int)]
+        .collect().groupBy(r => (r._1, r._2))
+        .map { case (k, rs) => k -> rs.map(r => (r._3, Option(r._4).getOrElse(""), r._5)).sortBy(_._1).toSeq }
+        .withDefaultValue(Nil)
+    val expectedSugg = suggestions(rules)
+    // both sides of the data: complete and incomplete points, and points
+    // whose suggestions the rules drop
+    assert(expectedMissing.nonEmpty && expectedMissing.size < coords.size)
+    assert(suggestions(Nil).values.map(_.size).sum > expectedSugg.values.map(_.size).sum)
+
+    val dataDir = Files.createTempDirectory("topo_server_diff")
+    val server = new TopoServer(spark, polys, water, threeLayers, dataDir, rules = rules).start()
+    try {
+      val port = server.boundPort
+      curatedIds.foreach { case (l, ids) =>
+        ids.foreach(id => assert(post(port, "/api/add", s"""{"$l":$id}""").statusCode() == 200))
+      }
+      val imp = post(port, "/api/missing", coordsJson(coords))
+      assert(imp.statusCode() == 200, imp.body())
+      val kept = mapper.readTree(Files.readAllBytes(dataDir.resolve("missing.json"))).elements().asScala
+        .map(n => MissingCoord(n.get("lat").asDouble(), n.get("lon").asDouble()).key).toSeq
+      assert(kept.toSet == expectedMissing)
+      assert(kept.size == expectedMissing.size)
+
+      // walk the worklist: every head's curated matches and suggestions
+      kept.foreach { key =>
+        val n = mapper.readTree(get(port, "/api/coordinate").body())
+        val c = MissingCoord(n.get("coordinate").get("lat").asDouble(), n.get("coordinate").get("lon").asDouble())
+        assert(c.key == key)
+        val matched = n.get("matchids").properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
+        assert(matched == threeLayers.map(_.id).flatMap(l => expectedIds.get((key, l)).map(l -> _)).toMap, key)
+        val sugg = n.get("suggestions")
+        assert(sugg.fieldNames().asScala.toSet == threeLayers.map(_.id).toSet -- matched.keySet, key)
+        sugg.properties().asScala.foreach { e =>
+          val got = e.getValue.elements().asScala
+            .map(s => (s.get("id").asLong(), s.get("name").asText(), s.get("admin_level").asInt())).toSeq
+          assert(got == expectedSugg((key, e.getKey)), s"$key ${e.getKey}")
+        }
+        assert(post(port, "/api/delete", s"""{"lat":${c.lat},"lon":${c.lon}}""").statusCode() == 200)
+      }
+      assert(get(port, "/api/coordinate").body() == "null")
+    } finally {
+      server.stop()
+      Seq(curMatches, pages, polys).foreach(_.unpersist())
+    }
   }
 }
