@@ -174,7 +174,6 @@ object Clusters {
     var it = 0
     var stable = false
     while (it < maxIter && !stable) {
-      val t0 = System.nanoTime()
       e = smallStar(largeStar(e)).localCheckpoint() // truncate lineage per round
       if (exact) {
         // prevE starts as the materialized input, so comparing from round
@@ -189,8 +188,6 @@ object Clusters {
         stable = sig == prev
         prev = sig
       }
-      if (sys.props.contains("graft.prof"))
-        println(f"CCPROF round $it ${(System.nanoTime() - t0) / 1e9}%6.3f s")
       it += 1
     }
     // a non-converged edge set is NOT a star forest — labels derived from

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.geom.Jts
@@ -80,25 +80,22 @@ object Export {
 
   private def jsonEsc(s: String): String = graft.JsonUtil.esc(s)
 
-  /** S10: the TopoJSON file sink — one `NNNN.topojson` per slice
-    * (export.go:101-114). Arc indices follow the TopoJSON convention:
-    * forward i, reversed ^i. Slice files subset objects and renumber the
-    * referenced arcs (the topo.Filter step, export.go:95-99); bounding
-    * boxes are dropped. Objects carry `properties` (name, name:<lang>)
+  /** S10: one TopoJSON document per slice, as (slice, json). Arc indices
+    * follow the TopoJSON convention: forward i, reversed ^i. Slice
+    * documents subset objects and renumber the referenced arcs (the
+    * topo.Filter step, export.go:95-99); bounding boxes are dropped.
+    * Objects carry `properties` (name, name:<lang>)
     * when the layer was exported with names (export.go:36-43,
     * geometries.go:147-161).
     *
     * Distributed: each slice's JSON is assembled inside a `groupByKey(slice)
-    * .mapGroups` — arcs and uses are joined in, never collected wholesale;
-    * the driver only streams one finished slice document at a time
-    * (`toLocalIterator`) to write the files.
+    * .mapGroups` — arcs and uses are joined in, never collected wholesale.
     *
     * Quantized topologies write integer delta-encoded arcs with the
     * transform; unquantized ones write absolute double positions and omit
     * the transform, per the TopoJSON spec.
     */
-  def writeSlices(result: LayerResult, outDir: String): Seq[String] = {
-    import java.nio.file.{Files, Paths}
+  def sliceDocuments(result: LayerResult): Dataset[(Int, String)] = {
     val spark = result.topo.uses.sparkSession
     import spark.implicits._
 
@@ -147,7 +144,7 @@ object Export {
       s""""transform":{"scale":[${1 / kx},${1 / ky}],"translate":[$x0,$y0]},"""
     }.getOrElse("")
 
-    val sliceJson = rows.groupByKey(_._1).mapGroups { (slice, it) =>
+    rows.groupByKey(_._1).mapGroups { (slice, it) =>
       val uses = it.toArray
       val byObj = uses.groupBy(_._2)
       val objIds = byObj.keys.toSeq.sorted
@@ -174,11 +171,19 @@ object Export {
       }.mkString(",")
       (slice, s"""{"type":"Topology",$transformJson"objects":{$objectsJson},"arcs":$arcsJson}""")
     }
+  }
 
+  /** S10: the TopoJSON file sink — [[sliceDocuments]] written as one
+    * `NNNN.topojson` per slice (export.go:101-114) under
+    * `outDir/<layer>`. The driver streams one finished slice document at
+    * a time (`toLocalIterator`). Returns the written paths, sorted.
+    */
+  def writeSlices(result: LayerResult, outDir: String): Seq[String] = {
+    import java.nio.file.{Files, Paths}
     val dir = Paths.get(outDir, result.layer)
     Files.createDirectories(dir)
     val out = Seq.newBuilder[String]
-    val it = sliceJson.toLocalIterator()
+    val it = sliceDocuments(result).toLocalIterator()
     while (it.hasNext) {
       val (slice, json) = it.next()
       val path = dir.resolve(f"$slice%04d.topojson")
@@ -191,7 +196,7 @@ object Export {
   /** Run the full export for one layer: curated ids → simplify →
     * clip water → names → quantized topology → slices. When `relations`
     * is given, the exported objects carry name/name:<lang> properties
-    * (export.go:36-43) emitted into the TopoJSON by writeSlices.
+    * (export.go:36-43) emitted into the TopoJSON by sliceDocuments.
     */
   def layer(polygons: DataFrame, water: DataFrame, layerId: String,
             curatedIds: Seq[Long], simplifyDigits: Int,

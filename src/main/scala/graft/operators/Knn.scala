@@ -8,23 +8,27 @@ import graft.cells.Cell
 import graft.functions.GeomExpressions._
 
 /** E7: k-nearest-neighbors via expanding cell-ring search (graft extension
-  * required by the north rule). For a small set of query points, iterate
-  * rings of cells at a fixed index level around each query: candidates
-  * come from a broadcast equi-join of the cell-indexed page table against
-  * the frontier cells. The loop stops once every query's k-th best
-  * distance is provably closer than anything a further ring could hold
-  * (ring r's nearest possible point is ≥ (r-1) cell-heights away).
+  * required by the north rule). Around each query, rings of cells at a
+  * fixed index level are searched in batches that double in width:
+  * candidates come from an equi-join of the cell-indexed page table
+  * against the frontier cells, and only each query's best k survive a
+  * round. A query stops once its k-th best distance is provably closer
+  * than anything a further ring could hold (ring r's nearest possible
+  * point is ≥ (r-1) cell-heights away).
   *
-  * Two candidate sources share one search loop:
-  *  - [[knn]] — an in-memory cell-indexed cache of the page table; the
-  *    frontier join filters rows but every round re-scans the cached
-  *    table (fine when the table fits the cluster's cache);
-  *  - [[knnIndexed]] — a parquet table written by [[writeIndexed]],
-  *    hive-partitioned by the coarse parent cell and cellId-sorted within
-  *    files, so each round's read PRUNES whole partition directories
-  *    (PartitionFilters on the parent cell) and row-groups (cellId
-  *    min/max) instead of re-scanning: the planet-scale shape where the
-  *    page table is far bigger than cache.
+  * Three entry points, one stop rule and one (dist, url) tie order, so
+  * all three return identical rows:
+  *  - [[knn]] — a driver-held `Seq[Query]` against an in-memory
+  *    cell-indexed cache of the page table; the frontier is a broadcast
+  *    probe table and each round collects per-query (n, kth) stats;
+  *  - [[knnIndexed]] — the same loop over a parquet table written by
+  *    [[writeIndexed]], hive-partitioned by the coarse parent cell and
+  *    cellId-sorted within files, so each round's read PRUNES whole
+  *    partition directories (PartitionFilters on the parent cell) and
+  *    row-groups (cellId min/max): the planet-scale shape where the page
+  *    table is far bigger than cache;
+  *  - [[knnBatch]] — queries as a DataFrame with the search state in
+  *    columns, for query counts the driver should never hold.
   *
   * Deterministic: ties broken by url.
   */
@@ -37,47 +41,16 @@ object Knn {
     * level+4 rounds suffice); passing an explicit smaller budget that
     * exhausts before every query completes FAILS loudly — a silently
     * truncated search would return wrong neighbors as if definitive.
-    *
-    * `partitionLevel >= 0` pre-partitions the CACHED index by the coarse
-    * level-`partitionLevel` parent cell (repartition + sort-within, same
-    * layout [[writeIndexed]] puts on disk) and filters each round's scan to
-    * the frontier's parent cells BEFORE the join. The in-memory columnar
-    * scan keeps per-batch min/max stats and skips non-matching batches
-    * (`spark.sql.inMemoryColumnarStorage.partitionPruning`, on by
-    * default), so with pcell-clustered batches a round touches only
-    * cached batches near the frontier — the in-memory analogue of
-    * [[knnIndexed]]'s directory pruning — instead of re-scanning the
-    * whole cached table per ring. Default (-1) keeps the plain layout:
-    * one shuffle cheaper to build, right when rounds are few or the
-    * table is small.
     */
   def knn(pages: DataFrame, queries: Seq[Query], k: Int, level: Int = 8,
-          maxRounds: Int = -1, partitionLevel: Int = -1): DataFrame = {
+          maxRounds: Int = -1): DataFrame = {
     val spark = pages.sparkSession
-    val base = pages.withColumn("cellId", st_cell_at(col("lon"), col("lat"), level))
-    val indexed =
-      if (partitionLevel >= 0) {
-        require(partitionLevel <= level,
-          s"partitionLevel $partitionLevel must be <= index level $level")
-        base
-          .withColumn("pcell", st_cell_at(col("lon"), col("lat"), partitionLevel))
-          .select("url", "lon", "lat", "cellId", "pcell")
-          .repartition(col("pcell"))
-          .sortWithinPartitions(col("pcell"), col("cellId"))
-          .cache() // pcell-clustered batches -> per-round batch pruning
-      } else {
-        base.select("url", "lon", "lat", "cellId")
-          .cache() // one materialization feeds every round's frontier join
-      }
+    val indexed = pages.withColumn("cellId", st_cell_at(col("lon"), col("lat"), level))
+      .select("url", "lon", "lat", "cellId")
+      .cache() // one materialization feeds every round's frontier join
     try
-      search(spark, queries, k, level, maxRounds, (probes, cells) => {
-        val source =
-          if (partitionLevel >= 0) {
-            val parents = cells.map(Cell.parent(_, partitionLevel)).distinct
-            indexed.filter(col("pcell").isin(parents: _*))
-          } else indexed
-        source.join(broadcast(probes), Seq("cellId"))
-      })
+      search(spark, queries, k, level, maxRounds,
+        (probes, _) => indexed.join(broadcast(probes), Seq("cellId")))
     finally indexed.unpersist() // result rides checkpointed best-k, not `indexed`
   }
 
@@ -96,8 +69,8 @@ object Knn {
     * bound, same (dist, url) tie order as [[knn]]; both paths stop only
     * when the bound proves completeness, so results are identical
     * (KnnBatchSpec runs 10⁴ queries through both).
-    */
-  /** `clusterIndexThresholdBytes` gates the cellId-clustered index cache
+    *
+    * `clusterIndexThresholdBytes` gates the cellId-clustered index cache
     * by ESTIMATED index size (catalyst plan stats — no extra job): the
     * upfront repartition+sort costs ~0.4-0.5 s at fixture scale and only
     * pays when rounds sort-merge-join against a BIG index (the cost it
@@ -107,79 +80,36 @@ object Knn {
     * identical either way (layout only); KnnBatchSpec runs both sides.
     */
   def knnBatch(pages: DataFrame, queries: DataFrame, k: Int, level: Int = 8,
-               maxRounds: Int = -1, partitionLevel: Int = -1,
-               partialTopK: Boolean = true,
+               maxRounds: Int = -1,
                clusterIndexThresholdBytes: Long = 64L << 20): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-
-    // Per-round best-k: with partialTopK (default) a bounded native
-    // aggregation ([[graft.functions.TopKByDist]], a
-    // TypedImperativeAggregate) — partial (map-side) + final — ships at
-    // most k rows per queryId per map task into the round's shuffle and
-    // never SORTS the candidate set, where the window form sorts every
-    // candidate row per round. Measured (BENCH.md round 7): 2.6x at
-    // 10^5 queries x 10^8 points, 5.6x on dense cells (populations >> k);
-    // the window form is ~20% faster only for small sparse batches
-    // (10^4 queries, ~k candidates per query per round). Both forms keep
-    // the exact same (dist, url) order — UTF8String binary comparison on
-    // url ties, the same collation the window's sort uses — so results
-    // are row-identical (KnnBatchSpec pins it).
-    def bestK(merged: DataFrame): DataFrame =
-      if (partialTopK) {
-        merged.groupBy("queryId")
-          .agg(graft.functions.TopKByDist.topk_by_dist(col("dist"), col("url"), k).as("topk"))
-          .select(col("queryId"), explode(col("topk")).as("p"))
-          .select(col("queryId"), col("p.url").as("url"), col("p.dist").as("dist"))
-      } else {
-        val w = Window.partitionBy(col("queryId")).orderBy(col("dist"), col("url"))
-        merged.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
-      }
 
     val cellLatDeg = 180.0 / (1L << level).toDouble
     val metersPerLatDeg = graft.geom.Algorithms.EarthRadius * math.Pi / 180.0
     val maxRadius = (1L << level).toInt
     val roundBudget = if (maxRounds > 0) maxRounds else level + 4
 
-    // partitionLevel >= 0: pcell-clustered cache + per-round batch-stat
-    // pruning, as in [[knn]]. The per-round frontier pcell set is
-    // collected for the isin predicate — bounded by the level-P GRID
-    // (2·4^P cells; ~512 at the default 4), NOT by the query count, so
-    // the driver stays constant-bounded even at 10⁶ probes. (A semi-join
-    // would avoid the collect but cannot prune in-memory batches — only
-    // an In/range FILTER reaches the columnar batch stats.)
+    val base = pages
+      .withColumn("cellId", st_cell_at(col("lon"), col("lat"), level))
+      .select("url", "lon", "lat", "cellId")
+    // cellId-clustered + sorted cache: rounds whose probe set outgrows
+    // the broadcast threshold sort-merge-join against the index, and a
+    // plain cache would RE-EXCHANGE the whole index on each such round
+    // (measured: the index side was the dominant shuffle term at the
+    // 10⁵×10⁸ shape — table-linear, ~3 full-index shuffles per run).
+    // Caching behind repartition+sort pays ONE upfront index shuffle
+    // and every round's join then reuses the cached partitioning and
+    // ordering (only the probe side exchanges). Gated by estimated
+    // size: below the threshold the avoided re-exchange is smaller
+    // than the upfront shuffle+sort, so keep the plain cache.
     val indexed =
-      if (partitionLevel >= 0) {
-        require(partitionLevel <= level,
-          s"partitionLevel $partitionLevel must be <= index level $level")
-        pages
-          .withColumn("cellId", st_cell_at(col("lon"), col("lat"), level))
-          .withColumn("pcell", st_cell_at(col("lon"), col("lat"), partitionLevel))
-          .select("url", "lon", "lat", "cellId", "pcell")
-          .repartition(col("pcell"))
-          .sortWithinPartitions(col("pcell"), col("cellId"))
-          .cache()
-      } else {
-        val base = pages
-          .withColumn("cellId", st_cell_at(col("lon"), col("lat"), level))
-          .select("url", "lon", "lat", "cellId")
-        // cellId-clustered + sorted cache: rounds whose probe set outgrows
-        // the broadcast threshold sort-merge-join against the index, and a
-        // plain cache would RE-EXCHANGE the whole index on each such round
-        // (measured: the index side was the dominant shuffle term at the
-        // 10⁵×10⁸ shape — table-linear, ~3 full-index shuffles per run).
-        // Caching behind repartition+sort pays ONE upfront index shuffle
-        // and every round's join then reuses the cached partitioning and
-        // ordering (only the probe side exchanges). Gated by estimated
-        // size: below the threshold the avoided re-exchange is smaller
-        // than the upfront shuffle+sort, so keep the plain cache.
-        if (base.queryExecution.optimizedPlan.stats.sizeInBytes <= clusterIndexThresholdBytes)
-          base.cache()
-        else base
-          .repartition(col("cellId"))
-          .sortWithinPartitions(col("cellId"))
-          .cache()
-      }
+      if (base.queryExecution.optimizedPlan.stats.sizeInBytes <= clusterIndexThresholdBytes)
+        base.cache()
+      else base
+        .repartition(col("cellId"))
+        .sortWithinPartitions(col("cellId"))
+        .cache()
 
     // state table: one row per query, radius/done as columns. Checkpointed
     // per round so lineage stays flat across the iteration (the same
@@ -205,17 +135,14 @@ object Knn {
     // the ~0.5 GB/task ceiling the sort fallback is the right escape
     // valve. Restored on exit.
     val fallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val prevFallback = if (partialTopK) spark.conf.getOption(fallbackKey) else None
-    if (partialTopK) {
-      spark.conf.set(fallbackKey,
-        math.min(1L << 19, math.max(128L, 2L * active)).toString)
-    }
+    val prevFallback = spark.conf.getOption(fallbackKey)
+    spark.conf.set(fallbackKey, math.min(1L << 19, math.max(128L, 2L * active)).toString)
 
     try {
       while (active > 0 && round < roundBudget) {
         // ring batches double in width, generated on executors — the
         // frontier never exists as a driver collection
-        val probes0 = state.filter(!col("done"))
+        val probes = state.filter(!col("done"))
           .select(col("queryId").as("_1"), col("qlon").as("_2"),
             col("qlat").as("_3"), col("searched").as("_4"))
           .as[(String, Double, Double, Int)]
@@ -226,29 +153,22 @@ object Knn {
             (from to to).iterator.flatMap(r => Cell.ring(qcell, r).iterator)
               .map(c => (qid, qlon, qlat, c))
           }.toDF("queryId", "qlon", "qlat", "cellId")
-        // pruned mode consumes probes TWICE (parents job + candidate
-        // join): cache for the round so the ring flatMap runs once;
-        // released after the best-k checkpoint has drained the join
-        val probes = if (partitionLevel >= 0) probes0.cache() else probes0
 
-        val source =
-          if (partitionLevel < 0) indexed
-          else {
-            // parent-map BEFORE the distinct+collect: distinct probe
-            // CELLS scale with queries × rings, distinct PCELLS are
-            // grid-bounded
-            val parents = probes
-              .select(col("cellId")).as[Long]
-              .map(Cell.parent(_, partitionLevel))
-              .distinct().collect().toSeq
-            indexed.filter(col("pcell").isin(parents: _*))
-          }
-        val cand = source.join(probes, Seq("cellId"))
+        val cand = indexed.join(probes, Seq("cellId"))
           .withColumn("dist", st_geo_distance(col("qlon"), col("qlat"), col("lon"), col("lat")))
           .select("queryId", "url", "dist")
         val merged = best.map(_.unionByName(cand)).getOrElse(cand)
-        best = Some(bestK(merged).localCheckpoint())
-        if (partitionLevel >= 0) probes.unpersist()
+        // Per-round best-k: a bounded native aggregation
+        // ([[graft.functions.TopKByDist]], a TypedImperativeAggregate) —
+        // partial (map-side) + final — ships at most k rows per queryId
+        // per map task into the round's shuffle and never SORTS the
+        // candidate set. It keeps the (dist, url) order of the final
+        // window below: UTF8String binary comparison on url ties.
+        best = Some(merged.groupBy("queryId")
+          .agg(graft.functions.TopKByDist.topk_by_dist(col("dist"), col("url"), k).as("topk"))
+          .select(col("queryId"), explode(col("topk")).as("p"))
+          .select(col("queryId"), col("p.url").as("url"), col("p.dist").as("dist"))
+          .localCheckpoint())
 
         // convergence as an aggregate + join: each query's (n, kth) lands
         // back on its state row; the stop rule is the SAME bound as the
@@ -290,7 +210,7 @@ object Knn {
         .select(col("queryId"), col("rn").as("rank"), col("url"), col("dist"))
     } finally {
       indexed.unpersist() // result rides checkpointed best-k
-      if (partialTopK) prevFallback match {
+      prevFallback match {
         case Some(v) => spark.conf.set(fallbackKey, v)
         case None => spark.conf.unset(fallbackKey)
       }

@@ -227,11 +227,6 @@ object TopoPipeline {
       s"quantize must be > 1 grid positions (or <= 0 to disable), got $quantize")
     val maxErr = if (simplifyDigits > 0) math.pow(10, -simplifyDigits) else 0.0
 
-    def prof[A](n: String)(f: => A): A =
-      if (!sys.props.contains("graft.prof")) f
-      else { val t0 = System.nanoTime(); val r = f
-             println(f"TOPOPROF $n%-18s ${(System.nanoTime() - t0) / 1e9}%7.3f s"); r }
-
     val ringsDf = rings(features).cache()
     val cutDf = cutWithPositions(ringsDf, junctionPositions(ringPoints(ringsDf))).cache()
 
@@ -260,7 +255,7 @@ object TopoPipeline {
     // cut.count materialization job the build used to launch (one fewer
     // driver-synchronized job per build — fixture-scale builds are
     // job-overhead-bound, see BENCH.md round 5).
-    val zipped = prof("dedup.zipWithIndex")(dedupDf.rdd.zipWithIndex())
+    val zipped = dedupDf.rdd.zipWithIndex()
     // only safe AFTER the zipWithIndex job: cutDf's plan reads ringsDf
     // twice (junction side + cut join side), so dropping the rings cache
     // any earlier would recompute the ring explode
@@ -299,8 +294,8 @@ object TopoPipeline {
     val transform: Option[(Double, Double, Double, Double)] =
       if (quantize <= 0) None
       else {
-        val ext = prof("transform.extent")(simplified.select(explode(col("pts")).as("p"))
-          .agg(min("p._1"), max("p._1"), min("p._2"), max("p._2")).head())
+        val ext = simplified.select(explode(col("pts")).as("p"))
+          .agg(min("p._1"), max("p._1"), min("p._2"), max("p._2")).head()
         // empty feature input → null extent; identity transform (there
         // are no arcs to quantize) beats an opaque null-primitive throw
         if (ext.isNullAt(0)) Some((1.0, 1.0, 0.0, 0.0))

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.concurrent.Executors
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -82,24 +83,32 @@ final class TopoServer(
   }
 
   // ---- missing worklist (dataDir/missing.json: [{"lat":…,"lon":…}]) ----
-  private var missing: Vector[MissingCoord] = {
+  // Keyed by MissingCoord.key in import order: the head is the oldest
+  // entry, and a coordinate is listed once, as in the reference's
+  // key-value missing store. Updated in place under `lock`.
+  private val missing = mutable.LinkedHashMap.empty[String, MissingCoord]
+  locally {
     val f = dataDir.resolve("missing.json")
-    if (Files.exists(f)) {
-      mapper.readTree(Files.readAllBytes(f)).elements().asScala
-        .map(n => MissingCoord(n.get("lat").asDouble(), n.get("lon").asDouble()))
-        .toVector
-    } else Vector.empty
+    if (Files.exists(f))
+      mapper.readTree(Files.readAllBytes(f)).elements().asScala.foreach { n =>
+        val c = MissingCoord(n.get("lat").asDouble(), n.get("lon").asDouble())
+        missing.getOrElseUpdate(c.key, c)
+      }
   }
 
-  private def persistState(): Unit = {
-    val topoJson = curated.toSeq.sortBy(_._1).map { case (l, ids) =>
-      s"${JsonUtil.quote(l)}:${ids.mkString("[", ",", "]")}"
-    }.mkString("{", ",", "}")
-    writeAtomically(dataDir.resolve("topologies.json"), topoJson)
-    val missJson = missing.map(c =>
-      s"""{"lat":${c.lat.toString},"lon":${c.lon.toString}}""")
-      .mkString("[", ",", "]")
-    writeAtomically(dataDir.resolve("missing.json"), missJson)
+  // Each route rewrites only the state file it changed; callers hold `lock`.
+  private def persistCurated(): Unit =
+    writeAtomically(dataDir.resolve("topologies.json"), curated.toSeq.sortBy(_._1).map {
+      case (l, ids) => s"${JsonUtil.quote(l)}:${ids.mkString("[", ",", "]")}"
+    }.mkString("{", ",", "}"))
+
+  private def persistMissing(): Unit =
+    writeAtomically(dataDir.resolve("missing.json"), missing.valuesIterator.map(c =>
+      s"""{"lat":${c.lat.toString},"lon":${c.lon.toString}}""").mkString("[", ",", "]"))
+
+  /** Drops `c` from the worklist; rewrites missing.json if it was listed. */
+  private def dropMissing(c: MissingCoord): Unit = lock.synchronized {
+    if (missing.remove(c.key).isDefined) persistMissing()
   }
 
   // ---- rendered-topology LRU (env.go topoCache) ----
@@ -182,7 +191,8 @@ final class TopoServer(
 
   /** Render one object's TopoJSON exactly as the batch export does
     * (env.go:408-440: Select(id) → Simplify(layer) → ClipWater →
-    * Quantize(1e6)), through [[Export.layer]] + [[Export.writeSlices]]. */
+    * Quantize(1e6)), through [[Export.layer]] + [[Export.sliceDocuments]]:
+    * the lowest-numbered slice, the first file `writeSlices` returns. */
   private def renderTopo(layerId: String, id: Long): Option[String] = {
     val cfg = layers.find(_.id == layerId)
       .getOrElse(throw new IllegalArgumentException(s"Unknown layer: $layerId"))
@@ -201,16 +211,9 @@ final class TopoServer(
             pointLimit = Int.MaxValue, relations = relations,
             languages = cfg.languages)
           try {
-            val tmp = Files.createTempDirectory("topo_api")
-            try {
-              val files = Export.writeSlices(result, tmp.toString)
-              val doc = new String(Files.readAllBytes(Path.of(files.head)), UTF_8)
-              lock.synchronized(topoLru.put(key, doc))
-              Some(doc)
-            } finally {
-              Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-                .forEach(p => Files.deleteIfExists(p))
-            }
+            val doc = Export.sliceDocuments(result).collect().minBy(_._1)._2
+            lock.synchronized(topoLru.put(key, doc))
+            Some(doc)
           } finally result.release()
         }
     }
@@ -223,10 +226,9 @@ final class TopoServer(
     val layerIds = layers.map(_.id).toSet
     val incomplete = coords.filterNot(c => layerIds.subsetOf(curatedMatch(d, curatedIdx, c).keySet))
     lock.synchronized {
-      val known = missing.map(_.key).toSet
-      val add = incomplete.filterNot(c => known(c.key))
-      missing = missing ++ add
-      persistState()
+      val before = missing.size
+      incomplete.foreach(c => missing.getOrElseUpdate(c.key, c))
+      if (missing.size != before) persistMissing()
       missing.size
     }
   }
@@ -236,7 +238,7 @@ final class TopoServer(
     * continues, exactly the reference's recursion. Returns JSON. */
   private def nextCoordinate(): String = {
     while (true) {
-      val head = lock.synchronized(missing.headOption)
+      val head = lock.synchronized(missing.headOption.map(_._2))
       head match {
         case None => return "null"
         case Some(c) =>
@@ -244,7 +246,7 @@ final class TopoServer(
           val matched = curatedMatch(d, curatedIdx, c)
           val unmatchedLayers = layers.map(_.id).filterNot(matched.contains)
           if (unmatchedLayers.isEmpty) {
-            lock.synchronized { missing = missing.filterNot(_.key == c.key); persistState() }
+            dropMissing(c)
             // loop: next head
           } else {
             val sugg = suggestFor(d, c)
@@ -439,6 +441,7 @@ final class TopoServer(
     else {
       val root = mapper.readTree(ex.getRequestBody)
       lock.synchronized {
+        val before = curatedVersion
         layers.foreach { cfg =>
           val node = root.get(cfg.id)
           if (node != null) {
@@ -449,7 +452,7 @@ final class TopoServer(
             }
           }
         }
-        persistState()
+        if (curatedVersion != before) persistCurated()
       }
       respond(ex, 200, "")
     }
@@ -460,7 +463,7 @@ final class TopoServer(
     else {
       val n = mapper.readTree(ex.getRequestBody)
       val c = MissingCoord(n.get("lat").asDouble(), n.get("lon").asDouble())
-      lock.synchronized { missing = missing.filterNot(_.key == c.key); persistState() }
+      dropMissing(c)
       respond(ex, 200, "")
     }
   }

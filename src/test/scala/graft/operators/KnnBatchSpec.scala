@@ -48,19 +48,6 @@ class KnnBatchSpec extends SparkTestBase {
     assert(onlyDriver.isEmpty && onlyBatch.isEmpty,
       s"paths diverge: driver-only=${onlyDriver.take(5)} batch-only=${onlyBatch.take(5)}")
 
-    // pcell-pruned batch variant: grid-bounded frontier-pcell isin reaches
-    // the in-memory batch stats; rows must not change
-    val viaPruned = Knn.knnBatch(pages, qdf, k, partitionLevel = 4)
-      .select("queryId", "rank", "url").as[(String, Long, String)].collect().toSet
-    assert(viaPruned == viaBatch, "pcell-pruned batch path diverged")
-
-    // the per-round window form (partialTopK=false) and the bounded
-    // partial+final top-k aggregation share the (dist, url) order — rows
-    // must be identical
-    val viaWindow = Knn.knnBatch(pages, qdf, k, partialTopK = false)
-      .select("queryId", "rank", "url").as[(String, Long, String)].collect().toSet
-    assert(viaWindow == viaBatch, "window-form best-k diverged from partial top-k")
-
     // the clustered-index-cache gate (round 8): threshold 0 forces the
     // cellId-clustered layout, Long.MaxValue forces the plain cache —
     // both sides of the gate must be row-identical (layout only)

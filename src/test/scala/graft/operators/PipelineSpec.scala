@@ -321,31 +321,6 @@ class PipelineSpec extends SparkTestBase {
       s"pcell filter did not push into the scan:\n$plan")
   }
 
-  test("pre-partitioned in-memory kNN equals the plain cached search; pcell filter reaches the cache scan") {
-    val qs = Seq(Knn.Query("q0", 4.35, 50.85), Knn.Query("far", -170.0, -80.0))
-    val plain = Knn.knn(pages, qs, k = 5)
-      .select("queryId", "rank", "url").as[(String, Long, String)].collect().toSet
-    val pre = Knn.knn(pages, qs, k = 5, partitionLevel = 4)
-      .select("queryId", "rank", "url").as[(String, Long, String)].collect().toSet
-    assert(pre == plain && pre.nonEmpty)
-    // the in-memory analogue of knnIndexed's directory pruning: the pcell
-    // predicate must sit against the InMemoryTableScan (batch-stat skip),
-    // not above the join
-    val parent = graft.cells.Cell.cellAt(4.35, 50.85, 4)
-    val cached = pages
-      .withColumn("cellId", graft.functions.GeomExpressions.st_cell_at($"lon", $"lat", 8))
-      .withColumn("pcell", graft.functions.GeomExpressions.st_cell_at($"lon", $"lat", 4))
-      .select("url", "lon", "lat", "cellId", "pcell")
-      .repartition($"pcell").sortWithinPartitions($"pcell", $"cellId")
-      .cache()
-    try {
-      cached.count()
-      val plan = cached.filter($"pcell".isin(parent)).queryExecution.executedPlan.toString
-      assert(plan.contains("InMemoryTableScan") && plan.contains("pcell"),
-        s"expected an in-memory scan with the pcell predicate:\n$plan")
-    } finally cached.unpersist()
-  }
-
   test("entry returns rows") {
     assert(graft.SparkEntry.entry(spark).count() > 0)
   }

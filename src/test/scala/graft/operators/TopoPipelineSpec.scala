@@ -120,6 +120,39 @@ class TopoPipelineSpec extends SparkTestBase {
     assert(sharedArcs > 5, s"partition should share many arcs, got $sharedArcs")
   }
 
+  test("closed-form grid: G×G subdivided squares give 2G(G+1)-4 arcs, 4G²-4 uses, raw and quantized") {
+    // A G×G grid of unit squares whose edges are subdivided into S
+    // segments, so every interior edge is a full shared vertex chain.
+    // Junctions are the grid corners except the 4 outer ones (degree-1
+    // points inside one ring), where the two boundary edges merge into
+    // one 2-edge arc: arcs = grid edges - 4, uses = 4 per square - 4,
+    // and every arc holds S+1 points, or 2S+1 for the 4 merged ones.
+    val g = 6
+    val s = 4
+    // every edge is generated from its low corner, ascending, and
+    // reversed as a list where a ring walks it the other way, so both
+    // rings hold bit-identical coordinates (recomputing them reversed,
+    // (j+1) - k/s vs j + (s-k)/s, differs by 1 ulp on non-dyadic
+    // fractions and breaks the dedup key)
+    def hEdge(x0: Int, y0: Int) = (0 to s).map(k => (x0 + k.toDouble / s, y0.toDouble))
+    def vEdge(x0: Int, y0: Int) = (0 to s).map(k => (x0.toDouble, y0 + k.toDouble / s))
+    val squares = for (j <- 0 until g; i <- 0 until g) yield {
+      val ring = hEdge(i, j).dropRight(1) ++ vEdge(i + 1, j).dropRight(1) ++
+        hEdge(i, j + 1).reverse.dropRight(1) ++ vEdge(i, j).reverse.dropRight(1)
+      (j * g + i).toLong -> (Jts.polygon(ring :+ ring.head): org.locationtech.jts.geom.Geometry)
+    }
+    val fs = features(squares: _*)
+    Seq(0.0, 1e6).foreach { quantize =>
+      val topo = TopoPipeline.topology(fs, simplifyDigits = 0, quantize = quantize)
+      try {
+        assert(topo.arcs.count() == 2L * g * (g + 1) - 4, s"arcs, quantize=$quantize")
+        assert(topo.uses.count() == 4L * g * g - 4, s"uses, quantize=$quantize")
+        val sizes = topo.arcs.select(size(col("pts"))).as[Int].collect().toSet
+        assert(sizes == Set(s + 1, 2 * s + 1), s"points per arc, quantize=$quantize")
+      } finally topo.release()
+    }
+  }
+
   test("topology round-trip property: fixture polygons (holes + multipolygons) reconstruct exactly") {
     val polys = Ingest.polygons(spark, Fixtures.nodesDf(spark), Fixtures.waysDf(spark),
       Fixtures.relationsDf(spark), Fixtures.blacklist)

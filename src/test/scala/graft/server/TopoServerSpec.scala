@@ -67,6 +67,10 @@ class TopoServerSpec extends SparkTestBase {
   test("curation loop, topo/coverage/geometry/relation, export, restart persistence") {
     val (polys, water) = fixtureWorld()
     val dataDir = Files.createTempDirectory("topo_server")
+    // a state file's inode: an atomic rewrite (temp file + rename) gives
+    // the name a new one, so an unchanged key means the file was not written
+    def fileKey(name: String): AnyRef = Files.readAttributes(dataDir.resolve(name),
+      classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
     val layers = Seq(TopoServer.LayerConfig("countries", simplifyDigits = 3,
       languages = Seq("nl", "en")))
     val server = new TopoServer(spark, polys, water, layers, dataDir,
@@ -81,10 +85,13 @@ class TopoServerSpec extends SparkTestBase {
       // -- curate brussels, then import two probes: brussels (complete,
       //    dropped) and tokyo (incomplete, kept)
       assert(post(port, "/api/add", """{"countries":100}""").statusCode() == 200)
+      assert(!Files.exists(dataDir.resolve("missing.json")), "/api/add wrote the worklist")
+      val topoKey = fileKey("topologies.json")
       val imp = post(port, "/api/missing",
         """[{"lat":50.85,"lon":4.35},{"lat":35.7,"lon":139.7}]""")
       assert(imp.statusCode() == 200)
       assert(mapper.readTree(imp.body()).get("missing").asInt() == 1)
+      assert(fileKey("topologies.json") == topoKey, "/api/missing rewrote topologies.json")
 
       // -- the worklist head suggests country 103 for the countries layer
       val coord = mapper.readTree(get(port, "/api/coordinate").body())
@@ -96,9 +103,14 @@ class TopoServerSpec extends SparkTestBase {
       assert(!sugg.hasNext)
 
       // -- curating 103 completes the probe: the worklist self-drains
+      val missKey = fileKey("missing.json")
       assert(post(port, "/api/add", """{"countries":103}""").statusCode() == 200)
+      assert(fileKey("missing.json") == missKey, "/api/add rewrote missing.json")
+      val topoKey2 = fileKey("topologies.json")
       assert(get(port, "/api/coordinate").body() == "null")
       assert(mapper.readTree(get(port, "/api/status").body()).get("missing").asInt() == 0)
+      assert(fileKey("missing.json") != missKey, "the drained head was not persisted")
+      assert(fileKey("topologies.json") == topoKey2, "a drained head rewrote topologies.json")
 
       // -- on-demand TopoJSON == the batch export path, byte for byte
       val viaHttp = get(port, "/api/topo/countries/100")
@@ -162,9 +174,15 @@ class TopoServerSpec extends SparkTestBase {
       assert(tarResp.body().length > 20 &&
         (tarResp.body()(0) & 0xff) == 0x1f && (tarResp.body()(1) & 0xff) == 0x8b)
 
-      // -- one more missing probe survives a restart via dataDir state
-      assert(post(port, "/api/missing", """[{"lat":-33.9,"lon":151.2}]""").statusCode() == 200)
+      // -- one more missing probe survives a restart via dataDir state;
+      //    nyc, listed twice in one import, is listed once and deleted
+      val topoKey3 = fileKey("topologies.json")
+      val imp2 = post(port, "/api/missing",
+        """[{"lat":-33.9,"lon":151.2},{"lat":40.7,"lon":-74.0},{"lat":40.7,"lon":-74.0}]""")
+      assert(mapper.readTree(imp2.body()).get("missing").asInt() == 2)
+      assert(post(port, "/api/delete", """{"lat":40.7,"lon":-74.0}""").statusCode() == 200)
       assert(mapper.readTree(get(port, "/api/status").body()).get("missing").asInt() == 1)
+      assert(fileKey("topologies.json") == topoKey3, "/api/missing or /api/delete rewrote topologies.json")
     } finally server.stop()
 
     val server2 = new TopoServer(spark, polys, water, layers, dataDir,

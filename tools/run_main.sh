@@ -2,8 +2,10 @@
 # Run a graft main class without sbt (no project-lock contention with a
 # concurrently-running sbt). Usage: tools/run_main.sh <mainClass> [args...]
 # Env passthrough: SPARK_GRAFT_* as usual; SPARK_DRIVER_MEM (default 8g).
+# Classes come from `sbt compile` in the repository holding this script;
+# the Spark jars directory already carries scala-library.
 CLS="$1"; shift
-SCALA_LIB=$(find "$HOME"/.cache/coursier -name 'scala-library-2.13.17.jar' 2>/dev/null | head -1)
+CLASSES="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
@@ -20,5 +22,5 @@ exec java \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "/root/repo/target/scala-2.13/classes:${SCALA_LIB}:/opt/spark/jars/*" \
+  -cp "${CLASSES}:/opt/spark/jars/*" \
   "$CLS" "$@"
