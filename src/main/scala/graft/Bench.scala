@@ -130,16 +130,19 @@ object Bench {
 
     def num(fmt: String, v: Double): String = JsonUtil.num(fmt, v)
     def jstr(s: String): String = JsonUtil.quote(s)
-    val qs = (results :+ QStat("headline_pip_tiling", headlineSecs, headlines.head._2, nPages, None))
-      .map { q =>
-        val err = q.error.map(jstr).getOrElse("null")
-        s"""${jstr(q.name)}:{"secs":${num("%.3f", q.secs)},"first":${num("%.3f", q.first)},"rows":${q.rows},"error":$err}"""
-      }.mkString("{", ",", "}")
+    val timed = results :+ QStat("headline_pip_tiling", headlineSecs, headlines.head._2, nPages, None)
+    val qs = timed.map { q =>
+      val err = q.error.map(jstr).getOrElse("null")
+      s"""${jstr(q.name)}:{"secs":${num("%.3f", q.secs)},"first":${num("%.3f", q.first)},"rows":${q.rows},"error":$err}"""
+    }.mkString("{", ",", "}")
+    // the same per-query min-of-N seconds as a flat numeric map
+    val querySecs = timed.map(q => s"${jstr(q.name)}:${num("%.3f", q.secs)}").mkString("{", ",", "}")
     val nErrors = results.count(_.error.isDefined)
     val total = results.map(_.secs).sum + headlineSecs
     println(s"""{"metric":"total","value":${num("%.3f", total)},"unit":"sec","bench_reps":$reps,"queries":$qs,""" +
       s""""query_errors":$nErrors,""" +
-      s""""headline_pages":$nPages,"headline_pages_per_sec":${num("%.1f", pagesPerSec)},"sf":"$sfDir"}""")
+      s""""headline_pages":$nPages,"headline_pages_per_sec":${num("%.1f", pagesPerSec)},"sf":"$sfDir",""" +
+      s""""query_secs":$querySecs}""")
     if (nErrors > 0)
       System.err.println(s"[bench] $nErrors queries FAILED: " +
         results.filter(_.error.isDefined).map(q => s"${q.name}: ${q.error.get}").mkString("; "))

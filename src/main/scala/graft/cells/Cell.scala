@@ -52,16 +52,20 @@ object Cell {
       (o, ij >> 1, ij & 1, pos, o ^ posToOrientation(pos))
     }
 
-  /** Discrete grid coordinate at MaxLevel for a lon/lat. */
-  def xy(lon: Double, lat: Double): (Long, Long) = {
-    val n = 1L << MaxLevel
-    def clamp(v: Long): Long = math.max(0L, math.min(n - 1, v))
-    val x = clamp(math.floor((lon + 180.0) / 360.0 * n).toLong)
-    val y = clamp(math.floor((lat + 90.0) / 180.0 * n).toLong)
-    (x, y)
-  }
+  /** Discrete grid coordinate at MaxLevel for a lon/lat. A coordinate
+    * outside [-180,180] × [-90,90] clamps into an edge cell; NaN maps to 0.
+    */
+  def xy(lon: Double, lat: Double): (Long, Long) = (gridX(lon), gridY(lat))
 
-  /** Hilbert position of grid coord (x,y) truncated to `level` (2*level bits). */
+  @inline private def clampGrid(v: Long): Long = math.max(0L, math.min((1L << MaxLevel) - 1, v))
+  @inline private def gridX(lon: Double): Long =
+    clampGrid(math.floor((lon + 180.0) / 360.0 * (1L << MaxLevel)).toLong)
+  @inline private def gridY(lat: Double): Long =
+    clampGrid(math.floor((lat + 90.0) / 180.0 * (1L << MaxLevel)).toLong)
+
+  /** Hilbert position of grid coord (x,y) truncated to `level` (2*level
+    * bits), one level per step: the reference walk that `cellAt`'s table
+    * and the DuckDB oracle's state rows must reproduce. */
   def hilbertPos(x: Long, y: Long, level: Int): Long = {
     var h = 0L
     var o = 0
@@ -81,11 +85,48 @@ object Cell {
   def fromHilbert(h: Long, level: Int): Long =
     (h << (2 * (MaxLevel - level) + 1)) | (1L << (2 * (MaxLevel - level)))
 
-  /** Cell id containing (lon,lat) at `level`. */
-  def cellAt(lon: Double, lat: Double, level: Int): Long = {
-    val (x, y) = xy(lon, lat)
-    fromHilbert(hilbertPos(x, y, level), level)
+  // hilbertPos four levels at a time: entry ((i4 << 6) | (j4 << 2) | o)
+  // holds (8 position bits << 2) | orientation after those four levels,
+  // for the 4-bit x and y chunks i4, j4 entered in orientation o
+  private val lookupPos: Array[Int] = {
+    val t = new Array[Int](1024)
+    for (i4 <- 0 until 16; j4 <- 0 until 16; o0 <- 0 until 4) {
+      var o = o0
+      var pos = 0
+      for (k <- 3 to 0 by -1) {
+        val p = ijToPos(o)((((i4 >> k) & 1) << 1) | ((j4 >> k) & 1))
+        pos = (pos << 2) | p
+        o ^= posToOrientation(p)
+      }
+      t((i4 << 6) | (j4 << 2) | o0) = (pos << 2) | o
+    }
+    t
   }
+
+  /** `hilbertPos(x, y, MaxLevel)` from [[lookupPos]]: eight 4-bit steps
+    * over 32-bit x and y. Their top two bits are zero, and two (0, 0)
+    * steps from orientation 0 emit position 0 and return to orientation 0,
+    * so the walk equals the 30-step one.
+    */
+  private def leafPos(x: Long, y: Long): Long = {
+    var h = 0L
+    var o = 0
+    var k = 28
+    while (k >= 0) {
+      val e = lookupPos((((x >>> k) & 15L).toInt << 6) | (((y >>> k) & 15L).toInt << 2) | o)
+      h = (h << 8) | (e >>> 2)
+      o = e & 3
+      k -= 4
+    }
+    h
+  }
+
+  /** Cell id containing (lon,lat) at `level` (0..MaxLevel): the level's
+    * Hilbert position is the leaf position's top 2·level bits.
+    * Bit-identical to `fromHilbert(hilbertPos(x, y, level), level)`.
+    */
+  def cellAt(lon: Double, lat: Double, level: Int): Long =
+    fromHilbert(leafPos(gridX(lon), gridY(lat)) >>> (2 * (MaxLevel - level)), level)
 
   /** Leaf cell id (level 30) — the analogue of s2.CellIDFromLatLng. */
   def leaf(lon: Double, lat: Double): Long = cellAt(lon, lat, MaxLevel)

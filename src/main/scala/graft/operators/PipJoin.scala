@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.nio.ByteBuffer
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -91,18 +93,28 @@ object PipJoin {
     * generator is codegen'd, so it runs in the scan's whole-stage stage.
     * Identical rows to `matches` (tested). `polygons` must hold one row
     * per relId.
+    *
+    * The index is built once per dimension version: the broadcast lives
+    * in one [[graft.SessionMemo]] slot whose version is the exact
+    * collected content (cover rows, and each polygon's relId and WKB
+    * bytes), so equal dims reuse it and any change rebuilds it. A replaced
+    * broadcast is not destroyed: a plan made before the change may still
+    * run against it, and Spark's ContextCleaner frees it once no plan
+    * holds it.
     */
   def matchesIndexed(pages: DataFrame, covers: DataFrame, polygons: DataFrame,
                      extraPageCols: Seq[String] = Nil): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val index = PipIndex.of(
-      covers.select("relId", "layer", "cellId").as[(Long, String, Long)].collect(),
-      polygons.select("relId", "wkb").as[(Long, Array[Byte])].collect())
+    val coverRows = covers.select("relId", "layer", "cellId").as[(Long, String, Long)].collect()
+    val polyRows = polygons.select("relId", "wkb").as[(Long, Array[Byte])].collect()
+    val version = (coverRows.toSeq, polyRows.toSeq.map { case (id, wkb) => (id, ByteBuffer.wrap(wkb)) })
+    val index = graft.SessionMemo.get(spark, "pipIndex", version)(
+      spark.sparkContext.broadcast(PipIndex.of(coverRows, polyRows)))(_ => ())
     val matchGen = org.apache.spark.sql.graft.Bridge.column(PipMatch(
       org.apache.spark.sql.graft.Bridge.expression(col("lon")),
       org.apache.spark.sql.graft.Bridge.expression(col("lat")),
-      spark.sparkContext.broadcast(index)))
+      index))
 
     pages
       .select(col("*"), matchGen.as(Seq("relId", "layer")))
@@ -370,9 +382,13 @@ object PipJoin {
         restrictAdminLevels.contains(adminLevel)
   }
 
+  /** Probes through [[matchesIndexed]], so it shares that index memo:
+    * over the dims that built `matches`, its PIP pass rebuilds nothing.
+    * So `polygons` must hold one row per relId, as for `matchesIndexed`.
+    */
   def suggestions(missingPages: DataFrame, covers: DataFrame, polygons: DataFrame,
                   matches: DataFrame, rules: Seq[MatchRule]): DataFrame = {
-    val sugg = PipJoin.matches(missingPages, covers, polygons)
+    val sugg = PipJoin.matchesIndexed(missingPages, covers, polygons)
       .join(polygons.select(col("relId"), col("adminLevel"), col("name")), Seq("relId"))
     rules.foldLeft(sugg) { (acc, rule) =>
       val ruled = matches

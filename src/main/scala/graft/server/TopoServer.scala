@@ -303,17 +303,22 @@ final class TopoServer(
   private def metricsJson(): String = {
     val routeJson = routes.map { case (path, st) => s"${JsonUtil.quote(path)}:${st.json}" }
       .mkString("{", ",", "}")
-    def sizes(builds: Int, polys: Seq[Array[Byte]], cells: Int): String =
+    // `index` describes the stab of the full (snapshot) or curated PipIndex
+    def sizes(builds: Int, polys: Seq[Array[Byte]], cells: Int, index: Option[PipIndex]): String = {
+      val st = index.fold(PipIndex.Stats(0, 0, 0.0, 0L))(_.stats)
       s"""{"builds":$builds,"polygons":${polys.size},"cells":$cells,""" +
-        s""""wkb_bytes":${polys.map(_.length.toLong).sum}}"""
+        s""""wkb_bytes":${polys.map(_.length.toLong).sum},"index":{"segments":${st.segments},""" +
+        s""""entries":${st.entries},"interior_share":${JsonUtil.num("%.4f", st.interiorShare)},""" +
+        s""""bytes":${st.bytes}}}"""
+    }
     lock.synchronized {
       val snap = Option(dim)
       val cur = Option(curatedIndex)
       s"""{"routes":$routeJson,"topo_lru":{"hits":$lruHits,"misses":$lruMisses},""" +
         s""""snapshot":${sizes(dimBuilds, snap.toSeq.flatMap(_.polys.values.map(_.wkb)),
-          snap.fold(0)(_.covers.length))},""" +
+          snap.fold(0)(_.covers.length), snap.map(_.full))},""" +
         s""""curated_index":${sizes(curatedBuilds, cur.toSeq.flatMap(_.polys.map(_.wkb)),
-          curatedIndexCells)}}"""
+          curatedIndexCells, cur)}}"""
     }
   }
 

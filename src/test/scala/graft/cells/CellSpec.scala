@@ -84,6 +84,30 @@ class CellSpec extends AnyFunSuite {
     assert(Cell.ring(corner, 1).length == 3)
   }
 
+  test("table-driven cellAt is bit-identical to the one-level-per-step hilbertPos walk at every level") {
+    val r = new scala.util.Random(20261019L)
+    val random = Seq.fill(3000)(randPt())
+    val edges = for (lon <- Seq(-180.0, 0.0, 180.0); lat <- Seq(-90.0, 0.0, 90.0)) yield (lon, lat)
+    val odd = Seq(-180.5, 181.0, 1e300, -1e300, Double.NaN,
+      Double.PositiveInfinity, Double.NegativeInfinity, Math.nextUp(180.0), Math.nextDown(-180.0))
+    val outOfRange = odd.flatMap(v => Seq((v, 10.0), (10.0, v / 2), (v, v)))
+    // grid lines of every level, and the doubles one ulp either side
+    val gridLines = Seq.fill(3000) {
+      val l = r.nextInt(31)
+      val k = (r.nextDouble() * (1L << l)).toLong
+      val lon = k.toDouble / (1L << l) * 360.0 - 180.0
+      val lat = k.toDouble / (1L << l) * 180.0 - 90.0
+      Seq((lon, lat), (Math.nextUp(lon), lat), (Math.nextDown(lon), lat),
+        (lon, Math.nextUp(lat)), (lon, Math.nextDown(lat)), (Math.nextUp(lon), Math.nextDown(lat)))
+    }.flatten
+    for ((lon, lat) <- random ++ edges ++ outOfRange ++ gridLines; l <- 0 to Cell.MaxLevel) {
+      val (x, y) = Cell.xy(lon, lat)
+      val want = Cell.fromHilbert(Cell.hilbertPos(x, y, l), l)
+      assert(Cell.cellAt(lon, lat, l) == want, s"($lon, $lat) level $l")
+      if (l == Cell.MaxLevel) assert(Cell.leaf(lon, lat) == want, s"leaf ($lon, $lat)")
+    }
+  }
+
   test("quadkey is z digits and consistent with tx/ty tiling math") {
     val lon = 4.35; val lat = 50.85; val z = 10
     val id = Cell.cellAt(lon, lat, z)

@@ -4,18 +4,20 @@ import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, Wh
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.functions.{col, lit, when}
 import org.locationtech.jts.algorithm.locate.SimplePointInAreaLocator
-import org.locationtech.jts.geom.{Coordinate, Location, Polygon}
+import org.locationtech.jts.geom.{Coordinate, Envelope, Location, Polygon}
 
 import graft.SparkTestBase
-import graft.cells.Cell
+import graft.cells.{Cell, Coverer}
 import graft.geom.Jts
 import graft.sources.Fixtures
 
 /** The fused broadcast-index probe (`st_pip_match` in
   * `PipJoin.matchesIndexed`): adversarial points checked against the
-  * Catalyst join and brute-force JTS, and the plan shape that makes it
-  * one codegen'd pass.
+  * Catalyst join and brute-force JTS, the plan shape that makes it one
+  * codegen'd pass, the flat index's invariants, the domain clamp, and the
+  * one-build-per-dimension-version memo.
   */
 class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -47,6 +49,19 @@ class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       val (x0, y0, x1, y1) = Cell.bounds(c)
       Seq((x0, y0), (x0, y1), (x1, y0), (x1, y1))
     }
+    // the corners of every interior piece of the index, and the doubles
+    // one ulp either side: the points where the interior shortcut starts
+    val (_, pieceCells, pieceEntries) = PipIndex.pieces(
+      covers.select("relId", "layer", "cellId").as[(Long, String, Long)].collect(),
+      polys.select("relId", "wkb").as[(Long, Array[Byte])].collect().toMap)
+    val interiorCells = pieceCells.indices.filter(i => (pieceEntries(i) & 1) == 1).map(pieceCells)
+    assert(interiorCells.nonEmpty, "the fixture index must have interior pieces")
+    val interiorCornerPts = interiorCells.flatMap { c =>
+      val (x0, y0, x1, y1) = Cell.bounds(c)
+      for ((x, y) <- Seq((x0, y0), (x0, y1), (x1, y0), (x1, y1));
+           dx <- Seq(Math.nextDown(x), x, Math.nextUp(x)); dy <- Seq(Math.nextDown(y), y, Math.nextUp(y)))
+        yield (dx, dy)
+    }
     val rnd = new scala.util.Random(20261017L)
     val randomPts = Seq.fill(10000) {
       if (rnd.nextDouble() < 0.6) {
@@ -54,7 +69,7 @@ class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         (cx + (rnd.nextDouble() - 0.5) * 12.0, cy + (rnd.nextDouble() - 0.5) * 12.0)
       } else (rnd.nextDouble() * 360.0 - 180.0, rnd.nextDouble() * 180.0 - 90.0)
     }
-    val pts = (ringPts ++ cornerPts ++ randomPts).zipWithIndex
+    val pts = (ringPts ++ cornerPts ++ interiorCornerPts ++ randomPts).zipWithIndex
       .map { case ((lon, lat), i) => (s"p$i", lon, lat) }
     val pages = pts.toDF("url", "lon", "lat")
 
@@ -91,5 +106,140 @@ class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(fused.nonEmpty, s"no codegen'd st_pip_match Generate in\n$plan")
     assert(collect(plan) { case j: BroadcastHashJoinExec => j }.isEmpty, plan.toString)
     assert(collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan.toString)
+  }
+
+  /** Exact covers and WKB of boxes that reach the domain edge: the east
+    * edge, the north-west corner and the south pole. */
+  private lazy val edgeBoxes: (Array[(Long, String, Long)], Array[(Long, Array[Byte])]) = {
+    val boxes = Seq((9001L, (150.0, -30.0, 180.0, 30.0)), (9002L, (-180.0, 60.0, -150.0, 90.0)),
+      (9003L, (-40.0, -90.0, 40.0, -70.0)))
+    val geoms = boxes.map { case (id, (x0, y0, x1, y1)) =>
+      id -> Jts.factory.toGeometry(new Envelope(x0, x1, y0, y1))
+    }
+    (geoms.flatMap { case (id, g) => Coverer.coverExact(g).map(c => (id, "edge", c)) }.toArray,
+      geoms.map { case (id, g) => id -> Jts.toWkb(g) }.toArray)
+  }
+
+  test("out-of-domain and NaN points never hit through the edge cell they clamp into") {
+    val (coverRows, polyRows) = edgeBoxes
+    val idx = PipIndex.of(coverRows, polyRows)
+    val odd = Seq(180.5, 181.0, 1e9, -180.5, -200.0, 90.5, -95.0, Double.NaN,
+      Double.PositiveInfinity, Double.NegativeInfinity, Math.nextUp(180.0), Math.nextDown(-180.0))
+    val inner = Seq(0.0, 10.0, -10.0, 75.0, 85.0, 89.9, -80.0, -89.9, 160.0, -160.0, 179.9, -179.9)
+    val pts = (for (o <- odd; v <- inner) yield Seq((o, v), (v, o))).flatten ++
+      (for (a <- odd; b <- odd) yield (a, b))
+    def entriesAt(ix: PipIndex, lon: Double, lat: Double): Seq[Int] = {
+      val i = java.util.Arrays.binarySearch(ix.starts, Cell.leaf(lon, lat))
+      val k = if (i >= 0) i else -i - 2
+      if (k < 0) Nil else (ix.offsets(k) until ix.offsets(k + 1)).map(ix.entries)
+    }
+    // not vacuous: many clamp into cells of the boxes' covers
+    assert(pts.count { case (lon, lat) => entriesAt(idx, lon, lat).nonEmpty } >= 20)
+    pts.foreach { case (lon, lat) =>
+      assert(idx.hits(lon, lat).isEmpty, s"($lon, $lat) hit ${idx.hits(lon, lat).toSeq}")
+    }
+    // on the domain's edge is in the domain, and on a box's edge is not in it
+    val geoms = polyRows.map { case (id, wkb) => id -> Jts.fromWkb(wkb) }.toMap
+    val inside = Seq((165.0, 0.0), (-165.0, 75.0), (0.0, -80.0))
+    for ((lon, lat) <- Seq((180.0, 0.0), (-180.0, 90.0), (0.0, -90.0)) ++ inside) {
+      val want = idx.polys.indices.filter { o =>
+        coverRows.exists(c => c._1 == idx.polys(o).relId && Cell.contains(c._3, Cell.leaf(lon, lat))) &&
+          SimplePointInAreaLocator.locate(new Coordinate(lon, lat), geoms(idx.polys(o).relId)) == Location.INTERIOR
+      }
+      assert(idx.hits(lon, lat).toSeq == want, s"($lon, $lat)")
+    }
+    // the Catalyst join agrees on every point
+    val pages = (pts ++ inside).zipWithIndex
+      .map { case ((lon, lat), i) => (s"p$i", lon, lat) }.toDF("url", "lon", "lat")
+    val coverDf = coverRows.toSeq.toDF("relId", "layer", "cellId")
+    val polyDf = polyRows.toSeq.toDF("relId", "wkb")
+    val viaIndex = rows(PipJoin.matchesIndexed(pages, coverDf, polyDf))
+    assert(viaIndex == rows(PipJoin.matches(pages, coverDf, polyDf)))
+    assert(viaIndex.map(_._3).sorted == Seq(9001L, 9002L, 9003L))
+    // no build puts an interior entry in an edge cell (its expanded rect
+    // leaves the domain), so pin the guard in `hits` on a hand-made index
+    // whose one interior entry spans the whole curve
+    val world = Cell.fromHilbert(0L, 0)
+    val (boxId, boxWkb) = polyRows.head
+    val allInterior = PipIndex(Array(PipIndex.Poly(boxId, "edge", boxWkb)),
+      Array(Cell.rangeMin(world)), Array(0, 1), Array(1))
+    assert(allInterior.hits(0.0, 0.0).toSeq == Seq(0), "in the domain the interior entry is a hit unrefined")
+    val outside = pts.filterNot { case (lon, lat) => lon >= -180 && lon <= 180 && lat >= -90 && lat <= 90 }
+    assert(outside.length > 100)
+    outside.foreach { case (lon, lat) =>
+      assert(allInterior.hits(lon, lat).isEmpty, s"($lon, $lat) hit through the clamp")
+    }
+  }
+
+  test("index invariant: every interior entry lies in an interior piece inside its polygon's cover, " +
+    "whose expanded rect the polygon contains properly") {
+    val coverRows = covers.select("relId", "layer", "cellId").as[(Long, String, Long)].collect() ++ edgeBoxes._1
+    val polyMap = polys.select("relId", "wkb").as[(Long, Array[Byte])].collect().toMap ++ edgeBoxes._2
+    val (piecePolys, pieceCells, pieceEntries) = PipIndex.pieces(coverRows, polyMap)
+    val idx = PipIndex.build(coverRows, polyMap)
+    val coverOf = coverRows.groupBy(c => (c._1, c._2)).map { case (k, cs) => k -> cs.map(_._3) }
+    val lonW = 360.0 / (1L << Cell.MaxLevel)
+    val latW = 180.0 / (1L << Cell.MaxLevel)
+    val interior = pieceCells.indices.filter(i => (pieceEntries(i) & 1) == 1)
+    assert(interior.length >= 100)
+    interior.foreach { i =>
+      val c = pieceCells(i)
+      val p = piecePolys(pieceEntries(i) >>> 1)
+      assert(coverOf((p.relId, p.layer)).exists(Cell.contains(_, c)), s"piece $c outside the cover of ${p.relId}")
+      val (x0, y0, x1, y1) = Cell.bounds(c)
+      val rect = Jts.factory.toGeometry(new Envelope(x0 - lonW, x1 + lonW, y0 - latW, y1 + latW))
+      // containsProperly through the unprepared relate matrix
+      assert(Jts.fromWkb(p.wkb).relate(rect, "T**FF*FF*"), s"piece $c of ${p.relId}")
+    }
+    // the flat index: each segment's interior entries come from pieces
+    // that hold every leaf of the segment (merged siblings span several)
+    val byEntry = pieceCells.indices.groupBy(pieceEntries)
+      .map { case (e, is) => e -> is.map(pieceCells).sortBy(Cell.rangeMin) }
+    for (k <- 0 until idx.starts.length - 1; e <- idx.offsets(k) until idx.offsets(k + 1)
+         if (idx.entries(e) & 1) == 1) {
+      val covered = byEntry(idx.entries(e)).foldLeft(idx.starts(k)) { (at, c) =>
+        if (Cell.rangeMin(c) <= at && at <= Cell.rangeMax(c)) Cell.rangeMax(c) + 2 else at
+      }
+      assert(covered >= idx.starts(k + 1), s"segment $k")
+    }
+    assert(idx.offsets(idx.starts.length - 1) == idx.offsets(idx.starts.length), "the last segment is empty")
+    for (k <- idx.starts.indices) {
+      val es = (idx.offsets(k) until idx.offsets(k + 1)).map(idx.entries)
+      assert(es == es.sorted && es.map(_ >>> 1).distinct.length == es.length, s"segment $k entries $es")
+      if (k > 0) assert(idx.starts(k - 1) < idx.starts(k) &&
+        es != (idx.offsets(k - 1) until idx.offsets(k)).map(idx.entries), s"segment $k repeats segment ${k - 1}")
+    }
+    assert(idx.polys.map(p => (p.relId, p.layer)).toSeq == piecePolys.map(p => (p.relId, p.layer)).toSeq)
+  }
+
+  test("matchesIndexed builds one index per dimension version") {
+    def broadcastOf(df: org.apache.spark.sql.DataFrame): Long =
+      df.queryExecution.analyzed.collectFirst {
+        case g: org.apache.spark.sql.catalyst.plans.logical.Generate if g.generator.isInstanceOf[PipMatch] =>
+          g.generator.asInstanceOf[PipMatch].bc.id
+      }.get
+    val pages = Seq(("brussels", 4.35, 50.85), ("tokyo", 139.7, 35.7), ("sea", -30.0, 0.0))
+      .toDF("url", "lon", "lat")
+    val before = PipJoin.matchesIndexed(pages, covers, polys)
+    // the same dims, another DataFrame of them: a memo hit
+    val planned = PipJoin.matchesIndexed(pages, covers, polys.select("*"))
+    assert(broadcastOf(planned) == broadcastOf(before))
+    val rowsBefore = rows(before)
+    assert(rowsBefore.exists(_._1 == "brussels"))
+    // the polygons change: Brussels' relations move away, so a stale
+    // index would still match Brussels
+    val brussels = rowsBefore.filter(_._1 == "brussels").map(_._3).toSet
+    val moved = polys.withColumn("wkb", when(col("relId").isin(brussels.toSeq: _*),
+      lit(Jts.toWkb(Jts.factory.toGeometry(new Envelope(-60, -59, -60, -59)))))
+      .otherwise(col("wkb")))
+    val after = PipJoin.matchesIndexed(pages, covers, moved)
+    assert(broadcastOf(after) != broadcastOf(before))
+    assert(rows(after) == rowsBefore.filterNot(_._1 == "brussels"))
+    // plans made before the change still run, on their own index, also
+    // one first run only now
+    assert(rows(before) == rowsBefore)
+    assert(rows(planned) == rowsBefore)
+    // and the original dims build again, matching as before
+    assert(rows(PipJoin.matchesIndexed(pages, covers, polys)) == rowsBefore)
   }
 }

@@ -346,6 +346,12 @@ class TopoServerSpec extends SparkTestBase {
       assert(cur.get("polygons").asInt() == 1)
       assert(cur.get("cells").asInt() == covers.count(_ == 103L))
       assert(cur.get("wkb_bytes").asLong() == rows.find(_._1 == 103L).get._2.length)
+      // the stab of each index on the fixture, pinned: segments, entries,
+      // interior share of the entries and the bytes of the stab arrays
+      def stab(n: com.fasterxml.jackson.databind.JsonNode) = (n.get("segments").asInt(), n.get("entries").asInt(),
+        n.get("interior_share").asDouble(), n.get("bytes").asLong())
+      assert(stab(snap.get("index")) == (5351, 10837, 0.7459, 107564L), snap)
+      assert(stab(cur.get("index")) == (368, 273, 0.326, 5512L), cur)
     } finally server.stop()
   }
 
