@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.graft.SketchPreAggregation
 
 import graft.functions.GeomExpressions
 import graft.plans.PipJoinRewrite
@@ -19,7 +20,10 @@ import graft.plans.PipJoinRewrite
   * into the optimizer, so a plain
   * `SELECT ... FROM pages p JOIN polys g ON st_contains_point(g.wkb, p.lon, p.lat)`
   * plans as the cover equi-join + exact residual instead of a
-  * broadcast-nested-loop join.
+  * broadcast-nested-loop join. It also adds the planner Strategy
+  * [[org.apache.spark.sql.graft.SketchPreAggregation]], which plans an
+  * `approx_count_distinct` whose argument is marked low-cardinality over a
+  * codegen'd pre-aggregate.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -30,12 +34,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // injected into the operator-optimization fixed-point batch, so column
     // pruning / predicate pushdown re-run over the rewritten plan
     ext.injectOptimizerRule(_ => PipJoinRewrite)
+    ext.injectPlannerStrategy(_ => SketchPreAggregation)
   }
 }
 
 /** Imperative installer for sessions created without `spark.sql.extensions`
   * (tests, notebooks): same functions as temp registrations plus the
-  * rewrite via `experimental.extraOptimizations`.
+  * rewrite via `experimental.extraOptimizations` and the Strategy via
+  * `experimental.extraStrategies`.
   */
 object Graft {
   def install(spark: SparkSession): Unit = {
@@ -43,5 +49,6 @@ object Graft {
     if (!spark.experimental.extraOptimizations.contains(PipJoinRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ PipJoinRewrite
+    SketchPreAggregation.install(spark)
   }
 }

@@ -746,20 +746,15 @@ object SparkEntry {
       "q_suggestions" -> ((s, dir) => {
         val (polys, covers) = dims(s)
         val pages = Fixtures.pages(s, dir)
-        // m feeds both the missing anti-join and the rules filter — cache
-        // so the PIP join over the full page table runs once, not twice;
-        // the eager checkpoint below lets the cache be RELEASED before
-        // returning (repeated invocations were stacking one cached match
-        // table each)
-        val m = PipJoin.matchesIndexed(pages, covers, polys).cache()
+        // built lazily, so its plan can be inspected: m feeds both the
+        // missing anti-join and the rules filter and runs as two probes,
+        // which share one memoized index (PipJoin.matchesIndexed)
+        val m = PipJoin.matchesIndexed(pages, covers, polys)
         val miss = PipJoin.missing(pages, m, Seq("countries", "regions", "cities"))
-        val out = PipJoin.suggestions(miss, covers, polys, m,
+        PipJoin.suggestions(miss, covers, polys, m,
           Seq(PipJoin.MatchRule("countries", 100L, "cities", Seq(6))))
           .select(col("url"), col("layer"), col("relId").as("rel_id"),
             col("adminLevel").as("admin_level"), col("name"))
-          .localCheckpoint()
-        m.unpersist()
-        out
       }),
       // S5/G7: water shapefile pipeline
       "q_water" -> ((s, _) =>

@@ -105,9 +105,17 @@ object PipJoin {
   def matchesIndexed(pages: DataFrame, covers: DataFrame, polygons: DataFrame,
                      extraPageCols: Seq[String] = Nil): DataFrame = {
     val spark = pages.sparkSession
-    import spark.implicits._
-    val coverRows = covers.select("relId", "layer", "cellId").as[(Long, String, Long)].collect()
-    val polyRows = polygons.select("relId", "wkb").as[(Long, Array[Byte])].collect()
+    // one job: both sides collect as one tagged union, split on the driver
+    // (a union collects its children's partitions in order, so each side
+    // keeps its row order)
+    val dims = covers.select(lit(true).as("isCover"), col("relId").cast("long"), col("layer"),
+        col("cellId").cast("long"), lit(null).cast("binary").as("wkb"))
+      .union(polygons.select(lit(false), col("relId").cast("long"), lit(null).cast("string"),
+        lit(null).cast("long"), col("wkb")))
+      .collect()
+    val (coverSide, polySide) = dims.partition(_.getBoolean(0))
+    val coverRows = coverSide.map(r => (r.getLong(1), r.getString(2), r.getLong(3)))
+    val polyRows = polySide.map(r => (r.getLong(1), r.getAs[Array[Byte]](4)))
     val version = (coverRows.toSeq, polyRows.toSeq.map { case (id, wkb) => (id, ByteBuffer.wrap(wkb)) })
     val index = graft.SessionMemo.get(spark, "pipIndex", version)(
       spark.sparkContext.broadcast(PipIndex.of(coverRows, polyRows)))(_ => ())

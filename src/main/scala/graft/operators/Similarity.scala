@@ -97,6 +97,7 @@ object Similarity {
     * colliding in ≥1 band are exact-verified against `threshold`. Sketch is
     * a map-side pass; the only shuffle is the (band, bandVal) bucket join —
     * NOT all-pairs.
+    * `vec_id` must be unique; the broadcast verify rejects a repeated one.
     *
     * The projection planes are Rademacher (±1 per dimension, the published
     * sign-random-projection variant — Achlioptas-style sparse/sign
@@ -217,13 +218,20 @@ object Similarity {
     // joins remain — at planet scale the table cannot be broadcast and
     // the join IS the design.
     if (emb.queryExecution.optimizedPlan.stats.sizeInBytes <= verifyBroadcastBytes) {
-      val lookup = emb.as[(Long, Seq[Double])].collect().map { case (id, v) =>
+      val rows = emb.as[(Long, Seq[Double])].collect()
+      val lookup = rows.map { case (id, v) =>
         val x = v.toArray
         var s = 0.0
         var i = 0
         while (i < x.length) { s += x(i) * x(i); i += 1 }
         (id, (x, math.sqrt(s)))
       }.toMap
+      // .toMap keeps one vector per id: a repeated vec_id would verify
+      // every pair against whichever of its rows came last
+      require(lookup.size == rows.length, {
+        val dup = rows.groupBy(_._1).collectFirst { case (id, rs) if rs.length > 1 => id }.get
+        s"embeddingDedupBlocked: vec_id must be unique, $dup repeats"
+      })
       val bc = spark.sparkContext.broadcast(lookup)
       pairs.as[(Long, Long)].mapPartitions { it =>
         val m = bc.value

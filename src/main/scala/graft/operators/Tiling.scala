@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SketchPreAggregation
 
 import graft.cells.{Cell, Coverer}
 import graft.geom.Jts
@@ -38,11 +39,32 @@ object Tiling {
     * defeats map-side partial aggregation and shuffles every input row —
     * at 10^12 rows the shuffle, not the agg, becomes the job. HLL partials
     * reduce the shuffle to one sketch per (tile, map task).
+    *
+    * `lang` is marked low-cardinality, so the aggregate plans through
+    * [[org.apache.spark.sql.graft.SketchPreAggregation]]:
+    *
+    *  1. a codegen'd `HashAggregate(keys z, tx, ty, lang: partial_count)`
+    *     in the scan's whole-stage stage;
+    *  2. `HashAggregate(keys z, tx, ty: merge_count, partial HLL(lang))`,
+    *     interpreted, over at most tiles × languages rows per task;
+    *  3. the one `Exchange hashpartitioning(z, tx, ty)` and the final
+    *     aggregate.
+    *
+    * Unmarked, every input row would go through the interpreted HLL
+    * partial. Rows are bit-identical to the unmarked aggregate (a
+    * duplicate value changes no HLL register; counts sum). The mark is an
+    * opt-in, not a rule for every sketch: on a value unique per row, step
+    * 1 keeps one hash-map entry per input row and costs more than it saves.
+    * The Strategy is installed into the session here, idempotently,
+    * because sessions built without `graft.GraftExtensions` lack it.
     */
-  def tileCounts(pages: DataFrame, z: Int): DataFrame =
+  def tileCounts(pages: DataFrame, z: Int): DataFrame = {
+    SketchPreAggregation.install(pages.sparkSession)
     assign(pages, z)
       .groupBy("z", "tx", "ty")
-      .agg(count(lit(1)).as("n_pages"), approx_count_distinct(col("lang")).as("n_langs"))
+      .agg(count(lit(1)).as("n_pages"),
+        approx_count_distinct(SketchPreAggregation.lowCardinality(col("lang"))).as("n_langs"))
+  }
 
   /** Hilbert-ordered spatial range partitioning: repartitionByRange on the
     * point's Hilbert cell id clusters spatially-near rows into the same

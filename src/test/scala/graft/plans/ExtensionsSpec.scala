@@ -1,6 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{approx_count_distinct, col}
+import org.apache.spark.sql.graft.SketchPreAggregation
 
 import graft.{Graft, GraftExtensions, SparkTestBase}
 import graft.cells.{Cell, Coverer}
@@ -258,6 +260,11 @@ class ExtensionsSpec extends SparkTestBase {
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"), plan)
       assert(df.count() == bruteForce().size)
+      // and the planner Strategy: a marked sketch plans over a pre-aggregate
+      val sketch = s2.range(0, 100).selectExpr("id % 3 AS g", "id % 5 AS v").groupBy("g")
+        .agg(approx_count_distinct(SketchPreAggregation.lowCardinality(col("v"))))
+      val sketchPlan = sketch.queryExecution.executedPlan.toString
+      assert("HashAggregate\\(".r.findAllIn(sketchPlan).length == 3, sketchPlan)
     } finally {
       org.apache.spark.graft.TestBridge.liveConf(old.sparkContext)
         .remove("spark.sql.extensions")
