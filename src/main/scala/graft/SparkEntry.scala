@@ -723,14 +723,13 @@ object SparkEntry {
       // shuffled — budget forced small so both paths run at sf scale
       "q_pip_hybrid" -> ((s, dir) => {
         val (polys, covers) = dims(s)
-        PipJoin.matchesHybrid(Fixtures.pages(s, dir), covers, polys,
-          broadcastBudgetBytes = 4096, salt = 2)
+        PipJoin.matchesHybrid(Fixtures.pages(s, dir), covers, polys, broadcastBudgetBytes = 4096)
           .withColumnRenamed("relId", "rel_id")
       }),
-      // J5 partitioned+salted variant — same rows by construction
+      // J5 partitioned variant — same rows by construction
       "q_pip_partitioned" -> ((s, dir) => {
         val (polys, covers) = dims(s)
-        PipJoin.matchesPartitioned(Fixtures.pages(s, dir), covers, polys, joinLevel = 8, salt = 4)
+        PipJoin.matchesPartitioned(Fixtures.pages(s, dir), covers, polys, joinLevel = 8)
           .withColumnRenamed("relId", "rel_id")
       }),
       // J7: matched-per-layer pivot (one row per url, min relId per layer)

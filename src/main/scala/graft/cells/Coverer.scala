@@ -212,33 +212,6 @@ object Coverer {
     }
   }
 
-  /** Clamp a pairwise-disjoint cover into the level band [minLevel,
-    * maxLevel]: cells coarser than the band descend to their minLevel
-    * descendants (disjoint by construction), cells finer than the band
-    * lift to their maxLevel ancestor (collisions deduped). The result is
-    * still a pairwise-disjoint superset of the covered region for ANY
-    * band, so a probe that explodes point ancestors over exactly
-    * [minLevel, maxLevel] keeps the no-false-negative / no-duplicate
-    * guarantees. Cost note: descending a cell Δ levels emits 4^Δ cells —
-    * the band is an expert knob (graft.pip.minLevel/maxLevel); the
-    * default [0, MaxLevel] band makes this a no-op.
-    */
-  def clampCover(cells: Array[Long], minLevel: Int, maxLevel: Int): Array[Long] = {
-    val lo = math.max(0, math.min(minLevel, Cell.MaxLevel))
-    val hi = math.max(lo, math.min(maxLevel, Cell.MaxLevel))
-    if (cells.forall { c => val l = Cell.level(c); l >= lo && l <= hi }) return cells
-    val out = mutable.ArrayBuffer[Long]()
-    def desc(c: Long): Unit =
-      if (Cell.level(c) >= lo) out += c else Cell.children(c).foreach(desc)
-    cells.foreach { c =>
-      val l = Cell.level(c)
-      if (l < lo) desc(c)
-      else if (l > hi) out += Cell.parent(c, hi)
-      else out += c
-    }
-    normalize(out.distinct.toArray)
-  }
-
   /** Drop cells that have a strict ancestor in the set (covers stay a
     * superset of the geometry: the ancestor covers the descendant).
     */

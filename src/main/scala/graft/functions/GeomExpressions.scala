@@ -338,22 +338,14 @@ case class STCellCover(child: Expression) extends UnaryExpression with CodegenFa
   * predicates), a guaranteed superset index for any geometry — unlike the
   * engine index's reference-semantics vertex-approximate st_cell_cover.
   */
-case class STCellCoverJoin(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with CodegenFallback with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType, IntegerType)
+case class STCellCoverJoin(child: Expression)
+    extends UnaryExpression with CodegenFallback with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(BinaryType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(a: Any, minL: Any, maxL: Any): Any =
-    new GenericArrayData(Coverer.clampCover(
-      Coverer.coverForJoin(Jts.fromWkb(a.asInstanceOf[Array[Byte]])),
-      minL.asInstanceOf[Int], maxL.asInstanceOf[Int]))
-  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Expression = copy(a, b, c)
+  override def nullSafeEval(a: Any): Any =
+    new GenericArrayData(Coverer.coverForJoin(Jts.fromWkb(a.asInstanceOf[Array[Byte]])))
+  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
   override def prettyName: String = "st_cell_cover_join"
-}
-
-object STCellCoverJoin {
-  /** Default full band — the rewrite passes the conf band explicitly. */
-  def apply(wkb: Expression): STCellCoverJoin =
-    STCellCoverJoin(wkb, Literal(0), Literal(Coverer.MaxLevel))
 }
 
 /** ST_SimplifyVW(wkb, threshold) — Visvalingam per-ring (water.go:163-177). */
@@ -437,38 +429,33 @@ object GeomExpressions {
 
   /** name → builder for every SQL-callable ST function — the single list
     * behind both `register` (temp functions on an existing session) and
-    * `graft.GraftExtensions` (spark.sql.extensions injection).
+    * `graft.GraftExtensions` (spark.sql.extensions injection). Each builder
+    * checks its argument count first: a builder would otherwise drop extra
+    * arguments, and Seq-children expressions pass ExpectsInputTypes'
+    * zip-based check at any arity (zip truncates).
     */
-  val registrations: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "st_point" -> (es => STPoint(es(0), es(1))),
-    "st_contains_point" -> (es => STContainsPoint(es(0), es(1), es(2))),
-    "st_contains_point_keyed" -> (es => { requireArity("st_contains_point_keyed", es.length, 4); STContainsPointKeyed(es) }),
-    "st_intersects" -> (es => STIntersects(es(0), es(1))),
-    "st_difference" -> (es => STDifference(es(0), es(1))),
-    "st_buffer0" -> (es => STBuffer0(es(0))),
-    "st_area" -> (es => STArea(es(0))),
-    "st_envelope" -> (es => STEnvelope(es(0))),
-    "st_cell_at" -> (es => STCellAt(es(0), es(1), es(2))),
-    "st_cell_ancestors" -> (es => { requireArity("st_cell_ancestors", es.length, 4); STCellAncestors(es) }),
-    "st_cell_cover" -> (es => STCellCover(es(0))),
-    "st_cell_cover_join" -> (es => es.length match {
-      // strict arity: 1 (full band) or 3 (explicit band). Accepting 2 and
-      // silently dropping the level argument would run a different cover
-      // than the user asked for — fail loudly like every other entry.
-      case 1 => STCellCoverJoin(es(0))
-      case 3 => STCellCoverJoin(es(0), es(1), es(2))
-      case n => throw new IllegalArgumentException(
-        s"st_cell_cover_join takes 1 (wkb) or 3 (wkb, minLevel, maxLevel) arguments, got $n")
-    }),
-    "st_simplify_vw" -> (es => STSimplifyVW(es(0), es(1))),
-    "st_geo_distance" -> (es => { requireArity("st_geo_distance", es.length, 4); STGeoDistance(es) }))
-
-  // Seq-children expressions pass ExpectsInputTypes' zip-based check at
-  // any arity (zip truncates) and would only crash later with an opaque
-  // MatchError inside doGenCode — check arity at analysis time instead
-  private def requireArity(name: String, got: Int, want: Int): Unit =
-    if (got != want)
-      throw new IllegalArgumentException(s"$name takes $want arguments, got $got")
+  val registrations: Seq[(String, Seq[Expression] => Expression)] = Seq[(String, Int, Seq[Expression] => Expression)](
+    ("st_point", 2, es => STPoint(es(0), es(1))),
+    ("st_contains_point", 3, es => STContainsPoint(es(0), es(1), es(2))),
+    ("st_contains_point_keyed", 4, STContainsPointKeyed(_)),
+    ("st_intersects", 2, es => STIntersects(es(0), es(1))),
+    ("st_difference", 2, es => STDifference(es(0), es(1))),
+    ("st_buffer0", 1, es => STBuffer0(es(0))),
+    ("st_area", 1, es => STArea(es(0))),
+    ("st_envelope", 1, es => STEnvelope(es(0))),
+    ("st_cell_at", 3, es => STCellAt(es(0), es(1), es(2))),
+    ("st_cell_ancestors", 4, STCellAncestors(_)),
+    ("st_cell_cover", 1, es => STCellCover(es(0))),
+    ("st_cell_cover_join", 1, es => STCellCoverJoin(es(0))),
+    ("st_simplify_vw", 2, es => STSimplifyVW(es(0), es(1))),
+    ("st_geo_distance", 4, STGeoDistance(_))
+  ).map { case (name, arity, build) =>
+    name -> { (es: Seq[Expression]) =>
+      if (es.length != arity)
+        throw new IllegalArgumentException(s"$name takes $arity arguments, got ${es.length}")
+      build(es)
+    }
+  }
 
   /** Register SQL-callable versions (used by tests and spark.sql parity). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

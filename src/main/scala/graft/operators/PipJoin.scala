@@ -26,7 +26,7 @@ import graft.functions.GeomExpressions._
   *    explode is map-side, zero shuffle of the page table;
   *  - partitioned: for dimension tables too big to broadcast — covers are
   *    exploded to a fixed join level and shuffled; pages carry one row per
-  *    fixed-level cell, optionally salted for hot cells.
+  *    fixed-level cell; AQE's skew join splits hot cells.
   */
 object PipJoin {
 
@@ -145,29 +145,25 @@ object PipJoin {
   /** Partitioned strategy for non-broadcastable dimension sides: covers are
     * exploded down/up to `joinLevel` and **pre-aggregated to one build row
     * per (relId, layer, joinCell)** carrying the merged leaf-range list;
-    * pages carry exactly one join key (their `joinLevel` ancestor) plus a
-    * salt. Because the build side is unique per key and each page has one
+    * pages carry exactly one join key (their `joinLevel` ancestor).
+    * Because the build side is unique per key and each page has one
     * key, the probe join emits at most one candidate per (page, relation) —
     * no output-side dropDuplicates shuffle of the (huge) match set.
     * Coarse cover cells descend to their `joinLevel` descendants (range =
     * whole join cell); finer cells map to their ancestor keeping their own
-    * range for the residual test. AQE's skew-join handles stragglers;
-    * `salt` > 1 additionally replicates the cover side for hot cells.
+    * range for the residual test. AQE's skew join handles hot cells.
     * `joinLevel <= 0` picks the level from cover stats.
     *
-    * `pruneProbe` — probe-side pre-shuffle semi-join pruning. `None`
-    * (default) decides from cover DENSITY: count the distinct build
-    * joinCells against the level-`jl` grid (2·4^jl cells) and prune when
-    * the covered fraction is below [[PruneCoverageThreshold]] — a sparse
-    * cover means whole swaths of probe cells can only be dropped by the
-    * join, which the semi-join does BEFORE the shuffle (measured 14.8×
-    * with salt on the skewed 100 M bench, BENCH.md round 6); a dense
-    * cover makes the semi-join pure cost (every probe survives).
-    * `Some(x)` forces the choice (benchmarks, known-shape callers).
+    * Probe-side pre-shuffle semi-join pruning is decided from cover
+    * DENSITY ([[autoPrune]]): count the distinct build joinCells against
+    * the level-`jl` grid (4^jl cells) and prune when the covered fraction
+    * is below [[PruneCoverageThreshold]] — a sparse cover means whole
+    * swaths of probe cells can only be dropped by the join, which the
+    * semi-join does BEFORE the shuffle (BENCH.md round 6); a dense cover
+    * makes the semi-join pure cost (every probe survives).
     */
   def matchesPartitioned(pages: DataFrame, covers: DataFrame, polygons: DataFrame,
-                         joinLevel: Int = 0, salt: Int = 1,
-                         pruneProbe: Option[Boolean] = None): DataFrame = {
+                         joinLevel: Int = 0): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
     val jl = if (joinLevel > 0) joinLevel else chooseJoinLevel(covers)
@@ -200,16 +196,11 @@ object PipJoin {
     val coverAgg = coverCellsBase
       .groupBy("relId", "layer", "joinCell")
       .agg(collect_list(struct(col("rmin"), col("rmax"))).as("ranges"))
-    val coverCells = coverAgg
-      .withColumn("salt", explode(sequence(lit(0), lit(salt - 1))))
-
-    val doPrune = pruneProbe.getOrElse(
-      autoPrune(coverAgg.select("joinCell").distinct().count(), jl))
+    val doPrune = autoPrune(coverAgg.select("joinCell").distinct().count(), jl)
 
     val probes0 = pages
       .withColumn("joinCell", st_cell_at(col("lon"), col("lat"), jl))
       .withColumn("leaf", st_cell_at(col("lon"), col("lat"), graft.cells.Cell.MaxLevel))
-      .withColumn("salt", pmod(hash(col("url")), lit(salt)))
 
     // probe-side pruning: pages whose joinCell has NO build row can only
     // be dropped by the join — a broadcast SEMI-join on the distinct
@@ -224,7 +215,7 @@ object PipJoin {
         Seq("joinCell"), "left_semi")
 
     probes
-      .join(coverCells, Seq("joinCell", "salt"))
+      .join(coverAgg, Seq("joinCell"))
       .filter(exists(col("ranges"),
         r => col("leaf") >= r.getField("rmin") && col("leaf") <= r.getField("rmax")))
       .join(polygons.select(col("relId"), col("wkb")), Seq("relId"))
@@ -263,7 +254,7 @@ object PipJoin {
     * never does.
     */
   def matchesHybrid(pages: DataFrame, covers: DataFrame, polygons: DataFrame,
-                    broadcastBudgetBytes: Long = 64L << 20, salt: Int = 1): DataFrame = {
+                    broadcastBudgetBytes: Long = 64L << 20): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
     val ranked = covers
@@ -312,39 +303,13 @@ object PipJoin {
       else Some(matchesIndexed(pages, hotOnly(covers), hotOnly(polygons)))
     val shufflePart =
       if (hot.length == nTotal) None
-      // pruneProbe: the cold tail's cover cells are the SPARSE part of
-      // the grid (hot relations absorbed the high-traffic cells), so the
-      // pre-shuffle semi-join drop is exactly where it pays — pages in
-      // hot-only cells never enter the cold shuffle
-      else Some(matchesPartitioned(pages, coldOnly(covers), coldOnly(polygons), salt = salt,
-        pruneProbe = Some(true)))
+      else Some(matchesPartitioned(pages, coldOnly(covers), coldOnly(polygons)))
     (bcastPart, shufflePart) match {
       case (Some(b), Some(s)) => b.unionByName(s)
       case (Some(b), None) => b
       case (None, Some(s)) => s
       case (None, None) => pages.sparkSession.emptyDataFrame
         .select(lit("").as("url"), lit("").as("layer"), lit(0L).as("relId")).limit(0)
-    }
-  }
-
-  /** Skew-aware salt selection (SURVEY §7 hard part c): sample the pages'
-    * join-level cells and size the salt so the hottest cell's share of a
-    * shuffle partition stays bounded. salt ≈ ceil(hottestShare × shuffle
-    * partitions), clamped to [1, maxSalt]. AQE's skew join remains the
-    * runtime backstop; this bounds the build-side replication up front.
-    */
-  def autoSalt(pages: DataFrame, joinLevel: Int = 8, sampleFraction: Double = 0.05,
-               maxSalt: Int = 16): Int = {
-    val spark = pages.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sample = pages.sample(withReplacement = false, sampleFraction, seed = 42)
-      .withColumn("joinCell", st_cell_at(col("lon"), col("lat"), joinLevel))
-      .groupBy("joinCell").count()
-      .agg(max("count").as("hot"), sum("count").as("total")).head()
-    if (sample.isNullAt(0) || sample.getLong(1) == 0) 1
-    else {
-      val hotShare = sample.getLong(0).toDouble / sample.getLong(1)
-      math.max(1, math.min(maxSalt, math.ceil(hotShare * parts).toInt))
     }
   }
 

@@ -97,7 +97,7 @@ object Similarity {
     * colliding in ≥1 band are exact-verified against `threshold`. Sketch is
     * a map-side pass; the only shuffle is the (band, bandVal) bucket join —
     * NOT all-pairs.
-    * `vec_id` must be unique; the broadcast verify rejects a repeated one.
+    * `vec_id` must be unique; both verify paths reject a repeated one.
     *
     * The projection planes are Rademacher (±1 per dimension, the published
     * sign-random-projection variant — Achlioptas-style sparse/sign
@@ -251,7 +251,15 @@ object Similarity {
         }
       }.toDF("vec_a", "vec_b", "cos")
     } else {
+      // a repeated vec_id would pair each candidate with every one of its
+      // rows: fail as the broadcast path does, from a per-id window count
+      // in the plan (no job; a table past the 64 MB budget sort-merge
+      // joins on vec_id, so the window's shuffle and sort are the join's)
       val embN = withNorm(emb, "vec", "nrm")
+        .withColumn("vec", when(count(lit(1)).over(Window.partitionBy("vec_id")) > 1,
+          raise_error(concat(lit("embeddingDedupBlocked: vec_id must be unique, "),
+            col("vec_id").cast("string"), lit(" repeats"))))
+          .otherwise(col("vec")))
       pairs
         .join(embN.select(col("vec_id").as("vec_a"), col("vec").as("va"), col("nrm").as("na")), Seq("vec_a"))
         .join(embN.select(col("vec_id").as("vec_b"), col("vec").as("vb"), col("nrm").as("nb")), Seq("vec_b"))

@@ -35,14 +35,10 @@ import graft.functions.{STCellAncestors, STCellCoverJoin, STContainsPoint}
   *    disjoint (Coverer.normalize), so a point's ancestor chain meets at
   *    most one of them.
   *
-  * The probe band defaults to the full [0, Coverer.MaxLevel] ancestor
-  * chain (23 cells/point) because the rule cannot see cover statistics
-  * at optimize time; the session confs `graft.pip.minLevel` /
-  * `graft.pip.maxLevel` narrow it (the banded plan `PipJoin.matches`
-  * builds from the cover table). Rows are IDENTICAL under any band:
-  * the polygon-side cover is clamped into the same band
-  * (Coverer.clampCover — coarse cells descend, fine cells lift+dedup),
-  * so the superset/disjoint guarantees hold band-wide.
+  * The probe explodes the full [0, Coverer.MaxLevel] ancestor chain
+  * (23 cells/point), because the rule cannot see cover statistics at
+  * optimize time; `PipJoin.matches` narrows the chain to the band its
+  * cover table holds.
   *
   * Fires only when no cross-side equality key already exists (the join
   * would otherwise hash-join fine), which also makes the rule idempotent:
@@ -93,33 +89,19 @@ object PipJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       ((a.references.subsetOf(left.outputSet) && b.references.subsetOf(right.outputSet)) ||
         (a.references.subsetOf(right.outputSet) && b.references.subsetOf(left.outputSet)))
 
-  /** Probe/cover level band from session confs, defaulting to the full
-    * [0, MaxLevel] chain. Sanitized (clamped, ordered) so a bad conf can
-    * only cost performance, never correctness.
-    */
-  private def confBand: (Int, Int) = {
-    val conf = org.apache.spark.sql.internal.SQLConf.get
-    def read(key: String, dflt: Int): Int =
-      try conf.getConfString(key, dflt.toString).toInt catch { case _: NumberFormatException => dflt }
-    val lo = math.max(0, math.min(read("graft.pip.minLevel", 0), Coverer.MaxLevel))
-    val hi = math.max(lo, math.min(read("graft.pip.maxLevel", Coverer.MaxLevel), Coverer.MaxLevel))
-    (lo, hi)
-  }
-
   private def rewrite(j: Join, contains: STContainsPoint,
                       others: Seq[Expression], polyOnRight: Boolean): LogicalPlan = {
     val (polySide, ptSide) = if (polyOnRight) (j.right, j.left) else (j.left, j.right)
     val coverCell = AttributeReference("graft$coverCell", LongType, nullable = false)()
     val probeCell = AttributeReference("graft$probeCell", LongType, nullable = false)()
-    val (minL, maxL) = confBand
 
     val polyGen = Generate(
-      Explode(STCellCoverJoin(contains.first, Literal(minL), Literal(maxL))),
+      Explode(STCellCoverJoin(contains.first)),
       unrequiredChildIndex = Nil, outer = false, qualifier = None,
       generatorOutput = Seq(coverCell), child = polySide)
     val ptGen = Generate(
       Explode(STCellAncestors(Seq(contains.second, contains.third,
-        Literal(minL), Literal(maxL)))),
+        Literal(0), Literal(Coverer.MaxLevel)))),
       unrequiredChildIndex = Nil, outer = false, qualifier = None,
       generatorOutput = Seq(probeCell), child = ptSide)
 

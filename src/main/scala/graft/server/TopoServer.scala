@@ -31,10 +31,10 @@ import graft.operators.{Export, ExportArchive, Ingest, PipIndex, PipJoin}
   * an in-memory index, with no Spark job per request. The snapshot is
   * collected once per server, on first use: the polygons and their
   * [[Ingest.cellCovers]], a full [[PipIndex]] over them, and per-relId
-  * maps of polygon and cover cells. A second [[PipIndex]] over the curated
-  * relations is rebuilt from the snapshot's covers whenever the curated
-  * sets change. Lookups run [[PipIndex.hits]], the kernel `PipMatchSpec`
-  * pins equal to the Catalyst PIP join; match rules apply through
+  * maps of polygon and cover cells. Lookups run [[PipIndex.hits]] on that
+  * one index, the kernel `PipMatchSpec` pins equal to the Catalyst PIP
+  * join; a curated match keeps the hits in the curated sets, and match
+  * rules apply to the suggestions through
   * [[PipJoin.MatchRule.keeps]], the suggestion join's filter as a function.
   * Cold TopoJSON renders, the export and `/api/relation` still run engine
   * queries ([[Export.layer]], [[ExportArchive.tarGz]]).
@@ -126,18 +126,11 @@ final class TopoServer(
   // lookups, from the driver-resident dimension
   // ------------------------------------------------------------------
 
-  // All guarded by `lock`; readers take the immutable values under it.
+  // Guarded by `lock`; readers take the immutable snapshot under it.
   // The first read collects the dimension while holding `lock`, so
-  // concurrent requests wait for it once. /api/add bumps
-  // `curatedVersion`, and the next curated read rebuilds the curated
-  // index from the snapshot (no Spark job, no cover recompute).
+  // concurrent requests wait for it once.
   private var dim: Dimension = _
   private var dimBuilds = 0
-  private var curatedIndex: PipIndex = _
-  private var curatedIndexCells = 0
-  private var curatedIndexVersion = -1
-  private var curatedBuilds = 0
-  private var curatedVersion = 0
 
   private def dimension(): Dimension = lock.synchronized {
     if (dim == null) {
@@ -151,25 +144,20 @@ final class TopoServer(
     dim
   }
 
-  private def curatedLookup(): (Dimension, PipIndex) = lock.synchronized {
-    val d = dimension()
-    if (curatedIndexVersion != curatedVersion) {
-      val pairs = curated.toSeq.flatMap { case (l, ids) => ids.map(id => (l, id)) }.toSet
-      val covers = d.covers.filter(c => pairs((c._2, c._1)))
-      curatedIndex = d.index(covers)
-      curatedIndexCells = covers.length
-      curatedIndexVersion = curatedVersion
-      curatedBuilds += 1
-    }
-    (d, curatedIndex)
-  }
+  /** The full index's hits for one coordinate: the polygons containing it. */
+  private def hitsAt(d: Dimension, c: MissingCoord): Seq[PipIndex.Poly] =
+    d.full.hits(c.lon, c.lat).toSeq.map(d.full.polys(_))
 
   /** Per-layer match of one coordinate against the CURATED relations
     * (the reference's `e.topologies` lookup): layer -> (relId, name),
     * the smallest containing relId of each layer, as `PipJoin.perLayer`.
+    * `hits` are the coordinate's full-index hits; each polygon's pieces
+    * depend only on its own covers, so the curated subset of them is what
+    * an index over the curated covers alone would return.
     */
-  private def curatedMatch(d: Dimension, curatedIdx: PipIndex, c: MissingCoord): Map[String, (Long, String)] =
-    curatedIdx.hits(c.lon, c.lat).map(curatedIdx.polys(_)).groupBy(_.layer).map { case (l, ps) =>
+  private def curatedMatch(d: Dimension, cur: Map[String, Vector[Long]],
+                           hits: Seq[PipIndex.Poly]): Map[String, (Long, String)] =
+    hits.filter(p => cur.get(p.layer).exists(_.contains(p.relId))).groupBy(_.layer).map { case (l, ps) =>
       val id = ps.map(_.relId).min
       l -> (id, d.polys(id).name)
     }
@@ -179,8 +167,7 @@ final class TopoServer(
     * layer match-rules applied as the batch suggestion join applies them.
     * Returns layer -> (relId, name, adminLevel), by relId.
     */
-  private def suggestFor(d: Dimension, c: MissingCoord): Map[String, Seq[(Long, String, Int)]] = {
-    val hits = d.full.hits(c.lon, c.lat).toSeq.map(d.full.polys(_))
+  private def suggestFor(d: Dimension, hits: Seq[PipIndex.Poly]): Map[String, Seq[(Long, String, Int)]] = {
     val matched = hits.map(p => (p.layer, p.relId)).toSet
     hits.map(p => (p.layer, p.relId, d.polys(p.relId)))
       .filter { case (l, _, row) => rules.forall(_.keeps(matched, l, row.adminLevel)) }
@@ -222,9 +209,9 @@ final class TopoServer(
   /** Import missing coordinates: keep only those NOT matched by every
     * configured layer's curated set (missing.go:25-61). */
   private def importMissing(coords: Seq[MissingCoord]): Int = {
-    val (d, curatedIdx) = curatedLookup()
+    val (d, cur) = lock.synchronized((dimension(), curated))
     val layerIds = layers.map(_.id).toSet
-    val incomplete = coords.filterNot(c => layerIds.subsetOf(curatedMatch(d, curatedIdx, c).keySet))
+    val incomplete = coords.filterNot(c => layerIds.subsetOf(curatedMatch(d, cur, hitsAt(d, c)).keySet))
     lock.synchronized {
       val before = missing.size
       incomplete.foreach(c => missing.getOrElseUpdate(c.key, c))
@@ -242,14 +229,15 @@ final class TopoServer(
       head match {
         case None => return "null"
         case Some(c) =>
-          val (d, curatedIdx) = curatedLookup()
-          val matched = curatedMatch(d, curatedIdx, c)
+          val (d, cur) = lock.synchronized((dimension(), curated))
+          val hits = hitsAt(d, c)
+          val matched = curatedMatch(d, cur, hits)
           val unmatchedLayers = layers.map(_.id).filterNot(matched.contains)
           if (unmatchedLayers.isEmpty) {
             dropMissing(c)
             // loop: next head
           } else {
-            val sugg = suggestFor(d, c)
+            val sugg = suggestFor(d, hits)
             val suggJson = unmatchedLayers.map { l =>
               val entries = sugg.getOrElse(l, Nil).map { case (id, name, al) =>
                 s"""{"id":$id,"name":${JsonUtil.quote(Option(name).getOrElse(""))},"admin_level":$al}"""
@@ -303,22 +291,16 @@ final class TopoServer(
   private def metricsJson(): String = {
     val routeJson = routes.map { case (path, st) => s"${JsonUtil.quote(path)}:${st.json}" }
       .mkString("{", ",", "}")
-    // `index` describes the stab of the full (snapshot) or curated PipIndex
-    def sizes(builds: Int, polys: Seq[Array[Byte]], cells: Int, index: Option[PipIndex]): String = {
-      val st = index.fold(PipIndex.Stats(0, 0, 0.0, 0L))(_.stats)
-      s"""{"builds":$builds,"polygons":${polys.size},"cells":$cells,""" +
-        s""""wkb_bytes":${polys.map(_.length.toLong).sum},"index":{"segments":${st.segments},""" +
-        s""""entries":${st.entries},"interior_share":${JsonUtil.num("%.4f", st.interiorShare)},""" +
-        s""""bytes":${st.bytes}}}"""
-    }
     lock.synchronized {
       val snap = Option(dim)
-      val cur = Option(curatedIndex)
+      val polys = snap.toSeq.flatMap(_.polys.values.map(_.wkb))
+      // the stab of the snapshot's PipIndex
+      val st = snap.fold(PipIndex.Stats(0, 0, 0.0, 0L))(_.full.stats)
       s"""{"routes":$routeJson,"topo_lru":{"hits":$lruHits,"misses":$lruMisses},""" +
-        s""""snapshot":${sizes(dimBuilds, snap.toSeq.flatMap(_.polys.values.map(_.wkb)),
-          snap.fold(0)(_.covers.length), snap.map(_.full))},""" +
-        s""""curated_index":${sizes(curatedBuilds, cur.toSeq.flatMap(_.polys.map(_.wkb)),
-          curatedIndexCells, cur)}}"""
+        s""""snapshot":{"builds":$dimBuilds,"polygons":${polys.size},"cells":${snap.fold(0)(_.covers.length)},""" +
+        s""""wkb_bytes":${polys.map(_.length.toLong).sum},"index":{"segments":${st.segments},""" +
+        s""""entries":${st.entries},"interior_share":${JsonUtil.num("%.4f", st.interiorShare)},""" +
+        s""""bytes":${st.bytes}}}}"""
     }
   }
 
@@ -446,18 +428,16 @@ final class TopoServer(
     else {
       val root = mapper.readTree(ex.getRequestBody)
       lock.synchronized {
-        val before = curatedVersion
+        val before = curated
         layers.foreach { cfg =>
           val node = root.get(cfg.id)
           if (node != null) {
             val id = node.asLong()
-            if (!curated.getOrElse(cfg.id, Vector.empty).contains(id)) {
+            if (!curated.getOrElse(cfg.id, Vector.empty).contains(id))
               curated = curated.updated(cfg.id, curated.getOrElse(cfg.id, Vector.empty) :+ id)
-              curatedVersion += 1 // invalidates the curated index
-            }
           }
         }
-        if (curatedVersion != before) persistCurated()
+        if (curated != before) persistCurated()
       }
       respond(ex, 200, "")
     }
@@ -523,15 +503,11 @@ object TopoServer {
     */
   private final class Dimension(rows: Array[(Long, String, String, Int, Array[Byte])],
                                 val covers: Array[(Long, String, Long)]) {
-    private val wkbs = rows.map(r => (r._1, r._5))
     /** Fails, naming the relId, when `rows` repeats one. */
-    val full: PipIndex = index(covers)
+    val full: PipIndex = PipIndex.of(covers, rows.map(r => (r._1, r._5)))
     val polys: Map[Long, Polygon] = rows.map(r => r._1 -> Polygon(r._2, r._3, r._4, r._5)).toMap
     val cells: Map[Long, Array[Long]] =
       covers.groupBy(_._1).map { case (id, cs) => id -> cs.map(_._3).sorted }
-
-    /** A [[PipIndex]] over a subset of `covers`. */
-    def index(subset: Array[(Long, String, Long)]): PipIndex = PipIndex.of(subset, wkbs)
   }
 
   private object Dimension {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * (url, warc_ts, html, text, lang) + a geocode that is a *pure integer
   * function of doc_id*, expressed as SQL shared verbatim between the Spark
   * plan and the DuckDB oracle. 60% of pages cluster into 5 "city" hotspots
-  * (skew for the salted-join path); text is carried byte-identical from
+  * (hot cells for the partitioned join); text is carried byte-identical from
   * `documents` (the per-row invariant).
   *
   * The OSM-side dimension tables (nodes/ways/relations/water) mirror

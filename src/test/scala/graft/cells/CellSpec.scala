@@ -210,79 +210,4 @@ class CovererSpec extends AnyFunSuite {
     assert(cells.nonEmpty && cells.length < 200)
     assert(cells.forall(c => Cell.level(c) <= 8), s"early termination failed: ${cells.map(Cell.level).toSeq}")
   }
-
-  test("clampCover: band membership, disjointness, and superset under descend + lift") {
-    val cells = Coverer.coverExact(poly(sq(4.0, 51.0, 2.0)))
-    val clamped = Coverer.clampCover(cells, 6, 7)
-    clamped.foreach { c =>
-      val l = Cell.level(c)
-      assert(l >= 6 && l <= 7, s"level $l outside band")
-    }
-    for (a <- clamped; b <- clamped if a != b) assert(!Cell.contains(a, b))
-    // superset: every leaf covered before stays covered
-    val rnd = new scala.util.Random(11)
-    for (_ <- 1 to 200) {
-      val lon = 4.0 + (rnd.nextDouble() * 4 - 2) * 0.98
-      val lat = 51.0 + (rnd.nextDouble() * 4 - 2) * 0.98
-      val leaf = Cell.leaf(lon, lat)
-      if (cells.exists(c => Cell.contains(c, leaf)))
-        assert(clamped.exists(c => Cell.contains(c, leaf)), s"($lon,$lat) lost by clamp")
-    }
-    // no-op band returns the input untouched
-    assert(Coverer.clampCover(cells, 0, Cell.MaxLevel).toSeq == cells.toSeq)
-  }
-
-  test("clampCover property: random covers × random bands keep disjointness + exact leaf coverage") {
-    // the descend/lift primitive shared by the banded SQL rewrite and the
-    // partitioned join's key derivation: for ANY band the clamped set must
-    // stay pairwise disjoint and cover exactly the leaves the input
-    // covered (superset by construction; probe points verify no loss)
-    val rnd = new scala.util.Random(7331)
-    for (iter <- 1 to 40) {
-      val cx = rnd.nextDouble() * 300 - 150
-      val cy = rnd.nextDouble() * 150 - 75
-      val r = math.pow(10, rnd.nextDouble() * 3 - 1.5) // 0.03°..30°
-      val cells = Coverer.coverExact(poly(sq(cx, cy, r)))
-      val lo = rnd.nextInt(13)
-      val hi = lo + rnd.nextInt(23 - lo)
-      val clamped = Coverer.clampCover(cells, lo, hi)
-      clamped.foreach { c =>
-        val l = Cell.level(c)
-        assert(l >= lo && l <= hi, s"iter $iter band [$lo,$hi]: level $l escaped")
-      }
-      // disjointness in O(n log n): quadtree ranges are nested-or-disjoint,
-      // so sorted-by-rangeMin cells are pairwise disjoint iff consecutive
-      // ranges never overlap (a coarse→fine descend can emit 4^Δ cells —
-      // an O(n²) pairwise loop is intractable here, and would itself be
-      // the kind of check that dies at scale)
-      val ranges = clamped.map(c => (Cell.rangeMin(c), Cell.rangeMax(c))).sorted
-      ranges.sliding(2).foreach {
-        case Array((_, aMax), (bMin, _)) =>
-          assert(aMax < bMin, s"iter $iter band [$lo,$hi]: overlapping cells")
-        case _ =>
-      }
-      // coverage preserved at random probe points in and around the square
-      // (binary search over the sorted ranges, not a linear exists)
-      def covered(rs: Array[(Long, Long)], leaf: Long): Boolean = {
-        var loI = 0; var hiI = rs.length - 1
-        while (loI <= hiI) {
-          val mid = (loI + hiI) >>> 1
-          if (rs(mid)._2 < leaf) loI = mid + 1
-          else if (rs(mid)._1 > leaf) hiI = mid - 1
-          else return true
-        }
-        false
-      }
-      val origRanges = cells.map(c => (Cell.rangeMin(c), Cell.rangeMax(c))).sorted
-      for (_ <- 1 to 50) {
-        val lon = cx + (rnd.nextDouble() * 4 - 2) * r
-        val lat = cy + (rnd.nextDouble() * 4 - 2) * r
-        if (lon >= -180 && lon <= 180 && lat >= -90 && lat <= 90) {
-          val leaf = Cell.leaf(lon, lat)
-          if (covered(origRanges, leaf))
-            assert(covered(ranges, leaf), s"iter $iter band [$lo,$hi]: ($lon,$lat) lost")
-        }
-      }
-    }
-  }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -76,23 +77,46 @@ class PipelineSpec extends SparkTestBase {
     // must agree on multiplicity too — one row per (url, layer, relId)
     val a = PipJoin.matches(pages, covers, polys)
       .select("url", "layer", "relId").as[(String, String, Long)].collect().toSeq.sorted
-    val b = PipJoin.matchesPartitioned(pages, covers, polys, joinLevel = 8, salt = 4)
+    val b = PipJoin.matchesPartitioned(pages, covers, polys, joinLevel = 8)
       .as[(String, String, Long)].collect().toSeq.sorted
-    val c = PipJoin.matchesPartitioned(pages, covers, polys, joinLevel = 11, salt = 1)
+    val c = PipJoin.matchesPartitioned(pages, covers, polys, joinLevel = 11)
       .as[(String, String, Long)].collect().toSeq.sorted
     val d = PipJoin.matchesIndexed(pages, covers, polys)
       .as[(String, String, Long)].collect().toSeq.sorted
-    // probe-side pre-shuffle pruning is a semi-join on an inner-join key:
-    // rows must be untouched, forced on, forced off, and in the
-    // cover-density auto mode (b/c above run auto = the default)
-    val e = PipJoin.matchesPartitioned(pages, covers, polys, joinLevel = 8, salt = 4,
-      pruneProbe = Some(true))
-      .as[(String, String, Long)].collect().toSeq.sorted
-    val f = PipJoin.matchesPartitioned(pages, covers, polys, joinLevel = 8, salt = 4,
-      pruneProbe = Some(false))
-      .as[(String, String, Long)].collect().toSeq.sorted
     assert(a == a.distinct, "broadcast strategy emitted duplicate (url,layer,relId) rows")
-    assert(a == b && a == c && a == d && a == e && a == f)
+    assert(a == b && a == c && a == d)
+  }
+
+  /** Runs the partitioned join; returns its rows, sorted, and whether the
+    * executed plan holds the probe-side left-semi pre-filter. */
+  private def partitionedRun(probe: DataFrame, cs: DataFrame, ps: DataFrame,
+                             joinLevel: Int): (Seq[(String, String, Long)], Boolean) = {
+    val df = PipJoin.matchesPartitioned(probe, cs, ps, joinLevel)
+    val rows = df.as[(String, String, Long)].collect().toSeq.sorted
+    (rows, df.queryExecution.executedPlan.toString.contains("LeftSemi"))
+  }
+
+  test("auto-prune on sparse covers: the probe side is semi-joined before the shuffle, rows unchanged") {
+    // the fixture's city-sized covers hold a sliver of the 4^8 level-8 cells
+    val a = PipJoin.matches(pages, covers, polys)
+      .select("url", "layer", "relId").as[(String, String, Long)].collect().toSeq.sorted
+    val (rows, pruned) = partitionedRun(pages, covers, polys, joinLevel = 8)
+    assert(pruned, "sparse covers must prune the probe side")
+    assert(rows == a)
+  }
+
+  test("auto-prune on dense covers: no probe semi-join, rows unchanged") {
+    // a near-world box touches every cell of a coarse join level
+    val box = IndexedSeq((-179.0, -89.0), (179.0, -89.0), (179.0, 89.0), (-179.0, 89.0))
+    val worldDf = Seq((8000L, 2, "countries", "world", Jts.toWkb(Jts.polygon(box :+ box.head))))
+      .toDF("relId", "adminLevel", "layer", "name", "wkb")
+      .withColumn("bbox", graft.functions.GeomExpressions.st_envelope($"wkb"))
+    val worldCovers = Ingest.cellCovers(worldDf)
+    val a = PipJoin.matches(pages, worldCovers, worldDf)
+      .select("url", "layer", "relId").as[(String, String, Long)].collect().toSeq.sorted
+    val (rows, pruned) = partitionedRun(pages, worldCovers, worldDf, joinLevel = 1)
+    assert(!pruned, "dense covers must not prune the probe side")
+    assert(rows == a && a.nonEmpty)
   }
 
   test("auto-prune density rule: full grid coverage disables the probe semi-join") {
@@ -110,17 +134,15 @@ class PipelineSpec extends SparkTestBase {
   test("partitioned strategy property: RANDOM joinLevel × salt all equal broadcast rows") {
     // the descend/lift key derivation must be lossless at ANY join level
     // (coarse cover cells descend 4^Δ, fine cells lift to their ancestor)
-    // and under ANY salt replication — seeded random draws beyond the two
-    // pinned levels above
+    // — seeded random draws beyond the two pinned levels above
     val a = PipJoin.matches(pages, covers, polys)
       .select("url", "layer", "relId").as[(String, String, Long)].collect().toSeq.sorted
     val rnd = new scala.util.Random(9001)
     for (_ <- 1 to 3) {
       val jl = 4 + rnd.nextInt(9) // 4..12
-      val salt = 1 + rnd.nextInt(4)
-      val got = PipJoin.matchesPartitioned(pages, covers, polys, joinLevel = jl, salt = salt)
+      val got = PipJoin.matchesPartitioned(pages, covers, polys, joinLevel = jl)
         .as[(String, String, Long)].collect().toSeq.sorted
-      assert(got == a, s"joinLevel=$jl salt=$salt diverged from broadcast rows")
+      assert(got == a, s"joinLevel=$jl diverged from broadcast rows")
     }
   }
 
@@ -129,8 +151,7 @@ class PipelineSpec extends SparkTestBase {
       .select("url", "layer", "relId").as[(String, String, Long)].collect().toSeq.sorted
     val totalBytes = polys.select(sum(length($"wkb"))).head().getLong(0)
     // budget fits roughly half the dimension -> both paths active
-    val split = PipJoin.matchesHybrid(pages, covers, polys,
-      broadcastBudgetBytes = totalBytes / 2, salt = 2)
+    val split = PipJoin.matchesHybrid(pages, covers, polys, broadcastBudgetBytes = totalBytes / 2)
       .as[(String, String, Long)].collect().toSeq.sorted
     // degenerate budgets: everything broadcast / everything partitioned
     val allB = PipJoin.matchesHybrid(pages, covers, polys, broadcastBudgetBytes = Long.MaxValue)
@@ -176,12 +197,12 @@ class PipelineSpec extends SparkTestBase {
 
     val probe = Seq(("u1", spot._1, spot._2), ("u2", 60.0, 10.0), ("u3", -150.0, -70.0))
       .toDF("url", "lon", "lat")
-    def rows(df: org.apache.spark.sql.DataFrame) =
+    def rows(df: DataFrame) =
       df.select("url", "layer", "relId").as[(String, String, Long)].collect().toSeq.sorted
     val expected = Seq(("u1", "countries", 7000L), ("u2", "countries", 7000L))
     assert(rows(PipJoin.matches(probe, coversDf, polysDf)) == expected)
     assert(rows(PipJoin.matchesIndexed(probe, coversDf, polysDf)) == expected)
-    assert(rows(PipJoin.matchesPartitioned(probe, coversDf, polysDf, joinLevel = 8, salt = 2)) == expected)
+    assert(rows(PipJoin.matchesPartitioned(probe, coversDf, polysDf, joinLevel = 8)) == expected)
   }
 
   test("per-layer pivot: one row per url, min relId per layer") {

@@ -307,6 +307,14 @@ class TextOpsSpec extends SparkTestBase {
     assert(e.getMessage.contains("vec_id must be unique, 2 repeats"), e.getMessage)
   }
 
+  test("blocked dedup join verify rejects a repeated vec_id") {
+    val emb = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(1.0f, 0.1f)), (2L, Seq(0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[Exception](
+      Similarity.embeddingDedupBlocked(emb, 0.4, verifyBroadcastBytes = 0L).collect())
+    assert(e.getMessage.contains("vec_id must be unique, 2 repeats"), e.getMessage)
+  }
+
   test("IVF ANN recall >= 0.8 vs brute force at nProbe=4/16") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val brute = Similarity.bruteForceTopK(emb, 0L to 9L, 5)

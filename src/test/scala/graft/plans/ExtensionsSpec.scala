@@ -174,54 +174,15 @@ class ExtensionsSpec extends SparkTestBase {
     assert(df.as[(String, String, Long)].collect().toSet == bruteForce())
   }
 
-  test("PipJoinRewrite: graft.pip.minLevel/maxLevel band the probe explode, rows unchanged") {
-    Graft.install(spark)
-    spark.conf.set("graft.pip.minLevel", "4")
-    spark.conf.set("graft.pip.maxLevel", "8")
-    try {
-      val df = sqlJoin(spark)
-      val opt = df.queryExecution.optimizedPlan.toString
-      assert(opt.contains("st_cell_ancestors") && opt.contains("4, 8"),
-        s"banded probe explode missing from:\n$opt")
-      // cover clamping (coarse cells descend, fine cells lift+dedup) keeps
-      // rows IDENTICAL under the band — triangle 995 included, whose
-      // envelope-fallback/exact cover cells sit outside [4, 8]
-      assert(df.as[(String, String, Long)].collect().toSet == bruteForce())
-    } finally {
-      spark.conf.unset("graft.pip.minLevel")
-      spark.conf.unset("graft.pip.maxLevel")
-    }
-  }
-
-  test("PipJoinRewrite property: RANDOM bands all return the unbanded row set") {
-    // the single-band test above pins one band; this property draws seeded
-    // random bands (including degenerate lo==hi and coarse-only bands) and
-    // requires row identity for each — the clampCover descend/lift must be
-    // lossless for ANY band, not just [4,8]
-    Graft.install(spark)
-    val rnd = new scala.util.Random(4242)
-    val expected = bruteForce()
-    for (_ <- 1 to 4) {
-      val lo = rnd.nextInt(13)           // 0..12
-      val hi = lo + rnd.nextInt(23 - lo) // lo..22
-      spark.conf.set("graft.pip.minLevel", lo.toString)
-      spark.conf.set("graft.pip.maxLevel", hi.toString)
-      try {
-        val got = sqlJoin(spark).as[(String, String, Long)].collect().toSet
-        assert(got == expected, s"band [$lo,$hi] changed the row set")
-      } finally {
-        spark.conf.unset("graft.pip.minLevel")
-        spark.conf.unset("graft.pip.maxLevel")
-      }
-    }
-  }
-
   test("variadic ST functions reject wrong arity loudly at analysis time") {
     graft.functions.GeomExpressions.register(spark)
     Seq(
       "SELECT st_cell_ancestors(1.0, 2.0, 0)",      // 3 of 4
-      "SELECT st_cell_cover_join(x'00', 5)",        // 2 (1 or 3 allowed)
-      "SELECT st_geo_distance(1.0, 2.0, 3.0)"       // 3 of 4
+      "SELECT st_cell_cover_join(x'00', 5)",        // 2 of 1
+      "SELECT st_geo_distance(1.0, 2.0, 3.0)",      // 3 of 4
+      "SELECT st_area(st_point(1.0, 2.0), 5)",      // 2 of 1
+      "SELECT st_cell_cover(st_point(1.0, 2.0), 7, 8)", // 3 of 1
+      "SELECT st_area()"                            // 0 of 1
     ).foreach { sql =>
       val e = intercept[Exception](spark.sql(sql).collect())
       assert(e.getMessage.contains("arguments"), s"$sql: ${e.getMessage}")

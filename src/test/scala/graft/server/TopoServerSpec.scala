@@ -337,21 +337,17 @@ class TopoServerSpec extends SparkTestBase {
       val rows = polys.select("relId", "wkb").as[(Long, Array[Byte])].collect()
       val covers = Ingest.cellCovers(polys).select("relId").as[Long].collect()
       val snap = m.get("snapshot")
+      // one index serves the curated and the uncurated lookups: /api/add
+      // followed by /api/missing and /api/coordinate builds nothing more
       assert(snap.get("builds").asInt() == 1)
       assert(snap.get("polygons").asInt() == rows.length)
       assert(snap.get("cells").asInt() == covers.length)
       assert(snap.get("wkb_bytes").asLong() == rows.map(_._2.length.toLong).sum)
-      val cur = m.get("curated_index")
-      assert(cur.get("builds").asInt() == 1) // /api/coordinate reuses /api/missing's build
-      assert(cur.get("polygons").asInt() == 1)
-      assert(cur.get("cells").asInt() == covers.count(_ == 103L))
-      assert(cur.get("wkb_bytes").asLong() == rows.find(_._1 == 103L).get._2.length)
-      // the stab of each index on the fixture, pinned: segments, entries,
+      // the stab of the index on the fixture, pinned: segments, entries,
       // interior share of the entries and the bytes of the stab arrays
       def stab(n: com.fasterxml.jackson.databind.JsonNode) = (n.get("segments").asInt(), n.get("entries").asInt(),
         n.get("interior_share").asDouble(), n.get("bytes").asLong())
       assert(stab(snap.get("index")) == (5351, 10837, 0.7459, 107564L), snap)
-      assert(stab(cur.get("index")) == (368, 273, 0.326, 5512L), cur)
     } finally server.stop()
   }
 
@@ -400,8 +396,8 @@ class TopoServerSpec extends SparkTestBase {
         get(port, "/api/coverage/302"),
         get(port, "/api/topo/countries/103"))
       assert(post(port, "/api/add", """{"countries":103}""").statusCode() == 200)
-      // warm-up: one request of each route builds the snapshot, the
-      // curated index and the cached render
+      // warm-up: one request of each route builds the snapshot and the
+      // cached render
       reads().foreach(r => assert(r.statusCode() == 200, r.body()))
 
       val sc = spark.sparkContext
