@@ -14,7 +14,11 @@ import scala.collection.mutable
   * Version rule: a memo whose value reads sfDir data passes `sfDir` (or a
   * content stamp of it) as its version, so a second fixture set in the same
   * session can never be served the first one's table (TwoSfDirSpec pins
-  * this). Only memos over compiled-in fixture constants may use a constant
+  * this). A memo over a DataFrame's rows passes those rows, or, where
+  * the plan reads only cached relations through pure operators, its
+  * `org.apache.spark.sql.graft.DimensionKey`: the canonical optimized plan
+  * plus the identity of every cache entry it reads, which costs no job.
+  * Only memos over compiled-in fixture constants may use a constant
   * version.
   *
   * Sessions are held strongly — a memoized DataFrame references its
@@ -34,6 +38,14 @@ object SessionMemo {
   // a release that throws must not block the rebuild or the eviction
   private def releaseQuietly(e: Entry): Unit =
     try e.release(e.value) catch { case _: Exception => () }
+
+  /** The value held at `version`, without building one: a caller whose
+    * build runs Spark jobs checks first and runs them outside the lock. */
+  def peek[V](spark: SparkSession, slot: String, version: Any): Option[V] = synchronized {
+    sessions.get(spark).flatMap(_.get(slot)).collect {
+      case e if e.version == version => e.value.asInstanceOf[V]
+    }
+  }
 
   def get[V](spark: SparkSession, slot: String, version: Any)(build: => V)
             (release: V => Unit): V = synchronized {

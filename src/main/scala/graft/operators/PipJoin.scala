@@ -2,8 +2,10 @@ package graft.operators
 
 import java.nio.ByteBuffer
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.DimensionKey
 
 import graft.functions.GeomExpressions._
 
@@ -95,30 +97,43 @@ object PipJoin {
     * per relId.
     *
     * The index is built once per dimension version: the broadcast lives
-    * in one [[graft.SessionMemo]] slot whose version is the exact
-    * collected content (cover rows, and each polygon's relId and WKB
-    * bytes), so equal dims reuse it and any change rebuilds it. A replaced
-    * broadcast is not destroyed: a plan made before the change may still
-    * run against it, and Spark's ContextCleaner frees it once no plan
-    * holds it.
+    * in one [[graft.SessionMemo]] slot, under one of two versions.
+    *  - Dims that read only cached DataFrames, through deterministic
+    *    operators with no typed closure or UDF, are keyed by plan: each
+    *    side's [[DimensionKey]], its canonical optimized plan after cache
+    *    substitution plus the identity of every cache entry it reads. A
+    *    warm call runs no Spark job; a new DataFrame over the same cache
+    *    hits, and a re-`cache()` or another plan misses.
+    *  - Any other dims (file scans, local relations, RDDs, closures,
+    *    nondeterministic plans) are collected on every call, in one job,
+    *    and the version is the exact collected content (cover rows, and
+    *    each polygon's relId and WKB bytes).
+    * Either way, equal dims reuse the index and any change rebuilds it; a
+    * miss costs one collect plus the build, and the collect runs outside
+    * the memo's lock. A replaced broadcast is not destroyed: a plan made
+    * before the change may still run against it, and Spark's
+    * ContextCleaner frees it once no plan holds it.
     */
   def matchesIndexed(pages: DataFrame, covers: DataFrame, polygons: DataFrame,
                      extraPageCols: Seq[String] = Nil): DataFrame = {
     val spark = pages.sparkSession
-    // one job: both sides collect as one tagged union, split on the driver
-    // (a union collects its children's partitions in order, so each side
-    // keeps its row order)
-    val dims = covers.select(lit(true).as("isCover"), col("relId").cast("long"), col("layer"),
-        col("cellId").cast("long"), lit(null).cast("binary").as("wkb"))
-      .union(polygons.select(lit(false), col("relId").cast("long"), lit(null).cast("string"),
-        lit(null).cast("long"), col("wkb")))
-      .collect()
-    val (coverSide, polySide) = dims.partition(_.getBoolean(0))
-    val coverRows = coverSide.map(r => (r.getLong(1), r.getString(2), r.getLong(3)))
-    val polyRows = polySide.map(r => (r.getLong(1), r.getAs[Array[Byte]](4)))
-    val version = (coverRows.toSeq, polyRows.toSeq.map { case (id, wkb) => (id, ByteBuffer.wrap(wkb)) })
-    val index = graft.SessionMemo.get(spark, "pipIndex", version)(
-      spark.sparkContext.broadcast(PipIndex.of(coverRows, polyRows)))(_ => ())
+    val key = for (c <- DimensionKey.of(covers); p <- DimensionKey.of(polygons)) yield (c, p)
+    val index = key.flatMap(graft.SessionMemo.peek[Broadcast[PipIndex]](spark, "pipIndex", _)).getOrElse {
+      // one job: both sides collect as one tagged union, split on the
+      // driver (a union collects its children's partitions in order, so
+      // each side keeps its row order)
+      val (coverSide, polySide) = covers.select(lit(true).as("isCover"), col("relId").cast("long"), col("layer"),
+          col("cellId").cast("long"), lit(null).cast("binary").as("wkb"))
+        .union(polygons.select(lit(false), col("relId").cast("long"), lit(null).cast("string"),
+          lit(null).cast("long"), col("wkb")))
+        .collect().partition(_.getBoolean(0))
+      val coverRows = coverSide.map(r => (r.getLong(1), r.getString(2), r.getLong(3)))
+      val polyRows = polySide.map(r => (r.getLong(1), r.getAs[Array[Byte]](4)))
+      val version = key.getOrElse(
+        (coverRows.toSeq, polyRows.toSeq.map { case (id, wkb) => (id, ByteBuffer.wrap(wkb)) }))
+      graft.SessionMemo.get(spark, "pipIndex", version)(
+        spark.sparkContext.broadcast(PipIndex.of(coverRows, polyRows)))(_ => ())
+    }
     val matchGen = org.apache.spark.sql.graft.Bridge.column(PipMatch(
       org.apache.spark.sql.graft.Bridge.expression(col("lon")),
       org.apache.spark.sql.graft.Bridge.expression(col("lat")),

@@ -1,10 +1,19 @@
 package graft.operators
 
+import java.nio.file.{Files, Paths}
+import java.util.Base64
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.TestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.functions.{broadcast, col, lit, rand, udf, when}
 import org.locationtech.jts.algorithm.locate.SimplePointInAreaLocator
 import org.locationtech.jts.geom.{Coordinate, Envelope, Location, Polygon}
 
@@ -16,8 +25,8 @@ import graft.sources.Fixtures
 /** The fused broadcast-index probe (`st_pip_match` in
   * `PipJoin.matchesIndexed`): adversarial points checked against the
   * Catalyst join and brute-force JTS, the plan shape that makes it one
-  * codegen'd pass, the flat index's invariants, the domain clamp, and the
-  * one-build-per-dimension-version memo.
+  * codegen'd pass, the flat index's invariants, the domain clamp, the
+  * one-build-per-dimension-version memo and its plan key.
   */
 class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -242,4 +251,153 @@ class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // and the original dims build again, matching as before
     assert(rows(PipJoin.matchesIndexed(pages, covers, polys)) == rowsBefore)
   }
+
+  private def pipBroadcast(df: DataFrame): Long =
+    df.queryExecution.analyzed.collectFirst {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate if g.generator.isInstanceOf[PipMatch] =>
+        g.generator.asInstanceOf[PipMatch].bc.id
+    }.get
+
+  /** `f`'s result and the number of Spark jobs started while it ran. */
+  private def jobsDuring[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    TestBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      TestBridge.drainListenerBus(sc)
+      (a, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private lazy val keyPages = Seq(("brussels", 4.35, 50.85), ("tokyo", 139.7, 35.7), ("sea", -30.0, 0.0))
+    .toDF("url", "lon", "lat")
+
+  /** The fixture matches of [[keyPages]], and the polygons with every
+    * relation that holds Brussels moved to a box in the South Atlantic. */
+  private lazy val (keyRows, movedPolys) = {
+    val base = rows(PipJoin.matchesIndexed(keyPages, covers, polys))
+    val brussels = base.filter(_._1 == "brussels").map(_._3)
+    assert(brussels.nonEmpty)
+    (base, polys.withColumn("wkb", when(col("relId").isin(brussels: _*),
+      lit(Jts.toWkb(Jts.factory.toGeometry(new Envelope(-60, -59, -60, -59))))).otherwise(col("wkb"))))
+  }
+
+  test("a warm matchesIndexed over cached dims plans with no Spark job and the same broadcast") {
+    val cold = PipJoin.matchesIndexed(keyPages, covers, polys)
+    val (warm, jobs) = jobsDuring(PipJoin.matchesIndexed(keyPages, covers, polys.select("*")))
+    assert(jobs == 0)
+    assert(pipBroadcast(warm) == pipBroadcast(cold))
+    assert(rows(warm) == keyRows)
+  }
+
+  /** A file of polygons as `relId<TAB>base64(wkb)` lines, holding `polys`'
+    * rows; `f` gets its path and a function that rewrites it. */
+  private def withPolyFile(f: (String, DataFrame => Unit) => Unit): Unit = {
+    val src = Files.createTempFile("pip_dims", ".tsv")
+    def write(df: DataFrame): Unit = Files.write(src, df.select("relId", "wkb").as[(Long, Array[Byte])]
+      .collect().map { case (id, wkb) => s"$id\t${Base64.getEncoder.encodeToString(wkb)}" }.toSeq.asJava)
+    write(polys)
+    try f(src.toString, write) finally Files.delete(src)
+  }
+
+  test("the plan key misses on a re-cache over a changed source") {
+    // polygons read from a file at compute time: unpersist + cache of the
+    // same DataFrame gives the same canonical plan over new rows, and a
+    // cache entry `==` to the old one
+    val moved = movedPolys // its matchesIndexed call must not run between the two below
+    withPolyFile { (path, write) =>
+      val fromFile = spark.range(1).as[Long].flatMap(_ => PipMatchSpec.readPolys(path)).toDF("relId", "wkb").cache()
+      try {
+        val before = PipJoin.matchesIndexed(keyPages, covers, fromFile)
+        assert(rows(before) == keyRows)
+        write(moved)
+        fromFile.unpersist(blocking = true)
+        fromFile.cache()
+        val after = PipJoin.matchesIndexed(keyPages, covers, fromFile)
+        assert(pipBroadcast(after) != pipBroadcast(before))
+        assert(rows(after) == keyRows.filterNot(_._1 == "brussels"))
+      } finally fromFile.unpersist()
+    }
+  }
+
+  test("dims that run user code over a file take the content path: one job per call, a rebuild per change") {
+    val moved = movedPolys
+    val one = spark.range(1).cache()
+    val variants = Seq[String => DataFrame](
+      // uncached: a range leaf under a typed closure
+      path => spark.range(1).as[Long].flatMap(_ => PipMatchSpec.readPolys(path)).toDF("relId", "wkb"),
+      // a typed closure over a cached relation
+      path => one.as[Long].flatMap(_ => PipMatchSpec.readPolys(path)).toDF("relId", "wkb"),
+      // a UDF over the cached polygons
+      path => {
+        val wkbOf = udf((id: Long) => PipMatchSpec.readPolys(path).toMap.apply(id))
+        polys.select(col("relId"), wkbOf(col("relId")).as("wkb"))
+      })
+    try variants.foreach { dims =>
+      withPolyFile { (path, write) =>
+        val df = dims(path)
+        val first = PipJoin.matchesIndexed(keyPages, covers, df)
+        val (again, jobs) = jobsDuring(PipJoin.matchesIndexed(keyPages, covers, df))
+        assert(jobs == 1 && pipBroadcast(again) == pipBroadcast(first))
+        assert(rows(again) == keyRows)
+        write(moved)
+        val after = PipJoin.matchesIndexed(keyPages, covers, df)
+        assert(pipBroadcast(after) != pipBroadcast(first))
+        assert(rows(after) == keyRows.filterNot(_._1 == "brussels"))
+      }
+    } finally one.unpersist()
+  }
+
+  test("dims without a plan key take the content path: a collect per call, a rebuild per change") {
+    val noisy = polys.withColumn("noise", rand())
+    val first = PipJoin.matchesIndexed(keyPages, covers, noisy)
+    val (again, jobs) = jobsDuring(PipJoin.matchesIndexed(keyPages, covers, noisy))
+    assert(jobs == 1 && pipBroadcast(again) == pipBroadcast(first))
+    assert(rows(again) == keyRows)
+
+    // parquet-backed, uncached, rewritten in place
+    val dir = Files.createTempDirectory("pip_dims").resolve("polys").toString
+    polys.select("relId", "wkb").write.parquet(dir)
+    val onDisk = spark.read.parquet(dir)
+    val fromParquet = PipJoin.matchesIndexed(keyPages, covers, onDisk)
+    val (same, parquetJobs) = jobsDuring(PipJoin.matchesIndexed(keyPages, covers, onDisk))
+    assert(parquetJobs == 1 && pipBroadcast(same) == pipBroadcast(fromParquet))
+    movedPolys.select("relId", "wkb").write.mode("overwrite").parquet(dir)
+    val rewritten = PipJoin.matchesIndexed(keyPages, covers, spark.read.parquet(dir))
+    assert(pipBroadcast(rewritten) != pipBroadcast(fromParquet))
+    assert(rows(rewritten) == keyRows.filterNot(_._1 == "brussels"))
+
+    // the hot subset of matchesHybrid: a left-semi join on a local id
+    // list, keyed by content, so the same list hits and another misses
+    val ids = polys.select("relId").as[Long].collect().sorted.toSeq
+    def only(ids: Seq[Long]): (DataFrame, DataFrame) = {
+      val keep = broadcast(ids.toDF("relId"))
+      (covers.join(keep, Seq("relId"), "left_semi"), polys.join(keep, Seq("relId"), "left_semi"))
+    }
+    val (half, rest) = ids.splitAt(ids.length / 2)
+    val (halfCovers, halfPolys) = only(half)
+    val firstHalf = PipJoin.matchesIndexed(keyPages, halfCovers, halfPolys)
+    val (againHalf, halfJobs) = jobsDuring { val (c, p) = only(half); PipJoin.matchesIndexed(keyPages, c, p) }
+    // the collect, and the broadcast of the id list it joins
+    assert(halfJobs == 2 && pipBroadcast(againHalf) == pipBroadcast(firstHalf))
+    val (restCovers, restPolys) = only(rest)
+    val other = PipJoin.matchesIndexed(keyPages, restCovers, restPolys)
+    assert(pipBroadcast(other) != pipBroadcast(firstHalf))
+    assert(rows(firstHalf) == keyRows.filter(r => half.contains(r._3)))
+    assert(rows(other) == keyRows.filter(r => rest.contains(r._3)))
+  }
+}
+
+object PipMatchSpec {
+  /** The polygons of a file written by `withPolyFile`, read on every call. */
+  def readPolys(path: String): Seq[(Long, Array[Byte])] =
+    Files.readAllLines(Paths.get(path)).asScala.toSeq.map { line =>
+      val Array(id, wkb) = line.split('\t')
+      (id.toLong, Base64.getDecoder.decode(wkb))
+    }
 }
