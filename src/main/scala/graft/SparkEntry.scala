@@ -719,11 +719,11 @@ object SparkEntry {
         }
         Fixtures.readParquet(s, s"$root/final")
       }),
-      // J5 hybrid: hot relations broadcast within a byte budget, tail
-      // shuffled — budget forced small so both paths run at sf scale
+      // J5 partitioned join at the join level chosen from cover stats —
+      // the only query that runs that plan (q_pip_partitioned forces 8)
       "q_pip_hybrid" -> ((s, dir) => {
         val (polys, covers) = dims(s)
-        PipJoin.matchesHybrid(Fixtures.pages(s, dir), covers, polys, broadcastBudgetBytes = 4096)
+        PipJoin.matchesPartitioned(Fixtures.pages(s, dir), covers, polys)
           .withColumnRenamed("relId", "rel_id")
       }),
       // J5 partitioned variant — same rows by construction
@@ -2773,18 +2773,14 @@ object SparkEntry {
     Fixtures.osm._4.map(_.rings) ++
       Fixtures.dpRects.map { case (_, ring) => Seq(ring: Seq[(Double, Double)]) }
 
-  /** FNV-1a over a deterministic rendering of IN-CODE fixture data —
-    * appended to scratch keys so a fixture CODE change invalidates the
-    * DONE-gated scratch: the sfDir fingerprint only covers the parquet
-    * inputs, and a stale scratch would make an engine-side oracle
-    * mismatch look like a decode bug.
+  /** FNV-1a over the UTF-8 bytes of a deterministic rendering of IN-CODE
+    * fixture data — appended to scratch keys so a fixture CODE change
+    * invalidates the DONE-gated scratch: the sfDir fingerprint only covers
+    * the parquet inputs, and a stale scratch would make an engine-side
+    * oracle mismatch look like a decode bug.
     */
-  private def contentHash(s: String): String = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) { h ^= s.charAt(i).toLong; h *= 0x100000001b3L; i += 1 }
-    f"$h%016x"
-  }
+  private def contentHash(s: String): String =
+    f"${graft.sources.ContentStamp.fnv1a(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))}%016x"
 
   /** DONE-gated scratch dir holding the real .shp/.shx pairs the
     * q_shp_* queries read: `water` (exactly the fixture water records)

@@ -57,20 +57,6 @@ object Algorithms {
   def uniqueLength(pts: IndexedSeq[(Double, Double)]): Int =
     pts.distinct.length
 
-  /** Drop consecutive duplicate points (exact equality). The reference does
-    * this while building S2 loops (lookup/loop.go:14-16) — the "Hoorn
-    * duplicated-point polygon" regression (lookup/lookup_test.go:14-15).
-    */
-  def dedupConsecutive(pts: IndexedSeq[(Double, Double)]): IndexedSeq[(Double, Double)] = {
-    val out = mutable.ArrayBuffer[(Double, Double)]()
-    var i = 0
-    while (i < pts.length) {
-      if (i == 0 || pts(i) != pts(i - 1)) out += pts(i)
-      i += 1
-    }
-    out.toIndexedSeq
-  }
-
   /** Effective (triangle) area of point b between a and c. */
   @inline private def triArea(a: (Double, Double), b: (Double, Double), c: (Double, Double)): Double =
     math.abs((a._1 * (b._2 - c._2) + b._1 * (c._2 - a._2) + c._1 * (a._2 - b._2)) / 2.0)

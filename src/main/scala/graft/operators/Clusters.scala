@@ -215,9 +215,6 @@ object Clusters {
         coalesce(col("component"), col("doc_id")).as("cluster_id"))
   }
 
-  def nearDupClusters(docs: DataFrame, threshold: Double, shingleLen: Int = 3): DataFrame =
-    labelClusters(docs, jaccardPairs(docs, threshold, shingleLen))
-
   /** One keeper per cluster: longest text wins, ties by smallest doc_id —
     * the "keep best copy" step of a dedup pipeline.
     */

@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.ByteBuffer
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DimensionKey
 
@@ -23,12 +23,15 @@ import graft.functions.GeomExpressions._
   * Exact phase: residual `ST_Contains(polyWkb, lon, lat)` with prepared
   * geometries memoized per executor.
   *
-  * Two physical strategies, per the north rule's skew requirement:
-  *  - broadcast (default): covers ⋈ polygons is tiny → broadcast; the
-  *    explode is map-side, zero shuffle of the page table;
-  *  - partitioned: for dimension tables too big to broadcast — covers are
-  *    exploded to a fixed join level and shuffled; pages carry one row per
-  *    fixed-level cell; AQE's skew join splits hot cells.
+  * Three DataFrame strategies, each with identical rows:
+  *  - [[matches]]: covers and polygons broadcast into two Catalyst joins;
+  *    the explode is map-side, zero shuffle of the page table. The
+  *    reference the other two are tested against;
+  *  - [[matchesIndexed]]: the hot path — one broadcast [[PipIndex]] probed
+  *    by a codegen'd generator, no join;
+  *  - [[matchesPartitioned]]: for dimension tables too big to broadcast —
+  *    covers are exploded to a fixed join level and shuffled; pages carry
+  *    one row per fixed-level cell; AQE's skew join splits hot cells.
   */
 object PipJoin {
 
@@ -144,17 +147,19 @@ object PipJoin {
       .select((Seq("url", "layer", "relId") ++ extraPageCols).map(col): _*)
   }
 
+  private val MaxJoinLevel = 12
+
   /** joinLevel from cover stats: fine enough that most cover cells map UP
     * to their ancestor (no 4^Δ descend blow-up), coarse enough to keep the
     * per-key build rows bounded — the 75th-percentile cover level, clamped.
     */
-  def chooseJoinLevel(covers: DataFrame, maxJoinLevel: Int = 12): Int = {
+  def chooseJoinLevel(covers: DataFrame): Int = {
     val row = covers
       .select(expr(levelExpr).as("lvl"))
       .agg(expr("percentile(lvl, 0.75)")).head()
     if (row.isNullAt(0)) graft.cells.Coverer.MinLevel // empty covers → empty join
     else math.max(graft.cells.Coverer.MinLevel,
-      math.min(maxJoinLevel, math.round(row.getDouble(0)).toInt))
+      math.min(MaxJoinLevel, math.round(row.getDouble(0)).toInt))
   }
 
   /** Partitioned strategy for non-broadcastable dimension sides: covers are
@@ -248,85 +253,6 @@ object PipJoin {
     */
   private[operators] def autoPrune(coveredCells: Long, jl: Int): Boolean =
     coveredCells.toDouble / math.pow(4.0, jl) < PruneCoverageThreshold
-
-  /** Hybrid strategy (SURVEY §4 physical notes): split the polygon
-    * dimension by expected probe traffic — relations whose covers span the
-    * most leaf range (the proxy for "how many pages will stab this
-    * polygon") are served by the broadcast index up to a byte budget; the
-    * heavy tail goes through the partitioned shuffle join. Each relation
-    * is handled by exactly one path, so the union is duplicate-free and
-    * row-identical to `matches` (tested). This is the load-bearing shape
-    * when the FULL dimension no longer fits an executor but the hot subset
-    * does: hot traffic stays shuffle-free, cold traffic shuffles once.
-    *
-    * The hot prefix is selected DISTRIBUTED: rank rows are range-
-    * partitioned in (hits desc, relId) order, a per-partition byte-total
-    * pass (one tiny row per partition) yields each partition's starting
-    * offset, and an in-partition running sum marks rows whose inclusive
-    * cumulative bytes fit the budget. Only the hot subset — bounded by the
-    * budget by construction, the same class of data the broadcast build
-    * collects anyway — ever reaches the driver; the full dimension ranking
-    * never does.
-    */
-  def matchesHybrid(pages: DataFrame, covers: DataFrame, polygons: DataFrame,
-                    broadcastBudgetBytes: Long = 64L << 20): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val ranked = covers
-      .groupBy("relId").agg(sum(col("cellMax") - col("cellMin") + lit(1)).as("hits"))
-      .join(polygons.select(col("relId"), length(col("wkb")).as("bytes")), Seq("relId"))
-      .select(col("hits"), col("relId"), col("bytes"))
-      // localCheckpoint pins one physical layout: the totals pass and the
-      // prefix pass below must observe identical partitioning + order
-      .repartitionByRange(col("hits").desc, col("relId").asc)
-      .sortWithinPartitions(col("hits").desc, col("relId").asc)
-      .as[(Long, Long, Long)]
-      .localCheckpoint()
-    // pass 1: per-partition (bytes total, row count) — numPartitions rows
-    val partStats = ranked.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var bytes = 0L; var n = 0L
-        it.foreach { r => bytes += r._3; n += 1 }
-        Iterator.single((pid, bytes, n))
-      }.collect().sortBy(_._1)
-    val nTotal = partStats.map(_._3).sum
-    val offsets = partStats.scanLeft(0L)(_ + _._2).dropRight(1) // bytes before pid
-    // pass 2: in-partition running sum; keep the prefix whose INCLUSIVE
-    // cumulative bytes fit the budget. (Prefix semantics: selection stops
-    // at the first relation that overflows — a cumulative-sum rule every
-    // partition can evaluate from its offset alone. DELIBERATE trade-off
-    // vs first-fit, ADVICE r4: one oversized high-rank relation can push
-    // the whole tail to the shuffle path and strand budget — accepted,
-    // because first-fit needs kept-bytes-only offsets, which are not
-    // partition-local, and output rows are identical on either path.)
-    val hot: Array[Long] = ranked.rdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var run = offsets(pid)
-        it.flatMap { case (_, relId, bytes) =>
-          run += bytes
-          if (run <= broadcastBudgetBytes) Iterator.single(relId) else Iterator.empty
-        }
-      }.collect()
-    // split via broadcast semi/anti join, NOT a literal isin: an In-list
-    // builds one literal per hot relation — fine for dozens, pathological
-    // (expression-tree sized) for 10⁵ hot relations
-    val hotDf = broadcast(hot.toSeq.toDF("relId"))
-    def hotOnly(df: DataFrame) = df.join(hotDf, Seq("relId"), "left_semi")
-    def coldOnly(df: DataFrame) = df.join(hotDf, Seq("relId"), "left_anti")
-    val bcastPart =
-      if (hot.isEmpty) None
-      else Some(matchesIndexed(pages, hotOnly(covers), hotOnly(polygons)))
-    val shufflePart =
-      if (hot.length == nTotal) None
-      else Some(matchesPartitioned(pages, coldOnly(covers), coldOnly(polygons)))
-    (bcastPart, shufflePart) match {
-      case (Some(b), Some(s)) => b.unionByName(s)
-      case (Some(b), None) => b
-      case (None, Some(s)) => s
-      case (None, None) => pages.sparkSession.emptyDataFrame
-        .select(lit("").as("url"), lit("").as("layer"), lit(0L).as("relId")).limit(0)
-    }
-  }
 
   /** J7: matched-per-layer pivot — one row per url with the matched relId
     * per layer (first match, deterministic by min relId).

@@ -283,9 +283,6 @@ object Similarity {
   case class IvfIndex(assigned: DataFrame, centroids: DataFrame,
                       centroidBytes: Long = 0L)
 
-  def ivfAssign(embeddings: DataFrame, nCentroids: Int, iterations: Int = 2): DataFrame =
-    ivfIndex(embeddings, nCentroids, iterations).assigned
-
   /** Centroid tables past this byte estimate (k × dim × 8) stop being
     * broadcast: assignment switches to [[ivfIndex]]'s chunked argmax
     * (each chunk broadcastable, winners merged by a second groupBy max —

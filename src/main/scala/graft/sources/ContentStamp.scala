@@ -15,11 +15,19 @@ import scala.collection.mutable.ArrayBuffer
   */
 object ContentStamp {
 
+  /** 64-bit FNV-1a of `bytes`, continuing from `h` (the offset basis by
+    * default), so a hash can be fed in pieces. */
+  def fnv1a(bytes: Array[Byte], h: Long = 0xcbf29ce484222325L): Long = {
+    var x = h
+    var i = 0
+    while (i < bytes.length) { x ^= bytes(i) & 0xffL; x *= 0x100000001b3L; i += 1 }
+    x
+  }
+
   def apply(spark: SparkSession, path: String): String = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var h = 0xcbf29ce484222325L
-    if (fs.exists(p)) {
+    val listing = if (!fs.exists(p)) Array.emptyByteArray else {
       val root = fs.makeQualified(p).toString
       val files = ArrayBuffer.empty[String]
       // listStatus, not listFiles: listFiles builds LocatedFileStatus, which
@@ -30,8 +38,7 @@ object ContentStamp {
         else files += s"${f.getPath.toString.stripPrefix(root)}:${f.getLen}:${f.getModificationTime}"
       walk(fs.getFileStatus(p))
       files.sorted.mkString("\n").getBytes("UTF-8")
-        .foreach { b => h ^= (b & 0xffL); h *= 0x100000001b3L }
     }
-    f"$h%016x"
+    f"${fnv1a(listing)}%016x"
   }
 }

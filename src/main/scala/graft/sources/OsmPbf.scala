@@ -430,18 +430,12 @@ object OsmPbf {
     * 64-byte positioned reads per cache lookup — noise next to the pass.
     */
   private def contentProbe(path: String, len: Long): Long = {
-    def fnv(h0: Long, b: Array[Byte]): Long = {
-      var h = h0
-      var i = 0
-      while (i < b.length) { h ^= (b(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
-      h
-    }
     val n = math.min(64L, len).toInt
     if (n <= 0) 0L
     else {
-      val head = fnv(0xcbf29ce484222325L, FsIO.readFullyAt(path, 0L, n))
+      val head = ContentStamp.fnv1a(FsIO.readFullyAt(path, 0L, n))
       if (len <= 64L) head
-      else fnv(head, FsIO.readFullyAt(path, len - n, n))
+      else ContentStamp.fnv1a(FsIO.readFullyAt(path, len - n, n), head)
     }
   }
 

@@ -20,10 +20,9 @@ class AlgorithmsSpec extends AnyFunSuite {
     assert(Algorithms.isClockwise(IndexedSeq((0.0, 0.0), (1.0, 0.0), (0.0, 0.0))))
   }
 
-  test("uniqueLength and dedupConsecutive") {
+  test("uniqueLength counts distinct points") {
     val pts = IndexedSeq((0.0, 0.0), (0.0, 0.0), (1.0, 1.0), (0.0, 0.0))
     assert(Algorithms.uniqueLength(pts) == 2)
-    assert(Algorithms.dedupConsecutive(pts) == IndexedSeq((0.0, 0.0), (1.0, 1.0), (0.0, 0.0)))
   }
 
   test("visvalingam removes sub-threshold spikes, keeps endpoints") {

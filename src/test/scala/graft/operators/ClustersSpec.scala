@@ -87,9 +87,9 @@ class ClustersSpec extends SparkTestBase {
     assert(got.nonEmpty, "fixture must contain near-dup docs")
   }
 
-  test("nearDupClusters + canonical: every doc labeled; keepers are per-cluster best") {
+  test("labelClusters + canonical: all docs labeled; keepers are cluster-best") {
     val docs = Fixtures.documents(spark, sf0001).cache()
-    val clusters = Clusters.nearDupClusters(docs, 0.3).cache()
+    val clusters = Clusters.labelClusters(docs, Clusters.jaccardPairs(docs, 0.3)).cache()
     assert(clusters.count() == docs.count(), "one label per doc")
     // cluster_id is a member of its own cluster and the minimum member
     val byCluster = clusters.as[(Long, Long)].collect().groupBy(_._2)

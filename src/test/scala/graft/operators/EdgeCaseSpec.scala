@@ -29,7 +29,7 @@ class EdgeCaseSpec extends SparkTestBase {
     val pairs = Clusters.jaccardPairs(weirdDocs, 0.3).collect()
     // sub-shingle-length docs have empty shingle sets -> never paired
     assert(!pairs.exists(r => r.getLong(0) <= 5L && r.getLong(1) <= 5L || r.getLong(0) == 4L))
-    val clusters = Clusters.nearDupClusters(weirdDocs, 0.3).collect()
+    val clusters = Clusters.labelClusters(weirdDocs, Clusters.jaccardPairs(weirdDocs, 0.3)).collect()
     assert(clusters.length == 6, "every doc labeled, empty ones as singletons")
     val lang = TextOps.langId(weirdDocs).collect()
     assert(lang.length == 6)

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions.{broadcast, col, lit, rand, udf, when}
 import org.locationtech.jts.algorithm.locate.SimplePointInAreaLocator
 import org.locationtech.jts.geom.{Coordinate, Envelope, Location, Polygon}
 
-import graft.SparkTestBase
+import graft.{SparkEntry, SparkTestBase}
 import graft.cells.{Cell, Coverer}
 import graft.geom.Jts
 import graft.sources.Fixtures
@@ -26,7 +26,8 @@ import graft.sources.Fixtures
   * `PipJoin.matchesIndexed`): adversarial points checked against the
   * Catalyst join and brute-force JTS, the plan shape that makes it one
   * codegen'd pass, the flat index's invariants, the domain clamp, the
-  * one-build-per-dimension-version memo and its plan key.
+  * one-build-per-dimension-version memo and its plan key, and the jobs of
+  * a partitioned-plan rebuild.
   */
 class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -372,8 +373,8 @@ class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(pipBroadcast(rewritten) != pipBroadcast(fromParquet))
     assert(rows(rewritten) == keyRows.filterNot(_._1 == "brussels"))
 
-    // the hot subset of matchesHybrid: a left-semi join on a local id
-    // list, keyed by content, so the same list hits and another misses
+    // a subset picked by a left-semi join on a local id list, keyed by
+    // content, so the same list hits and another misses
     val ids = polys.select("relId").as[Long].collect().sorted.toSeq
     def only(ids: Seq[Long]): (DataFrame, DataFrame) = {
       val keep = broadcast(ids.toDF("relId"))
@@ -390,6 +391,15 @@ class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(pipBroadcast(other) != pipBroadcast(firstHalf))
     assert(rows(firstHalf) == keyRows.filter(r => half.contains(r._3)))
     assert(rows(other) == keyRows.filter(r => rest.contains(r._3)))
+  }
+
+  test("a q_pip_hybrid rebuild runs only the join-level and join-cell jobs") {
+    val q = SparkEntry.queries("q_pip_hybrid")
+    q(spark, sf0001)
+    val (_, jobs) = jobsDuring(q(spark, sf0001))
+    // chooseJoinLevel's percentile and the distinct join-cell count, each
+    // run as AQE stage jobs and a result job
+    assert(jobs == 5)
   }
 }
 

@@ -146,21 +146,6 @@ class PipelineSpec extends SparkTestBase {
     }
   }
 
-  test("hybrid strategy: forced split, all-broadcast and all-partitioned all equal broadcast rows") {
-    val a = PipJoin.matches(pages, covers, polys)
-      .select("url", "layer", "relId").as[(String, String, Long)].collect().toSeq.sorted
-    val totalBytes = polys.select(sum(length($"wkb"))).head().getLong(0)
-    // budget fits roughly half the dimension -> both paths active
-    val split = PipJoin.matchesHybrid(pages, covers, polys, broadcastBudgetBytes = totalBytes / 2)
-      .as[(String, String, Long)].collect().toSeq.sorted
-    // degenerate budgets: everything broadcast / everything partitioned
-    val allB = PipJoin.matchesHybrid(pages, covers, polys, broadcastBudgetBytes = Long.MaxValue)
-      .as[(String, String, Long)].collect().toSeq.sorted
-    val allP = PipJoin.matchesHybrid(pages, covers, polys, broadcastBudgetBytes = 0L)
-      .as[(String, String, Long)].collect().toSeq.sorted
-    assert(split == a && allB == a && allP == a)
-  }
-
   test("multi-outer relation: overlapping per-polygon covers emit one row per (url,layer,relId)") {
     // a relation with two DISJOINT outer polygons whose per-polygon covers
     // overlap across levels: the small polygon is placed inside the big
