@@ -686,36 +686,33 @@ object SparkEntry {
       // correctness gate, matching the reference's sequence-checkpoint
       // semantics (source.go:97-120).
       "q_stream_pip" -> ((s, dir) => {
-        val root = scratchRoot("streampip", dir)
-        if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "DONE"))) {
-          buildScratch(root) { work =>
-            val src = s"$work/src"; val ckpt = s"$work/ckpt"; val outW = s"$work/out"
-            val pages = Fixtures.pages(s, dir).select("doc_id", "url", "warc_ts", "lang", "lon", "lat")
-            val feedSchema = pages.drop("doc_id").schema
-            val (polys, covers) = dims(s)
-            def runToTermination(): Unit = {
-              val stream = s.readStream.schema(feedSchema).parquet(src)
-              val enriched = streaming.StreamPip.enrich(stream, covers, polys)
-                .select(col("url"), col("layer"), col("relId").as("rel_id"))
-              val q = enriched.writeStream
-                .format("parquet").option("path", outW)
-                .option("checkpointLocation", ckpt)
-                .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                .start()
-              q.awaitTermination()
-            }
-            pages.filter(col("doc_id") % 2 === 0).drop("doc_id")
-              .write.mode("append").parquet(src)
-            runToTermination() // run 1: batch 1 only, query stops
-            pages.filter(col("doc_id") % 2 === 1).drop("doc_id")
-              .write.mode("append").parquet(src)
-            runToTermination() // run 2: RESTART from checkpoint, new files only
-            // re-materialize as plain parquet: the streaming sink's
-            // _spark_metadata log stores absolute paths, which would break
-            // under buildScratch's atomic rename; the batch copy reads
-            // through the log (exactly-once committed files only)
-            s.read.parquet(outW).write.mode("overwrite").parquet(s"$work/final")
+        val root = scratch(scratchRoot("streampip", dir)) { work =>
+          val src = s"$work/src"; val ckpt = s"$work/ckpt"; val outW = s"$work/out"
+          val pages = Fixtures.pages(s, dir).select("doc_id", "url", "warc_ts", "lang", "lon", "lat")
+          val feedSchema = pages.drop("doc_id").schema
+          val (polys, covers) = dims(s)
+          def runToTermination(): Unit = {
+            val stream = s.readStream.schema(feedSchema).parquet(src)
+            val enriched = streaming.StreamPip.enrich(stream, covers, polys)
+              .select(col("url"), col("layer"), col("relId").as("rel_id"))
+            val q = enriched.writeStream
+              .format("parquet").option("path", outW)
+              .option("checkpointLocation", ckpt)
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+              .start()
+            q.awaitTermination()
           }
+          pages.filter(col("doc_id") % 2 === 0).drop("doc_id")
+            .write.mode("append").parquet(src)
+          runToTermination() // run 1: batch 1 only, query stops
+          pages.filter(col("doc_id") % 2 === 1).drop("doc_id")
+            .write.mode("append").parquet(src)
+          runToTermination() // run 2: RESTART from checkpoint, new files only
+          // re-materialize as plain parquet: the streaming sink's
+          // _spark_metadata log stores absolute paths, which would break
+          // under scratch's atomic rename; the batch copy reads
+          // through the log (exactly-once committed files only)
+          s.read.parquet(outW).write.mode("overwrite").parquet(s"$work/final")
         }
         Fixtures.readParquet(s, s"$root/final")
       }),
@@ -880,9 +877,8 @@ object SparkEntry {
       // index (writeIndexed) — each round reads only frontier directories,
       // never the whole table; same oracle as q_knn (rows must be identical)
       "q_knn_pruned" -> ((s, dir) => {
-        val root = knnIndexPath(dir)
-        if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "DONE")))
-          buildScratch(root)(work => Knn.writeIndexed(Fixtures.pages(s, dir), s"$work/idx"))
+        val root = scratch(knnIndexPath(dir))(work =>
+          Knn.writeIndexed(Fixtures.pages(s, dir), s"$work/idx"))
         Knn.knnIndexed(s, s"$root/idx", knnQueries, k = 5)
           .select(col("queryId").as("query_id"), col("rank").cast("long").as("rank"),
             col("url"), round(col("dist"), 3).as("dist"))
@@ -2728,13 +2724,15 @@ object SparkEntry {
   private def scratchRoot(kind: String, sfDir: String): String =
     s"/tmp/graft_${kind}_${sfDir.replaceAll("[^a-z0-9.]", "_")}_${fixtureFingerprint(sfDir)}"
 
-  /** Build scratch content in a process-unique work dir, then ATOMICALLY
-    * rename it to `root` — two concurrent runs at the same fixture content
-    * each build privately and exactly one rename wins (the loser discards
-    * its copy and reads the winner's); a killed build leaves only an
-    * orphaned work dir, never a half-written `root`.
+  /** DONE-gated scratch dir: returns `root`, first building it unless
+    * its DONE marker exists. The content is built in a process-unique
+    * work dir, then ATOMICALLY renamed to `root` — two concurrent runs at
+    * the same fixture content each build privately and exactly one rename
+    * wins (the loser discards its copy and reads the winner's); a killed
+    * build leaves only an orphaned work dir, never a half-written `root`.
     */
-  private def buildScratch(root: String)(build: String => Unit): Unit = {
+  private def scratch(root: String)(build: String => Unit): String = {
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(root, "DONE"))) return root
     val work = s"${root}_w${java.lang.ProcessHandle.current().pid()}_${System.nanoTime()}"
     def rmTree(p: java.nio.file.Path): Unit =
       if (java.nio.file.Files.exists(p)) {
@@ -2755,10 +2753,11 @@ object SparkEntry {
         if java.nio.file.Files.exists(java.nio.file.Paths.get(root, "DONE")) =>
         rmTree(java.nio.file.Paths.get(work)) // another process won; use theirs
     }
+    root
   }
 
   /** Scratch path for the q_knn_pruned parquet index (fingerprint-keyed;
-    * DONE-gated via buildScratch so a killed writer never leaves a
+    * DONE-gated via [[scratch]] so a killed writer never leaves a
     * silently-partial index behind and regenerated fixtures never reuse a
     * stale one).
     */
@@ -2787,38 +2786,28 @@ object SparkEntry {
     * and `decode` (shpDecodeRecords). Built once per (fixture
     * fingerprint, fixture-code content hash).
     */
-  private def shpScratch(sfDir: String): String = {
-    val root = scratchRoot("shp_" + contentHash(
-      (Fixtures.osm._4.map(_.rings), shpDecodeRecords).toString), sfDir)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "DONE")))
-      buildScratch(root) { work =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
-        sources.Shapefile.write(Fixtures.osm._4.map(_.rings), s"$work/water")
-        sources.Shapefile.write(shpDecodeRecords, s"$work/decode")
-      }
-    root
-  }
+  private def shpScratch(sfDir: String): String =
+    scratch(scratchRoot("shp_" + contentHash(
+      (Fixtures.osm._4.map(_.rings), shpDecodeRecords).toString), sfDir)) { work =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
+      sources.Shapefile.write(Fixtures.osm._4.map(_.rings), s"$work/water")
+      sources.Shapefile.write(shpDecodeRecords, s"$work/decode")
+    }
 
   /** DONE-gated scratch dir holding the real .osm.pbf the q_pbf_* queries
     * read — the full fixture OSM set, 64 entities per block so the file
     * genuinely has many zlib blobs for the distributed read to fan over.
     */
   private def pbfScratch(sfDir: String): String = {
-    val root = scratchRoot("pbf_" + contentHash({
-      val (ns, ws, rs, _) = Fixtures.osm
-      (ns, ws, rs).toString
-    }), sfDir)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "DONE")))
-      buildScratch(root) { work =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
-        val (ns, ws, rs, _) = Fixtures.osm
-        sources.OsmPbf.write(
-          ns.map(n => (n.id, n.lat, n.lon)),
-          ws.map(w => (w.id, w.refs)),
-          rs.map(r => (r.id, r.tags, r.members.map(m => (m.id, m.mtype, m.role)))),
-          s"$work/fixture.osm.pbf", blockSize = 64)
-      }
-    root
+    val (ns, ws, rs, _) = Fixtures.osm
+    scratch(scratchRoot("pbf_" + contentHash((ns, ws, rs).toString), sfDir)) { work =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
+      sources.OsmPbf.write(
+        ns.map(n => (n.id, n.lat, n.lon)),
+        ws.map(w => (w.id, w.refs)),
+        rs.map(r => (r.id, r.tags, r.members.map(m => (m.id, m.mtype, m.role)))),
+        s"$work/fixture.osm.pbf", blockSize = 64)
+    }
   }
 
   /** Decode oracles (q_pbf_nodes/ways/rels/tags): the binary file's
@@ -2885,17 +2874,13 @@ object SparkEntry {
   /** DONE-gated scratch dir with the fixture's `<seq>.osc.gz` replication
     * files ([[Fixtures.oscChanges]]).
     */
-  private def oscScratch(sfDir: String): String = {
-    val root = scratchRoot("osc_" + contentHash(Fixtures.oscChanges.toString), sfDir)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "DONE")))
-      buildScratch(root) { work =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
-        Fixtures.oscChanges.foreach { case (seq, cs) =>
-          sources.OscDiff.write(work, seq, cs)
-        }
+  private def oscScratch(sfDir: String): String =
+    scratch(scratchRoot("osc_" + contentHash(Fixtures.oscChanges.toString), sfDir)) { work =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
+      Fixtures.oscChanges.foreach { case (seq, cs) =>
+        sources.OscDiff.write(work, seq, cs)
       }
-    root
-  }
+    }
 
   /** The fixture diffs replayed in write order, assigning the same
     * document-position `ord` the writer produces (every entity element

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
@@ -57,40 +55,23 @@ case class BoundedCollect(child: Expression, limit: Int,
   override def eval(buf: BoundedListBuf): Any =
     InternalRow(buf.n, new GenericArrayData(buf.vals.toArray))
 
-  // serialize values through an UnsafeProjection of the child type —
-  // works for any storable dataType (longs, structs, arrays)
-  @transient private lazy val proj = UnsafeProjection.create(Array(child.dataType))
+  // the buffer ships as ONE unsafe (n, vals) row — the layout
+  // collect_list ships its buffer in; a per-element projection and
+  // length-prefixed stream measured slower on hot (hundreds-of-member)
+  // buckets
+  @transient private lazy val proj =
+    UnsafeProjection.create(Array[DataType](LongType, ArrayType(child.dataType, containsNull = false)))
 
-  override def serialize(buf: BoundedListBuf): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeLong(buf.n)
-    out.writeInt(buf.vals.length)
-    buf.vals.foreach { v =>
-      val row = proj.apply(InternalRow(v))
-      val bytes = row.getBytes
-      out.writeInt(bytes.length)
-      out.write(bytes)
-    }
-    out.flush()
-    bos.toByteArray
-  }
+  override def serialize(buf: BoundedListBuf): Array[Byte] =
+    proj.apply(InternalRow(buf.n, new GenericArrayData(buf.vals.toArray))).getBytes
 
   override def deserialize(bytes: Array[Byte]): BoundedListBuf = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val row = new UnsafeRow(2)
+    row.pointTo(bytes, bytes.length)
     val buf = new BoundedListBuf
-    buf.n = in.readLong()
-    val m = in.readInt()
-    val row = new UnsafeRow(1)
-    var i = 0
-    while (i < m) {
-      val len = in.readInt()
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      row.pointTo(b, len)
-      buf.vals += InternalRow.copyValue(row.get(0, child.dataType))
-      i += 1
-    }
+    buf.n = row.getLong(0)
+    // elements point into `bytes`, which nothing reuses: no copy needed
+    row.getArray(1).foreach(child.dataType, (_, v) => buf.vals += v)
     buf
   }
 

@@ -19,6 +19,14 @@ import org.apache.spark.sql.functions._
   */
 object Clusters {
 
+  /** Word n-gram length of the [[jaccardPairs]] shingles. */
+  private val ShingleLen = 3
+
+  /** Round budget of [[connectedComponents]] (Kiveris et al. prove
+    * O(log n) convergence; 30 rounds covers any realistic graph).
+    */
+  private val MaxIter = 30
+
   /** Word n-gram exact-Jaccard pairs with **prefix filtering** (the
     * published SSJoin/PPJoin scheme): under a global total order on
     * shingles by (document frequency asc, shingle), a pair with
@@ -33,7 +41,7 @@ object Clusters {
     *
     * Output: (doc_a, doc_b, jac) with doc_a < doc_b, jac >= threshold.
     */
-  def jaccardPairs(docs: DataFrame, threshold: Double, shingleLen: Int = 3): DataFrame = {
+  def jaccardPairs(docs: DataFrame, threshold: Double): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // cached: the shingle construction is the expensive map-side pass and
@@ -52,14 +60,14 @@ object Clusters {
         val toks = text.toLowerCase(java.util.Locale.ROOT)
           .split("[^a-z0-9]+").filter(_.nonEmpty)
         val out =
-          if (toks.length < shingleLen) Seq.empty[String]
+          if (toks.length < ShingleLen) Seq.empty[String]
           else {
             val set = new java.util.LinkedHashSet[String]()
             var i = 0
-            while (i + shingleLen <= toks.length) {
+            while (i + ShingleLen <= toks.length) {
               val sb = new java.lang.StringBuilder(toks(i))
               var j = 1
-              while (j < shingleLen) { sb.append(' ').append(toks(i + j)); j += 1 }
+              while (j < ShingleLen) { sb.append(' ').append(toks(i + j)); j += 1 }
               set.add(sb.toString)
               i += 1
             }
@@ -155,7 +163,7 @@ object Clusters {
     * order-insensitive edge-set checksum is stable (count + sum + xor of
     * per-edge hashes — one cheap aggregate per round, no except() join).
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame = {
+  def connectedComponents(edges: DataFrame): DataFrame = {
     // materialize the (possibly expensive) edge derivation once before
     // iterating — every round re-reads the previous round's checkpoint,
     // never the upstream pair generation
@@ -173,7 +181,7 @@ object Clusters {
     var prev = (-1L, -1L, -1L)
     var it = 0
     var stable = false
-    while (it < maxIter && !stable) {
+    while (it < MaxIter && !stable) {
       e = smallStar(largeStar(e)).localCheckpoint() // truncate lineage per round
       if (exact) {
         // prevE starts as the materialized input, so comparing from round
@@ -191,11 +199,10 @@ object Clusters {
       it += 1
     }
     // a non-converged edge set is NOT a star forest — labels derived from
-    // it would be silently wrong, so fail loudly (Kiveris et al. prove
-    // O(log n) convergence; 30 rounds covers any realistic graph)
+    // it would be silently wrong, so fail loudly
     if (!stable)
       throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIter rounds")
+        s"connectedComponents did not converge within $MaxIter rounds")
     // fixpoint is a star forest: (a → b) with b the component min
     e.select(col("a").as("id"), col("b").as("component"))
       .union(e.select(col("b").as("id"), col("b").as("component")))

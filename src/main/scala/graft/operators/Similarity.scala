@@ -91,12 +91,25 @@ object Similarity {
   val PlaneB: Array[Long] =
     Array.tabulate(64)(j => (16807L * (j + 1) + 104729L) % TextOps.MersennePrime)
 
+  /** SRP banding shape: 16 bands of 4 projection signs each (64 planes,
+    * the rows PlaneA/PlaneB carry).
+    */
+  private val SrpBands = 16
+  private val SrpRowsPerBand = 4
+
+  /** No bucket cap for the SRP banding: its bands are 4 bits wide, so a
+    * bucket averages n/16 members, and a 10,000 cap would drop every
+    * bucket past about 160 k vectors — the candidate set would shrink
+    * with table size. Int.MaxValue keeps it unchanged.
+    */
+  private val SrpMaxBucket = Int.MaxValue
+
   /** Embedding-cosine near-dup with sign-random-projection LSH blocking
-    * (the cosine analogue of MinHash banding): each vector's `bands ×
-    * rowsPerBand` projection signs are split into bands; only pairs
+    * (the cosine analogue of MinHash banding): each vector's `SrpBands ×
+    * SrpRowsPerBand` projection signs are split into bands; only pairs
     * colliding in ≥1 band are exact-verified against `threshold`. Sketch is
-    * a map-side pass; the only shuffle is the (band, bandVal) bucket join —
-    * NOT all-pairs.
+    * a map-side pass; the only shuffle is the (band, bandVal) bucketing
+    * ([[TextOps.bandPairs]]) — NOT all-pairs.
     * `vec_id` must be unique; both verify paths reject a repeated one.
     *
     * The projection planes are Rademacher (±1 per dimension, the published
@@ -112,15 +125,13 @@ object Similarity {
     * recall at θ=0.4 — pairs straddle centroid lists — hence this scheme.)
     */
   def embeddingDedupBlocked(embeddings: DataFrame, threshold: Double,
-                            bands: Int = 16, rowsPerBand: Int = 4,
                             verifyBroadcastBytes: Long = VerifyBroadcastBytes): DataFrame = {
-    require(bands * rowsPerBand <= 64, "PlaneA/PlaneB carry 64 plane rows")
     val spark = embeddings.sparkSession
     import spark.implicits._
     val p = TextOps.MersennePrime
     val emb = embeddings.select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
 
-    val nPlanes = bands * rowsPerBand
+    val nPlanes = SrpBands * SrpRowsPerBand
     val buckets = emb.as[(Long, Seq[Double])].mapPartitions { it =>
       // The plane sign is a pure function of (plane j, dimension i) —
       // sign(j,i) = [2·((aj·(i+1)+bj)² mod p) mod p < p] — so computing
@@ -159,11 +170,11 @@ object Similarity {
         // quantize to integers: exact, order-independent sign sums
         val q = v.iterator.map(x => math.floor(x * 1e6 + 0.5).toLong).toArray
         val sg = signTable(q.length)
-        (0 until bands).iterator.map { b =>
+        (0 until SrpBands).iterator.map { b =>
           var h = 0L
           var r = 0
-          while (r < rowsPerBand) {
-            val j = b * rowsPerBand + r
+          while (r < SrpRowsPerBand) {
+            val j = b * SrpRowsPerBand + r
             var s = 0L
             var i = 0
             val off = j * q.length
@@ -177,32 +188,16 @@ object Similarity {
           (b, h, id)
         }
       }
-    }.toDF("band", "bandVal", "vec_id")
+    }.toDF("band", "key", "id")
+      .select(col("band"), col("key"), struct(col("id")).as("m"))
 
-    // Candidate generation as ONE aggregation (same rewrite as the
-    // minhash/simhash banding): group each (band, bandVal) bucket,
-    // emit sorted intra-bucket pairs, dedup across bands — replaces a
-    // sort-merge self-join over a twice-computed sketch. The collected
-    // list holds vec_ids only (8 bytes each); the pair explosion is the
-    // same quadratic the self-join had, now without re-shuffling the
-    // bucket table twice.
-    // pair emission stays in CODEGEN (explode + higher-order filter +
-    // explode), not a Scala closure: the SRP bands are 4-bit values, so
-    // buckets are hot (hundreds of members) and the quadratic pair set
-    // is millions of rows — a per-pair closure + encoder measured SLOWER
-    // than the self-join it replaced (guide §4.1: prefer built-ins on
-    // the hot path), while the codegen'd explode beats both.
-    // Dedup BEFORE the verify: the verify needs two 64-double vectors
-    // per candidate row, so its cost scales with candidate rows —
-    // measured at sf0.1, deduping 2.09M candidate rows to 1.29M unique
-    // pairs first beats verifying the duplicates (post-filter dedup was
-    // ~0.5 s slower).
-    val pairs = buckets
-      .groupBy("band", "bandVal")
-      .agg(collect_list(col("vec_id")).as("ids"))
-      .select(explode(col("ids")).as("vec_a"), col("ids"))
-      .select(col("vec_a"), explode(expr("filter(ids, x -> x > vec_a)")).as("vec_b"))
-      .distinct()
+    // Dedup BEFORE the verify (bandPairs' distinct): the verify needs two
+    // 64-double vectors per candidate row, so its cost scales with
+    // candidate rows — measured at sf0.1, deduping 2.09M candidate rows to
+    // 1.29M unique pairs first beats verifying the duplicates (post-filter
+    // dedup was ~0.5 s slower).
+    val pairs = TextOps.bandPairs(buckets, SrpMaxBucket)
+      .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"))
 
     // Verify path gated by ESTIMATED table size (plan stats, no job —
     // the knnBatch/CentroidBroadcastBytes pattern): when the embedding

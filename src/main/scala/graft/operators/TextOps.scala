@@ -2,6 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.functions.BoundedCollect
 
 /** Text-analysis + deduplication operators over the `documents`/`pages`
   * tables — the training-data-pipeline half of the engine. All sketch
@@ -68,10 +71,13 @@ object TextOps {
   val SimHashB: Array[Long] =
     Array.tabulate(64)(b => (48271L * (b + 3) + 7919L) % MersennePrime)
 
-  def tokenShingles(text: String, n: Int = 3): Array[String] = {
+  /** Word n-gram length of the minhash shingles. */
+  private val ShingleLen = 3
+
+  def tokenShingles(text: String): Array[String] = {
     val ts = tokens(text)
-    if (ts.length < n) Array(ts.mkString(" "))
-    else ts.sliding(n).map(_.mkString(" ")).toArray
+    if (ts.length < ShingleLen) Array(ts.mkString(" "))
+    else ts.sliding(ShingleLen).map(_.mkString(" ")).toArray
   }
 
   /** 32 minhash values: per-shingle base hash (31-polynomial mod p), then
@@ -114,6 +120,9 @@ object TextOps {
     out
   }
 
+  private val FingerprintK = 8
+  private val FingerprintWindow = 16
+
   /** Winnowing document fingerprint: minimum k-gram rolling hash per
     * window, deduplicated — the classic published winnowing scheme
     * (Schleimer/Wilkerson/Aiken 2003), deterministic. The k-gram hash is
@@ -123,7 +132,7 @@ object TextOps {
     * oracle (`q_fingerprints`), flipping the operator from golden-only to
     * oracle-checked.
     */
-  def fingerprints(text: String, k: Int = 8, window: Int = 16): Array[Long] = {
+  def fingerprints(text: String): Array[Long] = {
     val s = text.toLowerCase
     def polyHash(str: CharSequence, from: Int, until: Int): Long = {
       var h = 0
@@ -131,10 +140,10 @@ object TextOps {
       while (i < until) { h = 31 * h + str.charAt(i); i += 1 }
       h.toLong
     }
-    if (s.length < k) return Array(polyHash(s, 0, s.length))
-    val grams = Array.tabulate(s.length - k + 1)(i => polyHash(s, i, i + k))
-    if (grams.length <= window) Array(grams.min)
-    else slidingMins(grams, window).distinct
+    if (s.length < FingerprintK) return Array(polyHash(s, 0, s.length))
+    val grams = Array.tabulate(s.length - FingerprintK + 1)(i => polyHash(s, i, i + FingerprintK))
+    if (grams.length <= FingerprintWindow) Array(grams.min)
+    else slidingMins(grams, FingerprintWindow).distinct
   }
 
   /** O(n) sliding-window minima via a monotonic index deque — value-for-
@@ -189,69 +198,72 @@ object TextOps {
 
   // ---- operators ----------------------------------------------------------
 
-  /** Exact dedup: hash-groupBy on content (md5 shared with the oracle).
-    * One representative row (min doc_id) + duplicate count per content.
+  /** Skew cap of the MinHash and SimHash banding: a (band, key) bucket
+    * with more members than this (near-constant boilerplate docs hashing
+    * to one band value — the skew case at corpus scale) is dropped whole,
+    * with the documented recall consequence that pairs found ONLY through
+    * an over-full bucket are missed. Never triggers at fixture scale, but
+    * caps the per-bucket pair quadratic at MaxBucket².
     */
-  def exactDedup(documents: DataFrame): DataFrame =
-    documents
-      .groupBy(md5(col("text")).as("text_md5"))
-      .agg(min("doc_id").as("rep_doc_id"), count(lit(1)).as("n_dups"))
+  private val MaxBucket = 10000
 
-  case class DocSketch(doc_id: Long, minhashes: Seq[Long])
+  /** LSH candidate step shared by the MinHash, SimHash and SRP-embedding
+    * near-dup operators. `buckets` holds one (band, key, m) row per
+    * member per band, `m` a struct with a long `id` field. Each (band,
+    * key) bucket is collected ONCE, with bounded_collect rather than
+    * collect_list: a plain collect holds an over-cap bucket's full member
+    * list before the size filter can drop it, the bounded form keeps at
+    * most `cap` + 1 members while counting all rows, and a bucket past
+    * `cap` is dropped whole. Each member of the id-sorted list pairs
+    * with every member after it, in codegen'd steps: a `filter(ms, x ->
+    * x.id > a.id)` lambda runs interpreted once per member pair and
+    * measured slower on hot SRP buckets (hundreds of members; BENCH.md),
+    * a per-pair Scala closure slower still. A repeated id never pairs
+    * with itself, and a pair colliding in several bands appears once.
+    * Returns the distinct (a, b) member pairs with a.id < b.id.
+    */
+  private[operators] def bandPairs(buckets: DataFrame, cap: Int): DataFrame = {
+    // id first, so sort_array orders the members by id
+    val fields = "id" +: buckets.schema("m").dataType.asInstanceOf[StructType]
+      .fieldNames.toSeq.filterNot(_ == "id")
+    def flat(side: String) = fields.map(f => col(s"$side.$f").as(s"${side}_$f"))
+    def nest(side: String) = struct(fields.map(f => col(s"${side}_$f").as(f)): _*).as(side)
+    buckets.groupBy("band", "key")
+      .agg(BoundedCollect.bounded_collect(
+        struct(fields.map(f => col(s"m.$f").as(f)): _*), cap).as("bc"))
+      .filter(col("bc.n") <= cap)
+      .select(sort_array(col("bc.vals")).as("ms"))
+      .select(posexplode(col("ms")).as(Seq("i", "a")), col("ms"))
+      .select(col("a"),
+        explode(slice(col("ms"), col("i") + 2, size(col("ms")) - col("i") - 1)).as("b"))
+      .filter(col("a.id") < col("b.id"))
+      // distinct over flat columns: grouping on the two struct columns
+      // measured slower
+      .select(flat("a") ++ flat("b"): _*)
+      .distinct()
+      .select(nest("a"), nest("b"))
+  }
 
   /** MinHash-LSH near-dup candidate pairs verified by exact shingle
     * Jaccard ≥ `threshold`. Sketch phase is a map; banding shuffles on
-    * (band, bandHash); verification joins text back for the (few)
-    * candidate pairs only.
+    * (band, band slice) once ([[bandPairs]]); verification joins text back
+    * for the (few) candidate pairs only.
     */
-  def minhashDedup(documents: DataFrame, threshold: Double = 0.7,
-                   maxBucket: Int = 10000): DataFrame = {
+  def minhashDedup(documents: DataFrame, threshold: Double = 0.7): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
     val rows = NumMinHashes / Bands
 
-    val sketches = documents.select(col("doc_id"), col("text")).as[(Long, String)]
-      .map { case (id, text) => DocSketch(id, minHashes(text).toSeq) }
-
     // bucket key is the band's minhash slice ITSELF (collision-free and
-    // directly comparable in the DuckDB oracle — no band-hash function).
-    // Candidate generation is ONE aggregation: group each (band, sig)
-    // bucket's members and emit intra-bucket pairs from the list — the
-    // previous form paid a bucket-count aggregation + a filter join +
-    // a sort-merge SELF-join (the sketch pass ran three times and the
-    // bucket table shuffled four times); this shuffles the sketch once
-    // (guide §2.4). The skew cap keeps its semantics: buckets larger
-    // than maxBucket (near-identical boilerplate hashing to one band
-    // value) are dropped whole, same recall caveat as simhashDedup,
-    // never triggering at fixture scale — and the cap also bounds the
-    // collected list (≤ maxBucket ids per group). Pair set identical:
-    // all a < b pairs within a bucket, deduplicated across bands.
-    val pairs = sketches.flatMap { s =>
-      (0 until Bands).iterator.map { b =>
-        (b, s.minhashes.slice(b * rows, (b + 1) * rows), s.doc_id)
-      }
-    }.toDF("band", "sig", "doc_id")
-      .groupBy("band", "sig")
-      // bounded_collect, not collect_list: a plain collect holds an
-      // over-cap bucket's FULL member list before the size filter can
-      // drop it — unbounded state on exactly the boilerplate-skew
-      // buckets the cap exists for. The bounded form keeps at most
-      // maxBucket+1 elements per group while counting all rows; groups
-      // within the cap carry their complete list, over-cap groups are
-      // dropped by count — identical semantics, bounded memory.
-      .agg(graft.functions.BoundedCollect.bounded_collect(col("doc_id"), maxBucket).as("bc"))
-      .filter(col("bc.n") <= maxBucket)
-      .select(col("bc.vals").as("ids")).as[Seq[Long]]
-      .flatMap { ids =>
-        val sorted = ids.sorted.toArray
-        for {
-          i <- sorted.indices.iterator
-          j <- ((i + 1) until sorted.length).iterator
-          if sorted(i) != sorted(j) // a duplicated doc_id is not a pair
-        } yield (sorted(i), sorted(j))
-      }
-      .toDF("doc_a", "doc_b")
-      .distinct()
+    // directly comparable in the DuckDB oracle — no band-hash function)
+    val buckets = documents.select(col("doc_id"), col("text")).as[(Long, String)]
+      .flatMap { case (id, text) =>
+        val mh = minHashes(text)
+        (0 until Bands).iterator.map(b => (b, mh.slice(b * rows, (b + 1) * rows).toSeq, id))
+      }.toDF("band", "key", "id")
+      .select(col("band"), col("key"), struct(col("id")).as("m"))
+    val pairs = bandPairs(buckets, MaxBucket)
+      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
 
     val texts = documents.select(col("doc_id"), col("text"))
     pairs
@@ -267,54 +279,25 @@ object TextOps {
 
   /** SimHash near-dup: 64-bit sketches bucketed by 4 16-bit bands (any pair
     * within Hamming distance 3 shares ≥1 band — pigeonhole), then exact
-    * Hamming verification ≤ `maxHamming`.
+    * Hamming verification ≤ `maxHamming`. Each bucket member carries its
+    * simhash, so the verify needs no join.
     */
-  /** `maxBucket` bounds the quadratic (band, bandVal) self-join: buckets
-    * larger than it (near-constant boilerplate docs hashing to one
-    * simhash band value — the skew case at corpus scale) are dropped from
-    * candidate generation, with the documented recall consequence that
-    * pairs found ONLY through an over-full bucket are missed. The default
-    * never triggers at fixture scale (goldens unchanged) but caps the
-    * worst case at 100× from quadratic to maxBucket² per bucket.
-    */
-  def simhashDedup(documents: DataFrame, maxHamming: Int = 3,
-                   maxBucket: Int = 10000): DataFrame = {
+  def simhashDedup(documents: DataFrame, maxHamming: Int = 3): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
     val sketches = documents.select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, t) => (id, simHash(t)) }
       .toDF("doc_id", "simhash")
 
-    // Candidate generation as ONE aggregation (same rewrite as
-    // minhashDedup): collect each (band, bandVal) bucket's (doc_id,
-    // simhash) members, cap-filter the bucket whole (identical skew
-    // semantics — the cap also bounds the collected list), emit sorted
-    // intra-bucket pairs, dedup across bands. Replaces the count-agg +
-    // filter join + sort-merge self-join over a thrice-computed sketch.
-    import org.apache.spark.sql.functions.{collect_list, size}
-    sketches.select(col("doc_id"), col("simhash"),
+    val buckets = sketches.select(
+      struct(col("doc_id").as("id"), col("simhash")).as("m"),
       explode(array((0 until 4).map(b =>
-        struct(lit(b).as("band"), expr(s"(simhash >> ${b * 16}) & 65535").as("bandVal"))): _*)).as("bd"))
-      .select(col("doc_id"), col("simhash"), col("bd.band"), col("bd.bandVal"))
-      .groupBy("band", "bandVal")
-      // bounded_collect: same bounded-state rationale as minhashDedup
-      .agg(graft.functions.BoundedCollect.bounded_collect(
-        struct(col("doc_id"), col("simhash")), maxBucket).as("bc"))
-      .filter(col("bc.n") <= maxBucket)
-      .select(col("bc.vals").as("members")).as[Seq[(Long, Long)]]
-      .flatMap { members =>
-        val sorted = members.sortBy(_._1).toArray
-        for {
-          i <- sorted.indices.iterator
-          j <- ((i + 1) until sorted.length).iterator
-          if sorted(i)._1 != sorted(j)._1 // a duplicated doc_id is not a pair
-        } yield (sorted(i)._1, sorted(j)._1, sorted(i)._2, sorted(j)._2)
-      }
-      .toDF("doc_a", "doc_b", "sim_a", "sim_b")
-      .distinct()
-      .withColumn("hamming", expr("bit_count(sim_a ^ sim_b)"))
+        struct(lit(b).as("band"), expr(s"(simhash >> ${b * 16}) & 65535").as("key"))): _*)).as("bd"))
+      .select(col("bd.band"), col("bd.key"), col("m"))
+    bandPairs(buckets, MaxBucket)
+      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
+        expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
   }
 
   /** Language-ID: stopword-profile scoring over tokens (n-gram heuristic).

@@ -238,6 +238,14 @@ object OscDiff {
 
   // -------------------------------------------------------------- apply
 
+  /** The last-writer-wins rule: per id, the change with the highest
+    * (seq, ord) — the only change that decides the id's final state.
+    */
+  def winners(changes: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("id")).orderBy(col("seq").desc, col("ord").desc)
+    changes.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+  }
+
   /** Replication apply, the reference's remove/upsert semantics
     * (source.go:145-214) as one distributed last-writer-wins MERGE:
     * the winner per id is the change with the highest (seq, ord); a
@@ -246,11 +254,7 @@ object OscDiff {
     * only depend on the final change per key.
     */
   def applyLast(base: DataFrame, changes: DataFrame, payload: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(col("id")).orderBy(col("seq").desc, col("ord").desc)
-    val winners = changes
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
+    val winners = OscDiff.winners(changes)
     val upserts = winners.filter(col("action") =!= Delete)
       .select((col("id") +: payload.map(col)): _*)
     base

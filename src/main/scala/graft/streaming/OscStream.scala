@@ -15,7 +15,7 @@ import graft.sources.{OscDiff, SnapshotTable}
   *
   *  - a micro-batch merges ALL its fresh sequence files in one keyed
   *    MERGE (last-writer-wins per id by (seq, ord) — exactly
-  *    [[OscDiff.applyLast]]'s winner rule, which equals sequential
+  *    [[OscDiff.winners]], applyLast's rule, which equals sequential
   *    application), committing ONE snapshot per batch whose manifest
   *    records the batch's max seq;
   *  - EXACTLY-ONCE application on top of the source's at-least-once
@@ -95,11 +95,7 @@ object OscStream {
     require(seqs == (start until start + seqs.length),
       s"osc sequence gap: batch holds $seqs but the checkpoint is $checkpoint — " +
         "sequence files must arrive in order (fetcher contract)")
-    val changes = OscDiff.readKindFiles(spark, fresh, "node")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("seq").desc, col("ord").desc)
-    val winners = changes
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+    val winners = OscDiff.winners(OscDiff.readKindFiles(spark, fresh, "node"))
     val deleteKeys = winners.filter(col("action") === OscDiff.Delete).select("id")
     val upserts = winners.filter(col("action") =!= OscDiff.Delete)
       .select(col("id"), col("lat"), col("lon"))

@@ -56,6 +56,24 @@ class TextOpsSpec extends SparkTestBase {
     }
   }
 
+  test("bandPairs: whole-bucket cap, no self-pairs, one row per pair across bands") {
+    val cap = 3
+    def pairs(rows: Seq[(Int, Long, Long)]): Seq[(Long, Long)] =
+      TextOps.bandPairs(rows.toDF("band", "key", "id")
+          .select(col("band"), col("key"), struct(col("id")).as("m")), cap)
+        .select(col("a.id"), col("b.id")).as[(Long, Long)].collect().toSeq.sorted
+    // a bucket of cap + 1 members yields nothing; one of exactly cap
+    // members yields all C(cap, 2) pairs
+    val over = (1L to cap + 1L).map(id => (0, 7L, id))
+    val full = (11L to 10L + cap).map(id => (0, 8L, id))
+    assert(pairs(over) == Seq.empty)
+    assert(pairs(over ++ full) == Seq((11L, 12L), (11L, 13L), (12L, 13L)))
+    // a repeated id never pairs with itself
+    assert(pairs(Seq((0, 1L, 5L), (0, 1L, 5L), (0, 1L, 6L))) == Seq((5L, 6L)))
+    // a pair colliding in two bands appears once
+    assert(pairs(Seq((0, 1L, 5L), (0, 1L, 6L), (1, 2L, 6L), (1, 2L, 5L))) == Seq((5L, 6L)))
+  }
+
   test("language id picks the profile language on crafted samples") {
     val samples = Seq(
       (1L, "the cat and the dog sat on a mat in the house"),
@@ -84,10 +102,6 @@ class TextOpsSpec extends SparkTestBase {
     assert(TextOps.fingerprints(shared).toSeq == TextOps.fingerprints(shared).toSeq)
   }
 
-  test("exact dedup groups by content") {
-    val d = TextOps.exactDedup(docs)
-    assert(d.agg(sum("n_dups")).as[Long].head() == docs.count())
-  }
 
   test("multimodal plumbing: meta schema, features normalized, frames only for video") {
     val pages = Fixtures.pages(spark, sf0001).cache()
