@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cells.Cell
 import graft.functions.GeomExpressions._
+import graft.functions.TopKByDist
 
 /** E7: k-nearest-neighbors via expanding cell-ring search (graft extension
   * required by the north rule). Around each query, rings of cells at a
@@ -16,19 +16,22 @@ import graft.functions.GeomExpressions._
   * than anything a further ring could hold (ring r's nearest possible
   * point is ≥ (r-1) cell-heights away).
   *
-  * Three entry points, one stop rule and one (dist, url) tie order, so
-  * all three return identical rows:
-  *  - [[knn]] — a driver-held `Seq[Query]` against an in-memory
-  *    cell-indexed cache of the page table; the frontier is a broadcast
-  *    probe table and each round collects per-query (n, kth) stats;
-  *  - [[knnIndexed]] — the same loop over a parquet table written by
-  *    [[writeIndexed]], hive-partitioned by the coarse parent cell and
-  *    cellId-sorted within files, so each round's read PRUNES whole
-  *    partition directories (PartitionFilters on the parent cell) and
-  *    row-groups (cellId min/max): the planet-scale shape where the page
-  *    table is far bigger than cache;
-  *  - [[knnBatch]] — queries as a DataFrame with the search state in
-  *    columns, for query counts the driver should never hold.
+  * One loop, [[ringSearch]], keeps each query's search state and best k
+  * as columns of one table, checkpointed once per round, so the driver
+  * sees one scalar per round (the active-query count), never per-query
+  * rows. Three candidate
+  * sources feed it, so all three entry points share one stop rule and one
+  * (dist, url) tie order and return identical rows:
+  *  - [[knnBatch]] — queries as a DataFrame against an in-memory
+  *    cell-indexed cache of the page table, for query counts the driver
+  *    should never hold;
+  *  - [[knn]] — the same for a driver-held `Seq[Query]`;
+  *  - [[knnIndexed]] — a parquet table written by [[writeIndexed]],
+  *    hive-partitioned by the coarse parent cell and cellId-sorted within
+  *    files, so each round's read PRUNES whole partition directories
+  *    (PartitionFilters on the parent cell) and row-groups (cellId
+  *    min/max): the planet-scale shape where the page table is far bigger
+  *    than cache.
   *
   * Deterministic: ties broken by url.
   */
@@ -36,39 +39,29 @@ object Knn {
 
   case class Query(queryId: String, lon: Double, lat: Double)
 
-  /** `maxRounds <= 0` (default) derives a budget from `level` that always
-    * reaches the whole-grid radius (the frontier doubles per round, so
-    * level+4 rounds suffice); passing an explicit smaller budget that
-    * exhausts before every query completes FAILS loudly — a silently
-    * truncated search would return wrong neighbors as if definitive.
-    */
-  def knn(pages: DataFrame, queries: Seq[Query], k: Int, level: Int = 8,
-          maxRounds: Int = -1): DataFrame = {
+  /** Cell level of the ring search and of the [[writeIndexed]] `cellId`. */
+  private val Level = 8
+  /** Level of the [[writeIndexed]] partition cell `pcell` (≤ [[Level]]). */
+  private val PartitionLevel = 4
+
+  /** [[knnBatch]] for a driver-held query list. */
+  def knn(pages: DataFrame, queries: Seq[Query], k: Int): DataFrame = {
     val spark = pages.sparkSession
-    val indexed = pages.withColumn("cellId", st_cell_at(col("lon"), col("lat"), level))
-      .select("url", "lon", "lat", "cellId")
-      .cache() // one materialization feeds every round's frontier join
-    try
-      search(spark, queries, k, level, maxRounds,
-        (probes, _) => indexed.join(broadcast(probes), Seq("cellId")))
-    finally indexed.unpersist() // result rides checkpointed best-k, not `indexed`
+    import spark.implicits._
+    knnBatch(pages, queries.toDF(), k)
   }
 
-  /** Batch kNN with DATAFRAME-side query state — the 10⁶-probe shape
-    * ("nearest N docs for every cluster centroid") where [[knn]]'s
-    * driver-held `Seq[Query]` + per-round per-query stats collect would
-    * make the driver the bottleneck. Queries arrive as a DataFrame
-    * (queryId, lon, lat); the searched-radius/done state rides as
-    * COLUMNS of a per-round checkpointed state table, ring probe cells
-    * are generated by a distributed flatMap, the candidate join is a
-    * plain cellId equi-join (no forced broadcast — AQE picks the
-    * physical join for the probe volume), and convergence is decided by
-    * joining each query's best-k aggregate back onto the state table —
-    * the driver sees ONE scalar (active-query count) per round, never
-    * per-query rows. Same expanding-ring semantics, same provable stop
-    * bound, same (dist, url) tie order as [[knn]]; both paths stop only
-    * when the bound proves completeness, so results are identical
-    * (KnnBatchSpec runs 10⁴ queries through both).
+  /** kNN for queries given as a DataFrame (queryId, lon, lat) — up to the
+    * 10⁶-probe shape ("nearest N docs for every cluster centroid"). The
+    * candidate join is a plain cellId equi-join against a cache of the
+    * cell-indexed page table (no forced broadcast — AQE picks the
+    * physical join for the probe volume).
+    *
+    * `maxRounds <= 0` (default) derives a budget that always reaches the
+    * whole-grid radius (the frontier doubles per round); an explicit
+    * smaller budget that exhausts before every query completes FAILS
+    * loudly — a silently truncated search would return wrong neighbors as
+    * if definitive.
     *
     * `clusterIndexThresholdBytes` gates the cellId-clustered index cache
     * by ESTIMATED index size (catalyst plan stats — no extra job): the
@@ -79,19 +72,10 @@ object Knn {
     * small index is cheaper than clustering it up front. Results are
     * identical either way (layout only); KnnBatchSpec runs both sides.
     */
-  def knnBatch(pages: DataFrame, queries: DataFrame, k: Int, level: Int = 8,
-               maxRounds: Int = -1,
+  def knnBatch(pages: DataFrame, queries: DataFrame, k: Int, maxRounds: Int = -1,
                clusterIndexThresholdBytes: Long = 64L << 20): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-
-    val cellLatDeg = 180.0 / (1L << level).toDouble
-    val metersPerLatDeg = graft.geom.Algorithms.EarthRadius * math.Pi / 180.0
-    val maxRadius = (1L << level).toInt
-    val roundBudget = if (maxRounds > 0) maxRounds else level + 4
-
     val base = pages
-      .withColumn("cellId", st_cell_at(col("lon"), col("lat"), level))
+      .withColumn("cellId", st_cell_at(col("lon"), col("lat"), Level))
       .select("url", "lon", "lat", "cellId")
     // cellId-clustered + sorted cache: rounds whose probe set outgrows
     // the broadcast threshold sort-merge-join against the index, and a
@@ -110,19 +94,87 @@ object Knn {
         .repartition(col("cellId"))
         .sortWithinPartitions(col("cellId"))
         .cache()
+    try ringSearch(queries, k, maxRounds)(probes => indexed.join(probes, Seq("cellId")))
+    finally indexed.unpersist() // result rides checkpointed best-k, not `indexed`
+  }
 
-    // state table: one row per query, radius/done as columns. Checkpointed
-    // per round so lineage stays flat across the iteration (the same
-    // discipline connectedComponents uses).
-    var state = queries
+  /** Write the cell-indexed page table for [[knnIndexed]]: hive-partitioned
+    * by the coarse parent cell (`pcell`), cellId-sorted within partitions
+    * so parquet row-group min/max stats stay tight. One shuffle; rewriting
+    * is only needed when the page table changes.
+    */
+  def writeIndexed(pages: DataFrame, path: String): Unit =
+    pages
+      .withColumn("cellId", st_cell_at(col("lon"), col("lat"), Level))
+      // cellAt truncates the same leaf coordinates, so the coarse cell of
+      // (lon, lat) IS the PartitionLevel ancestor of its Level cell
+      .withColumn("pcell", st_cell_at(col("lon"), col("lat"), PartitionLevel))
+      .select("url", "lon", "lat", "cellId", "pcell")
+      .repartition(col("pcell"))
+      .sortWithinPartitions(col("pcell"), col("cellId"))
+      .write.mode("overwrite").partitionBy("pcell").parquet(path)
+
+  /** kNN over a [[writeIndexed]] table: identical results to [[knn]]
+    * (shared loop), but each round reads ONLY the partition directories
+    * whose coarse cell is an ancestor of a frontier cell — the per-round
+    * scan is proportional to the frontier, not the table. This is the
+    * shape that holds when the page table is planet-scale: no cache big
+    * enough to absorb it, no full scan per ring.
+    */
+  def knnIndexed(spark: SparkSession, path: String, queries: Seq[Query], k: Int): DataFrame = {
+    import spark.implicits._
+    // ONE file-index listing for the whole search: partition pruning is
+    // extracted from each round's filter at planning time, so reusing the
+    // DataFrame keeps the per-round PartitionFilters while re-listing the
+    // table's directories once instead of once per ring. The Fixtures
+    // parquet-plan memo extends that reuse across searches in a session
+    // (metadata only; content-stamped, so a rewritten index re-lists).
+    val table = graft.sources.Fixtures.readParquet(spark, path)
+    ringSearch(queries.toDF(), k, maxRounds = -1) { probes =>
+      // the frontier's parent cells as LITERALS (at most 4^PartitionLevel),
+      // so the pcell filter lands in the scan's PartitionFilters
+      val parents = probes.select(col("cellId")).as[Long]
+        .mapPartitions(_.map(Cell.parent(_, PartitionLevel)).toSet.iterator)
+        .collect().toSeq.distinct
+      table
+        .filter(col("pcell").isin(parents: _*)) // directory-level pruning
+        .join(broadcast(probes), Seq("cellId"))
+    }
+  }
+
+  /** The expanding-ring loop. Each query's state — searched radius, done
+    * flag and best-k so far — rides as COLUMNS of one state table,
+    * checkpointed once per round; ring probe cells are generated by a
+    * distributed flatMap, and one aggregation per round folds the round's
+    * candidates into every query's state row. `candidates(probes)` gets
+    * the round's probe table (queryId, qlon, qlat, searched, cellId) and
+    * returns the pages in those cells joined to it — the probe columns
+    * plus (url, lon, lat) — from whichever source it owns.
+    */
+  private def ringSearch(queries: DataFrame, k: Int, maxRounds: Int)(
+      candidates: DataFrame => DataFrame): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+
+    // meters per cell-height (latitude degrees are uniform on the
+    // equirectangular grid; conservative lower bound for ring pruning)
+    val cellLatDeg = 180.0 / (1L << Level).toDouble
+    val metersPerLatDeg = graft.geom.Algorithms.EarthRadius * math.Pi / 180.0
+    val maxRadius = (1L << Level).toInt // whole grid searched beyond this
+    val roundBudget = if (maxRounds > 0) maxRounds else Level + 4
+
+    // one row per query (searched -1 = nothing searched yet; `best` the
+    // (dist, url)-ascending best-k, so a round's checkpoint is O(qk), not
+    // the accumulated candidate history). Checkpointed per round so
+    // lineage stays flat across the iteration (the same discipline
+    // connectedComponents uses).
+    var (state, active) = checkpointActive(queries
       .select(col("queryId").cast("string").as("queryId"),
         col("lon").cast("double").as("qlon"), col("lat").cast("double").as("qlat"))
       .withColumn("searched", lit(-1))
       .withColumn("done", lit(false))
-      .localCheckpoint()
-    var best: Option[DataFrame] = None
+      .withColumn("best", array().cast(TopKByDist.OutType)))
     var round = 0
-    var active = state.filter(!col("done")).count()
 
     // ObjectHashAggregate's hash map degrades to SORT-based aggregation
     // past this many groups per partition (default 128) — and the
@@ -147,214 +199,87 @@ object Knn {
             col("qlat").as("_3"), col("searched").as("_4"))
           .as[(String, Double, Double, Int)]
           .flatMap { case (qid, qlon, qlat, searched) =>
-            val qcell = Cell.cellAt(qlon, qlat, level)
+            val qcell = Cell.cellAt(qlon, qlat, Level)
             val from = searched + 1
             val to = math.min(maxRadius, if (from == 0) 0 else math.max(from, searched * 2))
             (from to to).iterator.flatMap(r => Cell.ring(qcell, r).iterator)
-              .map(c => (qid, qlon, qlat, c))
-          }.toDF("queryId", "qlon", "qlat", "cellId")
+              .map(c => (qid, qlon, qlat, searched, c))
+          }.toDF("queryId", "qlon", "qlat", "searched", "cellId")
 
-        val cand = indexed.join(probes, Seq("cellId"))
-          .withColumn("dist", st_geo_distance(col("qlon"), col("qlat"), col("lon"), col("lat")))
-          .select("queryId", "url", "dist")
-        val merged = best.map(_.unionByName(cand)).getOrElse(cand)
+        // every query's state row with its best-k as (url, dist) rows (one
+        // null pair while empty), plus the round's candidates, which
+        // carry their query's state from the probes
+        val carried = state
+          .select(col("queryId"), col("qlon"), col("qlat"), col("searched"), col("done"),
+            explode_outer(col("best")).as("p"))
+          .select(col("queryId"), col("qlon"), col("qlat"), col("searched"), col("done"),
+            col("p.url").as("url"), col("p.dist").as("dist"))
+        val cand = candidates(probes)
+          .select(col("queryId"), col("qlon"), col("qlat"), col("searched"),
+            lit(false).as("done"), col("url"),
+            st_geo_distance(col("qlon"), col("qlat"), col("lon"), col("lat")).as("dist"))
         // Per-round best-k: a bounded native aggregation
         // ([[graft.functions.TopKByDist]], a TypedImperativeAggregate) —
         // partial (map-side) + final — ships at most k rows per queryId
         // per map task into the round's shuffle and never SORTS the
-        // candidate set. It keeps the (dist, url) order of the final
-        // window below: UTF8String binary comparison on url ties.
-        best = Some(merged.groupBy("queryId")
-          .agg(graft.functions.TopKByDist.topk_by_dist(col("dist"), col("url"), k).as("topk"))
-          .select(col("queryId"), explode(col("topk")).as("p"))
-          .select(col("queryId"), col("p.url").as("url"), col("p.dist").as("dist"))
-          .localCheckpoint())
+        // candidate set. Its output is (dist, url)-ascending: UTF8String
+        // binary comparison on url ties. The state columns are equal on
+        // every row of a query, so any value is its value.
+        val merged = carried.unionByName(cand).groupBy("queryId").agg(
+          any_value(col("qlon")).as("qlon"), any_value(col("qlat")).as("qlat"),
+          any_value(col("searched")).as("searched"), any_value(col("done")).as("done"),
+          TopKByDist.topk_by_dist(col("dist"), col("url"), k).as("best"))
 
-        // convergence as an aggregate + join: each query's (n, kth) lands
-        // back on its state row; the stop rule is the SAME bound as the
-        // driver path, evaluated as columns
-        val stats = best.get.groupBy("queryId")
-          .agg(count(lit(1)).as("n"), max("dist").as("kth"))
-        val searchedNow = when(col("done"), col("searched"))
+        // Anything in ring >= searched+1 is at least `searched`
+        // cell-heights away vertically, or `searched` cell-widths
+        // horizontally (lon shrinks by cos(lat) under the equirectangular
+        // metric — take the min).
+        val searched = when(col("done"), col("searched"))
           .when(col("searched") === -1, lit(0))
           .otherwise(least(lit(maxRadius), greatest(col("searched") + 1, col("searched") * 2)))
-        state = state.join(stats, Seq("queryId"), "left")
-          .withColumn("searchedNow", searchedNow)
-          .withColumn("latBound",
-            col("searchedNow") * lit(cellLatDeg) * lit(metersPerLatDeg))
-          .withColumn("cosLat", cos(radians(least(lit(89.9),
-            abs(col("qlat")) + (col("searchedNow") + 1) * lit(cellLatDeg)))))
-          .withColumn("lonBound", col("searchedNow") * lit(2 * cellLatDeg) *
-            greatest(lit(0.0), col("cosLat")) * lit(metersPerLatDeg))
-          .withColumn("lowerBound", least(col("latBound"), col("lonBound")))
-          // STRICT kth < bound, as in the driver path (equal-distance url
-          // ties in an unsearched ring must still be able to win)
-          .withColumn("done", col("done") ||
-            (coalesce(col("n"), lit(0L)) >= k && col("kth") < col("lowerBound")) ||
-            col("searchedNow") >= maxRadius)
-          .select(col("queryId"), col("qlon"), col("qlat"),
-            col("searchedNow").as("searched"), col("done"))
-          .localCheckpoint()
-        active = state.filter(!col("done")).count()
+        val latBound = searched * lit(cellLatDeg) * lit(metersPerLatDeg)
+        val cosLat = cos(radians(least(lit(89.9), abs(col("qlat")) + (searched + 1) * lit(cellLatDeg))))
+        val lonBound = searched * lit(2 * cellLatDeg) * greatest(lit(0.0), cosLat) * lit(metersPerLatDeg)
+        // STRICT kth < bound: at kth == bound an unsearched ring could hold
+        // an equal-distance, lexicographically-smaller url whose tie must
+        // win under the (dist, url) order
+        val done = col("done") ||
+          (size(col("best")) >= k &&
+            try_element_at(col("best"), lit(k)).getField("dist") < least(latBound, lonBound)) ||
+          searched >= maxRadius
+        val (next, stillActive) = checkpointActive(merged
+          .select(col("queryId"), col("qlon"), col("qlat"), searched.as("searched"),
+            done.as("done"), col("best")))
+        state = next
+        active = stillActive
         round += 1
       }
       if (active > 0)
         throw new IllegalStateException(
-          s"knnBatch: $active queries unfinished after $roundBudget rounds — " +
+          s"knn: $active queries unfinished after $roundBudget rounds — " +
             "raise maxRounds (results would be silently wrong if returned)")
 
-      val w = Window.partitionBy(col("queryId")).orderBy(col("dist"), col("url"))
-      best.getOrElse(Seq.empty[(String, String, Double)].toDF("queryId", "url", "dist"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .select(col("queryId"), col("rn").as("rank"), col("url"), col("dist"))
-    } finally {
-      indexed.unpersist() // result rides checkpointed best-k
-      prevFallback match {
-        case Some(v) => spark.conf.set(fallbackKey, v)
-        case None => spark.conf.unset(fallbackKey)
-      }
+      // `best` is already in (dist, url) order, so its position is the rank
+      state.select(col("queryId"), posexplode(col("best")).as(Seq("pos", "p")))
+        .select(col("queryId"), (col("pos") + 1).as("rank"), col("p.url").as("url"),
+          col("p.dist").as("dist"))
+    } finally prevFallback match {
+      case Some(v) => spark.conf.set(fallbackKey, v)
+      case None => spark.conf.unset(fallbackKey)
     }
   }
 
-  /** Write the cell-indexed page table for [[knnIndexed]]: hive-partitioned
-    * by the level-`partitionLevel` parent cell (`pcell`), cellId-sorted
-    * within partitions so parquet row-group min/max stats stay tight. One
-    * shuffle; rewriting is only needed when the page table changes.
+  /** Eagerly checkpoints a state table and returns it with its number of
+    * unfinished (`!done`) queries, observed during the checkpoint's own
+    * job — no separate count job. An `Observation` is single-use, so each
+    * call makes a fresh one.
     */
-  def writeIndexed(pages: DataFrame, path: String, level: Int = 8,
-                   partitionLevel: Int = 4): Unit = {
-    require(partitionLevel <= level,
-      s"partitionLevel $partitionLevel must be <= index level $level")
-    pages
-      .withColumn("cellId", st_cell_at(col("lon"), col("lat"), level))
-      // cellAt truncates the same leaf coordinates, so the level-P cell of
-      // (lon, lat) IS the level-P ancestor of the level-L cell
-      .withColumn("pcell", st_cell_at(col("lon"), col("lat"), partitionLevel))
-      .select("url", "lon", "lat", "cellId", "pcell")
-      .repartition(col("pcell"))
-      .sortWithinPartitions(col("pcell"), col("cellId"))
-      .write.mode("overwrite").partitionBy("pcell").parquet(path)
-  }
-
-  /** kNN over a [[writeIndexed]] table: identical results to [[knn]]
-    * (shared loop), but each round reads ONLY the partition directories
-    * whose coarse cell is an ancestor of a frontier cell — the per-round
-    * scan is proportional to the frontier, not the table. This is the
-    * shape that holds when the page table is planet-scale: no cache big
-    * enough to absorb it, no full scan per ring.
-    */
-  def knnIndexed(spark: SparkSession, path: String, queries: Seq[Query], k: Int,
-                 level: Int = 8, partitionLevel: Int = 4,
-                 maxRounds: Int = -1): DataFrame = {
-    require(partitionLevel <= level,
-      s"partitionLevel $partitionLevel must be <= index level $level")
-    // ONE file-index listing for the whole search: partition pruning is
-    // extracted from each round's filter at planning time, so reusing the
-    // DataFrame keeps the per-round PartitionFilters while re-listing the
-    // table's directories once instead of once per ring. The Fixtures
-    // parquet-plan memo extends that reuse across searches in a session
-    // (metadata only; content-stamped, so a rewritten index re-lists).
-    val table = graft.sources.Fixtures.readParquet(spark, path)
-    search(spark, queries, k, level, maxRounds, (probes, cells) => {
-      val parents = cells.map(Cell.parent(_, partitionLevel)).distinct
-      table
-        .filter(col("pcell").isin(parents: _*)) // directory-level pruning
-        .join(broadcast(probes), Seq("cellId"))
-    })
-  }
-
-  /** The shared expanding-ring loop. `candFor(probesDf, probeCells)` must
-    * return the pages joined to the frontier probes — columns (queryId,
-    * qlon, qlat, url, lon, lat) — from whichever source it owns.
-    */
-  private def search(spark: SparkSession, queries: Seq[Query], k: Int, level: Int,
-                     maxRounds: Int,
-                     candFor: (DataFrame, Seq[Long]) => DataFrame): DataFrame = {
-    import spark.implicits._
-
-    // meters per cell-height at this level (latitude degrees are uniform on
-    // the equirectangular grid; conservative lower bound for ring pruning)
-    val cellLatDeg = 180.0 / (1L << level).toDouble
-    val metersPerLatDeg = graft.geom.Algorithms.EarthRadius * math.Pi / 180.0
-
-    val maxRadius = (1L << level).toInt // whole grid searched beyond this
-    val roundBudget = if (maxRounds > 0) maxRounds else level + 4
-
-    // bounded per-round state: only each query's best-k survives a round
-    // (≤ queries×k rows), so the per-round checkpoint is O(qk), not the
-    // full accumulated candidate history
-    var best: Option[DataFrame] = None
-    // searched radius per query (-1 = nothing searched yet); ring batches
-    // double in width so sparse regions converge in O(log grid) rounds
-    var frontier = queries.map(q => q.queryId -> -1).toMap
-    var done = Set.empty[String]
-    var round = 0
-
-    while (done.size < queries.size && round < roundBudget) {
-      val probeCells = queries.filterNot(q => done(q.queryId)).flatMap { q =>
-        val qcell = Cell.cellAt(q.lon, q.lat, level)
-        val from = frontier(q.queryId) + 1
-        val to = math.min(maxRadius, if (from == 0) 0 else math.max(from, frontier(q.queryId) * 2))
-        (from to to).flatMap(r => Cell.ring(qcell, r)).map(c => (q.queryId, q.lon, q.lat, c))
-      }
-      if (probeCells.nonEmpty) {
-        val probesDf = probeCells.toDF("queryId", "qlon", "qlat", "cellId")
-        val cand = candFor(probesDf, probeCells.map(_._4))
-          .withColumn("dist", st_geo_distance(col("qlon"), col("qlat"), col("lon"), col("lat")))
-          .select("queryId", "url", "dist")
-        // fold the new ring's candidates into the running best-k and
-        // checkpoint THAT (tiny), truncating lineage each round
-        val merged = best.map(_.unionByName(cand)).getOrElse(cand)
-        val w = Window.partitionBy(col("queryId")).orderBy(col("dist"), col("url"))
-        best = Some(merged
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= k)
-          .drop("rn")
-          .localCheckpoint())
-      }
-
-      // per-query k-th distance so far (best is already ≤ k per query)
-      val stats = best.get
-        .groupBy("queryId").agg(count(lit(1)).as("n"), max("dist").as("kth"))
-        .collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-
-      queries.foreach { q =>
-        if (!done(q.queryId)) {
-          val from = frontier(q.queryId) + 1
-          val searched = math.min(maxRadius, if (from == 0) 0 else math.max(from, frontier(q.queryId) * 2))
-          // anything in ring >= searched+1 is at least `searched` cell-heights
-          // away vertically, or `searched` cell-widths horizontally (lon
-          // shrinks by cos(lat) under the equirectangular metric — take min)
-          val latBound = searched * cellLatDeg * metersPerLatDeg
-          val cosLat = math.cos(math.toRadians(
-            math.min(89.9, math.abs(q.lat) + (searched + 1) * cellLatDeg)))
-          val lonBound = searched * (2 * cellLatDeg) * math.max(0.0, cosLat) * metersPerLatDeg
-          val lowerBound = math.min(latBound, lonBound)
-          stats.get(q.queryId) match {
-            // STRICT <: at kth == lowerBound an unsearched ring could hold
-            // an equal-distance, lexicographically-smaller url whose tie
-            // must win under the documented (dist, url) order
-            case Some((n, kth)) if n >= k && (kth < lowerBound || searched >= maxRadius) =>
-              done += q.queryId
-            case _ if searched >= maxRadius => done += q.queryId
-            case _ => frontier += q.queryId -> searched
-          }
-        }
-      }
-      round += 1
-    }
-    if (done.size < queries.size)
-      throw new IllegalStateException(
-        s"knn: ${queries.size - done.size} queries unfinished after $roundBudget rounds — " +
-          "raise maxRounds (results would be silently wrong if returned)")
-
-    val w = Window.partitionBy(col("queryId")).orderBy(col("dist"), col("url"))
-    best.getOrElse(Seq.empty[(String, String, Double)].toDF("queryId", "url", "dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("queryId"), col("rn").as("rank"), col("url"), col("dist"))
+  private def checkpointActive(state: DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val checkpointed = state
+      .observe(obs, count(when(!col("done"), lit(1))).as("active"))
+      .localCheckpoint()
+    (checkpointed, obs.get("active").asInstanceOf[Long])
   }
 
 }

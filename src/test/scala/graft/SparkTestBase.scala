@@ -1,11 +1,37 @@
 package graft
 
+import java.io.{IOException, UncheckedIOException}
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-trait SparkTestBase extends AnyFunSuite {
+trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   val sf0001 = "/root/testdata/sf0.001"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh temporary directory, deleted with everything under it after
+    * the suite (best effort: a directory a still-running stream writes
+    * into may not empty). */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try super.afterAll()
+    finally tempDirs.forEach { dir =>
+      try {
+        val walk = Files.walk(dir)
+        try walk.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+        finally walk.close()
+      } catch { case _: IOException | _: UncheckedIOException => }
+    }
 }
 
 object SparkTestBase {

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
 class TwoSfDirSpec extends SparkTestBase {
 
   lazy val (dirA, dirB): (String, String) = {
-    val root = java.nio.file.Files.createTempDirectory("two_sfdir").toString
+    val root = tempDir("two_sfdir").toString
     val src = spark.read.parquet(s"$sf0001/documents.parquet")
     src.write.mode("overwrite").parquet(s"$root/A/documents.parquet")
     src.filter(col("doc_id") < 300)

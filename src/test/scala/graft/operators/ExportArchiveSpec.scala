@@ -5,13 +5,11 @@ import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPInputStream
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** S11 tar.gz export-all: the archive is parsed back with an independent
   * ustar reader (header fields + checksum re-derived here, not shared with
   * the writer) and every entry must byte-match its source file.
   */
-class ExportArchiveSpec extends AnyFunSuite {
+class ExportArchiveSpec extends graft.SparkTestBase {
 
   /** Independent minimal ustar reader: (name, bytes) entries. */
   private def readTarGz(p: java.nio.file.Path): Seq[(String, Array[Byte])] = {
@@ -46,7 +44,7 @@ class ExportArchiveSpec extends AnyFunSuite {
   }
 
   test("tarGz round-trips a slice directory byte-for-byte, sorted, deterministic") {
-    val dir = Files.createTempDirectory("tar_src")
+    val dir = tempDir("tar_src")
     Files.createDirectories(dir.resolve("countries"))
     val contents = Map(
       "countries/0000.topojson" -> """{"type":"Topology","objects":{}}""",
@@ -55,7 +53,7 @@ class ExportArchiveSpec extends AnyFunSuite {
     contents.foreach { case (rel, c) =>
       Files.write(dir.resolve(rel), c.getBytes(UTF_8))
     }
-    val out = Files.createTempFile("export", ".tar.gz")
+    val out = tempDir("export").resolve("export.tar.gz")
     val entries = ExportArchive.tarGz(dir, out)
     assert(entries == contents.keys.toSeq.sorted)
 
@@ -67,7 +65,7 @@ class ExportArchiveSpec extends AnyFunSuite {
 
     // determinism: repacking yields byte-identical tar payload (compare
     // decompressed bytes — gzip already zeroes its header mtime)
-    val out2 = Files.createTempFile("export2", ".tar.gz")
+    val out2 = tempDir("export2").resolve("export2.tar.gz")
     ExportArchive.tarGz(dir, out2)
     def gunzip(p: java.nio.file.Path): Array[Byte] = {
       val i = new GZIPInputStream(Files.newInputStream(p))
@@ -78,7 +76,7 @@ class ExportArchiveSpec extends AnyFunSuite {
   }
 
   test("tarGz writing INTO the archived dir excludes the archive itself") {
-    val dir = Files.createTempDirectory("tar_self")
+    val dir = tempDir("tar_self")
     Files.write(dir.resolve("data.json"), "{}".getBytes(UTF_8))
     val out = dir.resolve("export.tar.gz") // reference layout: archive inside
     val first = ExportArchive.tarGz(dir, out)
@@ -88,12 +86,12 @@ class ExportArchiveSpec extends AnyFunSuite {
   }
 
   test("tarGz interoperates with system tar") {
-    val dir = Files.createTempDirectory("tar_sys")
+    val dir = tempDir("tar_sys")
     Files.write(dir.resolve("a.txt"), "hello tar".getBytes(UTF_8))
     Files.write(dir.resolve("b.bin"), Array.tabulate[Byte](700)(i => (i % 251).toByte))
-    val out = Files.createTempFile("sys", ".tar.gz")
+    val out = tempDir("sys").resolve("sys.tar.gz")
     ExportArchive.tarGz(dir, out)
-    val extract = Files.createTempDirectory("tar_ext")
+    val extract = tempDir("tar_ext")
     val rc = new ProcessBuilder("tar", "xzf", out.toString, "-C", extract.toString)
       .inheritIO().start().waitFor()
     assume(rc == 0, "system tar unavailable")

@@ -19,7 +19,7 @@ class ExportSinkSpec extends SparkTestBase {
     val res = Export.layer(polys, water, "regions", Seq(200L, 201L, 202L, 203L, 204L),
       simplifyDigits = 3, quantize = 1e6, pointLimit = 15,
       relations = Some(Fixtures.relationsDf(spark)), languages = Seq("nl", "en"))
-    val out = Files.createTempDirectory("topo_out").toString
+    val out = tempDir("topo_out").toString
     val files = Export.writeSlices(res, out)
     assert(files.nonEmpty)
     assert(files.head.endsWith("0000.topojson"))
@@ -52,7 +52,7 @@ class ExportSinkSpec extends SparkTestBase {
     val water = Ingest.waterPolygons(spark, Fixtures.waterDf(spark))
     val res = Export.layer(polys, water, "countries", Seq(100L, 101L),
       simplifyDigits = 3, quantize = 1e6, pointLimit = 15)
-    val out = Files.createTempDirectory("topo_tar")
+    val out = tempDir("topo_tar")
     Export.writeSlices(res, out.toString)
     val archive = out.resolve("export.tar.gz") // reference layout: inside the dir
     val entries = ExportArchive.tarGz(out, archive)
@@ -81,7 +81,7 @@ class ExportSinkSpec extends SparkTestBase {
     val res = Export.layer(polys, water, "countries", Seq(100L, 101L, 102L, 103L, 104L),
       simplifyDigits = 3, quantize = 1e6, pointLimit = 20,
       relations = Some(Fixtures.relationsDf(spark)), languages = Seq("nl", "en"))
-    val out = Files.createTempDirectory("topo_e2e")
+    val out = tempDir("topo_e2e")
     Export.writeSlices(res, out.toString)
     val archive = out.resolve("export.tar.gz")
     ExportArchive.tarGz(out, archive)
@@ -190,7 +190,7 @@ class ExportSinkSpec extends SparkTestBase {
       .withColumn("bbox", graft.functions.GeomExpressions.st_envelope(col("wkb")))
     val topo = TopoPipeline.topology(fs, 0, 0)
     val res = Export.LayerResult("raw", topo, Seq((1L, 0), (2L, 0)))
-    val out = Files.createTempDirectory("topo_raw").toString
+    val out = tempDir("topo_raw").toString
     val files = Export.writeSlices(res, out)
     val json = Files.readString(java.nio.file.Paths.get(files.head))
     assert(!json.contains(""""transform""""), "unquantized topology must omit transform")

@@ -5,18 +5,16 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.sources.Fixtures
 
-/** The batch-kNN contract: [[Knn.knnBatch]]'s DataFrame-side query state
-  * must return exactly the driver-state path's neighbors — at a query
-  * count (10⁴) where the batch shape is the one that matters. Queries
-  * are jittered around actual page locations so every search converges
-  * in a few rings (the driver path has to run the same workload for the
-  * comparison; far-from-data queries would make IT the bottleneck, which
-  * is the very reason knnBatch exists).
+/** The batch-kNN contract: [[Knn.knnBatch]] must return exactly the
+  * brute-force neighbors — every page's distance, ordered by (dist, url) —
+  * at a query count (10⁴) where the batch shape is the one that matters.
+  * Queries are jittered around actual page locations so every search
+  * converges in a few rings.
   */
 class KnnBatchSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("knnBatch over 10^4 queries equals the driver-state search row-for-row") {
+  test("knnBatch over 10^4 queries equals brute force row-for-row") {
     val pages = Fixtures.pages(spark, sf0001).cache()
     // sample only the city-clustered 60% of the geocode (doc_id%10<6):
     // the uniform-global 40% would give isolated queries whose rings must
@@ -36,17 +34,22 @@ class KnnBatchSpec extends SparkTestBase {
     }
     val k = 3
 
-    val viaDriver = Knn.knn(pages, queries, k)
-      .select("queryId", "rank", "url").as[(String, Long, String)].collect().toSet
+    val all = pages.select("url", "lon", "lat").as[(String, Double, Double)].collect()
+    val brute = queries.flatMap { q =>
+      all.map { case (url, lon, lat) =>
+        (graft.geom.Algorithms.geoDistance(q.lon, q.lat, lon, lat), url)
+      }.sortBy(identity).take(k).zipWithIndex
+        .map { case ((_, url), i) => (q.queryId, i + 1L, url) }
+    }.toSet
     val qdf = queries.map(q => (q.queryId, q.lon, q.lat)).toDF("queryId", "lon", "lat")
     val viaBatch = Knn.knnBatch(pages, qdf, k)
       .select("queryId", "rank", "url").as[(String, Long, String)].collect().toSet
 
     assert(viaBatch.size == n * k, s"expected ${n * k} result rows, got ${viaBatch.size}")
-    val onlyDriver = viaDriver -- viaBatch
-    val onlyBatch = viaBatch -- viaDriver
-    assert(onlyDriver.isEmpty && onlyBatch.isEmpty,
-      s"paths diverge: driver-only=${onlyDriver.take(5)} batch-only=${onlyBatch.take(5)}")
+    val onlyBrute = brute -- viaBatch
+    val onlyBatch = viaBatch -- brute
+    assert(onlyBrute.isEmpty && onlyBatch.isEmpty,
+      s"knnBatch diverges from brute force: brute-only=${onlyBrute.take(5)} batch-only=${onlyBatch.take(5)}")
 
     // the clustered-index-cache gate (round 8): threshold 0 forces the
     // cellId-clustered layout, Long.MaxValue forces the plain cache —

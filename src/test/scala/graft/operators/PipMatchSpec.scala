@@ -299,11 +299,11 @@ class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   /** A file of polygons as `relId<TAB>base64(wkb)` lines, holding `polys`'
     * rows; `f` gets its path and a function that rewrites it. */
   private def withPolyFile(f: (String, DataFrame => Unit) => Unit): Unit = {
-    val src = Files.createTempFile("pip_dims", ".tsv")
+    val src = tempDir("pip_dims").resolve("polys.tsv")
     def write(df: DataFrame): Unit = Files.write(src, df.select("relId", "wkb").as[(Long, Array[Byte])]
       .collect().map { case (id, wkb) => s"$id\t${Base64.getEncoder.encodeToString(wkb)}" }.toSeq.asJava)
     write(polys)
-    try f(src.toString, write) finally Files.delete(src)
+    f(src.toString, write)
   }
 
   test("the plan key misses on a re-cache over a changed source") {
@@ -362,7 +362,7 @@ class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(rows(again) == keyRows)
 
     // parquet-backed, uncached, rewritten in place
-    val dir = Files.createTempDirectory("pip_dims").resolve("polys").toString
+    val dir = tempDir("pip_dims").resolve("polys").toString
     polys.select("relId", "wkb").write.parquet(dir)
     val onDisk = spark.read.parquet(dir)
     val fromParquet = PipJoin.matchesIndexed(keyPages, covers, onDisk)

@@ -1,7 +1,13 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.DynamicPruning
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkTestBase
 import graft.cells.{Cell, Coverer}
@@ -308,23 +314,41 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("kNN over the partition-pruned parquet index equals the cached search") {
-    val path = java.nio.file.Files.createTempDirectory("knn_idx").toString
+    val path = tempDir("knn_idx").toString
     Knn.writeIndexed(pages, path)
     val qs = Seq(Knn.Query("q0", 4.35, 50.85), Knn.Query("far", -170.0, -80.0))
     val a = Knn.knn(pages, qs, k = 5)
       .select("queryId", "rank", "url").as[(String, Long, String)].collect().toSet
-    val b = Knn.knnIndexed(spark, path, qs, k = 5)
+    // every plan knnIndexed executes, to inspect its scans of the index
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val b = try Knn.knnIndexed(spark, path, qs, k = 5)
       .select("queryId", "rank", "url").as[(String, Long, String)].collect().toSet
+    finally {
+      org.apache.spark.graft.TestBridge.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
     assert(a == b && a.nonEmpty)
-    // the per-round read prunes partition DIRECTORIES: the parent-cell
-    // filter must land in the scan's PartitionFilters, not a post-scan
-    // Filter — this is what bounds a round's IO at planet scale
-    val parent = graft.cells.Cell.cellAt(4.35, 50.85, 4)
-    val plan = spark.read.parquet(path).filter($"pcell".isin(parent))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("pcell"))
-    assert(!plan.replaceAll("(?s)PartitionFilters.*", "").contains("Filter ("),
-      s"pcell filter did not push into the scan:\n$plan")
+    // the per-round read prunes partition DIRECTORIES: every scan of the
+    // index must carry the parent-cell filter in its PartitionFilters,
+    // planned from literals rather than left to dynamic partition pruning
+    // — this is what bounds a round's IO at planet scale
+    val helper = new AdaptiveSparkPlanHelper {}
+    val scans = plans.asScala.toSeq.flatMap(plan => helper.collectWithSubqueries(plan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains(path)) => s
+    })
+    assert(scans.nonEmpty, "knnIndexed ran no scan of the index")
+    scans.foreach { s =>
+      assert(s.partitionFilters.exists(f => f.references.exists(_.name == "pcell") &&
+          !f.exists(_.isInstanceOf[DynamicPruning])),
+        s"index scan without a pcell partition filter:\n$s")
+    }
   }
 
   test("entry returns rows") {

@@ -66,7 +66,7 @@ class TopoServerSpec extends SparkTestBase {
 
   test("curation loop, topo/coverage/geometry/relation, export, restart persistence") {
     val (polys, water) = fixtureWorld()
-    val dataDir = Files.createTempDirectory("topo_server")
+    val dataDir = tempDir("topo_server")
     // a state file's inode: an atomic rewrite (temp file + rename) gives
     // the name a new one, so an unchanged key means the file was not written
     def fileKey(name: String): AnyRef = Files.readAttributes(dataDir.resolve(name),
@@ -118,7 +118,7 @@ class TopoServerSpec extends SparkTestBase {
       val direct = Export.layer(polys, water, "countries", Seq(100L),
         simplifyDigits = 3, quantize = 1e6, pointLimit = Int.MaxValue,
         relations = Some(Fixtures.relationsDf(spark)), languages = Seq("nl", "en"))
-      val tmp = Files.createTempDirectory("topo_direct")
+      val tmp = tempDir("topo_direct")
       val directDoc = try {
         val files = Export.writeSlices(direct, tmp.toString)
         new String(Files.readAllBytes(Path.of(files.head)), UTF_8)
@@ -234,7 +234,7 @@ class TopoServerSpec extends SparkTestBase {
       .translationInstance(1.0, 0.0).transform(graft.geom.Jts.fromWkb(row.getAs[Array[Byte]]("wkb"))))
     val dup = extraPolygon(polys, like = 100L, relId = 100L, name = "country_brussels", wkb = shifted)
     val server = new TopoServer(spark, dup, water, Seq(TopoServer.LayerConfig("countries", 3)),
-      Files.createTempDirectory("topo_server_dup")).start()
+      tempDir("topo_server_dup")).start()
     try {
       val port = server.boundPort
       // the same message as matchesIndexed's (EdgeCaseSpec), never one of
@@ -267,7 +267,7 @@ class TopoServerSpec extends SparkTestBase {
 
       val server = new TopoServer(spark, polys, water,
         Seq("countries", "cities").map(TopoServer.LayerConfig(_, 3)),
-        Files.createTempDirectory("topo_server_rules"), rules = rules).start()
+        tempDir("topo_server_rules"), rules = rules).start()
       try {
         val port = server.boundPort
         assert(post(port, "/api/missing", coordsJson(Seq(brussels, tokyo))).statusCode() == 200)
@@ -291,7 +291,7 @@ class TopoServerSpec extends SparkTestBase {
       wkb = octagonWkb(4.35, 50.85, 1.0))
     val server = new TopoServer(spark, polys, water,
       Seq("countries", "cities").map(TopoServer.LayerConfig(_, 3)),
-      Files.createTempDirectory("topo_server_overlap")).start()
+      tempDir("topo_server_overlap")).start()
     try {
       val port = server.boundPort
       assert(post(port, "/api/add", """{"countries":150}""").statusCode() == 200)
@@ -311,7 +311,7 @@ class TopoServerSpec extends SparkTestBase {
   test("/api/metrics counts requests, LRU hits and the index sizes") {
     val (polys, water) = fixtureWorld()
     val server = new TopoServer(spark, polys, water, Seq(TopoServer.LayerConfig("countries", 3)),
-      Files.createTempDirectory("topo_server_metrics")).start()
+      tempDir("topo_server_metrics")).start()
     try {
       val port = server.boundPort
       assert(get(port, "/api/status").statusCode() == 200)
@@ -380,7 +380,7 @@ class TopoServerSpec extends SparkTestBase {
   test("warm read routes launch no Spark job") {
     val (polys, water) = fixtureWorld()
     val server = new TopoServer(spark, polys, water, threeLayers,
-      Files.createTempDirectory("topo_server_jobs")).start()
+      tempDir("topo_server_jobs")).start()
     val jobs = new AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -444,7 +444,7 @@ class TopoServerSpec extends SparkTestBase {
     assert(expectedMissing.nonEmpty && expectedMissing.size < coords.size)
     assert(suggestions(Nil).values.map(_.size).sum > expectedSugg.values.map(_.size).sum)
 
-    val dataDir = Files.createTempDirectory("topo_server_diff")
+    val dataDir = tempDir("topo_server_diff")
     val server = new TopoServer(spark, polys, water, threeLayers, dataDir, rules = rules).start()
     try {
       val port = server.boundPort

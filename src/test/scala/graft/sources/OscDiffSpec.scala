@@ -8,7 +8,7 @@ class OscDiffSpec extends SparkTestBase {
   import spark.implicits._
 
   private def writeFixture(): String = {
-    val dir = Files.createTempDirectory("osc_spec").toString
+    val dir = tempDir("osc_spec").toString
     Fixtures.oscChanges.foreach { case (seq, cs) => OscDiff.write(dir, seq, cs) }
     dir
   }
@@ -83,7 +83,7 @@ class OscDiffSpec extends SparkTestBase {
   }
 
   test("missing sequence directory fails loudly") {
-    val empty = Files.createTempDirectory("osc_empty").toString
+    val empty = tempDir("osc_empty").toString
     val err = intercept[IllegalArgumentException](OscDiff.nodes(spark, empty))
     assert(err.getMessage.contains("no .osc.gz"))
   }

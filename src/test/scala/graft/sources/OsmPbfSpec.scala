@@ -14,7 +14,7 @@ class OsmPbfSpec extends SparkTestBase {
   private lazy val (fnodes, fways, frels, _) = Fixtures.osm
 
   private def writeFixture(blockSize: Int = 64): String = {
-    val path = Files.createTempDirectory("pbf_spec").resolve("fixture.osm.pbf").toString
+    val path = tempDir("pbf_spec").resolve("fixture.osm.pbf").toString
     OsmPbf.write(
       fnodes.map(n => (n.id, n.lat, n.lon)),
       fways.map(w => (w.id, w.refs)),
@@ -168,7 +168,7 @@ class OsmPbfSpec extends SparkTestBase {
   }
 
   test("unknown required feature fails loudly; raw (uncompressed) blobs read fine") {
-    val dir = Files.createTempDirectory("pbf_bad")
+    val dir = tempDir("pbf_bad")
     // hand-build: OSMHeader requiring an unsupported feature
     val headerBlock = tmsg { d =>
       tlenDelim(d, 4, "HistoricalInformation".getBytes(UTF_8))
@@ -202,7 +202,7 @@ class OsmPbfSpec extends SparkTestBase {
     val roles = Seq("", "outer", "inner", "rôle", "役割", "stop;x")
     val tagKeys = Seq("name", "name:nl", "été", "漢字", "a b")
     for (trial <- 0 until 5; granularity <- Seq(1, 100)) {
-      val dir = Files.createTempDirectory(s"pbf_prop_$trial")
+      val dir = tempDir(s"pbf_prop_$trial")
       val path = dir.resolve("t.osm.pbf").toString
       def id(): Long = rnd.nextLong() % (1L << 40) // negatives too: zigzag both signs
       val ns = Seq.fill(1 + rnd.nextInt(40))(
@@ -262,7 +262,7 @@ class OsmPbfSpec extends SparkTestBase {
       tvarint(h, (3 << 3) | 0); tvarint(h, blob.length.toLong)
     }
     d.writeInt(header.length); d.write(header); d.write(blob)
-    val path = Files.createTempDirectory("pbf_unpacked").resolve("u.osm.pbf")
+    val path = tempDir("pbf_unpacked").resolve("u.osm.pbf")
     Files.write(path, bos.toByteArray)
     val got = OsmPbf.ways(spark, path.toString).as[(Long, Seq[Long])].collect()
     assert(got.toSeq == Seq((77L, Seq(100L, 140L, 115L))))
@@ -281,7 +281,7 @@ class OsmPbfSpec extends SparkTestBase {
       tvarint(h, (3 << 3) | 0); tvarint(h, badBlob.length.toLong)
     }
     d.writeInt(header.length); d.write(header); d.write(badBlob)
-    val path = Files.createTempDirectory("pbf_badlen").resolve("b.osm.pbf")
+    val path = tempDir("pbf_badlen").resolve("b.osm.pbf")
     Files.write(path, bos.toByteArray)
     val err = intercept[Exception](OsmPbf.nodes(spark, path.toString).collect())
     def chain(t: Throwable): Seq[String] =
@@ -305,7 +305,7 @@ class OsmPbfSpec extends SparkTestBase {
       tvarint(h, (3 << 3) | 0); tvarint(h, badBlob.length.toLong)
     }
     d.writeInt(header.length); d.write(header); d.write(badBlob)
-    val path = Files.createTempDirectory("pbf_hostile").resolve("h.osm.pbf")
+    val path = tempDir("pbf_hostile").resolve("h.osm.pbf")
     Files.write(path, bos.toByteArray)
     val err = intercept[Exception](OsmPbf.nodes(spark, path.toString).collect())
     def chain(t: Throwable): Seq[String] =
@@ -315,7 +315,7 @@ class OsmPbfSpec extends SparkTestBase {
   }
 
   test("corrupt files fail loudly: oversized header length, not an allocation") {
-    val dir = Files.createTempDirectory("pbf_corrupt")
+    val dir = tempDir("pbf_corrupt")
     // a 2 GB BlobHeader length — must hit the spec guard, not OOM
     val bad = dir.resolve("bad.osm.pbf")
     Files.write(bad, Array[Byte](0x7f, -1, -1, -1, 0, 0, 0, 0))
@@ -324,7 +324,7 @@ class OsmPbfSpec extends SparkTestBase {
   }
 
   test("empty pbf: header-only file, zero rows from all three readers") {
-    val path = Files.createTempDirectory("pbf_empty").resolve("e.osm.pbf").toString
+    val path = tempDir("pbf_empty").resolve("e.osm.pbf").toString
     OsmPbf.write(Nil, Nil, Nil, path)
     assert(OsmPbf.blobIndex(path).map(_.typ) == Seq("OSMHeader"))
     assert(OsmPbf.nodes(spark, path).count() == 0)
@@ -333,7 +333,7 @@ class OsmPbfSpec extends SparkTestBase {
   }
 
   test("non-grid coordinates quantize to 1e-7 resolution, closed form") {
-    val path = Files.createTempDirectory("pbf_q").resolve("q.osm.pbf").toString
+    val path = tempDir("pbf_q").resolve("q.osm.pbf").toString
     val odd = Seq((1L, 51.123456789, 3.987654321987), (2L, -0.000000049, 179.99999996))
     OsmPbf.write(odd, Nil, Nil, path)
     val back = OsmPbf.nodes(spark, path).as[(Long, Double, Double)].collect().sortBy(_._1)

@@ -14,7 +14,7 @@ class ShapefileSpec extends SparkTestBase {
     Fixtures.osm._4.map(_.rings) ++ Fixtures.dpRects.map { case (_, ring) => Seq(ring: Seq[(Double, Double)]) }
 
   private def tmpBase(name: String): String = {
-    val dir = Files.createTempDirectory("shp_spec").toString
+    val dir = tempDir("shp_spec").toString
     s"$dir/$name"
   }
 

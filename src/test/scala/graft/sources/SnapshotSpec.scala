@@ -9,7 +9,7 @@ import graft.SparkTestBase
 class SnapshotSpec extends SparkTestBase {
   import spark.implicits._
 
-  def freshBase(): String = Files.createTempDirectory("graft_snap").toString
+  def freshBase(): String = tempDir("graft_snap").toString
 
   def docs() = Fixtures.documents(spark, sf0001).select("doc_id", "lang", "text")
 
@@ -196,7 +196,7 @@ class SnapshotSpec extends SparkTestBase {
     SnapshotTable.commit(docs(), base, "documents", "lang")
 
     // two sequence-numbered change batches (the .osc.gz analogue)
-    val changeDir = Files.createTempDirectory("graft_changes")
+    val changeDir = tempDir("graft_changes")
     Seq((0L, "upsert", 5000L, "en", "change batch zero"))
       .toDF("seq", "op", "doc_id", "lang", "text")
       .write.parquet(changeDir.resolve("batch-0").toString)
@@ -211,7 +211,7 @@ class SnapshotSpec extends SparkTestBase {
 
     val query = stream.writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", Files.createTempDirectory("graft_ckpt").toString)
+      .option("checkpointLocation", tempDir("graft_ckpt").toString)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         batch.select("seq").distinct().orderBy("seq").collect().map(_.getLong(0)).foreach { s =>
           val b = batch.filter(col("seq") === s)

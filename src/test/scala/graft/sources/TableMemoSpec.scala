@@ -16,7 +16,7 @@ class TableMemoSpec extends SparkTestBase {
 
   test("rewriting the table invalidates the memo (content stamp)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo_spec").toString
+    val dir = tempDir("graft_memo_spec").toString
     val path = s"$dir/t.parquet"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.mode("overwrite").parquet(path)
     val first = Fixtures.readParquet(spark, path)
@@ -33,7 +33,7 @@ class TableMemoSpec extends SparkTestBase {
     import spark.implicits._
     // Knn.writeIndexed layout: only pcell=N/ directories at the top level,
     // so a rewrite into the same partitions changes nothing one level deep
-    val path = java.nio.file.Files.createTempDirectory("graft_memo_hive").toString + "/idx"
+    val path = tempDir("graft_memo_hive").toString + "/idx"
     def pages(n: Int) = (0 until n).map(i => (s"u$i", 4.35 + i * 1e-4, 50.85)).toDF("url", "lon", "lat")
     graft.operators.Knn.writeIndexed(pages(3), path)
     val first = Fixtures.readParquet(spark, path)

@@ -21,9 +21,9 @@ class OscStreamSpec extends SparkTestBase {
   import spark.implicits._
 
   test("kill mid-stream after merge, resume: exactly-once application, rows equal single-shot") {
-    val oscDir = Files.createTempDirectory("graft_oscstream_src").toString
-    val base = Files.createTempDirectory("graft_oscstream_snap").toString
-    val ckpt = Files.createTempDirectory("graft_oscstream_ckpt").toString
+    val oscDir = tempDir("graft_oscstream_src").toString
+    val base = tempDir("graft_oscstream_snap").toString
+    val ckpt = tempDir("graft_oscstream_ckpt").toString
     val partE = pmod(col("id"), lit(3)).cast("string")
 
     // base snapshot: nodes 1..20 at (i, i), seq 0

@@ -23,7 +23,7 @@ class StreamPipSpec extends SparkTestBase {
 
     val pages = Fixtures.pages(spark, sf0001)
       .select("url", "warc_ts", "lang", "lon", "lat")
-    val src = Files.createTempDirectory("graft_streampip").toString
+    val src = tempDir("graft_streampip").toString
     pages.write.mode("overwrite").parquet(src)
 
     val stream = spark.readStream
@@ -41,7 +41,7 @@ class StreamPipSpec extends SparkTestBase {
       .outputMode("append")
       .format("memory")
       .queryName("stream_pip")
-      .option("checkpointLocation", Files.createTempDirectory("graft_streampip_ckpt").toString)
+      .option("checkpointLocation", tempDir("graft_streampip_ckpt").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()

@@ -17,7 +17,7 @@ class StreamingSpec extends SparkTestBase {
   import spark.implicits._
 
   test("windowed count with watermark over file stream equals batch computation") {
-    val src = Files.createTempDirectory("graft_stream").toString
+    val src = tempDir("graft_stream").toString
     val events = spark.read.parquet(s"$sf0001/events.parquet")
     events.write.mode("overwrite").parquet(src)
 
@@ -34,7 +34,7 @@ class StreamingSpec extends SparkTestBase {
       .outputMode("append")
       .format("memory")
       .queryName("win_agg")
-      .option("checkpointLocation", Files.createTempDirectory("graft_stream_ckpt").toString)
+      .option("checkpointLocation", tempDir("graft_stream_ckpt").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -57,7 +57,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("stateful dedup-by-key with flatMapGroupsWithState emits first occurrence only") {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val src = Files.createTempDirectory("graft_stream2").toString
+    val src = tempDir("graft_stream2").toString
     val events = spark.read.parquet(s"$sf0001/events.parquet")
     events.write.mode("overwrite").parquet(src)
 
@@ -74,7 +74,7 @@ class StreamingSpec extends SparkTestBase {
 
     val q = firstSeen.writeStream.outputMode("append").format("memory")
       .queryName("first_seen")
-      .option("checkpointLocation", Files.createTempDirectory("graft_stream2_ckpt").toString)
+      .option("checkpointLocation", tempDir("graft_stream2_ckpt").toString)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
 
@@ -92,7 +92,7 @@ class StreamingSpec extends SparkTestBase {
     // further data — the part AvailableNow cannot exercise. Wall-clock
     // dependent, so the assertion polls with a generous deadline instead
     // of pinning batch boundaries.
-    val src = Files.createTempDirectory("graft_stream4")
+    val src = tempDir("graft_stream4")
     Seq((1L, 10L), (1L, 20L), (2L, 30L)).toDF("user_id", "epoch")
       .coalesce(1).write.parquet(src.resolve("f1").toString)
 
@@ -117,7 +117,7 @@ class StreamingSpec extends SparkTestBase {
     val q = sessions.toDF("user_id", "n", "closed")
       .writeStream.outputMode("update").format("memory")
       .queryName("pt_sessions")
-      .option("checkpointLocation", Files.createTempDirectory("graft_stream4_ckpt").toString)
+      .option("checkpointLocation", tempDir("graft_stream4_ckpt").toString)
       .trigger(Trigger.ProcessingTime("250 milliseconds"))
       .start()
     try {
@@ -136,7 +136,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("session gap via mapGroupsWithState event-time timeout closes idle sessions") {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val src = Files.createTempDirectory("graft_stream3")
+    val src = tempDir("graft_stream3")
     // three files -> three micro-batches (maxFilesPerTrigger=1). The
     // watermark advances to the previous batch's max event time, so the
     // far-future "flush" events in files 2 and 3 drive the timeout for the
@@ -179,7 +179,7 @@ class StreamingSpec extends SparkTestBase {
     val q = sessions.toDF("user_id", "n", "closed")
       .writeStream.outputMode("update").format("memory")
       .queryName("sessions")
-      .option("checkpointLocation", Files.createTempDirectory("graft_stream3_ckpt").toString)
+      .option("checkpointLocation", tempDir("graft_stream3_ckpt").toString)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
 
