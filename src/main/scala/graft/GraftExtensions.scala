@@ -23,7 +23,9 @@ import graft.plans.PipJoinRewrite
   * broadcast-nested-loop join. It also adds the planner Strategy
   * [[org.apache.spark.sql.graft.SketchPreAggregation]], which plans an
   * `approx_count_distinct` whose argument is marked low-cardinality over a
-  * codegen'd pre-aggregate.
+  * codegen'd pre-aggregate keyed by the argument's HLL++ hash, with the
+  * sketch as one binary field of its non-zero register words
+  * ([[org.apache.spark.sql.graft.SparseHll]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -41,15 +41,19 @@ object Tiling {
     * reduce the shuffle to one sketch per (tile, map task).
     *
     * `lang` is marked low-cardinality, so the aggregate plans through
-    * [[org.apache.spark.sql.graft.SketchPreAggregation]]:
+    * [[org.apache.spark.sql.graft.SketchPreAggregation]], over `hash`,
+    * the 64-bit hash HLL++ takes of `lang` (null for a null `lang`):
     *
-    *  1. a codegen'd `HashAggregate(keys z, tx, ty, lang: partial_count)`
+    *  1. a codegen'd `HashAggregate(keys z, tx, ty, hash: partial_count)`
     *     in the scan's whole-stage stage;
-    *  2. `HashAggregate(keys z, tx, ty: merge_count, partial HLL(lang))`,
-    *     interpreted, over at most tiles × languages rows per task;
+    *  2. `ObjectHashAggregate(keys z, tx, ty: merge_count, partial
+    *     sketch(hash))`, over at most tiles × languages rows per task;
     *  3. the one `Exchange hashpartitioning(z, tx, ty)` and the final
-    *     aggregate.
+    *     `ObjectHashAggregate`.
     *
+    * The sketch ([[org.apache.spark.sql.graft.SparseHll]]) is HLL++'s
+    * registers, shuffled as the few non-zero register words of a tile's
+    * languages in one binary field, not HLL++'s 52 `long` fields.
     * Unmarked, every input row would go through the interpreted HLL
     * partial. Rows are bit-identical to the unmarked aggregate (a
     * duplicate value changes no HLL register; counts sum). The mark is an

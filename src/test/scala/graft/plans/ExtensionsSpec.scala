@@ -225,7 +225,10 @@ class ExtensionsSpec extends SparkTestBase {
       val sketch = s2.range(0, 100).selectExpr("id % 3 AS g", "id % 5 AS v").groupBy("g")
         .agg(approx_count_distinct(SketchPreAggregation.lowCardinality(col("v"))))
       val sketchPlan = sketch.queryExecution.executedPlan.toString
-      assert("HashAggregate\\(".r.findAllIn(sketchPlan).length == 3, sketchPlan)
+      // a codegen'd partial, then the sketch partial and the final as
+      // ObjectHashAggregates over the one-field sparse sketch
+      assert("(?<!Object)HashAggregate\\(".r.findAllIn(sketchPlan).length == 1, sketchPlan)
+      assert("ObjectHashAggregate\\(".r.findAllIn(sketchPlan).length == 2, sketchPlan)
     } finally {
       org.apache.spark.graft.TestBridge.liveConf(old.sparkContext)
         .remove("spark.sql.extensions")
