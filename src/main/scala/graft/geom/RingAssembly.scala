@@ -14,8 +14,9 @@ import scala.collection.mutable.ArrayBuffer
   * in RingAssemblySpec.
   *
   * This is per-relation local work (a relation has at most a few thousand
-  * member ways), so in the Spark pipeline it runs inside
-  * `groupByKey(relId).mapGroups` — no distributed fixpoint needed.
+  * member ways), so in the Spark pipeline it runs inside the per-relation
+  * assembly after `Ingest.polygons`' one `relId` aggregation — no
+  * distributed fixpoint needed.
   */
 object RingAssembly {
 

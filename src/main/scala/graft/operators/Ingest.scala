@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GeomExpressions._
@@ -12,10 +12,14 @@ import graft.geom.{Algorithms, Jts, PolygonAssembly, RingAssembly}
   * (/root/reference/osmtopo/import.go:61-124, storage.go:128-201,
   * env.go:251-352):
   *
-  *  - the PBF passes' needed-id bitmap trie becomes two left-semi joins;
-  *  - relation acceptance + tag whitelist are pushed-down filters;
-  *  - ring assembly / polygon assembly are per-relation typed aggregations
-  *    (`groupByKey(relId).flatMapGroups`) — per-key local, bounded state;
+  *  - relation acceptance, the tag whitelist and the layer are computed
+  *    before any join, so a relation outside every layer never reaches one;
+  *  - the PBF passes' needed-id bitmap trie becomes the member → way inner
+  *    join and the ref → node left join: only referenced rows survive them;
+  *  - a relation's geometry is built in one function, as the reference's
+  *    `ToGeometry` builds it (storage.go:128-201): the relation's node refs,
+  *    with their coordinates, are collected by one `relId` aggregation, and
+  *    ring assembly, polygon assembly and `buffer(0)` run per relation;
   *  - the segment-tree build becomes a materialized `cell_covers` table
   *    keyed by cover cell id (ranges derivable from the id itself).
   */
@@ -39,8 +43,11 @@ object Ingest {
       .withColumn("tags", expr(
         "map_filter(tags, (k, v) -> k = 'admin_level' OR k = 'name' OR k LIKE 'name:%' OR k = 'natural')"))
 
-  case class ChainRow(relId: Long, pos: Int, role: String, refs: Seq[Long])
-  case class Chain(relId: Long, role: String, chainIdx: Int, refs: Seq[Long])
+  /** One node ref of a relation's way member: the member position `pos`,
+    * its role, the way's ref count `n`, the ref's position `refPos` in the
+    * way, and the node's coordinates (None when no node row matched).
+    */
+  private type Ref = (Int, String, Int, Int, Long, Option[Double], Option[Double])
 
   /** Full assembly: returns `polygons(relId, adminLevel, layer, name, wkb,
     * bbox)`. Relations whose geometry fails to assemble (unclosed rings,
@@ -51,109 +58,69 @@ object Ingest {
                relations: DataFrame, blacklist: Seq[Long]): DataFrame = {
     import spark.implicits._
 
-    val rels = acceptedRelations(relations, blacklist)
-
-    // G1: member role split — way members with role outer/inner, in order
-    val memberWays = rels
-      .select(col("id").as("relId"), posexplode(col("members")).as(Seq("pos", "m")))
-      .filter(col("m.type") === 1 && col("m.role").isin("outer", "inner"))
-      .select(col("relId"), col("pos"), col("m.role").as("role"), col("m.id").as("wayId"))
-
-    // S3: the needed-way restriction IS this inner join — only ways that
-    // are members of an accepted relation survive it, and missing ways
-    // drop naturally (storage.go:138-141). Round 8 removed a separate
-    // distinct + left-semi pre-pass that shuffled the way table a second
-    // time for rows this join filters identically (guide §2.4: remove
-    // shuffles outright — a semi-join feeding the same inner join is
-    // redundant work at every scale).
-    val relWays = memberWays
-      .join(ways.withColumnRenamed("id", "wayId"), Seq("wayId"))
-      .select(col("relId"), col("pos"), col("role"), col("refs"))
-      .as[ChainRow]
-
-    // G2: ring assembly per relation/role in member order (fixpoint merge)
-    val chains: Dataset[Chain] = relWays
-      .groupByKey(_.relId)
-      .flatMapGroups { (relId, it) =>
-        val rows = it.toSeq.sortBy(_.pos)
-        def merged(role: String): Seq[Chain] =
-          RingAssembly.reduce(rows.filter(_.role == role).map(_.refs))
-            .zipWithIndex.map { case (c, i) => Chain(relId, role, i, c) }
-        merged("outer") ++ merged("inner")
-      }
-
-    // S3 for nodes, same shape as the ways case above: the inner join
-    // below keeps exactly the needed nodes — the former distinct +
-    // left-semi pre-pass shuffled the (planet-dominating) node table
-    // twice for the same filtering.
-    val chainRefs = chains
-      .select(col("relId"), col("role"), col("chainIdx"), size(col("refs")).as("expected"),
-        posexplode(col("refs")).as(Seq("refPos", "nodeId")))
-
-    // per-relation chain count BEFORE the node join: a chain whose nodes
-    // are ALL missing produces no joined row at all, so the
-    // actual-vs-expected length guard below can never see it — the count
-    // comparison catches whole-chain loss (same storage.go:194-196 abort)
-    val chainCounts = chains.groupBy("relId").agg(count(lit(1)).as("nChains"))
-
-    // G3: node-ref expansion — join coords, reassemble ordered chains.
-    // ONE relId exchange (the explicit repartition) serves the per-chain
-    // aggregation (HashPartitioning(relId) satisfies the (relId, role,
-    // chainIdx, expected) clustering — subset rule), survives the count
-    // join, and feeds the final per-relation assembly below with no
-    // further shuffle (guide §2.4: operations keyed the same way share
-    // one exchange). Was: two extra exchanges — the 4-key agg shuffle
-    // and the assembly's opaque groupByKey shuffle.
-    val chainCoords = chainRefs
-      .join(nodes.withColumnRenamed("id", "nodeId"), Seq("nodeId"))
-      .repartition(col("relId"))
-      .groupBy("relId", "role", "chainIdx", "expected")
-      .agg(sort_array(collect_list(struct(
-        col("refPos").as("_1"), col("lon").as("_2"), col("lat").as("_3")))).as("coords"))
-      .join(chainCounts, Seq("relId"))
-
-    // G4+G5: polygon assembly + buffer(0) per relation; any chain with a
-    // missing node (actual < expected) — or a chain missing ENTIRELY —
-    // aborts the whole relation (storage.go:194-196 error propagates out
-    // of ToGeometry). Column-keyed groupBy (not groupByKey with a lambda
-    // key): the planner sees relId and reuses the exchange above.
-    val assembled = chainCoords
-      .groupBy("relId")
-      .agg(collect_list(struct(col("role"), col("chainIdx"), col("expected"),
-        col("coords"), col("nChains"))).as("chains"))
-      .as[(Long, Seq[(String, Int, Int, Seq[(Int, Double, Double)], Long)])]
-      .flatMap { case (relId, chainRows) =>
-        val rows = chainRows.sortBy(r => (r._1, r._2))
-        if (rows.exists(r => r._4.length != r._3) ||
-            rows.length != rows.head._5) Iterator.empty
-        else {
-          def rings(role: String): Seq[IndexedSeq[(Double, Double)]] =
-            rows.filter(_._1 == role)
-              .map(_._4.map { case (_, lon, lat) => (lon, lat) }.toIndexedSeq)
-          PolygonAssembly.makePolygons(rings("outer"), rings("inner")) match {
-            case Some(g) if !g.isEmpty =>
-              try Iterator.single((relId, Jts.toWkb(g.buffer(0))))
-              catch { case _: Exception => Iterator.empty }
-            case _ => Iterator.empty
-          }
-        }
-      }
-      .toDF("relId", "wkb")
-
-    // P3-style projection: admin level, layer, display name
+    // P3: admin level, layer and display name, before any join
     val layerCase = layerAdminLevels
       .flatMap { case (layer, lvls) => lvls.map(l => s"WHEN $l THEN '$layer'") }
       .mkString("CASE adminLevel ", " ", " ELSE NULL END")
-    assembled
-      .join(rels.select(col("id").as("relId"),
+    val rels = acceptedRelations(relations, blacklist)
+      .select(col("id").as("relId"),
         coalesce(element_at(col("tags"), "admin_level").cast("int"), lit(0)).as("adminLevel"),
         element_at(col("tags"), "name").as("name"),
-        element_at(col("tags"), "natural").as("natural")), Seq("relId"))
+        element_at(col("tags"), "natural").as("natural"), col("members"))
       .withColumn("layer", when(col("natural") === "water", lit("water"))
         .otherwise(expr(layerCase)))
       .filter(col("layer").isNotNull)
+    val keys = Seq("relId", "adminLevel", "layer", "name").map(col)
+
+    // G1: way members with role outer/inner, with their member position.
+    // S3: the inner join keeps only member ways; a missing way drops out
+    // (storage.go:138-141).
+    val memberWays = rels
+      .select(keys :+ posexplode(col("members")).as(Seq("pos", "m")): _*)
+      .filter(col("m.type") === 1 && col("m.role").isin("outer", "inner"))
+      .select(keys ++ Seq(col("pos"), col("m.role").as("role"), col("m.id").as("wayId")): _*)
+      .join(ways.withColumnRenamed("id", "wayId"), Seq("wayId"))
+
+    // G3: node refs in way order, left-joined with their coordinates, so
+    // a missing node stays visible as a row without coordinates
+    val refs = memberWays
+      .select(keys ++ Seq(col("pos"), col("role"), size(col("refs")).as("n"),
+        posexplode(col("refs")).as(Seq("refPos", "nodeId"))): _*)
+      .join(nodes.withColumnRenamed("id", "nodeId"), Seq("nodeId"), "left")
+
+    // G2+G4+G5: one relId aggregation, then the relation's geometry in
+    // one function
+    refs
+      .groupBy(keys: _*)
+      .agg(collect_list(struct(col("pos"), col("role"), col("n"), col("refPos"),
+        col("nodeId"), col("lon"), col("lat"))).as("refs"))
+      .as[(Long, Int, String, String, Seq[Ref])]
+      .flatMap { case (relId, adminLevel, layer, name, rs) =>
+        assemble(rs).map(wkb => (relId, adminLevel, layer, name, wkb))
+      }
+      .toDF("relId", "adminLevel", "layer", "name", "wkb")
       .withColumn("bbox", st_envelope(col("wkb")))
-      .select("relId", "adminLevel", "layer", "name", "wkb", "bbox")
+  }
+
+  /** One relation's WKB from its node refs, or None. A ref without a node,
+    * or a way whose row count is not its ref count (a missing or a
+    * repeated node row), aborts the relation (storage.go:194-196). Ways
+    * merge into rings per role in member order ([[RingAssembly.reduce]]).
+    */
+  private def assemble(refs: Seq[Ref]): Option[Array[Byte]] = {
+    val byWay = refs.groupBy(_._1)
+    if (refs.exists(_._6.isEmpty) || byWay.exists { case (_, rs) => rs.length != rs.head._3 }) None
+    else {
+      val coords = refs.iterator.map(r => r._5 -> (r._6.get, r._7.get)).toMap
+      val ordered = byWay.toSeq.sortBy(_._1).map { case (_, rs) => (rs.head._2, rs.sortBy(_._4).map(_._5)) }
+      def rings(role: String): Seq[IndexedSeq[(Double, Double)]] =
+        RingAssembly.reduce(ordered.filter(_._1 == role).map(_._2)).map(_.map(coords).toIndexedSeq)
+      PolygonAssembly.makePolygons(rings("outer"), rings("inner")) match {
+        case Some(g) if !g.isEmpty =>
+          try Some(Jts.toWkb(g.buffer(0))) catch { case _: Exception => None }
+        case _ => None
+      }
+    }
   }
 
   /** J1/J3: the materialized cover table. Ranges are derived from the cell

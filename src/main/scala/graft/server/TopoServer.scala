@@ -2,20 +2,21 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
 import java.util.concurrent.Executors
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.JsonUtil
+import graft.functions.GeomExpressions.st_cell_cover
 import graft.geom.Jts
-import graft.operators.{Export, ExportArchive, Ingest, PipIndex, PipJoin}
+import graft.operators.{Export, ExportArchive, PipIndex, PipJoin}
 
 /** The reference's interactive curation/serving surface
   * (`osmtopo/env.go:140-179` route table, `bin/osmtopo/cmd/cmd_server.go:
@@ -30,7 +31,7 @@ import graft.operators.{Export, ExportArchive, Ingest, PipIndex, PipJoin}
   * reference answers them (`lookup.go:156-174`, `env.go:657-715`): from
   * an in-memory index, with no Spark job per request. The snapshot is
   * collected once per server, on first use: the polygons and their
-  * [[Ingest.cellCovers]], a full [[PipIndex]] over them, and per-relId
+  * [[graft.operators.Ingest.cellCovers]], a full [[PipIndex]] over them, and per-relId
   * maps of polygon and cover cells. Lookups run [[PipIndex.hits]] on that
   * one index, the kernel `PipMatchSpec` pins equal to the Catalyst PIP
   * join; a curated match keeps the hits in the curated sets, and match
@@ -82,18 +83,28 @@ final class TopoServer(
     } else Map.empty
   }
 
-  // ---- missing worklist (dataDir/missing.json: [{"lat":…,"lon":…}]) ----
+  // ---- missing worklist (dataDir/missing.jsonl, an append-only journal) ----
   // Keyed by MissingCoord.key in import order: the head is the oldest
   // entry, and a coordinate is listed once, as in the reference's
-  // key-value missing store. Updated in place under `lock`.
+  // key-value missing store. Updated in place under `lock`. The journal
+  // holds one `{"lat":…,"lon":…}` line per added coordinate and one
+  // `{"lat":…,"lon":…,"drop":true}` line per removed one; start-up
+  // replays it, ignoring a torn last line (a crash mid-append).
+  private val journal = dataDir.resolve("missing.jsonl")
   private val missing = mutable.LinkedHashMap.empty[String, MissingCoord]
+  private var journalLines = 0
   locally {
-    val f = dataDir.resolve("missing.json")
-    if (Files.exists(f))
-      mapper.readTree(Files.readAllBytes(f)).elements().asScala.foreach { n =>
-        val c = MissingCoord(n.get("lat").asDouble(), n.get("lon").asDouble())
-        missing.getOrElseUpdate(c.key, c)
+    if (Files.exists(journal)) {
+      val text = new String(Files.readAllBytes(journal), UTF_8)
+      val lines = text.split("\n", -1).dropRight(1) // the piece after the last newline is torn
+      lines.foreach { line =>
+        val n = mapper.readTree(line)
+        val c = MissingCoord.of(n)
+        if (n.has("drop")) missing.remove(c.key) else missing.getOrElseUpdate(c.key, c)
       }
+      journalLines = lines.length
+      if (!text.isEmpty && !text.endsWith("\n")) compactMissing()
+    }
   }
 
   // Each route rewrites only the state file it changed; callers hold `lock`.
@@ -102,13 +113,27 @@ final class TopoServer(
       case (l, ids) => s"${JsonUtil.quote(l)}:${ids.mkString("[", ",", "]")}"
     }.mkString("{", ",", "}"))
 
-  private def persistMissing(): Unit =
-    writeAtomically(dataDir.resolve("missing.json"), missing.valuesIterator.map(c =>
-      s"""{"lat":${c.lat.toString},"lon":${c.lon.toString}}""").mkString("[", ",", "]"))
+  private def record(c: MissingCoord, drop: Boolean): String =
+    s"""{"lat":${c.lat.toString},"lon":${c.lon.toString}${if (drop) ""","drop":true""" else ""}}\n"""
 
-  /** Drops `c` from the worklist; rewrites missing.json if it was listed. */
+  /** Appends one record per changed coordinate, then rewrites the journal
+    * as the live worklist once it holds more than 2 × live + 64 records,
+    * so a write costs O(batch), amortized. */
+  private def journalMissing(cs: Seq[MissingCoord], drop: Boolean): Unit = {
+    Files.write(journal, cs.map(record(_, drop)).mkString.getBytes(UTF_8),
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    journalLines += cs.length
+    if (journalLines > 2 * missing.size + 64) compactMissing()
+  }
+
+  private def compactMissing(): Unit = {
+    writeAtomically(journal, missing.valuesIterator.map(record(_, drop = false)).mkString)
+    journalLines = missing.size
+  }
+
+  /** Drops `c` from the worklist; journals the drop if it was listed. */
   private def dropMissing(c: MissingCoord): Unit = lock.synchronized {
-    if (missing.remove(c.key).isDefined) persistMissing()
+    if (missing.remove(c.key).isDefined) journalMissing(Seq(c), drop = true)
   }
 
   // ---- rendered-topology LRU (env.go topoCache) ----
@@ -213,9 +238,9 @@ final class TopoServer(
     val layerIds = layers.map(_.id).toSet
     val incomplete = coords.filterNot(c => layerIds.subsetOf(curatedMatch(d, cur, hitsAt(d, c)).keySet))
     lock.synchronized {
-      val before = missing.size
-      incomplete.foreach(c => missing.getOrElseUpdate(c.key, c))
-      if (missing.size != before) persistMissing()
+      val added = incomplete.filterNot(c => missing.contains(c.key)).distinctBy(_.key)
+      added.foreach(c => missing(c.key) = c)
+      if (added.nonEmpty) journalMissing(added, drop = false)
       missing.size
     }
   }
@@ -366,7 +391,7 @@ final class TopoServer(
     else {
       val root = mapper.readTree(ex.getRequestBody)
       val coords = root.elements().asScala
-        .map(n => MissingCoord(n.get("lat").asDouble(), n.get("lon").asDouble())).toSeq
+        .map(MissingCoord.of).toSeq
       val total = importMissing(coords)
       respond(ex, 200, s"""{"missing":$total}""")
     }
@@ -446,9 +471,7 @@ final class TopoServer(
   handle("/api/delete") { ex =>
     if (ex.getRequestMethod != "POST") respond(ex, 400, "Should send a POST request")
     else {
-      val n = mapper.readTree(ex.getRequestBody)
-      val c = MissingCoord(n.get("lat").asDouble(), n.get("lon").asDouble())
-      dropMissing(c)
+      dropMissing(MissingCoord.of(mapper.readTree(ex.getRequestBody)))
       respond(ex, 200, "")
     }
   }
@@ -493,6 +516,9 @@ object TopoServer {
   case class MissingCoord(lat: Double, lon: Double) {
     def key: String = s"$lat,$lon"
   }
+  object MissingCoord {
+    def of(n: JsonNode): MissingCoord = MissingCoord(n.get("lat").asDouble(), n.get("lon").asDouble())
+  }
 
   /** One polygon row of the dimension snapshot. */
   private case class Polygon(layer: String, name: String, adminLevel: Int, wkb: Array[Byte])
@@ -511,14 +537,15 @@ object TopoServer {
   }
 
   private object Dimension {
-    /** Two collects: the polygon rows and their cell covers. */
+    /** One collect: the polygon rows with their cover cells, the cells
+      * [[graft.operators.Ingest.cellCovers]] lists for each row, in its order. */
     def collect(polygons: DataFrame): Dimension = {
       import polygons.sparkSession.implicits._
-      new Dimension(
-        polygons.select("relId", "layer", "name", "adminLevel", "wkb")
-          .as[(Long, String, String, Int, Array[Byte])].collect(),
-        Ingest.cellCovers(polygons).select("relId", "layer", "cellId")
-          .as[(Long, String, Long)].collect())
+      val rows = polygons
+        .select(col("relId"), col("layer"), col("name"), col("adminLevel"), col("wkb"), st_cell_cover(col("wkb")))
+        .as[(Long, String, String, Int, Array[Byte], Array[Long])].collect()
+      new Dimension(rows.map(r => (r._1, r._2, r._3, r._4, r._5)),
+        rows.flatMap(r => r._6.map(c => (r._1, r._2, c))))
     }
   }
 

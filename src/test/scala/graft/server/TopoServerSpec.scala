@@ -57,6 +57,16 @@ class TopoServerSpec extends SparkTestBase {
   private def coordsJson(cs: Seq[MissingCoord]): String =
     cs.map(c => s"""{"lat":${c.lat},"lon":${c.lon}}""").mkString("[", ",", "]")
 
+  /** The worklist journal's records, in order: (coordinate, is a drop). */
+  private def journal(dataDir: Path): Seq[(MissingCoord, Boolean)] = {
+    val f = dataDir.resolve("missing.jsonl")
+    if (!Files.exists(f)) Nil
+    else Files.readAllLines(f).asScala.toSeq.map { line =>
+      val n = mapper.readTree(line)
+      (MissingCoord.of(n), n.has("drop"))
+    }
+  }
+
   private def fixtureWorld() = {
     val polys = Ingest.polygons(spark, Fixtures.nodesDf(spark), Fixtures.waysDf(spark),
       Fixtures.relationsDf(spark), Fixtures.blacklist)
@@ -68,7 +78,8 @@ class TopoServerSpec extends SparkTestBase {
     val (polys, water) = fixtureWorld()
     val dataDir = tempDir("topo_server")
     // a state file's inode: an atomic rewrite (temp file + rename) gives
-    // the name a new one, so an unchanged key means the file was not written
+    // the name a new one, so an unchanged key means the file was not
+    // rewritten (an append to the worklist journal keeps it)
     def fileKey(name: String): AnyRef = Files.readAttributes(dataDir.resolve(name),
       classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
     val layers = Seq(TopoServer.LayerConfig("countries", simplifyDigits = 3,
@@ -85,12 +96,14 @@ class TopoServerSpec extends SparkTestBase {
       // -- curate brussels, then import two probes: brussels (complete,
       //    dropped) and tokyo (incomplete, kept)
       assert(post(port, "/api/add", """{"countries":100}""").statusCode() == 200)
-      assert(!Files.exists(dataDir.resolve("missing.json")), "/api/add wrote the worklist")
+      assert(!Files.exists(dataDir.resolve("missing.jsonl")), "/api/add wrote the worklist")
       val topoKey = fileKey("topologies.json")
       val imp = post(port, "/api/missing",
         """[{"lat":50.85,"lon":4.35},{"lat":35.7,"lon":139.7}]""")
       assert(imp.statusCode() == 200)
       assert(mapper.readTree(imp.body()).get("missing").asInt() == 1)
+      val tokyo = MissingCoord(35.7, 139.7)
+      assert(journal(dataDir) == Seq(tokyo -> false))
       assert(fileKey("topologies.json") == topoKey, "/api/missing rewrote topologies.json")
 
       // -- the worklist head suggests country 103 for the countries layer
@@ -103,13 +116,16 @@ class TopoServerSpec extends SparkTestBase {
       assert(!sugg.hasNext)
 
       // -- curating 103 completes the probe: the worklist self-drains
-      val missKey = fileKey("missing.json")
+      val missKey = fileKey("missing.jsonl")
       assert(post(port, "/api/add", """{"countries":103}""").statusCode() == 200)
-      assert(fileKey("missing.json") == missKey, "/api/add rewrote missing.json")
+      assert(fileKey("missing.jsonl") == missKey && journal(dataDir) == Seq(tokyo -> false),
+        "/api/add wrote the worklist journal")
       val topoKey2 = fileKey("topologies.json")
       assert(get(port, "/api/coordinate").body() == "null")
       assert(mapper.readTree(get(port, "/api/status").body()).get("missing").asInt() == 0)
-      assert(fileKey("missing.json") != missKey, "the drained head was not persisted")
+      // the drained head is one appended drop record, not a rewrite
+      assert(journal(dataDir) == Seq(tokyo -> false, tokyo -> true), "the drained head was not persisted")
+      assert(fileKey("missing.jsonl") == missKey, "the drained head rewrote the journal")
       assert(fileKey("topologies.json") == topoKey2, "a drained head rewrote topologies.json")
 
       // -- on-demand TopoJSON == the batch export path, byte for byte
@@ -183,6 +199,9 @@ class TopoServerSpec extends SparkTestBase {
       assert(post(port, "/api/delete", """{"lat":40.7,"lon":-74.0}""").statusCode() == 200)
       assert(mapper.readTree(get(port, "/api/status").body()).get("missing").asInt() == 1)
       assert(fileKey("topologies.json") == topoKey3, "/api/missing or /api/delete rewrote topologies.json")
+      val sydney = MissingCoord(-33.9, 151.2)
+      val nyc = MissingCoord(40.7, -74.0)
+      assert(journal(dataDir) == Seq(tokyo -> false, tokyo -> true, sydney -> false, nyc -> false, nyc -> true))
     } finally server.stop()
 
     val server2 = new TopoServer(spark, polys, water, layers, dataDir,
@@ -351,6 +370,76 @@ class TopoServerSpec extends SparkTestBase {
     } finally server.stop()
   }
 
+  test("the worklist journal appends per change, compacts, and replays past a torn last line") {
+    val (polys, water) = fixtureWorld()
+    val dataDir = tempDir("topo_server_journal")
+    val layers = Seq(TopoServer.LayerConfig("countries", 3))
+    def fileKey(): AnyRef = Files.readAttributes(dataDir.resolve("missing.jsonl"),
+      classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+    // South Atlantic points: no fixture polygon holds them, so every one
+    // is incomplete and kept
+    val sea = (1 to 40).map(i => MissingCoord(-60.0 + i * 0.01, -30.0))
+    val server = new TopoServer(spark, polys, water, layers, dataDir).start()
+    try {
+      val port = server.boundPort
+      assert(post(port, "/api/missing", coordsJson(sea.take(30))).statusCode() == 200)
+      assert(journal(dataDir) == sea.take(30).map(_ -> false))
+      val key = fileKey()
+      // listed coordinates add nothing; new ones are appended, in order
+      assert(post(port, "/api/missing", coordsJson(sea)).statusCode() == 200)
+      assert(journal(dataDir) == sea.map(_ -> false))
+      assert(fileKey() == key, "an import rewrote the journal")
+      // 34 drops: 74 records for 6 live coordinates, under 2 × 6 + 64
+      sea.take(34).foreach(c => post(port, "/api/delete", s"""{"lat":${c.lat},"lon":${c.lon}}"""))
+      assert(journal(dataDir) == sea.map(_ -> false) ++ sea.take(34).map(_ -> true))
+      assert(fileKey() == key, "a drop rewrote the journal")
+      // the 35th passes 2 × 5 + 64: the journal is rewritten as the live list
+      post(port, "/api/delete", s"""{"lat":${sea(34).lat},"lon":${sea(34).lon}}""")
+      assert(journal(dataDir) == sea.drop(35).map(_ -> false))
+      assert(fileKey() != key, "the journal was not compacted")
+    } finally server.stop()
+
+    // a crash mid-append leaves a torn last line; replay ignores it and
+    // rewrites the journal, so the next append starts on a fresh line
+    Files.write(dataDir.resolve("missing.jsonl"), """{"lat":1.5,"lo""".getBytes(UTF_8),
+      java.nio.file.StandardOpenOption.APPEND)
+    val server2 = new TopoServer(spark, polys, water, layers, dataDir).start()
+    try {
+      val port = server2.boundPort
+      assert(mapper.readTree(get(port, "/api/status").body()).get("missing").asInt() == 5)
+      assert(journal(dataDir) == sea.drop(35).map(_ -> false))
+      val head = mapper.readTree(get(port, "/api/coordinate").body()).get("coordinate")
+      assert(MissingCoord.of(head) == sea(35))
+      assert(post(port, "/api/delete", s"""{"lat":${sea(35).lat},"lon":${sea(35).lon}}""").statusCode() == 200)
+      assert(journal(dataDir) == sea.drop(35).map(_ -> false) :+ (sea(35) -> true))
+    } finally server2.stop()
+  }
+
+  test("the dimension is collected in one Spark job") {
+    val (polys0, water) = fixtureWorld()
+    val polys = polys0.cache()
+    polys.count()
+    val server = new TopoServer(spark, polys, water, Seq(TopoServer.LayerConfig("countries", 3)),
+      tempDir("topo_server_dim")).start()
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    try {
+      org.apache.spark.graft.TestBridge.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      try {
+        assert(get(server.boundPort, "/api/geometry/203").statusCode() == 200)
+        org.apache.spark.graft.TestBridge.drainListenerBus(sc)
+      } finally sc.removeSparkListener(listener)
+      assert(jobs.get() == 1)
+    } finally {
+      server.stop()
+      polys.unpersist()
+    }
+  }
+
   private val threeLayers = Seq("countries", "regions", "cities").map(TopoServer.LayerConfig(_, simplifyDigits = 3))
 
   /** 60% within ±0.5° of a fixture city, the rest within ±6° (across the
@@ -453,8 +542,9 @@ class TopoServerSpec extends SparkTestBase {
       }
       val imp = post(port, "/api/missing", coordsJson(coords))
       assert(imp.statusCode() == 200, imp.body())
-      val kept = mapper.readTree(Files.readAllBytes(dataDir.resolve("missing.json"))).elements().asScala
-        .map(n => MissingCoord(n.get("lat").asDouble(), n.get("lon").asDouble()).key).toSeq
+      val records = journal(dataDir)
+      assert(!records.exists(_._2))
+      val kept = records.map(_._1.key)
       assert(kept.toSet == expectedMissing)
       assert(kept.size == expectedMissing.size)
 
