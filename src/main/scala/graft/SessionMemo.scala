@@ -19,7 +19,8 @@ import scala.collection.mutable
   * `org.apache.spark.sql.graft.DimensionKey`: the canonical optimized plan
   * plus the identity of every cache entry it reads, which costs no job.
   * Only memos over compiled-in fixture constants may use a constant
-  * version.
+  * version. A build runs under the memo's lock; `graft.operators.Dimension`
+  * stores a holder that collects on first use, outside it.
   *
   * Sessions are held strongly — a memoized DataFrame references its
   * session, so a weak key could never be collected. Instead, once more than
@@ -38,14 +39,6 @@ object SessionMemo {
   // a release that throws must not block the rebuild or the eviction
   private def releaseQuietly(e: Entry): Unit =
     try e.release(e.value) catch { case _: Exception => () }
-
-  /** The value held at `version`, without building one: a caller whose
-    * build runs Spark jobs checks first and runs them outside the lock. */
-  def peek[V](spark: SparkSession, slot: String, version: Any): Option[V] = synchronized {
-    sessions.get(spark).flatMap(_.get(slot)).collect {
-      case e if e.version == version => e.value.asInstanceOf[V]
-    }
-  }
 
   def get[V](spark: SparkSession, slot: String, version: Any)(build: => V)
             (release: V => Unit): V = synchronized {

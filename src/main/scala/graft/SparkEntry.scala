@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -579,14 +581,9 @@ object SparkEntry {
     PipJoin.matches(Fixtures.pages(spark, sfDir), covers, polys)
   }
 
-  /** The broadcast-index probe over the same dims — row-identical to
-    * pipMatches (PipelineSpec pins all strategies equal) but ~2× faster
-    * on the page scan (BENCH.md strategy table). Round 8: queries whose
-    * SUBJECT is an operator ON TOP of the match table (per-layer pivot,
-    * completeness anti-join, suggestions) build their input through the
-    * documented hot path; q_pip_spatial itself stays on `matches` — the
-    * Catalyst broadcast-join strategy IS that query's subject.
-    */
+  /** The broadcast-index probe over the same dims, row-identical to
+    * pipMatches: the input of queries whose subject is an operator on top
+    * of the match table (q_pip_spatial's subject is `matches` itself). */
   private def pipMatchesIndexed(spark: SparkSession, sfDir: String): DataFrame = {
     val (polys, covers) = dims(spark)
     PipJoin.matchesIndexed(Fixtures.pages(spark, sfDir), covers, polys)
@@ -744,7 +741,7 @@ object SparkEntry {
         val pages = Fixtures.pages(s, dir)
         // built lazily, so its plan can be inspected: m feeds both the
         // missing anti-join and the rules filter and runs as two probes,
-        // which share one memoized index (PipJoin.matchesIndexed)
+        // which share one memoized Dimension handle and its index
         val m = PipJoin.matchesIndexed(pages, covers, polys)
         val miss = PipJoin.missing(pages, m, Seq("countries", "regions", "cities"))
         PipJoin.suggestions(miss, covers, polys, m,
@@ -2718,43 +2715,49 @@ object SparkEntry {
   private[graft] def fixtureFingerprint(sfDir: String): String =
     graft.sources.ContentStamp(SparkSession.active, s"$sfDir/documents.parquet")
 
-  /** Deterministic scratch root for derived-from-fixture tables, keyed by
-    * the fixture CONTENT fingerprint (not just the path string).
-    */
-  private def scratchRoot(kind: String, sfDir: String): String =
-    s"/tmp/graft_${kind}_${sfDir.replaceAll("[^a-z0-9.]", "_")}_${fixtureFingerprint(sfDir)}"
+  /** Deterministic scratch root `/tmp/graft_<kind>_<sfTag>_<fp>`: `fp` is
+    * the fixture CONTENT fingerprint, then `code`, a [[contentHash]]. */
+  private def scratchRoot(kind: String, sfDir: String, code: String = ""): String =
+    s"/tmp/graft_${kind}_${sfDir.replaceAll("[^a-z0-9.]", "_")}_${fixtureFingerprint(sfDir)}$code"
 
   /** DONE-gated scratch dir: returns `root`, first building it unless
-    * its DONE marker exists. The content is built in a process-unique
+    * its DONE marker exists. The content is built in a new process-unique
     * work dir, then ATOMICALLY renamed to `root` — two concurrent runs at
     * the same fixture content each build privately and exactly one rename
     * wins (the loser discards its copy and reads the winner's); a killed
     * build leaves only an orphaned work dir, never a half-written `root`.
+    * The winner then removes the completed roots it supersedes: the
+    * siblings of the same kind and sf tag with another fingerprint.
     */
-  private def scratch(root: String)(build: String => Unit): String = {
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(root, "DONE"))) return root
-    val work = s"${root}_w${java.lang.ProcessHandle.current().pid()}_${System.nanoTime()}"
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (java.nio.file.Files.exists(p)) {
-        val st = java.nio.file.Files.walk(p)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => java.nio.file.Files.delete(q))
-        finally st.close()
-      }
-    rmTree(java.nio.file.Paths.get(work))
-    build(work)
-    java.nio.file.Files.write(java.nio.file.Paths.get(work, "DONE"), Array.empty[Byte])
-    try java.nio.file.Files.move(java.nio.file.Paths.get(work), java.nio.file.Paths.get(root),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException |
-           _: java.nio.file.AccessDeniedException |
-           _: java.nio.file.FileSystemException
-        if java.nio.file.Files.exists(java.nio.file.Paths.get(root, "DONE")) =>
-        rmTree(java.nio.file.Paths.get(work)) // another process won; use theirs
+  private[graft] def scratch(root: String)(build: String => Unit): String = {
+    val (dir, done) = (Paths.get(root), Paths.get(root, "DONE"))
+    if (Files.exists(done)) return root
+    val work = Paths.get(s"${root}_w${java.lang.ProcessHandle.current().pid()}_${System.nanoTime()}")
+    build(Files.createDirectories(work).toString)
+    Files.write(work.resolve("DONE"), Array.empty[Byte])
+    try {
+      Files.move(work, dir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      // a work dir (`…_w<pid>_<nanos>`) is never a sibling; a sibling
+      // another process removes first is skipped
+      val path = dir.toString
+      val family = java.util.regex.Pattern.quote(path.substring(0, path.lastIndexOf('_') + 1)) + "[0-9a-f]+"
+      val st = Files.list(dir.getParent)
+      try st.toList.forEach { p =>
+        if (p != dir && p.toString.matches(family) && Files.exists(p.resolve("DONE")))
+          try rmTree(p) catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+      } finally st.close()
+    } catch {
+      // FileAlreadyExists / AccessDenied: another process won; use theirs
+      case _: java.nio.file.FileSystemException if Files.exists(done) => rmTree(work)
     }
     root
   }
+
+  private def rmTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val st = Files.walk(p)
+      try st.sorted(java.util.Comparator.reverseOrder()).forEach(q => Files.delete(q)) finally st.close()
+    }
 
   /** Scratch path for the q_knn_pruned parquet index (fingerprint-keyed;
     * DONE-gated via [[scratch]] so a killed writer never leaves a
@@ -2787,9 +2790,8 @@ object SparkEntry {
     * fingerprint, fixture-code content hash).
     */
   private def shpScratch(sfDir: String): String =
-    scratch(scratchRoot("shp_" + contentHash(
-      (Fixtures.osm._4.map(_.rings), shpDecodeRecords).toString), sfDir)) { work =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
+    scratch(scratchRoot("shp", sfDir, contentHash(
+      (Fixtures.osm._4.map(_.rings), shpDecodeRecords).toString))) { work =>
       sources.Shapefile.write(Fixtures.osm._4.map(_.rings), s"$work/water")
       sources.Shapefile.write(shpDecodeRecords, s"$work/decode")
     }
@@ -2800,8 +2802,7 @@ object SparkEntry {
     */
   private def pbfScratch(sfDir: String): String = {
     val (ns, ws, rs, _) = Fixtures.osm
-    scratch(scratchRoot("pbf_" + contentHash((ns, ws, rs).toString), sfDir)) { work =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
+    scratch(scratchRoot("pbf", sfDir, contentHash((ns, ws, rs).toString))) { work =>
       sources.OsmPbf.write(
         ns.map(n => (n.id, n.lat, n.lon)),
         ws.map(w => (w.id, w.refs)),
@@ -2875,8 +2876,7 @@ object SparkEntry {
     * files ([[Fixtures.oscChanges]]).
     */
   private def oscScratch(sfDir: String): String =
-    scratch(scratchRoot("osc_" + contentHash(Fixtures.oscChanges.toString), sfDir)) { work =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
+    scratch(scratchRoot("osc", sfDir, contentHash(Fixtures.oscChanges.toString))) { work =>
       Fixtures.oscChanges.foreach { case (seq, cs) =>
         sources.OscDiff.write(work, seq, cs)
       }

@@ -103,13 +103,11 @@ object PipIndex {
     */
   val InteriorDepth = 5
 
-  /** Build from the two driver collects every caller makes: covers
-    * (relId, layer, cellId) and polygons (relId, wkb). The collect
-    * contract: one polygon row per relId (a relId-keyed map would keep
-    * only the last geometry of a repeated relId, while `PipJoin.matches`
-    * refines every row), and a cover whose polygon is absent is dropped,
-    * as the join strategies drop it.
-    */
+  /** Build from [[Dimension]]'s collected covers and polygons (relId,
+    * wkb), one polygon row per relId (a relId-keyed map would keep only
+    * the last geometry of a repeated relId, while `PipJoin.matches` refines
+    * every row); a cover whose polygon is absent is dropped, as the join
+    * strategies drop it. */
   def of(covers: Array[(Long, String, Long)], polygons: Array[(Long, Array[Byte])]): PipIndex = {
     val polyMap = polygons.toMap
     require(polyMap.size == polygons.length, "PipIndex needs one polygon row per relId; " +

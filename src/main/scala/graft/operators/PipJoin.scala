@@ -1,12 +1,9 @@
 package graft.operators
 
-import java.nio.ByteBuffer
-
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.DimensionKey
 
+import graft.cells.Cell
 import graft.functions.GeomExpressions._
 
 /** The central spatial join: "for each page (point), which polygons of
@@ -32,6 +29,8 @@ import graft.functions.GeomExpressions._
   *  - [[matchesPartitioned]]: for dimension tables too big to broadcast —
   *    covers are exploded to a fixed join level and shuffled; pages carry
   *    one row per fixed-level cell; AQE's skew join splits hot cells.
+  * Each plans from its dims' memoized [[Dimension]], the first two from
+  * its cover half alone; over cached dims a warm build runs no job.
   */
 object PipJoin {
 
@@ -44,26 +43,8 @@ object PipJoin {
     */
   val PruneCoverageThreshold = 0.8
 
-  /** Level band actually present in a cover table — probing only these
-    * levels shrinks the page-side explode from 19 ancestors to the band in
-    * use (collected once; the cover table is the small side).
-    */
-  // level from a cell id's trailing-zero count. Round, don't truncate:
-  // log2(2^58) evaluates to 58.000000000000004 in doubles, and truncation
-  // would misclassify coarse levels (shrinking the ancestor band and
-  // silently dropping matches). Single definition — band and join-level
-  // stats must never drift apart.
-  private val levelExpr = "cast(round(30 - log2(cellId & -cellId) / 2) as int)"
-
-  def coverLevelBand(covers: DataFrame): (Int, Int) = {
-    val row = covers
-      .select(expr(levelExpr).as("lvl"))
-      .agg(min("lvl"), max("lvl")).head()
-    // empty cover table → empty match set; any band works, use the
-    // narrowest (one ancestor) instead of NPEing on the null aggregate
-    if (row.isNullAt(0)) (graft.cells.Coverer.MinLevel, graft.cells.Coverer.MinLevel)
-    else (row.getInt(0), row.getInt(1))
-  }
+  /** The level band of the cover rows, [[Dimension.Covers.levelBand]]. */
+  def coverLevelBand(covers: DataFrame): (Int, Int) = Dimension.covers(covers).levelBand
 
   /** Broadcast strategy. `pages` needs (url, lon, lat); covers
     * (relId, layer, cellId); polygons (relId, wkb). Output: one row per
@@ -90,76 +71,25 @@ object PipJoin {
       .select((Seq("url", "layer", "relId") ++ extraPageCols).map(col): _*)
   }
 
-  /** Broadcast-index strategy: the hot path for fact-side scans. Covers
-    * and polygons are collected into a broadcast [[PipIndex]], and one
-    * `st_pip_match` generator runs the stab+refine per page and emits a
+  /** Broadcast-index strategy: the hot path for fact-side scans. The
+    * [[Dimension]]'s broadcast [[PipIndex]] is probed by one
+    * `st_pip_match` generator: the stab+refine per page, emitting a
     * `(relId, layer)` row per true match — ~2-3 rows per matched page
     * instead of ~11 ancestor join rows, with no join and no shuffle. The
     * generator is codegen'd, so it runs in the scan's whole-stage stage.
     * Identical rows to `matches` (tested). `polygons` must hold one row
     * per relId.
-    *
-    * The index is built once per dimension version: the broadcast lives
-    * in one [[graft.SessionMemo]] slot, under one of two versions.
-    *  - Dims that read only cached DataFrames, through deterministic
-    *    operators with no typed closure or UDF, are keyed by plan: each
-    *    side's [[DimensionKey]], its canonical optimized plan after cache
-    *    substitution plus the identity of every cache entry it reads. A
-    *    warm call runs no Spark job; a new DataFrame over the same cache
-    *    hits, and a re-`cache()` or another plan misses.
-    *  - Any other dims (file scans, local relations, RDDs, closures,
-    *    nondeterministic plans) are collected on every call, in one job,
-    *    and the version is the exact collected content (cover rows, and
-    *    each polygon's relId and WKB bytes).
-    * Either way, equal dims reuse the index and any change rebuilds it; a
-    * miss costs one collect plus the build, and the collect runs outside
-    * the memo's lock. A replaced broadcast is not destroyed: a plan made
-    * before the change may still run against it, and Spark's
-    * ContextCleaner frees it once no plan holds it.
     */
   def matchesIndexed(pages: DataFrame, covers: DataFrame, polygons: DataFrame,
                      extraPageCols: Seq[String] = Nil): DataFrame = {
-    val spark = pages.sparkSession
-    val key = for (c <- DimensionKey.of(covers); p <- DimensionKey.of(polygons)) yield (c, p)
-    val index = key.flatMap(graft.SessionMemo.peek[Broadcast[PipIndex]](spark, "pipIndex", _)).getOrElse {
-      // one job: both sides collect as one tagged union, split on the
-      // driver (a union collects its children's partitions in order, so
-      // each side keeps its row order)
-      val (coverSide, polySide) = covers.select(lit(true).as("isCover"), col("relId").cast("long"), col("layer"),
-          col("cellId").cast("long"), lit(null).cast("binary").as("wkb"))
-        .union(polygons.select(lit(false), col("relId").cast("long"), lit(null).cast("string"),
-          lit(null).cast("long"), col("wkb")))
-        .collect().partition(_.getBoolean(0))
-      val coverRows = coverSide.map(r => (r.getLong(1), r.getString(2), r.getLong(3)))
-      val polyRows = polySide.map(r => (r.getLong(1), r.getAs[Array[Byte]](4)))
-      val version = key.getOrElse(
-        (coverRows.toSeq, polyRows.toSeq.map { case (id, wkb) => (id, ByteBuffer.wrap(wkb)) }))
-      graft.SessionMemo.get(spark, "pipIndex", version)(
-        spark.sparkContext.broadcast(PipIndex.of(coverRows, polyRows)))(_ => ())
-    }
     val matchGen = org.apache.spark.sql.graft.Bridge.column(PipMatch(
       org.apache.spark.sql.graft.Bridge.expression(col("lon")),
       org.apache.spark.sql.graft.Bridge.expression(col("lat")),
-      index))
+      Dimension.of(covers, polygons).broadcast))
 
     pages
       .select(col("*"), matchGen.as(Seq("relId", "layer")))
       .select((Seq("url", "layer", "relId") ++ extraPageCols).map(col): _*)
-  }
-
-  private val MaxJoinLevel = 12
-
-  /** joinLevel from cover stats: fine enough that most cover cells map UP
-    * to their ancestor (no 4^Δ descend blow-up), coarse enough to keep the
-    * per-key build rows bounded — the 75th-percentile cover level, clamped.
-    */
-  def chooseJoinLevel(covers: DataFrame): Int = {
-    val row = covers
-      .select(expr(levelExpr).as("lvl"))
-      .agg(expr("percentile(lvl, 0.75)")).head()
-    if (row.isNullAt(0)) graft.cells.Coverer.MinLevel // empty covers → empty join
-    else math.max(graft.cells.Coverer.MinLevel,
-      math.min(MaxJoinLevel, math.round(row.getDouble(0)).toInt))
   }
 
   /** Partitioned strategy for non-broadcastable dimension sides: covers are
@@ -172,55 +102,28 @@ object PipJoin {
     * Coarse cover cells descend to their `joinLevel` descendants (range =
     * whole join cell); finer cells map to their ancestor keeping their own
     * range for the residual test. AQE's skew join handles hot cells.
-    * `joinLevel <= 0` picks the level from cover stats.
+    * `joinLevel <= 0` picks [[Dimension.Covers.joinLevel]].
     *
-    * Probe-side pre-shuffle semi-join pruning is decided from cover
-    * DENSITY ([[autoPrune]]): count the distinct build joinCells against
-    * the level-`jl` grid (4^jl cells) and prune when the covered fraction
-    * is below [[PruneCoverageThreshold]] — a sparse cover means whole
-    * swaths of probe cells can only be dropped by the join, which the
-    * semi-join does BEFORE the shuffle (BENCH.md round 6); a dense cover
-    * makes the semi-join pure cost (every probe survives).
+    * A probe-side pre-shuffle semi-join prunes pages when the cover is
+    * sparse ([[autoPrune]]): then whole swaths of probe cells can only be
+    * dropped by the join, which the semi-join does BEFORE the shuffle
+    * (BENCH.md round 6); for a dense cover it is pure cost.
     */
   def matchesPartitioned(pages: DataFrame, covers: DataFrame, polygons: DataFrame,
                          joinLevel: Int = 0): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val jl = if (joinLevel > 0) joinLevel else chooseJoinLevel(covers)
-
-    val coverCellsBase = covers.select(col("relId"), col("layer"), col("cellId"))
-      .as[(Long, String, Long)]
-      .flatMap { case (relId, layer, cellId) =>
-        val l = graft.cells.Cell.level(cellId)
-        if (l >= jl) {
-          // fine cell: ancestor key, keep the cell's own leaf range
-          Iterator.single((relId, layer, graft.cells.Cell.parent(cellId, jl),
-            graft.cells.Cell.rangeMin(cellId), graft.cells.Cell.rangeMax(cellId)))
-        } else {
-          // descend to joinLevel: at most 4^(jl-l) cells; coarse cover
-          // cells are rare (big polygons) by construction. The descendant
-          // IS the join cell, so its range is the whole cell.
-          def desc(c: Long): Iterator[Long] =
-            if (graft.cells.Cell.level(c) == jl) Iterator.single(c)
-            else graft.cells.Cell.children(c).iterator.flatMap(desc)
-          desc(cellId).map(j =>
-            (relId, layer, j, graft.cells.Cell.rangeMin(j), graft.cells.Cell.rangeMax(j)))
-        }
-      }
-      .toDF("relId", "layer", "joinCell", "rmin", "rmax")
-    // ONE build row per (relId, layer, joinCell): merged range list.
-    // This shuffles only the (small) dimension side, once. The distinct
-    // joinCell set below derives from THIS aggregated form, so the cover
-    // explode's exchange is shared (ReuseExchange) instead of the explode
-    // running twice (ADVICE round 6).
-    val coverAgg = coverCellsBase
+    val stats = Dimension.covers(covers)
+    val jl = if (joinLevel > 0) joinLevel else stats.joinLevel
+    // ONE build row per (relId, layer, joinCell): merged range list. Only
+    // the (small) dimension side shuffles, once: the pruning semi-join
+    // reuses this exchange instead of running the explode twice.
+    val coverAgg = coverJoinCells(covers, jl)
       .groupBy("relId", "layer", "joinCell")
       .agg(collect_list(struct(col("rmin"), col("rmax"))).as("ranges"))
-    val doPrune = autoPrune(coverAgg.select("joinCell").distinct().count(), jl)
+    val doPrune = autoPrune(stats.joinCells(jl), jl)
 
     val probes0 = pages
       .withColumn("joinCell", st_cell_at(col("lon"), col("lat"), jl))
-      .withColumn("leaf", st_cell_at(col("lon"), col("lat"), graft.cells.Cell.MaxLevel))
+      .withColumn("leaf", st_cell_at(col("lon"), col("lat"), Cell.MaxLevel))
 
     // probe-side pruning: pages whose joinCell has NO build row can only
     // be dropped by the join — a broadcast SEMI-join on the distinct
@@ -243,14 +146,33 @@ object PipJoin {
       .select("url", "layer", "relId")
   }
 
-  /** The auto-prune density rule: prune when the build side covers less
-    * than [[PruneCoverageThreshold]] of the level-`jl` grid. The Cell
-    * scheme is ONE quadtree square — exactly 4^jl cells at level jl. (A
-    * doubled denominator here capped the fraction at 0.5 and made auto
-    * mode enable the semi-join unconditionally: dense covers paid the
-    * broadcast semi-join for zero dropped rows — ADVICE r7 #1.
-    * PipelineSpec pins full coverage ⇒ no prune.)
+  /** The partitioned strategy's cover explode: one (relId, layer,
+    * joinCell, rmin, rmax) row per level-`jl` cell of each cover cell.
+    * [[Dimension.Covers.joinCells]] counts its distinct join cells.
     */
+  private[operators] def coverJoinCells(covers: DataFrame, jl: Int): DataFrame = {
+    import covers.sparkSession.implicits._
+    covers.select(col("relId"), col("layer"), col("cellId")).as[(Long, String, Long)]
+      .flatMap { case (relId, layer, cellId) =>
+        // a fine cell keys on its ancestor and keeps its own leaf range
+        if (Cell.level(cellId) >= jl)
+          Iterator.single((relId, layer, Cell.parent(cellId, jl), Cell.rangeMin(cellId), Cell.rangeMax(cellId)))
+        else {
+          // descend to joinLevel: at most 4^(jl-l) cells; coarse cover
+          // cells are rare (big polygons) by construction. The descendant
+          // IS the join cell, so its range is the whole cell.
+          def desc(c: Long): Iterator[Long] =
+            if (Cell.level(c) == jl) Iterator.single(c) else Cell.children(c).iterator.flatMap(desc)
+          desc(cellId).map(j => (relId, layer, j, Cell.rangeMin(j), Cell.rangeMax(j)))
+        }
+      }
+      .toDF("relId", "layer", "joinCell", "rmin", "rmax")
+  }
+
+  /** The auto-prune density rule: prune when the build side covers less
+    * than [[PruneCoverageThreshold]] of the level-`jl` grid, exactly 4^jl
+    * cells (the Cell scheme is ONE quadtree square; PipelineSpec pins full
+    * coverage ⇒ no prune). */
   private[operators] def autoPrune(coveredCells: Long, jl: Int): Boolean =
     coveredCells.toDouble / math.pow(4.0, jl) < PruneCoverageThreshold
 
@@ -296,9 +218,10 @@ object PipJoin {
         restrictAdminLevels.contains(adminLevel)
   }
 
-  /** Probes through [[matchesIndexed]], so it shares that index memo:
-    * over the dims that built `matches`, its PIP pass rebuilds nothing.
-    * So `polygons` must hold one row per relId, as for `matchesIndexed`.
+  /** Probes through [[matchesIndexed]], so it shares that [[Dimension]]
+    * handle: over the dims that built `matches`, its PIP pass rebuilds
+    * nothing. So `polygons` must hold one row per relId, as for
+    * `matchesIndexed`.
     */
   def suggestions(missingPages: DataFrame, covers: DataFrame, polygons: DataFrame,
                   matches: DataFrame, rules: Seq[MatchRule]): DataFrame = {

@@ -14,29 +14,27 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.JsonUtil
-import graft.functions.GeomExpressions.st_cell_cover
 import graft.geom.Jts
-import graft.operators.{Export, ExportArchive, PipIndex, PipJoin}
+import graft.operators.{Dimension, Export, ExportArchive, Ingest, PipIndex, PipJoin}
 
 /** The reference's interactive curation/serving surface
   * (`osmtopo/env.go:140-179` route table, `bin/osmtopo/cmd/cmd_server.go:
   * 30-55`), over the Spark engine. The server owns curation STATE (the
   * per-layer curated relation sets and the missing-coordinate worklist,
   * JSON files under `dataDir`, standing in for the reference's topologies
-  * file + LevelDB missing store), an LRU of rendered TopoJSON documents
-  * (`env.go:408-440` topoCache), and a driver-resident snapshot of the
-  * polygon dimension.
+  * file + LevelDB missing store) and an LRU of rendered TopoJSON documents
+  * (`env.go:408-440` topoCache).
   *
   * The point, geometry and coverage reads are answered the way the
   * reference answers them (`lookup.go:156-174`, `env.go:657-715`): from
-  * an in-memory index, with no Spark job per request. The snapshot is
-  * collected once per server, on first use: the polygons and their
-  * [[graft.operators.Ingest.cellCovers]], a full [[PipIndex]] over them, and per-relId
-  * maps of polygon and cover cells. Lookups run [[PipIndex.hits]] on that
-  * one index, the kernel `PipMatchSpec` pins equal to the Catalyst PIP
-  * join; a curated match keeps the hits in the curated sets, and match
-  * rules apply to the suggestions through
-  * [[PipJoin.MatchRule.keeps]], the suggestion join's filter as a function.
+  * an in-memory index, with no Spark job per request: the [[Dimension]] of
+  * the polygons and their [[Ingest.cellCovers]], fetched on first use and
+  * shared with the batch operators and every other server over the same
+  * dimension version. Lookups run [[PipIndex.hits]], the kernel
+  * `PipMatchSpec` pins equal to the Catalyst PIP join; a curated match
+  * keeps the hits in the curated sets, and match rules apply to the
+  * suggestions through [[PipJoin.MatchRule.keeps]], the suggestion join's
+  * filter as a function.
   * Cold TopoJSON renders, the export and `/api/relation` still run engine
   * queries ([[Export.layer]], [[ExportArchive.tarGz]]).
   *
@@ -151,27 +149,23 @@ final class TopoServer(
   // lookups, from the driver-resident dimension
   // ------------------------------------------------------------------
 
-  // Guarded by `lock`; readers take the immutable snapshot under it.
-  // The first read collects the dimension while holding `lock`, so
-  // concurrent requests wait for it once.
+  // Guarded by `lock`: the first read fetches it, concurrent ones wait.
   private var dim: Dimension = _
-  private var dimBuilds = 0
 
   private def dimension(): Dimension = lock.synchronized {
     if (dim == null) {
       // a dimension that breaks the index contract is the server's fault,
       // not the request's: 500, not 400
-      dim = try Dimension.collect(polygons) catch {
+      dim = try Dimension.of(Ingest.cellCovers(polygons), polygons) catch {
         case e: IllegalArgumentException => throw new IllegalStateException(e.getMessage, e)
       }
-      dimBuilds += 1
     }
     dim
   }
 
   /** The full index's hits for one coordinate: the polygons containing it. */
   private def hitsAt(d: Dimension, c: MissingCoord): Seq[PipIndex.Poly] =
-    d.full.hits(c.lon, c.lat).toSeq.map(d.full.polys(_))
+    d.index.hits(c.lon, c.lat).toSeq.map(d.index.polys(_))
 
   /** Per-layer match of one coordinate against the CURATED relations
     * (the reference's `e.topologies` lookup): layer -> (relId, name),
@@ -184,7 +178,7 @@ final class TopoServer(
                            hits: Seq[PipIndex.Poly]): Map[String, (Long, String)] =
     hits.filter(p => cur.get(p.layer).exists(_.contains(p.relId))).groupBy(_.layer).map { case (l, ps) =>
       val id = ps.map(_.relId).min
-      l -> (id, d.polys(id).name)
+      l -> (id, d.polygons(id).name)
     }
 
   /** Suggestions for one coordinate from the FULL (uncurated) dimension —
@@ -194,7 +188,7 @@ final class TopoServer(
     */
   private def suggestFor(d: Dimension, hits: Seq[PipIndex.Poly]): Map[String, Seq[(Long, String, Int)]] = {
     val matched = hits.map(p => (p.layer, p.relId)).toSet
-    hits.map(p => (p.layer, p.relId, d.polys(p.relId)))
+    hits.map(p => (p.layer, p.relId, d.polygons(p.relId)))
       .filter { case (l, _, row) => rules.forall(_.keeps(matched, l, row.adminLevel)) }
       .groupBy(_._1).map { case (l, rows) =>
         l -> rows.map { case (_, id, row) => (id, row.name, row.adminLevel) }.sortBy(_._1)
@@ -216,7 +210,7 @@ final class TopoServer(
     } match {
       case Some(doc) => Some(doc)
       case None =>
-        if (!dimension().polys.get(id).exists(_.layer == layerId)) None
+        if (!dimension().polygons.get(id).exists(_.layer == layerId)) None
         else {
           val result = Export.layer(polygons, water, layerId, Seq(id),
             simplifyDigits = cfg.simplifyDigits, quantize = 1e6,
@@ -318,11 +312,11 @@ final class TopoServer(
       .mkString("{", ",", "}")
     lock.synchronized {
       val snap = Option(dim)
-      val polys = snap.toSeq.flatMap(_.polys.values.map(_.wkb))
-      // the stab of the snapshot's PipIndex
-      val st = snap.fold(PipIndex.Stats(0, 0, 0.0, 0L))(_.full.stats)
+      val polys = snap.toSeq.flatMap(_.polygons.values.map(_.wkb))
+      // the stab of the dimension's PipIndex
+      val st = snap.fold(PipIndex.Stats(0, 0, 0.0, 0L))(_.index.stats)
       s"""{"routes":$routeJson,"topo_lru":{"hits":$lruHits,"misses":$lruMisses},""" +
-        s""""snapshot":{"builds":$dimBuilds,"polygons":${polys.size},"cells":${snap.fold(0)(_.covers.length)},""" +
+        s""""snapshot":{"builds":${snap.size},"polygons":${polys.size},"cells":${snap.fold(0)(_.covers.rows.length)},""" +
         s""""wkb_bytes":${polys.map(_.length.toLong).sum},"index":{"segments":${st.segments},""" +
         s""""entries":${st.entries},"interior_share":${JsonUtil.num("%.4f", st.interiorShare)},""" +
         s""""bytes":${st.bytes}}}}"""
@@ -412,7 +406,7 @@ final class TopoServer(
     val id = idFromPath(ex, 4)
     ex.getRequestMethod match {
       case "GET" =>
-        dimension().cells.get(id) match {
+        dimension().covers.cells.get(id) match {
           case None => respond(ex, 404, "Not Found")
           case Some(cells) => respond(ex, 200, cells.mkString("[", ",", "]"))
         }
@@ -431,7 +425,7 @@ final class TopoServer(
 
   handle("/api/geometry/") { ex =>
     val id = idFromPath(ex, 4)
-    dimension().polys.get(id) match {
+    dimension().polygons.get(id) match {
       case None => respond(ex, 404, "Not Found")
       case Some(p) => respond(ex, 200, geoJson(Jts.fromWkb(p.wkb)))
     }
@@ -518,35 +512,6 @@ object TopoServer {
   }
   object MissingCoord {
     def of(n: JsonNode): MissingCoord = MissingCoord(n.get("lat").asDouble(), n.get("lon").asDouble())
-  }
-
-  /** One polygon row of the dimension snapshot. */
-  private case class Polygon(layer: String, name: String, adminLevel: Int, wkb: Array[Byte])
-
-  /** The polygon dimension, resident on the driver: every polygon by relId,
-    * its cover cells (relId, layer, cellId), the full [[PipIndex]] and the
-    * sorted cover cells by relId. Immutable once built.
-    */
-  private final class Dimension(rows: Array[(Long, String, String, Int, Array[Byte])],
-                                val covers: Array[(Long, String, Long)]) {
-    /** Fails, naming the relId, when `rows` repeats one. */
-    val full: PipIndex = PipIndex.of(covers, rows.map(r => (r._1, r._5)))
-    val polys: Map[Long, Polygon] = rows.map(r => r._1 -> Polygon(r._2, r._3, r._4, r._5)).toMap
-    val cells: Map[Long, Array[Long]] =
-      covers.groupBy(_._1).map { case (id, cs) => id -> cs.map(_._3).sorted }
-  }
-
-  private object Dimension {
-    /** One collect: the polygon rows with their cover cells, the cells
-      * [[graft.operators.Ingest.cellCovers]] lists for each row, in its order. */
-    def collect(polygons: DataFrame): Dimension = {
-      import polygons.sparkSession.implicits._
-      val rows = polygons
-        .select(col("relId"), col("layer"), col("name"), col("adminLevel"), col("wkb"), st_cell_cover(col("wkb")))
-        .as[(Long, String, String, Int, Array[Byte], Array[Long])].collect()
-      new Dimension(rows.map(r => (r._1, r._2, r._3, r._4, r._5)),
-        rows.flatMap(r => r._6.map(c => (r._1, r._2, c))))
-    }
   }
 
   /** Latencies kept per route for /api/metrics' percentiles. */

@@ -8,8 +8,8 @@ import graft.operators.{PipJoin, Tiling}
 /** Streaming spatial enrichment: each page of a stream of geocoded pages
   * is matched against the (batch) polygon dimension by the SAME
   * `st_pip_match` generator as the batch hot path
-  * (`PipJoin.matchesIndexed`), over a broadcast index built once from the
-  * dimension. The generator is stateless — no join, no state store, no
+  * (`PipJoin.matchesIndexed`), over the `Dimension` handle's broadcast
+  * index. The generator is stateless — no join, no state store, no
   * shuffle of the stream — so it composes with any downstream stateful
   * streaming operator; here: event-time windowed per-tile counts with a
   * watermark (the streaming analogue of the headline batch pipeline, and

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{ObjectConsumer, ObjectProduc
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** A version of the rows a DataFrame reads that costs no Spark job, for
-  * the broadcast index of `graft.operators.PipJoin.matchesIndexed`: the
+  * the memoized PIP dimension handle, `graft.operators.Dimension`: the
   * canonical optimized plan after cache substitution, plus the identity of
   * every cache entry it reads. Equal keys mean equal rows when every leaf
   * is a cached relation over a deterministic plan and every operator above

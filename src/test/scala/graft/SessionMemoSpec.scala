@@ -3,8 +3,8 @@ package graft
 import scala.collection.mutable
 
 /** The one per-session memo policy: version change rebuilds and releases,
-  * an unchanged key is served as-is, a peek never builds, and a JVM holding more than
-  * MaxSessions sessions releases every session but the current one.
+  * an unchanged key is served as-is, and a JVM holding more than MaxSessions
+  * sessions releases every session but the current one.
   */
 class SessionMemoSpec extends SparkTestBase {
 
@@ -25,14 +25,6 @@ class SessionMemoSpec extends SparkTestBase {
     val a = get()
     assert(get() eq a)
     assert(builds == 1)
-  }
-
-  test("peek returns the value held at the version and never builds") {
-    assert(SessionMemo.peek[String](spark, "spec.peek", 1).isEmpty)
-    SessionMemo.get(spark, "spec.peek", 1)("v1")(_ => ())
-    assert(SessionMemo.peek[String](spark, "spec.peek", 1).contains("v1"))
-    assert(SessionMemo.peek[String](spark, "spec.peek", 2).isEmpty)
-    assert(SessionMemo.get(spark, "spec.peek", 1)("rebuilt")(_ => ()) == "v1", "a peek at another version keeps the entry")
   }
 
   test("more than MaxSessions sessions release the other sessions' entries") {

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, Wh
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-import org.apache.spark.sql.functions.{broadcast, col, lit, rand, udf, when}
+import org.apache.spark.sql.functions.{broadcast, col, lit, raise_error, rand, udf, when}
 import org.locationtech.jts.algorithm.locate.SimplePointInAreaLocator
 import org.locationtech.jts.geom.{Coordinate, Envelope, Location, Polygon}
 
@@ -26,8 +26,8 @@ import graft.sources.Fixtures
   * `PipJoin.matchesIndexed`): adversarial points checked against the
   * Catalyst join and brute-force JTS, the plan shape that makes it one
   * codegen'd pass, the flat index's invariants, the domain clamp, the
-  * one-build-per-dimension-version memo and its plan key, and the jobs of
-  * a partitioned-plan rebuild.
+  * one-build-per-dimension-version memo and its plan key, the jobs of a
+  * warm PIP query build, and the partitioned plan's polygon-free planning.
   */
 class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -393,13 +393,30 @@ class PipMatchSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(rows(other) == keyRows.filter(r => rest.contains(r._3)))
   }
 
-  test("a q_pip_hybrid rebuild runs only the join-level and join-cell jobs") {
-    val q = SparkEntry.queries("q_pip_hybrid")
-    q(spark, sf0001)
-    val (_, jobs) = jobsDuring(q(spark, sf0001))
-    // chooseJoinLevel's percentile and the distinct join-cell count, each
-    // run as AQE stage jobs and a result job
-    assert(jobs == 5)
+  test("building a warm q_pip_* or q_suggestions DataFrame runs no Spark job") {
+    // the cover statistics and the index come from the memoized dimension
+    // handle; the queries share one handle, so each is warm after its own
+    // first build whatever ran between
+    val names = Seq("q_pip_spatial", "q_pip_partitioned", "q_pip_hybrid", "q_pip_per_layer",
+      "q_pip_missing", "q_suggestions")
+    names.foreach(n => SparkEntry.queries(n)(spark, sf0001))
+    names.foreach { n =>
+      val (_, jobs) = jobsDuring(SparkEntry.queries(n)(spark, sf0001))
+      assert(jobs == 0, n)
+    }
+  }
+
+  test("matchesPartitioned plans from the covers alone and collects no polygon WKB") {
+    // every polygon's wkb fails when computed; covers without a plan key
+    // are collected, the cover half's one job
+    val poisoned = polys.withColumn("wkb", raise_error(lit("wkb computed")).cast("binary"))
+    val keyless = covers.withColumn("noise", rand())
+    val (m, jobs) = jobsDuring(PipJoin.matchesPartitioned(keyPages, keyless, poisoned))
+    assert(jobs == 1)
+    // the refine does read the wkb: running the plan fails
+    val e = intercept[Exception](m.collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("wkb computed")), e)
   }
 }
 

@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, min}
+import org.apache.spark.sql.functions.{col, lit, min}
 import org.locationtech.jts.geom.Coordinate
 
 import graft.SparkTestBase
@@ -415,27 +415,62 @@ class TopoServerSpec extends SparkTestBase {
     } finally server2.stop()
   }
 
-  test("the dimension is collected in one Spark job") {
+  /** Cached fixture polygons under a plan only `tag`'s test caches: the
+    * dimension handle is memoized per session by cache entry, and another
+    * suite may have cached the fixture plan and fetched its handle. */
+  private def freshlyCached(tag: String): (DataFrame, DataFrame) = {
     val (polys0, water) = fixtureWorld()
-    val polys = polys0.cache()
+    val polys = polys0.withColumn("cachedBy", lit(tag)).cache()
     polys.count()
-    val server = new TopoServer(spark, polys, water, Seq(TopoServer.LayerConfig("countries", 3)),
-      tempDir("topo_server_dim")).start()
+    (polys, water)
+  }
+
+  /** `f`'s result and the number of Spark jobs started while it ran. */
+  private def jobsDuring[A](f: => A): (A, Int) = {
     val sc = spark.sparkContext
     val jobs = new AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
+    org.apache.spark.graft.TestBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
     try {
+      val a = f
       org.apache.spark.graft.TestBridge.drainListenerBus(sc)
-      sc.addSparkListener(listener)
-      try {
-        assert(get(server.boundPort, "/api/geometry/203").statusCode() == 200)
-        org.apache.spark.graft.TestBridge.drainListenerBus(sc)
-      } finally sc.removeSparkListener(listener)
-      assert(jobs.get() == 1)
+      (a, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the dimension is collected in one Spark job") {
+    val (polys, water) = freshlyCached("one_job")
+    val server = new TopoServer(spark, polys, water, Seq(TopoServer.LayerConfig("countries", 3)),
+      tempDir("topo_server_dim")).start()
+    try {
+      val (r, jobs) = jobsDuring(get(server.boundPort, "/api/geometry/203"))
+      assert(r.statusCode() == 200)
+      assert(jobs == 1)
     } finally {
       server.stop()
+      polys.unpersist()
+    }
+  }
+
+  test("a second server over the same cached polygons collects nothing") {
+    val (polys, water) = freshlyCached("second_server")
+    def serve() = new TopoServer(spark, polys, water, Seq(TopoServer.LayerConfig("countries", 3)),
+      tempDir("topo_server_dim2")).start()
+    val (first, second) = (serve(), serve())
+    try {
+      val (r1, jobs1) = jobsDuring(get(first.boundPort, "/api/geometry/203"))
+      val (r2, jobs2) = jobsDuring(get(second.boundPort, "/api/geometry/203"))
+      assert(r1.statusCode() == 200 && r2.body() == r1.body())
+      assert(jobs1 == 1 && jobs2 == 0)
+      // each server fetched the handle once; both hold the same index
+      def snapshot(s: TopoServer) = mapper.readTree(get(s.boundPort, "/api/metrics").body()).get("snapshot")
+      assert(snapshot(first).get("builds").asInt() == 1 && snapshot(second).get("builds").asInt() == 1)
+      assert(snapshot(first).get("index") == snapshot(second).get("index"))
+    } finally {
+      first.stop(); second.stop()
       polys.unpersist()
     }
   }
@@ -470,10 +505,6 @@ class TopoServerSpec extends SparkTestBase {
     val (polys, water) = fixtureWorld()
     val server = new TopoServer(spark, polys, water, threeLayers,
       tempDir("topo_server_jobs")).start()
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     try {
       val port = server.boundPort
       val hundred = probePoints(polys, 100, seed = 7).take(100)
@@ -485,18 +516,12 @@ class TopoServerSpec extends SparkTestBase {
         get(port, "/api/coverage/302"),
         get(port, "/api/topo/countries/103"))
       assert(post(port, "/api/add", """{"countries":103}""").statusCode() == 200)
-      // warm-up: one request of each route builds the snapshot and the
-      // cached render
+      // warm-up: one request of each route fetches the dimension and
+      // fills the cached render
       reads().foreach(r => assert(r.statusCode() == 200, r.body()))
-
-      val sc = spark.sparkContext
-      org.apache.spark.graft.TestBridge.drainListenerBus(sc)
-      sc.addSparkListener(listener)
-      try {
-        reads().foreach(r => assert(r.statusCode() == 200, r.body()))
-        org.apache.spark.graft.TestBridge.drainListenerBus(sc)
-      } finally sc.removeSparkListener(listener)
-      assert(jobs.get() == 0)
+      val (warm, jobs) = jobsDuring(reads())
+      warm.foreach(r => assert(r.statusCode() == 200, r.body()))
+      assert(jobs == 0)
     } finally server.stop()
   }
 
